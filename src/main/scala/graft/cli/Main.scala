@@ -39,6 +39,7 @@ import graft.query.{Metaquery, Render, Views}
 object Main {
 
   def main(args: Array[String]): Unit = {
+    quietLogging()
     val spark = SparkSession.builder()
       .appName("graft")
       .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
@@ -50,6 +51,20 @@ object Main {
     val rc = try run(spark, args.toIndexedSeq, Console.out)
     finally spark.stop()
     if (rc != 0) sys.exit(rc)
+  }
+
+  /** Quiet by default: the root logger at WARN before the session
+    * starts, so a one-shot command prints its answer, not Spark's INFO
+    * start-up lines. Spark's default log4j profile is installed first
+    * (it would replace a level set before it); a workspace `log_level`
+    * still overrides this once [[run]] resolves the profile.
+    */
+  private[cli] def quietLogging(): Unit = {
+    new org.apache.spark.internal.Logging {
+      initializeLogIfNecessary(isInterpreter = false, silent = true)
+    }
+    org.apache.logging.log4j.core.config.Configurator.setRootLevel(
+      org.apache.logging.log4j.Level.WARN)
   }
 
   /** Parsed global options + positional arguments. */

@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -80,7 +80,7 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
     // on colstats-enabled columns AND on tp_timestamp/tp_date (zones
     // derived from the manifest's per-file min_ts/max_ts — present
     // for every table) skip files at planning time
-    else zoneMappedRead(spark, table, Seq(tableDir(table)))
+    else zoneMappedRead(spark, table, None)
   }
 
   private def evolvedMarker(table: String): Path =
@@ -168,11 +168,11 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
       val f = fs(spark, root)
       val stagingPath = new Path(staging)
       val stagingUri = stagingPath.toUri.getPath
-      val staged = walkFiles(f, stagingPath).collect {
-        case (p, _) if p.endsWith(".parquet") && {
+      val staged = walkFiles(f, stagingPath).map(_.path).filter { p =>
+        p.endsWith(".parquet") && {
           val name = p.substring(p.lastIndexOf('/') + 1)
           !name.startsWith("_") && !name.startsWith(".")
-        } => p
+        }
       }
       val added = staged.map { p =>
         val rel = p.stripPrefix(stagingUri).stripPrefix("/")
@@ -487,18 +487,11 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
     val cols = colStatsColumns(spark, table)
     if (cols.isEmpty) return 0
     healSwapAsides(spark, table)
-    val live = fileStats(spark, table, reconcileWithListing = false)
-      .select("file").collect().map(_.getString(0))
-    val covered: Set[String] =
-      if (!fs(spark, root).exists(new Path(colStatsDir(table))))
-        Set.empty
-      else spark.read.parquet(colStatsDir(table))
-        .where(col("column").isin(cols: _*))
-        .groupBy("file")
-        .agg(countDistinct("column").as("nc"))
-        .where(col("nc") === cols.size)
-        .select("file").collect().map(_.getString(0)).toSet
-    val missing = live.filterNot(covered).toSeq
+    val snap = metaSnapshot(spark, table)
+    val covered: Set[String] = snap.sidecar.keys.groupBy(_._1).collect {
+      case (f, keys) if cols.forall(c => keys.exists(_._2 == c)) => f
+    }.toSet
+    val missing = snap.manifest.keys.filterNot(covered).toSeq.sorted
     if (missing.nonEmpty) appendColStats(spark, table, missing, cols)
     missing.size
   }
@@ -529,19 +522,9 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
       healSwapAsides(spark, table)
       if (!fs(spark, root).exists(new Path(colStatsDir(table))))
         return None
-      spark.read.parquet(colStatsDir(table))
+      liveSidecar(spark, table)
     }
-    val live = fileStats(spark, table, reconcileWithListing = false)
-      .select("file")
-    val merged = sidecarWithKll(sidecar)
-      .groupBy("file", "column")
-      .agg(max_by(struct(col("sketch"), col("nulls"), col("n"),
-        col("sum_len"), col("max_len"), col("min_d"), col("max_d"),
-        col("kll")),
-        col("seq")).as("s"))
-      .select(col("file"), col("column"), col("s.*"))
-      .join(live, Seq("file"), "left_semi")
-      .groupBy("column").agg(
+    val merged = sidecar.groupBy("column").agg(
         hll_sketch_estimate(hll_union_agg(col("sketch"))).as("ndv"),
         sum("nulls").as("nulls"), sum("n").as("n"),
         sum("sum_len").as("sum_len"), max("max_len").as("max_len"),
@@ -658,27 +641,34 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
       f.isInstanceOf[org.apache.hadoop.fs.LocalFileSystem] ||
       f.isInstanceOf[org.apache.hadoop.fs.RawLocalFileSystem]
 
-  private def walkFiles(f: FileSystem, base: Path): Seq[(String, Long)] = {
+  private def walkFiles(
+      f: FileSystem, base: Path): Seq[Lake.ListedFile] = {
     val isLocal = isLocalFs(f)
     if (isLocal) {
       val start = java.nio.file.Paths.get(base.toUri.getPath)
       if (!java.nio.file.Files.exists(start)) return Seq.empty
       val stream = java.nio.file.Files.walk(start)
       try {
-        val out = Seq.newBuilder[(String, Long)]
+        val out = Seq.newBuilder[Lake.ListedFile]
         stream.forEach { p =>
-          if (java.nio.file.Files.isRegularFile(p))
-            out += ((p.toString, java.nio.file.Files.size(p)))
+          // one stat per entry; a file removed since the walk saw it
+          // is simply not listed
+          val a = try java.nio.file.Files.readAttributes(p,
+              classOf[java.nio.file.attribute.BasicFileAttributes])
+            catch { case _: java.nio.file.NoSuchFileException => null }
+          if (a != null && a.isRegularFile) out += Lake.ListedFile(
+            p.toString, a.size, a.lastModifiedTime.toMillis)
         }
         out.result()
       } finally stream.close()
     } else {
       if (!f.exists(base)) return Seq.empty
       val it = f.listFiles(base, true)
-      val out = Seq.newBuilder[(String, Long)]
+      val out = Seq.newBuilder[Lake.ListedFile]
       while (it.hasNext) {
         val st = it.next()
-        if (st.isFile) out += ((st.getPath.toUri.getPath, st.getLen))
+        if (st.isFile) out += Lake.ListedFile(
+          st.getPath.toUri.getPath, st.getLen, st.getModificationTime)
       }
       out.result()
     }
@@ -690,11 +680,11 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
     val f = fs(spark, root)
     relDirs.flatMap { rel =>
       val base = new Path(s"${tableDir(table)}/$rel")
-      walkFiles(f, base).collect {
-        case (p, _) if p.endsWith(".parquet") && {
+      walkFiles(f, base).map(_.path).filter { p =>
+        p.endsWith(".parquet") && {
           val name = p.substring(p.lastIndexOf('/') + 1)
           !name.startsWith("_") && !name.startsWith(".")
-        } => p
+        }
       }
     }.sorted
   }
@@ -703,12 +693,20 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
     * normalized to bare paths so they compare equal to
     * `input_file_name()`-derived paths.
     */
-  def dataFiles(spark: SparkSession, table: String): Seq[String] = {
+  def dataFiles(spark: SparkSession, table: String): Seq[String] =
+    listDataFiles(spark, table).map(_.path)
+
+  /** [[dataFiles]] with each file's length and modification time,
+    * sorted by path.
+    */
+  private[graft] def listDataFiles(
+      spark: SparkSession, table: String): Seq[Lake.ListedFile] = {
     val f = fs(spark, root)
     val base = new Path(tableDir(table))
     val baseUri = base.toUri.getPath
-    walkFiles(f, base).collect {
-      case (p, _) if p.endsWith(".parquet") && {
+    walkFiles(f, base).filter { lf =>
+      val p = lf.path
+      p.endsWith(".parquet") && {
         // skip hidden trees (same rule as Spark's scan): any path
         // segment below the table root starting with '_' or '.' —
         // this covers the manifest, staging, AND a crashed job's
@@ -717,8 +715,8 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
         val rel = p.stripPrefix(baseUri).stripPrefix("/")
         !rel.split('/').exists(seg =>
           seg.startsWith("_") || seg.startsWith("."))
-      } => p
-    }.sorted
+      }
+    }.sortBy(_.path)
   }
 
   /** (file count, total bytes) of one partition's data files, via the
@@ -737,14 +735,15 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
     val baseUri = base.toUri.getPath
     // sizes come from the same single walk as the enumeration — a
     // second per-file getFileStatus loop doubles the metadata cost
-    val files = walkFiles(fs(spark, root), base).filter { case (p, _) =>
+    val files = walkFiles(fs(spark, root), base).filter { lf =>
+      val p = lf.path
       p.endsWith(".parquet") && {
         val rel = p.stripPrefix(baseUri).stripPrefix("/")
         !rel.split('/').exists(s =>
           s.startsWith("_") || s.startsWith("."))
       }
     }
-    (files.size.toLong, files.map(_._2).sum)
+    (files.size.toLong, files.map(_.len).sum)
   }
 
   /** Next manifest `seq` for this table — monotonic across processes
@@ -956,45 +955,28 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
     // newest row per (file, column), dead files dropped
     val cdir = new Path(colStatsDir(table))
     if (countFiles(cdir) > manifestCompactThreshold) locked(table) {
-      val live = fileStats(spark, table, reconcileWithListing = false)
-        .select("file")
-      swap(cdir,
-        sidecarWithMg(sidecarWithSum(sidecarWithKll(
-          spark.read.parquet(cdir.toString))))
-          .groupBy("file", "column")
-          .agg(max_by(struct(col("sketch"), col("nulls"), col("n"),
-            col("sum_len"), col("max_len"), col("min_d"),
-            col("max_d"), col("min_s"), col("max_s"), col("kll"),
-            col("mg"), col("sum_v"), col("seq")),
-            col("seq")).as("s"))
-          .select(col("file"), col("column"), col("s.*"))
-          .join(live, Seq("file"), "left_semi"))
+      swap(cdir, liveSidecar(spark, table))
     }
   }
 
-  /** Pre-KLL sidecars (written before r16) have no `kll` column; a
-    * null stands in so every downstream shape is uniform (null kll =
-    * "no distribution sketch for this file" — histograms then stay
-    * off until a re-seed or new appends cover every live file).
+  /** The snapshot's newest-seq sidecar rows for files the manifest
+    * holds live, as a local DataFrame in [[Lake.SidecarSchema]] — the
+    * metadata-sized input of the sidecar compaction and the
+    * catalog-stats merge.
     */
-  private def sidecarWithKll(df: DataFrame): DataFrame =
-    if (df.columns.contains("kll")) df
-    else df.withColumn("kll", lit(null).cast("binary"))
-
-  /** Pre-r16 sidecars lack the `sum_v` column — read them as null
-    * (sum queries fall back to the residual scan; re-enabling stats
-    * re-seeds with sums).
-    */
-  private def sidecarWithSum(df: DataFrame): DataFrame =
-    if (df.columns.contains("sum_v")) df
-    else df.withColumn("sum_v", lit(null).cast("decimal(38,0)"))
-
-  /** Pre-r19 sidecars lack the `mg` frequent-items blob — null stands
-    * in (top-k queries fall back to the scan until a re-seed).
-    */
-  private def sidecarWithMg(df: DataFrame): DataFrame =
-    if (df.columns.contains("mg")) df
-    else df.withColumn("mg", lit(null).cast("binary"))
+  private def liveSidecar(spark: SparkSession, table: String): DataFrame = {
+    val snap = metaSnapshot(spark, table)
+    val rows = snap.sidecar.toSeq.collect {
+      case ((file, column), s) if snap.manifest.contains(file) =>
+        Row(file, column, s.sketch.orNull, s.nulls, s.n,
+          s.sumLen.map(Long.box).orNull, s.maxLen.map(Long.box).orNull,
+          s.minD.map(Double.box).orNull, s.maxD.map(Double.box).orNull,
+          s.minS.orNull, s.maxS.orNull, s.kll.orNull, s.mg.orNull,
+          s.sumV.map(v => new java.math.BigDecimal(v.bigInteger)).orNull,
+          s.seq)
+    }
+    spark.createDataFrame(rows.asJava, Lake.SidecarSchema)
+  }
 
   private def recordStats(
       spark: SparkSession, table: String, added: Seq[String]): Unit =
@@ -1073,8 +1055,8 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
   private def dirToken(spark: SparkSession, dir: String): String = {
     val files = walkFiles(fs(spark, root), new Path(dir))
     val h = java.security.MessageDigest.getInstance("SHA-256")
-    files.sortBy(_._1).foreach { case (p, len) =>
-      h.update(p.getBytes("UTF-8")); h.update(len.toString.getBytes)
+    files.sortBy(_.path).foreach { lf =>
+      h.update(lf.path.getBytes("UTF-8")); h.update(lf.len.toString.getBytes)
     }
     java.util.Base64.getEncoder.encodeToString(h.digest()).take(16)
   }
@@ -1083,9 +1065,10 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
     dirToken(spark, manifestDir(table)) + "|" +
       dirToken(spark, colStatsDir(table))
 
-  /** The table's [[Lake.MetaSnapshot]] — collected once per mutation,
-    * then served from the JVM-wide cache on a matching token (one
-    * cheap metadata-dir listing per probe instead of two Spark jobs).
+  /** The table's [[Lake.MetaSnapshot]] — read in-process once per
+    * mutation (manifest and sidecar parts, no Spark job), then served
+    * from the JVM-wide cache on a matching token (one cheap
+    * metadata-dir listing per probe).
     */
   private[lake] def metaSnapshot(
       spark: SparkSession, table: String): Lake.MetaSnapshot = {
@@ -1097,49 +1080,21 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
         Lake.noteMiss(key)
         val snap = locked(table) {
           healSwapAsides(spark, table)
-          val f = fs(spark, root)
           // token re-read AFTER healing (the heal may swap the dirs)
           val token = metaToken(spark, table)
+          val conf = spark.sessionState.newHadoopConf()
           // r19 optimization: direct driver-side manifest read — the
           // probe already collects to a Map, so the Spark read+shuffle
           // job bought nothing (metadata-sized dir by construction)
           val manifest: Map[String, Lake.ManifestStat] =
-            ManifestIO.readManifest(
-                spark.sessionState.newHadoopConf(), manifestDir(table))
+            ManifestIO.readManifest(conf, manifestDir(table))
               .groupBy(_.file).valuesIterator.map(_.maxBy(_.seq))
               .filter(_.rows >= 0L)
               .map(r => r.file -> Lake.ManifestStat(r.rows, r.minTs, r.maxTs))
               .toMap
-          val sidecar: Map[(String, String), Lake.SideStat] =
-            if (!f.exists(new Path(colStatsDir(table))))
-              Map.empty
-            else sidecarWithMg(sidecarWithKll(
-              sidecarWithSum(spark.read.parquet(colStatsDir(table)))))
-              .groupBy("file", "column")
-              .agg(max_by(struct(col("nulls"), col("n"), col("min_d"),
-                col("max_d"), col("min_s"), col("max_s"), col("sum_v"),
-                col("sketch"), col("kll"), col("mg")),
-                col("seq")).as("s"))
-              .select(col("file"), col("column"), col("s.nulls"),
-                col("s.n"), col("s.min_d"), col("s.max_d"),
-                col("s.min_s"), col("s.max_s"), col("s.sum_v"),
-                col("s.sketch"), col("s.kll"), col("s.mg"))
-              .collect().map { r =>
-                (r.getString(0), r.getString(1)) -> Lake.SideStat(
-                  r.getLong(2), r.getLong(3),
-                  if (r.isNullAt(4)) None else Some(r.getDouble(4)),
-                  if (r.isNullAt(5)) None else Some(r.getDouble(5)),
-                  if (r.isNullAt(6)) None else Some(r.getString(6)),
-                  if (r.isNullAt(7)) None else Some(r.getString(7)),
-                  if (r.isNullAt(8)) None
-                  else Some(BigInt(r.getDecimal(8).toBigInteger)),
-                  if (r.isNullAt(9)) None
-                  else Some(r.getAs[Array[Byte]](9)),
-                  if (r.isNullAt(10)) None
-                  else Some(r.getAs[Array[Byte]](10)),
-                  if (r.isNullAt(11)) None
-                  else Some(r.getAs[Array[Byte]](11)))
-              }.toMap
+          // the sidecar the same way: newest-seq rows folded
+          // in-process, no schema-inference job, no shuffle aggregate
+          val sidecar = ManifestIO.readSidecar(conf, colStatsDir(table))
           Lake.MetaSnapshot(token, manifest, sidecar)
         }
         Lake.storeSnapshot(key, snap)
@@ -1177,27 +1132,35 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
     */
   def readPruned(
       spark: SparkSession, table: String,
-      from: Option[Timestamp], to: Option[Timestamp]): DataFrame = {
+      from: Option[Timestamp], to: Option[Timestamp]): DataFrame =
+    if (from.isEmpty && to.isEmpty) read(spark, table)
+    else readPruned(spark, table, from, to, listDataFiles(spark, table))
+
+  /** [[readPruned]] over `listed`, the table's [[listDataFiles]] as
+    * the caller already walked them: the survivors' file index is
+    * built from that listing, so the view costs no second listing
+    * and, however many files survive, no parallel-listing job.
+    */
+  private[graft] def readPruned(
+      spark: SparkSession, table: String,
+      from: Option[Timestamp], to: Option[Timestamp],
+      listed: Seq[Lake.ListedFile]): DataFrame = {
     if (from.isEmpty && to.isEmpty) return read(spark, table)
     if (!fs(spark, root).exists(new Path(manifestDir(table))))
       return read(spark, table)
-    val keep = Seq(
-      to.map(t => col("min_ts").isNull || col("min_ts") <= lit(t)),
-      from.map(t => col("max_ts").isNull || col("max_ts") >= lit(t)))
-      .flatten.reduce(_ && _)
-    // ONE job over the manifest returns (file, keep) for every known
-    // file — the survivors and the known set come from the same pass
-    val flags = fileStats(spark, table)
-      .select(col("file"), keep.as("keep")).collect()
-      .map(r => r.getString(0) -> r.getBoolean(1)).toMap
-    val files = dataFiles(spark, table)
-      .filter(f => flags.getOrElse(f, true))
+    // the manifest ranges come from the cached metadata snapshot; a
+    // null bound, or a file the manifest has not recorded, is kept
+    val manifest = metaSnapshot(spark, table).manifest
+    def keep(m: Lake.ManifestStat): Boolean =
+      to.forall(t => m.minTs.forall(_.compareTo(t) <= 0)) &&
+        from.forall(t => m.maxTs.forall(_.compareTo(t) >= 0))
+    val files = listed.filter(lf => manifest.get(lf.path).forall(keep))
     if (files.isEmpty)
       // preserve schema (incl. partition columns) on an empty result
       read(spark, table).where(lit(false))
     // time-pruned survivors still read zone-mapped: a residual band
     // predicate on a stats column prunes WITHIN the time window
-    else zoneMappedRead(spark, table, files)
+    else zoneMappedRead(spark, table, Some(files))
   }
 
   /** ZONE-MAP pruned read over ANY numeric column with colstats
@@ -1218,9 +1181,10 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
   def readPrunedByColumn(
       spark: SparkSession, table: String, column: String,
       lo: Double, hi: Double): DataFrame =
-    readPrunedFlags(spark, table, column, "min_d", "max_d",
-      r => r.isNullAt(1) || r.isNullAt(2) ||
-        (r.getDouble(1) <= hi && r.getDouble(2) >= lo))
+    readPrunedFlags(spark, table, column, s => (s.minD, s.maxD) match {
+      case (Some(mn), Some(mx)) => mn <= hi && mx >= lo
+      case _ => true
+    })
 
   /** String twin of [[readPrunedByColumn]]: lexicographic per-file
     * ranges (`min_s`/`max_s` in the sidecar) skip files whose string
@@ -1231,29 +1195,23 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
   def readPrunedByColumn(
       spark: SparkSession, table: String, column: String,
       lo: String, hi: String): DataFrame =
-    readPrunedFlags(spark, table, column, "min_s", "max_s",
-      r => r.isNullAt(1) || r.isNullAt(2) ||
-        (r.getString(1) <= hi && r.getString(2) >= lo))
+    readPrunedFlags(spark, table, column, s => (s.minS, s.maxS) match {
+      case (Some(mn), Some(mx)) => mn <= hi && mx >= lo
+      case _ => true
+    })
 
+  /** Files whose newest sidecar row for `column` fails `keep` are
+    * skipped; files without one are read. The rows come from the
+    * table's [[metaSnapshot]], so pruning runs no Spark job.
+    */
   private def readPrunedFlags(
       spark: SparkSession, table: String, column: String,
-      loCol: String, hiCol: String,
-      keep: org.apache.spark.sql.Row => Boolean): DataFrame = {
-    val sidecar = locked(table) {
-      healSwapAsides(spark, table)
-      if (!fs(spark, root).exists(new Path(colStatsDir(table))))
-        return read(spark, table)
-      spark.read.parquet(colStatsDir(table))
-    }
-    val flags = sidecar
-      .where(col("column") === column)
-      .groupBy("file")
-      .agg(max_by(struct(col(loCol), col(hiCol)), col("seq")).as("s"))
-      .select(col("file"), col(s"s.$loCol"), col(s"s.$hiCol"))
-      .collect()
-      .map(r => r.getString(0) -> keep(r)).toMap
+      keep: Lake.SideStat => Boolean): DataFrame = {
+    if (!fs(spark, root).exists(new Path(colStatsDir(table))))
+      return read(spark, table)
+    val sidecar = metaSnapshot(spark, table).sidecar
     val files = dataFiles(spark, table)
-      .filter(f => flags.getOrElse(f, true))
+      .filter(f => sidecar.get((f, column)).forall(keep))
     if (files.isEmpty) read(spark, table).where(lit(false))
     else spark.read.option("basePath", tableDir(table)).parquet(files: _*)
   }
@@ -1340,25 +1298,27 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
           }
           l
         }
-        readPrunedFlags(spark, table, column, "min_s", "max_s", r =>
-          r.isNullAt(1) || r.isNullAt(2) || {
-            val lo = UTF8String.fromString(r.getString(1)).getBytes
-            val hi = UTF8String.fromString(r.getString(2)).getBytes
+        readPrunedFlags(spark, table, column, s => (s.minS, s.maxS) match {
+          case (Some(mn), Some(mx)) =>
+            val lo = UTF8String.fromString(mn).getBytes
+            val hi = UTF8String.fromString(mx).getBytes
             val i = lowerBound(lo)
             i < ks.length && ZoneMapFileIndex.byteCompare(ks(i), hi) <= 0
-          })
+          case _ => true
+        })
       case _: NumericType =>
         val ks: Array[Double] = distinct
           .map(_.get(0).asInstanceOf[Number].doubleValue).sorted
         if (ks.exists(_.isNaN)) return read(spark, table)
-        readPrunedFlags(spark, table, column, "min_d", "max_d", r =>
-          r.isNullAt(1) || r.isNullAt(2) || {
-            val lo = Math.nextDown(r.getDouble(1))
-            val hi = Math.nextUp(r.getDouble(2))
+        readPrunedFlags(spark, table, column, s => (s.minD, s.maxD) match {
+          case (Some(mn), Some(mx)) =>
+            val lo = Math.nextDown(mn)
+            val hi = Math.nextUp(mx)
             val res = java.util.Arrays.binarySearch(ks, lo)
             val i = if (res >= 0) res else -(res + 1)
             i < ks.length && ks(i) <= hi
-          })
+          case _ => true
+        })
       case _ => read(spark, table) // unsupported key type: no pruning
     }
   }
@@ -1390,10 +1350,14 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
     * 2^53, an unsupported min/max type — are scanned in ONE residual
     * aggregate job and combined with the metadata partial. A fully
     * covered table costs zero data I/O; a fully uncovered one costs
-    * exactly the scan a plain query would. `tp_timestamp` min/max is
-    * served by the manifest on EVERY table, no stats enablement needed
-    * (its `count` still needs the sidecar: the manifest has no null
-    * counts).
+    * exactly the scan a plain query would. `tp_timestamp`'s min/max
+    * comes from the manifest, but this API always returns its
+    * `n_tp_timestamp` too, and that count needs the sidecar's null
+    * counts (the manifest has none) — so without `tp_timestamp`
+    * colstats every file lands in the residual scan. The optimizer
+    * rule, which knows when no count is wanted, serves a range-only
+    * `tp_timestamp` from the manifest alone
+    * ([[statsAggregateIfCovered]]'s `countColumns`).
     *
     * Returns one row: `n_rows` plus `n_<c>`, `min_<c>`, `max_<c>` per
     * requested column, typed as the column itself. SQL semantics:
@@ -1410,14 +1374,19 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
   import Lake.StatsAggParts
 
   /** Metadata-only answer when EVERY live file is covered; None when a
-    * residual scan would be needed (or the table has no data). Runs
-    * only metadata-sized jobs — safe to call from an optimizer rule.
+    * residual scan would be needed (or the table has no data). Reads
+    * lake metadata in-process only, no Spark job — safe to call from
+    * an optimizer rule.
     * `columns` may be empty (a pure `count(*)`: manifest row counts +
     * the unrecorded-file check). `rangeColumns` is the subset whose
     * min/max is actually wanted — a count-only column (say a decimal
     * or a struct) needs just the sidecar's null/row counts, and
     * demanding zone ranges for it would decline queries the metadata
-    * CAN answer.
+    * CAN answer. `countColumns` is the subset whose non-null count the
+    * caller reads (`count(c)`, `avg(c)`): a `tp_timestamp` (or, in a
+    * UTC session, `tp_date`) that is only min/max'd is then served from
+    * the manifest's ts range with no sidecar row, and its count is
+    * left out of the result.
     */
   private[graft] def statsAggregateIfCovered(
       spark: SparkSession, table: String,
@@ -1427,12 +1396,13 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
       ndvColumns: Set[String] = Set.empty,
       fileFilter: String => Boolean = _ => true,
       kllColumns: Set[String] = Set.empty,
-      mgColumns: Set[String] = Set.empty): Option[StatsAggParts] = {
+      mgColumns: Set[String] = Set.empty,
+      countColumns: Set[String] = Set.empty): Option[StatsAggParts] = {
     if (!hasData(spark, table)) return None
     val schema = schemaOf(spark, table)
     if (!columns.forall(schema.fieldNames.contains)) return None
     val (groups, residual) = statsAggPartsGrouped(spark, table, columns,
-      schema, rangeColumns, sumColumns, _ => Nil, fileFilter,
+      schema, rangeColumns, countColumns, sumColumns, _ => Nil, fileFilter,
       ndvColumns, kllColumns, mgColumns)
     if (residual.nonEmpty) None
     else Some(groups.values.headOption.getOrElse(
@@ -1740,7 +1710,8 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
         idOf(bounds(f)._1.get).toString +: groupOf(f)
     }
     val (groups, residualContained) = statsAggPartsGrouped(spark, table,
-      columns, schema, rangeColumns, sumColumns, effectiveGroupOf,
+      columns, schema, rangeColumns, columns.toSet, sumColumns,
+      effectiveGroupOf,
       fileFilter = contained, ndvColumns = ndvColumns,
       kllColumns = kllColumns)
     val toScan: Seq[String] =
@@ -1913,7 +1884,7 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
       rangeColumns: Set[String],
       sumColumns: Set[String]): StatsAggParts = {
     val (groups, residual) = statsAggPartsGrouped(spark, table, columns,
-      schema, rangeColumns, sumColumns, _ => Nil)
+      schema, rangeColumns, columns.toSet, sumColumns, _ => Nil)
     groups.values.headOption
       .map(_.copy(residual = residual))
       .getOrElse(StatsAggParts(0L, Map.empty, Map.empty, Map.empty,
@@ -1938,7 +1909,8 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
       ndvColumns: Set[String] = Set.empty,
       fileFilter: String => Boolean = _ => true,
       kllColumns: Set[String] = Set.empty,
-      mgColumns: Set[String] = Set.empty)
+      mgColumns: Set[String] = Set.empty,
+      countColumns: Set[String] = Set.empty)
       : Option[Seq[(Seq[String], StatsAggParts)]] = {
     if (groupCols.isEmpty ||
       !groupCols.forall(TpSchema.partitionCols.contains)) return None
@@ -1946,7 +1918,7 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
     val schema = schemaOf(spark, table)
     if (!columns.forall(schema.fieldNames.contains)) return None
     val (groups, residual) = statsAggPartsGrouped(spark, table, columns,
-      schema, rangeColumns, sumColumns,
+      schema, rangeColumns, countColumns, sumColumns,
       f => {
         val pv = partitionValues(relOf(table, f))
         groupCols.map(pv.getOrElse(_, null))
@@ -1956,9 +1928,10 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
   }
 
   /** Core: per-group metadata partials + the global residual list.
-    * Metadata-sized jobs only (the manifest read and one sidecar
-    * aggregate); never touches data files. `groupOf` maps a file path
-    * to its group key (Nil = one global group).
+    * In-process metadata only (the table's [[metaSnapshot]] and the
+    * listing); runs no Spark job and never touches data files.
+    * `groupOf` maps a file path to its group key (Nil = one global
+    * group).
     */
   /** @param fileFilter restricts the aggregate to files whose
     *   partition directory passes a per-file-constant predicate (the
@@ -1970,6 +1943,7 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
       spark: SparkSession, table: String,
       columns: Seq[String], schema: StructType,
       rangeColumns: Set[String],
+      countColumns: Set[String],
       sumColumns: Set[String],
       groupOf: String => Seq[String],
       fileFilter: String => Boolean = _ => true,
@@ -1997,6 +1971,17 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
     val manifest: Map[String, Lake.ManifestStat] =
       snap.manifest.filter { case (f, _) => liveSet(f) }
     val sidecar = snap.sidecar
+    val utc = TpSchema.isUtcZone(spark.sessionState.conf.sessionLocalTimeZone)
+
+    // tp_timestamp's min/max is the manifest's per-file ts range, and
+    // tp_date's (dates are monotone in ts; UTC-writer convention) its
+    // day truncation — so when nothing but the range of either is
+    // wanted, no sidecar row is needed at all
+    def manifestRangeOnly(c: String): Boolean =
+      rangeColumns(c) && !countColumns(c) && !sumColumns(c) &&
+        !ndvColumns(c) && !kllColumns(c) && !mgColumns(c) &&
+        (c == TpSchema.Timestamp ||
+          (c == TpSchema.Date && dtOf(c) == DateType && utc))
 
     def usable(file: String, rows: Long, c: String): Boolean = {
       // physical partition columns are DIRECTORY truth (partitionBy
@@ -2016,6 +2001,7 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
           case StringType => !sumColumns(c)
           case _ => false
         })
+      if (manifestRangeOnly(c)) return true
       val cov = sidecar.get((file, c))
       // tp_date DERIVES from tp_timestamp (null iff ts null; extremes
       // are the day-truncated manifest ts extremes under the UTC
@@ -2023,9 +2009,7 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
       // count from the tp_timestamp row and its ranges from the
       // manifest. Estimator aggregates still need a real blob.
       if (c == TpSchema.Date && cov.isEmpty)
-        return dtOf(c) == DateType &&
-          TpSchema.isUtcZone(
-            spark.sessionState.conf.sessionLocalTimeZone) &&
+        return dtOf(c) == DateType && utc &&
           !ndvColumns(c) && !kllColumns(c) && !sumColumns(c) &&
           sidecar.get((file, TpSchema.Timestamp)).exists(_.n == rows)
       // count(c): needs the sidecar's null/row counts, and they must
@@ -2049,9 +2033,7 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
       // are monotone in ts); exact only under the engine's UTC-writer
       // convention, so gated on the reader session being UTC like the
       // splitBand date fold
-      if (c == TpSchema.Date &&
-        TpSchema.isUtcZone(
-          spark.sessionState.conf.sessionLocalTimeZone)) return true
+      if (c == TpSchema.Date && utc) return true
       val dt = dtOf(c)
       minMaxFromZones(dt) && (dt match {
         case LongType => cov.exists { r =>
@@ -2096,6 +2078,17 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
           if (hi != null &&
             (!mx.contains(c) || Lake.statsLt(dt, mx(c), hi))) mx(c) = hi
         }
+        // tp_timestamp: the manifest ts range as is; tp_date: its UTC
+        // day truncation
+        def manifestRange(c: String, m: Lake.ManifestStat): Unit =
+          if (c == TpSchema.Timestamp)
+            merge(c, dtOf(c), m.minTs.orNull, m.maxTs.orNull)
+          else {
+            def day(us: Option[Long]): java.sql.Date = us.map(u =>
+              java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(
+                Math.floorDiv(u, 86400000000L)))).orNull
+            merge(c, dtOf(c), day(m.minUs), day(m.maxUs))
+          }
         files.foreach { case (file, m) =>
           columns.foreach { c =>
             if (TpSchema.partitionCols.contains(c)) {
@@ -2122,6 +2115,10 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
                 }
                 if (rangeColumns(c)) merge(c, dt, v, v)
               }
+            } else if (manifestRangeOnly(c)) {
+              // range-only time column: usable() asked for no sidecar
+              // row, the manifest range answers
+              manifestRange(c, m)
             } else if (c == TpSchema.Date &&
                 !sidecar.contains((file, c))) {
               // derived-column fallback (usable() gated UTC + the ts
@@ -2129,34 +2126,17 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
               // ranges the day-truncated manifest extremes
               val tsr = sidecar((file, TpSchema.Timestamp))
               cnt(c) += tsr.n - tsr.nulls
-              if (rangeColumns(c)) {
-                def d(ts: Option[Timestamp]): java.sql.Date =
-                  ts.map { t =>
-                    val us = org.apache.spark.sql.catalyst.util
-                      .DateTimeUtils.fromJavaTimestamp(t)
-                    java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(
-                      Math.floorDiv(us, 86400000000L)))
-                  }.orNull
-                merge(c, dtOf(c), d(m.minTs), d(m.maxTs))
-              }
+              if (rangeColumns(c)) manifestRange(c, m)
             } else {
             val r = sidecar((file, c))
             cnt(c) += r.n - r.nulls
             if (sumColumns(c))
               r.sumV.foreach(v => sm(c) = sm.getOrElse(c, BigInt(0)) + v)
             val dt = dtOf(c)
-            def toDate(ts: Option[Timestamp]): java.sql.Date =
-              ts.map { t =>
-                val us = org.apache.spark.sql.catalyst.util.DateTimeUtils
-                  .fromJavaTimestamp(t)
-                java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(
-                  Math.floorDiv(us, 86400000000L)))
-              }.orNull
             if (!rangeColumns(c)) () // count-only column: no range merge
-            else if (c == TpSchema.Timestamp)
-              merge(c, dt, m.minTs.orNull, m.maxTs.orNull)
-            else if (c == TpSchema.Date && dt == DateType)
-              merge(c, dt, toDate(m.minTs), toDate(m.maxTs))
+            else if (c == TpSchema.Timestamp ||
+                (c == TpSchema.Date && dt == DateType))
+              manifestRange(c, m)
             else if (dt == StringType)
               merge(c, dt, r.minS.orNull, r.maxS.orNull)
             else
@@ -2229,10 +2209,11 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
     * or on `tp_timestamp`/`tp_date` via the manifest-derived time
     * zones — skips files at planning time: the integration that
     * carries [[readPrunedByColumn]]'s zone maps to plain SQL through
-    * the filtered views (verdict r16 task 1). `roots` is either the
-    * table dir (full read) or an already-pruned file list (the
-    * time-pruned survivors); partition pruning happens inside
-    * `listFiles` before the zone maps see the candidates, so the
+    * the filtered views (verdict r16 task 1). `survivors` is None for a
+    * full read (the index lists the table dir) or the time-pruned
+    * files with the statuses their listing walk found (the index
+    * takes those as is, see [[ListedStatusCache]]); partition pruning
+    * happens inside `listFiles` before the zone maps see the candidates, so the
     * prunings compose. Falls back to the plain reader when the table
     * is schema-evolved (mergeSchema needs the stock path); both zone
     * families load lazily and only when a pushed conjunct references
@@ -2240,22 +2221,34 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
     */
   private def zoneMappedRead(
       spark: SparkSession, table: String,
-      roots: Seq[String]): DataFrame = {
+      survivors: Option[Seq[Lake.ListedFile]]): DataFrame = {
     import org.apache.spark.sql.execution.datasources.{
       HadoopFsRelation, InMemoryFileIndex}
     import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
     def plain: DataFrame =
-      spark.read.option("basePath", tableDir(table)).parquet(roots: _*)
+      spark.read.option("basePath", tableDir(table))
+        .parquet(survivors.fold(Seq(tableDir(table)))(_.map(_.path)): _*)
     if (isEvolved(spark, table)) return plain
-    val idx = new InMemoryFileIndex(spark, roots.map(new Path(_)),
-      Map("basePath" -> tableDir(table)), None)
+    // the survivors' statuses as a Hadoop listing would return them,
+    // block locations included (scans schedule worse without them)
+    val f = fs(spark, root)
+    val listed = survivors.fold(Seq.empty[FileStatus])(_.map { lf =>
+      val p = f.makeQualified(new Path(lf.path))
+      val st = new FileStatus(lf.len, false, 1, f.getDefaultBlockSize(p),
+        lf.modified, p)
+      new org.apache.hadoop.fs.LocatedFileStatus(st,
+        f.getFileBlockLocations(st, 0L, lf.len))
+    })
+    val roots = if (survivors.isEmpty) Seq(new Path(tableDir(table)))
+      else listed.map(_.getPath)
+    val idx = new InMemoryFileIndex(spark, roots,
+      Map("basePath" -> tableDir(table)), None, new ListedStatusCache(listed))
     val leaves = idx.allFiles()
     if (leaves.isEmpty) return plain
     // owner only for WHOLE-table reads: a pre-pruned root set (the
     // time-pruned survivors) must never let the metadata-aggregate
     // rule answer for files the relation doesn't cover
-    val own = if (roots == Seq(tableDir(table))) Some((this, table))
-      else None
+    val own = if (survivors.isEmpty) Some((this, table)) else None
     val zoneIdx = new ZoneMapFileIndex(idx,
       () => loadZoneMaps(spark, table),
       () => loadTsZones(spark, table),
@@ -2536,8 +2529,8 @@ object Lake {
       minD: Option[Double], maxD: Option[Double],
       minS: Option[String], maxS: Option[String],
       sumV: Option[BigInt], sketch: Option[Array[Byte]],
-      kll: Option[Array[Byte]],
-      mg: Option[Array[Byte]] = None)
+      kll: Option[Array[Byte]], mg: Option[Array[Byte]],
+      sumLen: Option[Long], maxLen: Option[Long], seq: Long)
 
   /** One table's metadata, collected once per mutation: the newest-seq
     * manifest rows (tombstones dropped) and newest-seq sidecar rows for
@@ -2687,6 +2680,22 @@ object Lake {
     * the broadcast-threshold decisions they exist to flip.
     */
   val HistogramBins = 64
+
+  /** One file found by a directory walk: bare path, length, mtime. */
+  private[graft] final case class ListedFile(
+      path: String, len: Long, modified: Long)
+
+  /** The `_graft_colstats` part schema, as `appendColStats` writes it. */
+  private[lake] val SidecarSchema: StructType = StructType(Seq(
+    StructField("file", StringType), StructField("column", StringType),
+    StructField("sketch", BinaryType), StructField("nulls", LongType),
+    StructField("n", LongType), StructField("sum_len", LongType),
+    StructField("max_len", LongType), StructField("min_d", DoubleType),
+    StructField("max_d", DoubleType), StructField("min_s", StringType),
+    StructField("max_s", StringType), StructField("kll", BinaryType),
+    StructField("mg", BinaryType), StructField("sum_v", DecimalType(38, 0)),
+    StructField("seq", LongType)))
+
   /** Per-(lake, table) write serialization — the reference's
     * single-writer model (one DuckDB connection + converter process
     * lock, duck_db.go:63, convertor.go:131-141). Concurrent appends

@@ -43,10 +43,15 @@ import org.apache.spark.sql.catalyst.util.DateTimeUtils
   *  - [[readManifest]] / [[maxSeq]]: direct reads of the manifest rows
   *    (both INT96- and INT64-timestamp vintages); maxSeq comes from
   *    footer stats alone — no data pages touched.
+  *  - [[readSidecar]]: the `_graft_colstats` parts, folded to the
+  *    newest row per (file, column) — what the metadata snapshot,
+  *    zone maps and metadata-aggregate rule read, with no
+  *    schema-inference job and no shuffle aggregate.
   *
   * Everything here is exact-equivalence plumbing: ManifestIOSpec pins
   * footer stats == scan stats (including all-null and null-mixed
-  * timestamp files) and write→Spark-read round-trips.
+  * timestamp files), write→Spark-read round-trips, and readSidecar ==
+  * Spark read + newest-seq fold across sidecar vintages.
   */
 private[lake] object ManifestIO {
 
@@ -123,6 +128,84 @@ private[lake] object ManifestIO {
   def readManifest(conf: Configuration, dir: String): Seq[MRow] =
     manifestParts(conf, dir).flatMap(readManifestFile(conf, _))
 
+  /** The `_graft_colstats` sidecar under `dir`, folded to the newest
+    * `seq` row per `(file, column)` — the same answer as
+    * `spark.read.parquet(dir)` plus a `max_by(…, seq)` aggregate, read
+    * in-process without a schema-inference job or a shuffle. Parts
+    * written before a column existed (`sum_v`, `kll`, `mg`) read it as
+    * None, as do null cells. Empty when `dir` holds no parts.
+    */
+  def readSidecar(
+      conf: Configuration, dir: String)
+      : Map[(String, String), Lake.SideStat] = {
+    val newest = scala.collection.mutable.HashMap
+      .empty[(String, String), Lake.SideStat]
+    parMap(manifestParts(conf, dir))(readSidecarFile(conf, _))
+      .foreach(_.foreach { case (k, s) =>
+        if (newest.get(k).forall(_.seq < s.seq)) newest(k) = s
+      })
+    newest.toMap
+  }
+
+  private def readSidecarFile(
+      conf: Configuration, file: Path)
+      : Seq[((String, String), Lake.SideStat)] = {
+    val reader = ParquetReader.builder(new GroupReadSupport(), file)
+      .withConf(conf).build()
+    val out = Seq.newBuilder[((String, String), Lake.SideStat)]
+    try {
+      var g: Group = reader.read()
+      while (g != null) {
+        def has(n: String): Boolean =
+          g.getType.containsField(n) && g.getFieldRepetitionCount(n) > 0
+        def str(n: String): Option[String] =
+          if (has(n)) Some(g.getString(n, 0)) else None
+        def long(n: String): Option[Long] =
+          if (has(n)) Some(g.getLong(n, 0)) else None
+        def dbl(n: String): Option[Double] =
+          if (has(n)) Some(g.getDouble(n, 0)) else None
+        def bytes(n: String): Option[Array[Byte]] =
+          if (has(n)) Some(g.getBinary(n, 0).getBytes) else None
+        out += (str("file").orNull, str("column").orNull) ->
+          Lake.SideStat(
+            nulls = long("nulls").getOrElse(0L),
+            n = long("n").getOrElse(0L),
+            minD = dbl("min_d"), maxD = dbl("max_d"),
+            minS = str("min_s"), maxS = str("max_s"),
+            sumV = if (has("sum_v")) Some(decimalField(g, "sum_v", file))
+              else None,
+            sketch = bytes("sketch"), kll = bytes("kll"), mg = bytes("mg"),
+            sumLen = long("sum_len"), maxLen = long("max_len"),
+            seq = long("seq").getOrElse(0L))
+        g = reader.read()
+      }
+    } finally reader.close()
+    out.result()
+  }
+
+  /** An integral DECIMAL cell (`sum_v` is `decimal(38,0)`) as a BigInt,
+    * whichever physical type the writer chose for its precision.
+    */
+  private def decimalField(g: Group, name: String, file: Path): BigInt = {
+    val t = g.getType.getType(name).asPrimitiveType()
+    val unscaled = t.getPrimitiveTypeName match {
+      case PrimitiveType.PrimitiveTypeName.INT32 =>
+        java.math.BigInteger.valueOf(g.getInteger(name, 0).toLong)
+      case PrimitiveType.PrimitiveTypeName.INT64 =>
+        java.math.BigInteger.valueOf(g.getLong(name, 0))
+      case PrimitiveType.PrimitiveTypeName.FIXED_LEN_BYTE_ARRAY |
+           PrimitiveType.PrimitiveTypeName.BINARY =>
+        new java.math.BigInteger(g.getBinary(name, 0).getBytes)
+      case other => throw new IllegalStateException(
+        s"colstats file $file: $name is $other, not a decimal")
+    }
+    val scale = t.getLogicalTypeAnnotation match {
+      case d: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation => d.getScale
+      case _ => 0
+    }
+    BigInt(new java.math.BigDecimal(unscaled, scale).toBigInteger)
+  }
+
   private def readManifestFile(conf: Configuration, file: Path): Seq[MRow] = {
     val reader = ParquetReader.builder(new GroupReadSupport(), file)
       .withConf(conf).build()
@@ -134,8 +217,8 @@ private[lake] object ManifestIO {
           if (g.getFieldRepetitionCount("file") == 0) null
           else g.getString("file", 0),
           g.getLong("rows", 0),
-          tsField(g, "min_ts"),
-          tsField(g, "max_ts"),
+          tsField(g, "min_ts", file),
+          tsField(g, "max_ts", file),
           g.getLong("seq", 0))
         g = reader.read()
       }
@@ -143,7 +226,8 @@ private[lake] object ManifestIO {
     out.result()
   }
 
-  private def tsField(g: Group, name: String): Option[Timestamp] = {
+  private def tsField(
+      g: Group, name: String, file: Path): Option[Timestamp] = {
     if (g.getFieldRepetitionCount(name) == 0) return None
     val t = g.getType.getType(name).asPrimitiveType()
     t.getPrimitiveTypeName match {
@@ -152,7 +236,11 @@ private[lake] object ManifestIO {
         // ADVICE-medium): a manifest part written by a Spark session
         // pinned to TIMESTAMP_MILLIS would otherwise be read 1000×
         // off, silently corrupting data-skipping ranges. Unannotated
-        // int64 (shouldn't exist for this column) fails loudly.
+        // int64 fails loudly rather than falling back to micros: every
+        // writer of this column (Spark's INT96/INT64 outputs and
+        // writeManifest) annotates it, so such a part is foreign or
+        // corrupt, and a guessed unit would prune the wrong files.
+        // The error names the part so it can be removed or rewritten.
         val raw = g.getLong(name, 0)
         val micros = t.getLogicalTypeAnnotation match {
           case a: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
@@ -162,8 +250,8 @@ private[lake] object ManifestIO {
               case LogicalTypeAnnotation.TimeUnit.NANOS  => raw / 1000L
             }
           case other => throw new IllegalStateException(
-            s"manifest $name: int64 without a timestamp annotation " +
-              s"($other) — refusing to guess the unit")
+            s"manifest file $file: $name is int64 without a timestamp " +
+              s"annotation ($other) — refusing to guess the unit")
         }
         Some(DateTimeUtils.toJavaTimestamp(micros))
       case PrimitiveType.PrimitiveTypeName.INT96 =>
@@ -173,8 +261,8 @@ private[lake] object ManifestIO {
         val julianDay = bb.getInt
         val micros = (julianDay - 2440588L) * 86400000000L + nanosOfDay / 1000L
         Some(DateTimeUtils.toJavaTimestamp(micros))
-      case other =>
-        throw new IllegalStateException(s"manifest $name: unexpected $other")
+      case other => throw new IllegalStateException(
+        s"manifest file $file: $name has unexpected type $other")
     }
   }
 

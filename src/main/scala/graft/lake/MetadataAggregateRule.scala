@@ -52,17 +52,21 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
   *  - the relation covers the WHOLE table ([[ZoneMapFileIndex.owner]]
   *    is set only for full-table reads, never pre-pruned subsets)
   *  - [[Lake.statsAggregateIfCovered]] confirms EVERY live file is
-  *    metadata-answerable (sidecar rows present and trusted, no
-  *    unrecorded files, long bounds under 2^53, supported types) —
+  *    metadata-answerable (sidecar rows present and trusted where a
+  *    count, sum, sketch or value range needs them, no unrecorded
+  *    files, long bounds under 2^53, supported types) —
   *    otherwise the rule DECLINES rather than scan at optimize time,
   *    and the query runs its normal plan
   *
-  * The metadata probe itself is metadata-sized (a manifest read and
-  * one sidecar aggregate) and runs only after the full structural
-  * match, so non-candidate queries pay a pattern match and nothing
-  * else. The rewrite replaces the aggregate with a one-row
-  * [[LocalRelation]] carrying the same attribute ids, types and
-  * nullability, so downstream operators and reuse are unaffected.
+  * The metadata probe reads the table's cached metadata snapshot —
+  * manifest and sidecar parts read in-process, no Spark job — and
+  * runs only after the full structural match, so non-candidate
+  * queries pay a pattern match and nothing else. A `tp_timestamp` (or
+  * `tp_date`) that is only min/max'd needs no sidecar row at all: the
+  * manifest's per-file ranges answer it on every table. The rewrite
+  * replaces the aggregate with a one-row [[LocalRelation]] carrying
+  * the same attribute ids, types and nullability, so downstream
+  * operators and reuse are unaffected.
   * The qi33 oracle gates exactness (DuckDB recomputes from raw rows)
   * and pins files-read == 0 through the SQL path.
   */
@@ -417,6 +421,16 @@ final case class MetadataAggregateRule(session: SparkSession)
       case _ => None
     }
 
+  /** Columns whose non-null count the answer reads: a column that is
+    * only min/max'd needs none, which lets the manifest alone answer a
+    * `tp_timestamp` range.
+    */
+  private def countColumnsOf(specs: Seq[Spec]): Set[String] =
+    specs.collect {
+      case CountCol(a) => a.name
+      case AvgCol(a) => a.name
+    }.toSet
+
   private def rewrite(agg: Aggregate): Option[LogicalPlan] = {
     val (lr, cond) = unwrap(agg.child).getOrElse(return None)
     val (lake, table) = (lr.relation match {
@@ -470,8 +484,8 @@ final case class MetadataAggregateRule(session: SparkSession)
     val kllCols = flat.collect { case QuantileCol(a, _) => a.name }.toSet
     val mgCols = flat.collect { case TopKCol(a, _) => a.name }.toSet
     val parts = lake.statsAggregateIfCovered(session, table, cols,
-      rangeCols, sumCols, ndvCols, fileFilter, kllCols, mgCols)
-      .getOrElse(return None)
+      rangeCols, sumCols, ndvCols, fileFilter, kllCols, mgCols,
+      countColumnsOf(flat)).getOrElse(return None)
     // a sum past Long.MaxValue has no exact BIGINT value — decline
     if (!flat.collect { case SumCol(a) => a.name }.forall(c =>
       parts.sums.get(c).forall(_.isValidLong))) return None
@@ -1655,7 +1669,8 @@ final case class MetadataAggregateRule(session: SparkSession)
     val mgCols = flat.collect { case TopKCol(a, _) => a.name }.toSet
     val groups = lake.statsAggregateGroupedIfCovered(session, table,
       groupAttrs.map(_.name), cols, rangeCols, sumCols, ndvCols,
-      fileFilter, kllCols, mgCols).getOrElse(return None)
+      fileFilter, kllCols, mgCols, countColumnsOf(flat))
+      .getOrElse(return None)
     // any group's sum past Long.MaxValue (or avg sum past 2^53):
     // decline the whole rewrite
     val sumOnly = flat.collect { case SumCol(a) => a.name }.toSet

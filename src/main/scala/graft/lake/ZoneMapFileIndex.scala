@@ -1,8 +1,9 @@
 package graft.lake
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.{
+  FileIndex, FileStatusCache, PartitionDirectory}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -54,12 +55,13 @@ private[lake] final case class ColumnZone(
   * change (the qi29 oracle recomputes the answer from the raw rows
   * and gates exactly this).
   *
-  * Scale shape: the sidecar read is metadata-sized (one row per
-  * file×column, newest-seq wins) and loads LAZILY on the first
-  * `listFiles` — registering views over a hundred tables costs
-  * nothing for the tables a session never queries. The driver holds
-  * one `(file → column → zone)` map per queried table, the same
-  * footprint Delta's log replay accepts.
+  * Scale shape: the zones come from the table's `Lake.MetaSnapshot`
+  * — manifest and sidecar parts read in-process (one row per
+  * file×column, newest-seq wins), no Spark job — and load LAZILY on
+  * the first `listFiles` with a prunable conjunct, so registering
+  * views over a hundred tables costs nothing for the tables a session
+  * never queries. The planner holds one `(file → column → zone)` map
+  * per queried table, the same footprint Delta's log replay accepts.
   *
   * Numeric comparisons widen one ULP (`nextDown`/`nextUp`): zone
   * bounds are double-cast aggregates, so a long-typed literal above
@@ -391,4 +393,21 @@ private[lake] object ZoneMapFileIndex {
       case Some(z) => z.nulls.forall(_ > 0L)
       case None => true
     }
+}
+
+/** A [[FileStatusCache]] holding files a directory walk already found,
+  * each as its own root: an `InMemoryFileIndex` over those roots takes
+  * their statuses from here instead of listing them again — and so
+  * never launches Spark's parallel-listing job, which it otherwise
+  * does past `parallelPartitionDiscovery.threshold` (32) roots. After
+  * `refresh()` the cache is empty and the index lists for real.
+  */
+private[lake] final class ListedStatusCache(listed: Seq[FileStatus])
+  extends FileStatusCache {
+  @volatile private var byPath: Map[Path, Array[FileStatus]] =
+    listed.map(st => st.getPath -> Array(st)).toMap
+  override def getLeafFiles(path: Path): Option[Array[FileStatus]] =
+    byPath.get(path)
+  override def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit = ()
+  override def invalidateAll(): Unit = byPath = Map.empty
 }

@@ -2,7 +2,10 @@ package graft.query
 
 import java.sql.{Date, Timestamp}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.LocalTableScanExec
 import org.apache.spark.sql.types._
 
 /** Output renderers: table / csv / json / line over any DataFrame —
@@ -12,7 +15,9 @@ import org.apache.spark.sql.types._
   * tests/acceptance/test_files/all_column_types.bats:17-23).
   *
   * csv/json/line STREAM through `toLocalIterator` — the driver holds
-  * one partition at a time — and the `*To` variants write each rendered
+  * one partition at a time; a result already in memory (a local
+  * relation, like a metadata-served aggregate) is read in place, with
+  * no Spark job — and the `*To` variants write each rendered
   * row straight to the output sink, so a huge result never accumulates
   * in driver memory (the String convenience wrappers DO buffer; the CLI
   * uses the streaming forms). `table` must buffer to compute column
@@ -64,7 +69,7 @@ object Render {
     var first = true
     def nl(): Unit = { if (!first) out.append('\n'); first = false }
     if (header) { nl(); out.append(df.columns.map(esc).mkString(sep)) }
-    val it = df.toLocalIterator()
+    val it = rows(df)
     while (it.hasNext) {
       val r = it.next()
       nl()
@@ -101,7 +106,7 @@ object Render {
     }
     val fields = df.schema.fields
     out.append('[')
-    val it = df.toLocalIterator()
+    val it = rows(df)
     var first = true
     while (it.hasNext) {
       val r = it.next()
@@ -136,7 +141,7 @@ object Render {
   def lineTo(out: Appendable, df: DataFrame): Unit = {
     val cols = df.columns
     val w = cols.map(_.length).maxOption.getOrElse(0)
-    val it = df.toLocalIterator()
+    val it = rows(df)
     var firstRow = true
     while (it.hasNext) {
       val r = it.next()
@@ -151,6 +156,16 @@ object Render {
       firstRow = false
     }
   }
+
+  /** `df`'s rows in order: read in place when the executed plan is a
+    * local table scan held in memory (`toLocalIterator` would launch a
+    * job to stream rows already at hand), else streamed.
+    */
+  private def rows(df: DataFrame): Iterator[Row] =
+    df.queryExecution.executedPlan match {
+      case _: LocalTableScanExec => df.collect().iterator
+      case _ => df.toLocalIterator().asScala
+    }
 
   private def buffered(body: Appendable => Unit): String = {
     val sb = new java.lang.StringBuilder

@@ -91,9 +91,14 @@ object Views {
     // manifest) but no data files — spark.read would fail schema
     // inference and one emptied table would break the whole session.
     // Skip it: querying it then gets the "no data collected" shaping.
+    // The same walk feeds a time-pruned view's file index.
     val tables = lake.listTables(spark)
-      .filter(t => lake.dataFiles(spark, t).nonEmpty)
-    tables.foreach(t => filtered(spark, lake, t, f).createOrReplaceTempView(t))
+      .map(t => t -> lake.listDataFiles(spark, t))
+      .filter(_._2.nonEmpty)
+    tables.foreach { case (t, listed) =>
+      withPredicate(lake.readPruned(spark, t, f.from, f.to, listed), f)
+        .createOrReplaceTempView(t)
+    }
     // materialized rollups surface as <table>_rollup_<name> views —
     // refreshed-at-collect aggregates, so the dashboard query reads
     // rollup rows, never the raw table (RollupSpec scaladoc). Views
@@ -102,7 +107,7 @@ object Views {
       graft.lake.Rollup.exists(spark, lake, r))
     live.foreach(r => graft.lake.Rollup.read(spark, lake, r)
       .createOrReplaceTempView(r.viewName))
-    tables ++ live.map(_.viewName)
+    tables.map(_._1) ++ live.map(_.viewName)
   }
 
   /** The filtered DataFrame for one table (the view body). A time
@@ -111,8 +116,9 @@ object Views {
     * so pruning is a pure scan reduction, never a semantics change.
     */
   def filtered(spark: SparkSession, lake: Lake, table: String,
-      f: Filters): DataFrame = {
-    val base = lake.readPruned(spark, table, f.from, f.to)
+      f: Filters): DataFrame =
+    withPredicate(lake.readPruned(spark, table, f.from, f.to), f)
+
+  private def withPredicate(base: DataFrame, f: Filters): DataFrame =
     predicate(f).map(base.where).getOrElse(base)
-  }
 }

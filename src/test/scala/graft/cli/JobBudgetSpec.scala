@@ -1,0 +1,89 @@
+package graft.cli
+
+import java.io.{ByteArrayOutputStream, PrintStream}
+import java.nio.file.Files
+
+import org.apache.spark.JobCounter
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkTest
+import graft.config.PartitionSpec
+import graft.lake.{Lake, TpSchema}
+import graft.query.Render
+
+/** The Spark-job budget of a cold `graft query`: lake metadata (the
+  * manifest, the colstats sidecar, file listings) is read in-process,
+  * so a metadata-served aggregate runs no job at all and a
+  * time-windowed lookup runs only its own query — however many files
+  * the window keeps. Jobs are counted with a listener around an
+  * in-process `Main.run`, and the rows must equal the plain-scan
+  * answer.
+  */
+class JobBudgetSpec extends AnyFunSuite with SparkTest {
+
+  private val From = "2024-02-15T00:00:00"
+  private val To = "2024-11-15T00:00:00"
+
+  /** 48 files (4 `tp_index` values × 12 months) with colstats on value
+    * columns only — none on `tp_timestamp`, as a collected log table.
+    */
+  private lazy val lake: Lake = {
+    val lake = Lake(Files.createTempDirectory("graft_jobs").toString)
+    val spec = PartitionSpec("web", "p0", tpIndexColumn = Some("idx"))
+    val raw = spark.range(0, 4800).select(
+      col("id").as("req_id"),
+      expr("timestamp '2024-01-01 00:00:00' + " +
+        "make_interval(0,0,0,0,0,0, id * 6570)").as("tp_timestamp"),
+      (col("id") % 4).cast("string").as("idx"),
+      concat(lit("u"), (col("id") % 7).cast("string")).as("user"),
+      (col("id") * 3).as("bytes"))
+    lake.append(spark, "web", TpSchema.enrich(raw, spec))
+    lake.enableColumnStats(spark, "web", Seq("req_id", "user", "bytes"))
+    lake
+  }
+
+  private def plain = spark.read.option("basePath", lake.tableDir("web"))
+    .parquet(lake.tableDir("web"))
+
+  /** (rc, stdout, jobs launched) of one in-process CLI call. */
+  private def query(args: String*): (Int, String, Int) = {
+    val config = Files.createTempDirectory("graft_jobs_cfg").toString
+    val bos = new ByteArrayOutputStream()
+    val (rc, jobs) = JobCounter.count(spark.sparkContext) {
+      Main.run(spark, Seq("query") ++ args ++ Seq(
+        "--output", "csv", "--lake-dir", lake.root, "--config-dir", config),
+        new PrintStream(bos, true, "UTF-8"))
+    }
+    (rc, new String(bos.toByteArray, "UTF-8").trim, jobs)
+  }
+
+  test("a whole-table count/min/max(tp_timestamp) runs no Spark job") {
+    val want = Render.csv(plain.agg(count(lit(1)).as("n"),
+      min(TpSchema.Timestamp).as("lo"), max(TpSchema.Timestamp).as("hi")))
+    val (rc, out, jobs) = query("SELECT count(*) AS n, " +
+      "min(tp_timestamp) AS lo, max(tp_timestamp) AS hi FROM web")
+    assert(rc === 0, out)
+    assert(out === want)
+    assert(jobs === 0, s"metadata-served aggregate launched $jobs job(s)")
+  }
+
+  test("a --from/--to lookup keeping more than 32 files runs exactly " +
+      "one job") {
+    val lo = java.sql.Timestamp.valueOf(From.replace('T', ' '))
+    val hi = java.sql.Timestamp.valueOf(To.replace('T', ' '))
+    val kept = lake.fileStats(spark, "web").where(
+      col("min_ts") <= lit(hi) && col("max_ts") >= lit(lo)).count()
+    assert(kept > 32, s"the window must keep > 32 files, kept $kept")
+    val want = Render.csv(plain
+      .where(col(TpSchema.Timestamp).between(lo, hi) && col("user") === "u3")
+      .select("req_id", "user", "bytes").orderBy("req_id").limit(100))
+    val (rc, out, jobs) = query(
+      "SELECT req_id, user, bytes FROM web WHERE user = 'u3' " +
+        "ORDER BY req_id LIMIT 100",
+      "--from", From, "--to", To)
+    assert(rc === 0, out)
+    assert(out === want)
+    assert(jobs === 1, s"windowed lookup launched $jobs job(s)")
+  }
+}

@@ -154,6 +154,28 @@ class MainSpec extends AnyFunSuite with SparkTest {
     } finally f.delete()
   }
 
+  test("quiet by default: WARN before the session, and a workspace " +
+      "log_level still overrides it") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.config.Configurator
+    def rootLevel = LogManager.getRootLogger.getLevel
+    val before = rootLevel
+    val dir = Files.createTempDirectory("graft_cli_log").toFile
+    new File(dir, "config").mkdirs()
+    write(new File(dir, "config/workspaces.tpc"),
+      """workspace "loud" { log_level = "info" }""")
+    try {
+      Main.quietLogging()
+      assert(rootLevel === Level.WARN)
+      val (rc, out) = cli(dir, "table", "list")
+      assert(rc == 0, out)
+      assert(rootLevel === Level.WARN, "no profile selected: stays quiet")
+      val (rc2, out2) = cli(dir, "table", "list", "--workspace", "loud")
+      assert(rc2 == 0, out2)
+      assert(rootLevel === Level.INFO)
+    } finally Configurator.setRootLevel(before)
+  }
+
   test("unknown --workspace fails with the normal Error path, rc=1") {
     val (rc, out) = cli(root, "table", "list", "--workspace", "nope")
     assert(rc == 1 && out.contains("Error:"), out)

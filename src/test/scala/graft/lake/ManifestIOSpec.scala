@@ -126,4 +126,125 @@ class ManifestIOSpec extends AnyFunSuite with SparkTest {
     assert(new java.io.File(dir, "_SUCCESS").isFile,
       "direct-written manifest dirs must carry _SUCCESS (heal contract)")
   }
+
+  /** A sidecar row as plain comparable values (arrays as Seqs). */
+  private def flat(s: Lake.SideStat): Seq[Any] = Seq(
+    s.nulls, s.n, s.minD, s.maxD, s.minS, s.maxS, s.sumV,
+    s.sketch.map(_.toSeq), s.kll.map(_.toSeq), s.mg.map(_.toSeq),
+    s.sumLen, s.maxLen, s.seq)
+
+  test("readSidecar == spark.read.parquet + newest-seq fold across " +
+      "vintages, null ranges, huge sums and repeated seqs") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.StructType
+    val dir = Files.createTempDirectory("graft_mios").toString + "/cs"
+    val big = new java.math.BigDecimal("1180591620717411303424") // 2^70
+    val neg = new java.math.BigDecimal("-36893488147419103232") // -2^65
+    def row(file: String, column: String, seq: Long, sumV: java.math.BigDecimal,
+        ranged: Boolean = true): Map[String, Any] = Map(
+      "file" -> file, "column" -> column,
+      "sketch" -> Array[Byte](1, seq.toByte), "nulls" -> seq, "n" -> 10L,
+      "sum_len" -> (if (ranged) 40L * seq else null),
+      "max_len" -> (if (ranged) 7L else null),
+      "min_d" -> (if (ranged) -1.5 * seq else null),
+      "max_d" -> (if (ranged) 99.25 + seq else null),
+      "min_s" -> (if (ranged) s"a$seq" else null),
+      "max_s" -> (if (ranged) s"z$seq" else null),
+      "kll" -> Array[Byte](3, seq.toByte), "mg" -> Array[Byte](5, seq.toByte),
+      "sum_v" -> sumV, "seq" -> seq)
+    // one part per vintage: `drop` names the columns its writer lacked
+    def part(drop: Set[String], rows: Map[String, Any]*): Unit = {
+      val schema = StructType(
+        Lake.SidecarSchema.fields.filterNot(f => drop(f.name)))
+      spark.createDataFrame(
+        java.util.Arrays.asList(rows.map(r =>
+          Row.fromSeq(schema.fieldNames.toSeq.map(r))): _*), schema)
+        .coalesce(1).write.mode("append").parquet(dir)
+    }
+    part(Set.empty,
+      row("/t/f1.parquet", "v", 1L, big),
+      row("/t/f1.parquet", "s", 1L, null, ranged = false),
+      row("/t/f2.parquet", "v", 4L, neg))
+    part(Set("sum_v", "kll", "mg"), row("/t/f1.parquet", "v", 2L, null))
+    part(Set("kll"),
+      row("/t/f1.parquet", "v", 3L, big.add(java.math.BigDecimal.ONE)),
+      row("/t/f2.parquet", "v", 1L, big))
+    part(Set("mg"),
+      row("/t/f1.parquet", "s", 5L, null, ranged = false),
+      row("/t/f3.parquet", "v", 2L, neg))
+
+    // the Spark path: merged schema, absent columns as nulls, newest
+    // seq per (file, column) by max_by
+    val merged = spark.read.option("mergeSchema", "true").parquet(dir)
+    val filled = Lake.SidecarSchema.fields.foldLeft(merged) { (df, f) =>
+      if (df.columns.contains(f.name)) df
+      else df.withColumn(f.name, lit(null).cast(f.dataType))
+    }
+    val values = Seq("nulls", "n", "min_d", "max_d", "min_s", "max_s",
+      "sum_v", "sketch", "kll", "mg", "sum_len", "max_len", "seq")
+    val want = filled.groupBy("file", "column")
+      .agg(max_by(struct(values.map(col): _*), col("seq")).as("s"))
+      .select(col("file") +: col("column") +: values.map(v => col(s"s.$v")): _*)
+      .collect().map { r =>
+        def opt[T](i: Int)(f: Int => T): Option[T] =
+          if (r.isNullAt(i)) None else Some(f(i))
+        (r.getString(0), r.getString(1)) -> Seq(
+          r.getLong(2), r.getLong(3),
+          opt(4)(r.getDouble), opt(5)(r.getDouble),
+          opt(6)(r.getString), opt(7)(r.getString),
+          opt(8)(i => BigInt(r.getDecimal(i).toBigInteger)),
+          opt(9)(i => r.getAs[Array[Byte]](i).toSeq),
+          opt(10)(i => r.getAs[Array[Byte]](i).toSeq),
+          opt(11)(i => r.getAs[Array[Byte]](i).toSeq),
+          opt(12)(r.getLong), opt(13)(r.getLong), r.getLong(14))
+      }.toMap
+
+    val got = ManifestIO.readSidecar(conf, dir)
+    assert(got.keySet === want.keySet)
+    got.foreach { case (k, s) => assert(flat(s) === want(k), k) }
+    // the cases the fixture plants, spelled out
+    val f1v = got(("/t/f1.parquet", "v"))
+    assert(f1v.seq === 3L && f1v.kll.isEmpty && f1v.mg.isDefined)
+    assert(f1v.sumV === Some(BigInt(big.toBigInteger) + 1))
+    assert(got(("/t/f2.parquet", "v")).sumV === Some(BigInt(neg.toBigInteger)))
+    val f1s = got(("/t/f1.parquet", "s"))
+    assert(f1s.seq === 5L && f1s.mg.isEmpty && f1s.sumV.isEmpty)
+    assert(f1s.minD.isEmpty && f1s.maxD.isEmpty &&
+      f1s.minS.isEmpty && f1s.maxS.isEmpty && f1s.sumLen.isEmpty)
+    // no parts at all: empty, not an error
+    assert(ManifestIO.readSidecar(conf, dir + "_absent").isEmpty)
+  }
+
+  test("an INT64 manifest timestamp without a unit annotation fails " +
+      "loudly and names the manifest file") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    import org.apache.parquet.io.api.Binary
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = Files.createTempDirectory("graft_mio64").toString
+    val schema = MessageTypeParser.parseMessageType(
+      """message spark_schema {
+        |  optional binary file (UTF8);
+        |  required int64 rows;
+        |  optional int64 min_ts;
+        |  optional int64 max_ts;
+        |  required int64 seq;
+        |}""".stripMargin)
+    val part = new org.apache.hadoop.fs.Path(s"$dir/part-00000-bare.parquet")
+    val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(part, conf))
+      .withConf(conf).withType(schema).build()
+    try {
+      val g = new SimpleGroupFactory(schema).newGroup()
+      g.append("file", Binary.fromString("/x/f1.parquet"))
+      g.append("rows", 3L)
+      g.append("min_ts", 1709287200000000L)
+      g.append("max_ts", 1709287200000000L)
+      g.append("seq", 1L)
+      w.write(g)
+    } finally w.close()
+    val e = intercept[IllegalStateException](ManifestIO.readManifest(conf, dir))
+    assert(e.getMessage.contains("part-00000-bare.parquet"), e.getMessage)
+    assert(e.getMessage.contains("min_ts"), e.getMessage)
+  }
 }

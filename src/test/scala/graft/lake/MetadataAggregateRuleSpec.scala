@@ -1822,4 +1822,60 @@ class MetadataAggregateRuleSpec extends AnyFunSuite with SparkTest {
     val qu = spark.sql("SELECT graft_topk(tp_partition, 1) AS top FROM tk")
     assert(qu.head().getSeq[Row](0).nonEmpty)
   }
+
+  /** Served = the aggregate became an in-memory LocalRelation with no
+    * lake relation left under it; declined = the plan still scans.
+    */
+  private def served(q: org.apache.spark.sql.DataFrame): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    val plan = q.queryExecution.optimizedPlan
+    plan.find(_.isInstanceOf[LocalRelation]).isDefined &&
+      plan.find(_.isInstanceOf[LogicalRelation]).isEmpty
+  }
+
+  test("decision rows: tp_timestamp ranges are manifest-served without " +
+      "tp_timestamp colstats; its counts still decline") {
+    val lake = Lake(Files.createTempDirectory("graft_metaagg_ts").toString)
+    for (d <- Seq("2024-03-05", "2024-04-11", "2024-05-20")) {
+      val spec = PartitionSpec("tsr", "p0", tpIndexColumn = Some("idx"))
+      val raw = spark.range(0, 40).select(
+        col("id").as("event_id"),
+        when(col("id") === 7, lit(null).cast("timestamp")).otherwise(
+          expr(s"timestamp '$d 00:00:00' + " +
+            "make_interval(0,0,0,0,0,0, id * 977)")).as("tp_timestamp"),
+        (col("id") % 2).cast("string").as("idx"),
+        (col("id") * 5).as("v"))
+      lake.append(spark, "tsr", TpSchema.enrich(raw, spec))
+    }
+    lake.enableColumnStats(spark, "tsr", Seq("v"))
+    Views.register(spark, lake, Views.Filters())
+    val scan = spark.read.option("basePath", lake.tableDir("tsr"))
+      .parquet(lake.tableDir("tsr"))
+    def truth(aggs: org.apache.spark.sql.Column*) =
+      scan.agg(aggs.head, aggs.tail: _*).head()
+
+    // served: count(*) from the manifest rows, the range from its
+    // min_ts/max_ts (tp_date's from their UTC days)
+    val rangeQ = spark.sql("SELECT count(*) AS n, min(tp_timestamp) AS lo, " +
+      "max(tp_timestamp) AS hi, min(tp_date) AS dlo, max(tp_date) AS dhi " +
+      "FROM tsr")
+    assert(served(rangeQ), rangeQ.queryExecution.optimizedPlan)
+    assert(ScanAudit.filesReadAfterRun(rangeQ) === 0)
+    assert(rangeQ.head() === truth(count(lit(1)), min("tp_timestamp"),
+      max("tp_timestamp"), min("tp_date"), max("tp_date")))
+    // declined: a count of tp_timestamp needs the sidecar's null counts,
+    // alone or beside the range, and avg needs counts and sums
+    for (sql <- Seq(
+        "SELECT count(tp_timestamp) AS c FROM tsr",
+        "SELECT count(*) AS n, min(tp_timestamp) AS lo, " +
+          "count(tp_timestamp) AS c FROM tsr",
+        "SELECT min(tp_timestamp) AS lo, avg(event_id) AS a FROM tsr")) {
+      val q = spark.sql(sql)
+      assert(!served(q), s"must decline: $sql")
+      assert(ScanAudit.filesReadAfterRun(q) > 0, sql)
+    }
+    assert(spark.sql("SELECT count(tp_timestamp) AS c FROM tsr").head() ===
+      truth(count("tp_timestamp")))
+  }
 }
