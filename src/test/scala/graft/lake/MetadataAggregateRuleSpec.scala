@@ -1878,4 +1878,148 @@ class MetadataAggregateRuleSpec extends AnyFunSuite with SparkTest {
     assert(spark.sql("SELECT count(tp_timestamp) AS c FROM tsr").head() ===
       truth(count("tp_timestamp")))
   }
+
+  /** The rule's decision from the EXECUTED plan, classified the way
+    * the benchmark does: `served` (a local relation, no file scan),
+    * `hybrid` (a local relation merged with a file scan) or `declined`
+    * (a file scan only). Descends through AQE stages and subqueries.
+    */
+  private def decision(q: org.apache.spark.sql.DataFrame): String = {
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => nodes(s.plan)
+      case o => o +: (o.children ++ o.subqueries).flatMap(nodes)
+    }
+    q.collect()
+    val ns = nodes(q.queryExecution.executedPlan)
+    val scan = ns.exists(_.isInstanceOf[FileSourceScanExec])
+    val local = ns.exists(_.isInstanceOf[LocalTableScanExec])
+    if (local && scan) "hybrid"
+    else if (local) "served"
+    else if (scan) "declined"
+    else "none"
+  }
+
+  test("decision table: every served/hybrid/declined shape of the rule, " +
+      "each equal to the plain scan") {
+    val lake = Lake(Files.createTempDirectory("graft_metaagg_dt").toString)
+    val spec = PartitionSpec("dtab", "p0", tpIndexColumn = Some("idx"))
+    // two day-contained days and one run that crosses midnight, so
+    // day buckets and bands have contained files AND straddlers
+    for (start <- Seq("2024-03-05 00:00:00", "2024-04-11 00:00:00",
+        "2024-05-20 20:00:00")) {
+      val raw = spark.range(0, 40, 1, 4).select(
+        col("id").as("event_id"),
+        expr(s"timestamp '$start' + " +
+          "make_interval(0,0,0,0,0,0, id * 977)").as("tp_timestamp"),
+        (col("id") % 2).cast("string").as("idx"),
+        (col("id") * 5).as("v"),
+        when(col("id") % 3 === 0, lit("alpha")).otherwise(lit("beta"))
+          .as("cat"),
+        // 40 × 2^51 per append: the exact sum passes 2^53
+        lit(1L << 51).as("big"))
+      lake.append(spark, "dtab", TpSchema.enrich(raw, spec))
+    }
+    lake.enableColumnStats(spark, "dtab",
+      Seq("v", "cat", "big", "tp_timestamp"))
+    Views.register(spark, lake, Views.Filters())
+    spark.read.option("basePath", lake.tableDir("dtab"))
+      .parquet(lake.tableDir("dtab")).createOrReplaceTempView("dtab_plain")
+
+    val band = "tp_timestamp BETWEEN timestamp'2024-03-05 00:00:00' " +
+      "AND timestamp'2024-05-20 22:00:00'"
+    val orBands = "(tp_timestamp BETWEEN timestamp'2024-03-05 00:00:00' " +
+      "AND timestamp'2024-03-06 00:00:00' OR tp_timestamp BETWEEN " +
+      "timestamp'2024-04-11 00:00:00' AND timestamp'2024-04-12 00:00:00')"
+    val utcRows: Seq[(String, String, String)] = Seq(
+      ("whole table", "served",
+        "SELECT count(*) AS n, min(v) AS lo, max(v) AS hi, sum(v) AS s " +
+          "FROM dtab"),
+      ("partition-only WHERE", "served",
+        "SELECT count(*) AS n, max(v) AS hi FROM dtab WHERE tp_index = 1"),
+      ("GROUP BY partition", "served",
+        "SELECT tp_index, count(*) AS n, avg(v) AS a FROM dtab " +
+          "GROUP BY tp_index"),
+      ("single band", "hybrid",
+        s"SELECT count(*) AS n, min(v) AS lo, avg(v) AS a FROM dtab " +
+          s"WHERE $band"),
+      ("OR-of-bands", "served",
+        s"SELECT count(*) AS n, max(v) AS hi FROM dtab WHERE $orBands"),
+      ("tp_date IN (...)", "hybrid",
+        "SELECT count(*) AS n, sum(v) AS s FROM dtab WHERE tp_date IN " +
+          "(DATE'2024-03-05', DATE'2024-05-21')"),
+      ("band + GROUP BY partition", "hybrid",
+        s"SELECT tp_index, count(*) AS n, max(v) AS hi FROM dtab " +
+          s"WHERE $band GROUP BY tp_index"),
+      ("bucket day", "hybrid",
+        "SELECT tp_date, count(*) AS n, sum(v) AS s FROM dtab " +
+          "GROUP BY tp_date"),
+      ("bucket day + band", "served",
+        s"SELECT tp_date, count(*) AS n FROM dtab WHERE $orBands " +
+          "GROUP BY tp_date"),
+      ("bucket hour", "declined",
+        "SELECT date_trunc('HOUR', tp_timestamp) AS h, count(*) AS n " +
+          "FROM dtab GROUP BY date_trunc('HOUR', tp_timestamp)"),
+      ("bucket hour + band", "declined",
+        s"SELECT date_trunc('HOUR', tp_timestamp) AS h, count(*) AS n " +
+          s"FROM dtab WHERE $band GROUP BY date_trunc('HOUR', tp_timestamp)"),
+      ("bucket month", "served",
+        "SELECT date_trunc('MONTH', tp_timestamp) AS m, count(*) AS n, " +
+          "max(v) AS hi FROM dtab GROUP BY date_trunc('MONTH', tp_timestamp)"),
+      ("bucket month + band", "hybrid",
+        s"SELECT date_trunc('MONTH', tp_timestamp) AS m, count(*) AS n " +
+          s"FROM dtab WHERE $band GROUP BY date_trunc('MONTH', tp_timestamp)"),
+      ("year, month extract", "served",
+        "SELECT year(tp_timestamp) AS y, month(tp_timestamp) AS m, " +
+          "count(*) AS n FROM dtab " +
+          "GROUP BY year(tp_timestamp), month(tp_timestamp)"),
+      ("year, month extract + band", "hybrid",
+        s"SELECT year(tp_timestamp) AS y, month(tp_timestamp) AS m, " +
+          s"count(*) AS n FROM dtab WHERE $band " +
+          "GROUP BY year(tp_timestamp), month(tp_timestamp)"),
+      ("key-derived output", "hybrid",
+        "SELECT cast(date_trunc('DAY', tp_timestamp) AS date) AS d, " +
+          "count(*) AS n FROM dtab GROUP BY date_trunc('DAY', tp_timestamp)"),
+      ("count(DISTINCT tp_date), whole", "declined",
+        "SELECT count(DISTINCT tp_date) AS d FROM dtab"),
+      ("count(DISTINCT tp_date), banded", "served",
+        s"SELECT count(DISTINCT tp_date) AS d FROM dtab WHERE $orBands"),
+      ("graft_topk, whole", "served",
+        "SELECT graft_topk(cat, 2) AS top FROM dtab"),
+      ("graft_topk, banded", "declined",
+        s"SELECT graft_topk(cat, 2) AS top FROM dtab WHERE $orBands"),
+      ("subquery WHERE", "declined",
+        "SELECT count(*) AS n FROM dtab " +
+          "WHERE tp_year = (SELECT max(tp_year) FROM dtab_plain)"),
+      ("avg past 2^53, whole", "declined",
+        "SELECT avg(big) AS a FROM dtab"),
+      ("avg past 2^53, contained band", "served",
+        "SELECT avg(big) AS a FROM dtab WHERE tp_timestamp BETWEEN " +
+          "timestamp'2024-03-05 00:00:00' AND timestamp'2024-03-05 23:59:59'"))
+    val nonUtcRows: Seq[(String, String, String)] = Seq(
+      ("non-UTC session, bucket day", "declined",
+        "SELECT tp_date, count(*) AS n FROM dtab GROUP BY tp_date"),
+      ("non-UTC session, tp_date band", "declined",
+        "SELECT count(*) AS n FROM dtab WHERE tp_date = DATE'2024-03-05'"))
+
+    def check(rows: Seq[(String, String, String)]): Seq[String] =
+      rows.flatMap { case (name, want, sql) =>
+        val got = decision(spark.sql(sql))
+        val plain = sql.replaceAll("FROM dtab\\b", "FROM dtab_plain")
+        val same = spark.sql(sql).collect().map(_.toString).sorted.toSeq ==
+          spark.sql(plain).collect().map(_.toString).sorted.toSeq
+        (if (got == want) Nil else Seq(s"$name: want $want, got $got")) ++
+          (if (same) Nil else Seq(s"$name: result differs from the scan"))
+      }
+    val tzKey = "spark.sql.session.timeZone"
+    val prev = spark.conf.get(tzKey)
+    val nonUtc = try {
+      spark.conf.set(tzKey, "America/New_York")
+      check(nonUtcRows)
+    } finally spark.conf.set(tzKey, prev)
+    val wrong = check(utcRows) ++ nonUtc
+    assert(wrong.isEmpty, wrong.mkString("\n"))
+  }
 }
