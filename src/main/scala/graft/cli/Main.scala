@@ -2078,8 +2078,9 @@ object Main {
           import org.apache.spark.sql.functions.{col, lit}
           val whole = opts.ts("from").isEmpty && opts.ts("to").isEmpty
           val unioned =
-            if (whole) lake.statsAggregateIfCovered(spark, t, cols,
-              Set.empty, Set.empty, cols.toSet).map(_.ndvs)
+            if (whole) lake.metaParts(spark, t,
+              graft.lake.Lake.Needs(ndv = cols.toSet))
+              .filter(_.toScan.isEmpty).map(_.whole.ndvs)
             else None
           val est: Map[String, Long] = unioned.getOrElse {
             val base = lake.read(spark, t)
@@ -2115,12 +2116,9 @@ object Main {
                 f.map(_.getTime * 1000L).getOrElse(Long.MinValue),
                 to0.map(_.getTime * 1000L).getOrElse(Long.MaxValue)))
             }
-          val served: Option[Long] = band match {
-            case None => lake.distinctDayCounts(spark, t, _ => Nil,
-              _ => true).map(_.values.headOption.getOrElse(0L))
-            case Some(b) =>
-              lake.distinctDayCountsBanded(spark, t, Seq(b), _ => true)
-          }
+          val served: Option[Long] =
+            lake.distinctDayCounts(spark, t, band.map(Seq(_)))
+              .map(_.values.headOption.getOrElse(0L))
           val n = served.getOrElse {
             val base = lake.read(spark, t)
             val banded = band match {
@@ -2152,10 +2150,9 @@ object Main {
               org.apache.spark.sql.types.StringType)
           val merged =
             if (opts.ts("from").isEmpty && opts.ts("to").isEmpty)
-              lake.statsAggregateIfCovered(spark, t, strCols,
-                Set.empty, Set.empty, Set.empty, _ => true,
-                Set.empty, strCols.toSet)
-                .map(_.mgBlobs)
+              lake.metaParts(spark, t,
+                graft.lake.Lake.Needs(mg = strCols.toSet))
+                .filter(_.toScan.isEmpty).map(_.whole.mgBlobs)
                 .filter(_.values.forall(b =>
                   graft.functions.TopKFns.isExact(
                     graft.functions.TopKFns.fromBlob(b))))
@@ -2200,9 +2197,9 @@ object Main {
               org.apache.spark.sql.types.NumericType])
           val whole = opts.ts("from").isEmpty && opts.ts("to").isEmpty
           val merged =
-            if (whole) lake.statsAggregateIfCovered(spark, t, numCols,
-              Set.empty, Set.empty, Set.empty, _ => true,
-              numCols.toSet).map(_.kllBlobs)
+            if (whole) lake.metaParts(spark, t,
+              graft.lake.Lake.Needs(kll = numCols.toSet))
+              .filter(_.toScan.isEmpty).map(_.whole.kllBlobs)
             else None
           val rows: Map[String, Seq[Option[Double]]] = merged match {
             case Some(blobs) => numCols.map(c => c -> ps.map(p =>

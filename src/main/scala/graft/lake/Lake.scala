@@ -1356,8 +1356,7 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
     * counts (the manifest has none) — so without `tp_timestamp`
     * colstats every file lands in the residual scan. The optimizer
     * rule, which knows when no count is wanted, serves a range-only
-    * `tp_timestamp` from the manifest alone
-    * ([[statsAggregateIfCovered]]'s `countColumns`).
+    * `tp_timestamp` from the manifest alone ([[Lake.Needs]]' `counts`).
     *
     * Returns one row: `n_rows` plus `n_<c>`, `min_<c>`, `max_<c>` per
     * requested column, typed as the column itself. SQL semantics:
@@ -1371,43 +1370,7 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
       columns: Seq[String]): DataFrame =
     statsAggregateAudited(spark, table, columns)._1
 
-  import Lake.StatsAggParts
-
-  /** Metadata-only answer when EVERY live file is covered; None when a
-    * residual scan would be needed (or the table has no data). Reads
-    * lake metadata in-process only, no Spark job — safe to call from
-    * an optimizer rule.
-    * `columns` may be empty (a pure `count(*)`: manifest row counts +
-    * the unrecorded-file check). `rangeColumns` is the subset whose
-    * min/max is actually wanted — a count-only column (say a decimal
-    * or a struct) needs just the sidecar's null/row counts, and
-    * demanding zone ranges for it would decline queries the metadata
-    * CAN answer. `countColumns` is the subset whose non-null count the
-    * caller reads (`count(c)`, `avg(c)`): a `tp_timestamp` (or, in a
-    * UTC session, `tp_date`) that is only min/max'd is then served from
-    * the manifest's ts range with no sidecar row, and its count is
-    * left out of the result.
-    */
-  private[graft] def statsAggregateIfCovered(
-      spark: SparkSession, table: String,
-      columns: Seq[String],
-      rangeColumns: Set[String],
-      sumColumns: Set[String] = Set.empty,
-      ndvColumns: Set[String] = Set.empty,
-      fileFilter: String => Boolean = _ => true,
-      kllColumns: Set[String] = Set.empty,
-      mgColumns: Set[String] = Set.empty,
-      countColumns: Set[String] = Set.empty): Option[StatsAggParts] = {
-    if (!hasData(spark, table)) return None
-    val schema = schemaOf(spark, table)
-    if (!columns.forall(schema.fieldNames.contains)) return None
-    val (groups, residual) = statsAggPartsGrouped(spark, table, columns,
-      schema, rangeColumns, countColumns, sumColumns, _ => Nil, fileFilter,
-      ndvColumns, kllColumns, mgColumns)
-    if (residual.nonEmpty) None
-    else Some(groups.values.headOption.getOrElse(
-      StatsAggParts(0L, Map.empty, Map.empty, Map.empty, Map.empty, Nil)))
-  }
+  import Lake.{MetaParts, Needs, StatsAggParts}
 
   /** [[statsAggregate]] plus the audit trail: the residual files the
     * metadata could not answer for (empty = the aggregate was served
@@ -1428,75 +1391,8 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
   def statsAggregateAudited(
       spark: SparkSession, table: String,
       columns: Seq[String],
-      withSums: Boolean): (DataFrame, Seq[String]) = {
-    require(columns.nonEmpty, "statsAggregate: no columns given")
-    require(hasData(spark, table),
-      s"statsAggregate: table '$table' has no data files")
-    val schema = schemaOf(spark, table)
-    columns.foreach(c => require(schema.fieldNames.contains(c),
-      s"statsAggregate: table '$table' has no column '$c'"))
-    def dtOf(c: String): DataType = schema(c).dataType
-    def integral(c: String): Boolean = dtOf(c) match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
-    val sumCols = if (withSums) columns.filter(integral) else Nil
-    val parts = statsAggParts(spark, table, columns, schema,
-      rangeColumns = columns.toSet, sumColumns = sumCols.toSet)
-    var nRows: Long = parts.nRows
-    val cnt = scala.collection.mutable.Map[String, Long]()
-      .withDefaultValue(0L)
-    parts.counts.foreach { case (c, n) => cnt(c) = n }
-    val mn = scala.collection.mutable.Map[String, Any]() ++ parts.mins
-    val mx = scala.collection.mutable.Map[String, Any]() ++ parts.maxs
-    val sm = scala.collection.mutable.Map[String, BigInt]() ++ parts.sums
-    def lt(dt: DataType, a: Any, b: Any): Boolean =
-      Lake.statsLt(dt, a, b)
-    def merge(c: String, dt: DataType, lo: Any, hi: Any): Unit = {
-      if (lo != null && (!mn.contains(c) || lt(dt, lo, mn(c)))) mn(c) = lo
-      if (hi != null && (!mx.contains(c) || lt(dt, mx(c), hi))) mx(c) = hi
-    }
-
-    // ---- residual scan: ONE aggregate job over exactly the gap ----
-    if (parts.residual.nonEmpty) {
-      val df = spark.read.option("basePath", tableDir(table))
-        .parquet(parts.residual: _*)
-      val aggs = count(lit(1)).as("__n") +: columns.flatMap(c => Seq(
-        count(col(c)).as(s"__c_$c"),
-        min(col(c)).as(s"__mn_$c"), max(col(c)).as(s"__mx_$c"),
-        (if (sumCols.contains(c)) sum(col(c).cast("decimal(38,0)"))
-         else max(lit(null).cast("decimal(38,0)"))).as(s"__sv_$c")))
-      val r = df.agg(aggs.head, aggs.tail: _*).head()
-      nRows += r.getAs[Long]("__n")
-      columns.foreach { c =>
-        cnt(c) += r.getAs[Long](s"__c_$c")
-        merge(c, dtOf(c), r.getAs[Any](s"__mn_$c"), r.getAs[Any](s"__mx_$c"))
-        val sv = r.getAs[java.math.BigDecimal](s"__sv_$c")
-        if (sv != null)
-          sm(c) = sm.getOrElse(c, BigInt(0)) + BigInt(sv.toBigInteger)
-      }
-    }
-
-    val fields = StructField("n_rows", LongType, nullable = false) +:
-      (columns.flatMap { c =>
-        Seq(StructField(s"n_$c", LongType, nullable = false),
-          StructField(s"min_$c", dtOf(c)),
-          StructField(s"max_$c", dtOf(c)))
-      } ++ sumCols.map(c => StructField(s"sum_$c", LongType)))
-    val values: Seq[Any] = (nRows +: columns.flatMap(c =>
-      Seq(cnt(c), mn.get(c).orNull, mx.get(c).orNull))) ++
-      // a table sum past Long.MaxValue has no exact BIGINT value:
-      // emit null (unknown-exactly), never wrap and never throw — the
-      // SQL rule declines the same way via isValidLong (r16
-      // ADVICE-medium: longValueExact crashed count/min/max requests
-      // that never asked for the sum)
-      sumCols.map(c => sm.get(c).filter(_.isValidLong)
-        .map(v => Long.box(v.toLong)).orNull)
-    val out = spark.createDataFrame(
-      java.util.Arrays.asList(Row.fromSeq(values)),
-      StructType(fields))
-    (out, parts.residual)
-  }
+      withSums: Boolean): (DataFrame, Seq[String]) =
+    auditedAggregate(spark, table, columns, withSums, band = None)
 
   /** TIME-BAND hybrid aggregate — the reference's dominant query shape
     * (`--from/--to`) answered mostly from metadata: files whose
@@ -1532,29 +1428,43 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
       spark: SparkSession, table: String,
       from: Timestamp, to: Timestamp,
       columns: Seq[String],
-      withSums: Boolean): (DataFrame, Seq[String]) = {
-    require(columns.nonEmpty, "timeBandAggregate: no columns given")
+      withSums: Boolean): (DataFrame, Seq[String]) =
+    auditedAggregate(spark, table, columns, withSums, Some((from, to)))
+
+  /** Shared body of the audited aggregates: the metadata partial from
+    * [[metaParts]], then ONE residual aggregate job over exactly the
+    * files it left to scan (row-filtered to the band, when there is
+    * one), merged into the one-row result.
+    */
+  private def auditedAggregate(
+      spark: SparkSession, table: String,
+      columns: Seq[String], withSums: Boolean,
+      band: Option[(Timestamp, Timestamp)]): (DataFrame, Seq[String]) = {
+    val what = if (band.isEmpty) "statsAggregate" else "timeBandAggregate"
+    require(columns.nonEmpty, s"$what: no columns given")
     require(hasData(spark, table),
-      s"timeBandAggregate: table '$table' has no data files")
-    require(!from.after(to), "timeBandAggregate: from > to")
+      s"$what: table '$table' has no data files")
+    band.foreach { case (from, to) =>
+      require(!from.after(to), s"$what: from > to")
+    }
     val schema = schemaOf(spark, table)
     columns.foreach(c => require(schema.fieldNames.contains(c),
-      s"timeBandAggregate: table '$table' has no column '$c'"))
+      s"$what: table '$table' has no column '$c'"))
     def dtOf(c: String): DataType = schema(c).dataType
-    def integral(c: String): Boolean = dtOf(c) match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
-    val sumCols = if (withSums) columns.filter(integral) else Nil
-
-    val fromUs = org.apache.spark.sql.catalyst.util.DateTimeUtils
-      .fromJavaTimestamp(from)
-    val toUs = org.apache.spark.sql.catalyst.util.DateTimeUtils
-      .fromJavaTimestamp(to)
-    val (parts, toScan, _) = timeBandParts(spark, table, fromUs, toUs,
-      columns, schema, rangeColumns = columns.toSet,
-      sumColumns = sumCols.toSet)
-
+    val sumCols =
+      if (!withSums) Nil
+      else columns.filter(c => dtOf(c) match {
+        case ByteType | ShortType | IntegerType | LongType => true
+        case _ => false
+      })
+    def us(t: Timestamp): Long =
+      org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaTimestamp(t)
+    // the requires above are metaParts' own preconditions
+    val planned = metaParts(spark, table,
+      Needs(ranges = columns.toSet, counts = columns.toSet,
+        sums = sumCols.toSet),
+      bands = band.map { case (from, to) => Seq((us(from), us(to))) }).get
+    val parts = planned.whole
     var nRows: Long = parts.nRows
     val cnt = scala.collection.mutable.Map[String, Long]()
       .withDefaultValue(0L)
@@ -1568,11 +1478,15 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
       if (hi != null &&
         (!mx.contains(c) || Lake.statsLt(dt, mx(c), hi))) mx(c) = hi
     }
-    if (toScan.nonEmpty) {
-      val df = spark.read.option("basePath", tableDir(table))
-        .parquet(toScan: _*)
-        .where(col(TpSchema.Timestamp) >= lit(from) &&
+
+    // ---- residual scan: ONE aggregate job over exactly the gap ----
+    if (planned.toScan.nonEmpty) {
+      val files = spark.read.option("basePath", tableDir(table))
+        .parquet(planned.toScan: _*)
+      val df = band.fold(files) { case (from, to) =>
+        files.where(col(TpSchema.Timestamp) >= lit(from) &&
           col(TpSchema.Timestamp) <= lit(to))
+      }
       val aggs = count(lit(1)).as("__n") +: columns.flatMap(c => Seq(
         count(col(c)).as(s"__c_$c"),
         min(col(c)).as(s"__mn_$c"), max(col(c)).as(s"__mx_$c"),
@@ -1588,6 +1502,7 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
           sm(c) = sm.getOrElse(c, BigInt(0)) + BigInt(sv.toBigInteger)
       }
     }
+
     val fields = StructField("n_rows", LongType, nullable = false) +:
       (columns.flatMap { c =>
         Seq(StructField(s"n_$c", LongType, nullable = false),
@@ -1596,227 +1511,100 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
       } ++ sumCols.map(c => StructField(s"sum_$c", LongType)))
     val values: Seq[Any] = (nRows +: columns.flatMap(c =>
       Seq(cnt(c), mn.get(c).orNull, mx.get(c).orNull))) ++
+      // a table sum past Long.MaxValue has no exact BIGINT value:
+      // emit null (unknown-exactly), never wrap and never throw — the
+      // SQL rule declines the same way via isValidLong (r16
+      // ADVICE-medium: longValueExact crashed count/min/max requests
+      // that never asked for the sum)
       sumCols.map(c => sm.get(c).filter(_.isValidLong)
         .map(v => Long.box(v.toLong)).orNull)
     val out = spark.createDataFrame(
       java.util.Arrays.asList(Row.fromSeq(values)),
       StructType(fields))
-    (out, toScan)
+    (out, planned.toScan)
   }
 
-  /** Band classification + contained-file metadata partial, micros
-    * domain (Catalyst `TimestampType` internal units — what the SQL
-    * rewrite extracts from literals). Returns the partial over files
-    * PROVEN fully inside `[fromUs, toUs]` (manifest range contained,
-    * sidecar-proven null-ts-free, every requested column covered) and
-    * the files that must scan (straddlers + unproven + uncovered).
-    * Files the manifest proves fully outside are in neither. Unknown
-    * ranges scan — conservativeness as in [[readPruned]].
+  /** The metadata parts planner behind every scan-free answer — the
+    * SQL rule, the audited aggregates and the CLI's sketch merges.
+    * In-process metadata only (the table's [[metaSnapshot]] and the
+    * listing): no Spark job, never a data file, safe to call from an
+    * optimizer rule.
+    *
+    * Live truth is the LISTING: a live file the manifest never
+    * recorded must scan, and a manifest row for a file the listing no
+    * longer holds is ignored. Files failing `fileFilter` (a
+    * per-directory predicate) leave both sides, as partition pruning
+    * would; so do files the manifest proves outside every one of
+    * `bands`. The rest either answer from metadata — every column of
+    * `needs` is covered for them — or go to the scan list.
+    *
+    * Under a time predicate (`bands`: disjoint sorted closed micros
+    * intervals) or a bucket key (`bucketIdOf`, MONOTONE in micros) a
+    * file answers from metadata only when its manifest ts range lies
+    * inside ONE band and maps to ONE bucket id, and the sidecar proves
+    * it holds no null `tp_timestamp` (a null fails the band yet counts
+    * in the file's rows). Monotonicity makes `idOf(min) == idOf(max)`
+    * prove every row shares the bucket, for calendar grains as for
+    * fixed widths.
+    *
+    * Partials are keyed by (bucket id, `groupOf` projection); None
+    * when the table has no data or lacks a needed column.
     */
-  private[lake] def timeBandParts(
-      spark: SparkSession, table: String,
-      fromUs: Long, toUs: Long,
-      columns: Seq[String], schema: StructType,
-      rangeColumns: Set[String], sumColumns: Set[String],
-      fileFilter: String => Boolean = _ => true,
-      ndvColumns: Set[String] = Set.empty,
-      kllColumns: Set[String] = Set.empty)
-      : (StatsAggParts, Seq[String], Int) = {
-    val (groups, toScan, contained) = timeBandPartsGrouped(spark, table,
-      fromUs, toUs, columns, schema, rangeColumns, sumColumns,
-      _ => Nil, fileFilter, ndvColumns, kllColumns)
-    (groups.headOption.map(_._2).getOrElse(
-      StatsAggParts(0L, Map.empty, Map.empty, Map.empty, Map.empty,
-        Nil)),
-      toScan, contained)
-  }
-
-  /** MULTI-band twin of [[timeBandParts]] (r17 verdict task 6 — the
-    * OR-of-bands dashboard shape): `bands` are DISJOINT sorted closed
-    * micros intervals (the rule merges overlaps before calling). A
-    * file is contained iff its manifest range sits inside ONE band and
-    * it is proven null-ts-free — a file spanning two bands has rows in
-    * the gap that fail the predicate, so it scans; a file provably
-    * outside EVERY band is excluded entirely. One global partial over
-    * the contained files (their full row sets all satisfy the union).
-    */
-  private[lake] def timeMultiBandParts(
-      spark: SparkSession, table: String,
-      bands: Seq[(Long, Long)],
-      columns: Seq[String], schema: StructType,
-      rangeColumns: Set[String], sumColumns: Set[String],
-      fileFilter: String => Boolean,
-      ndvColumns: Set[String] = Set.empty,
-      kllColumns: Set[String] = Set.empty)
-      : (StatsAggParts, Seq[String], Int) = {
-    val (groups, toScan, contained) = timePartsGroupedCore(spark, table,
-      bands, bucketIdOf = None, columns, schema, rangeColumns, sumColumns,
-      _ => Nil, fileFilter, ndvColumns, kllColumns)
-    (groups.values.headOption.getOrElse(
-      StatsAggParts(0L, Map.empty, Map.empty, Map.empty, Map.empty,
-        Nil)),
-      toScan, contained)
-  }
-
-  /** Shared band/bucket classification core: files proven inside ONE
-    * of `bands` (closed micros intervals, disjoint) AND null-ts-free
-    * AND — when `bucketUs` is set — contained in one bucket of that
-    * grain, contribute metadata partials grouped by `groupOf` (with
-    * the bucket index prefixed when bucketed); everything else
-    * overlapping any band goes to the scan list, and files provably
-    * outside every band are excluded. Metadata-sized throughout (one
-    * snapshot probe + the listing).
-    */
-  private def timePartsGroupedCore(
-      spark: SparkSession, table: String,
-      bands: Seq[(Long, Long)], bucketIdOf: Option[Long => Long],
-      columns: Seq[String], schema: StructType,
-      rangeColumns: Set[String], sumColumns: Set[String],
-      groupOf: String => Seq[String],
-      fileFilter: String => Boolean,
-      ndvColumns: Set[String],
-      kllColumns: Set[String])
-      : (Map[Seq[String], StatsAggParts], Seq[String], Int) = {
+  private[graft] def metaParts(
+      spark: SparkSession, table: String, needs: Needs,
+      bands: Option[Seq[(Long, Long)]] = None,
+      bucketIdOf: Option[Long => Long] = None,
+      groupOf: String => Seq[String] = _ => Nil,
+      fileFilter: String => Boolean = _ => true): Option[MetaParts] = {
+    if (!hasData(spark, table)) return None
+    val schema = schemaOf(spark, table)
+    if (!needs.columns.forall(schema.fieldNames.contains)) return None
     val snap = metaSnapshot(spark, table)
-    val bounds: Map[String, (Option[Long], Option[Long])] =
-      snap.manifest.map { case (f, m) => f -> (m.minUs, m.maxUs) }
-    val tsNulls: Map[String, Long] = snap.tsNulls
+    def range(f: String): Option[(Long, Long)] =
+      snap.manifest.get(f).flatMap(m => m.minUs.zip(m.maxUs))
     val live = dataFiles(spark, table).filter(fileFilter)
-    val overlapping = live.filterNot { f =>
-      bounds.get(f) match {
-        case Some((Some(mn), Some(mx))) =>
-          bands.forall { case (lo, hi) => mx < lo || mn > hi }
-        case _ => false // unknown range: must consider it
-      }
-    }
-    // bucket id functions are MONOTONE in micros (BucketGrain
-    // contract), so equal ids at the range ends prove every row in
-    // between shares the bucket — for calendar grains exactly as for
-    // fixed widths
-    def bucketOk(mn: Long, mx: Long): Boolean =
-      bucketIdOf.forall(idOf => idOf(mn) == idOf(mx))
-    val contained: Set[String] = overlapping.filter { f =>
-      bounds.get(f) match {
-        case Some((Some(mn), Some(mx))) =>
-          bands.exists { case (lo, hi) => mn >= lo && mx <= hi } &&
-            bucketOk(mn, mx) &&
-            tsNulls.get(f).contains(0L) // proven null-ts-free
-        case _ => false
-      }
-    }.toSet
-    val effectiveGroupOf: String => Seq[String] = bucketIdOf match {
-      case None => groupOf
-      case Some(idOf) => f =>
-        idOf(bounds(f)._1.get).toString +: groupOf(f)
-    }
-    val (groups, residualContained) = statsAggPartsGrouped(spark, table,
-      columns, schema, rangeColumns, columns.toSet, sumColumns,
-      effectiveGroupOf,
-      fileFilter = contained, ndvColumns = ndvColumns,
-      kllColumns = kllColumns)
-    val toScan: Seq[String] =
-      (overlapping.filterNot(contained) ++ residualContained).distinct
-    (groups, toScan, contained.size - residualContained.size)
+    val candidates = bands.fold(live)(bs => live.filterNot(f =>
+      range(f).exists { case (mn, mx) =>
+        bs.forall { case (lo, hi) => mx < lo || mn > hi }
+      }))
+    val eligible =
+      if (bands.isEmpty && bucketIdOf.isEmpty) candidates
+      else candidates.filter(f =>
+        range(f).exists { case (mn, mx) =>
+          bands.forall(_.exists { case (lo, hi) => mn >= lo && mx <= hi }) &&
+            bucketIdOf.forall(idOf => idOf(mn) == idOf(mx))
+        } && snap.tsNulls.get(f).contains(0L))
+    val (groups, covered) = partials(spark, table, snap, schema, needs,
+      eligible, f => (bucketIdOf.map(_(range(f).get._1)), groupOf(f)))
+    Some(MetaParts(groups, candidates.filterNot(covered), covered.size))
   }
 
-  /** Grouped twin of [[timeBandParts]]: per-group metadata partials
-    * over the contained files, keyed by `groupOf` (the rule passes the
-    * partition-directory projection). Same classification and
-    * conservativeness.
-    */
-  private[lake] def timeBandPartsGrouped(
-      spark: SparkSession, table: String,
-      fromUs: Long, toUs: Long,
-      columns: Seq[String], schema: StructType,
-      rangeColumns: Set[String], sumColumns: Set[String],
-      groupOf: String => Seq[String],
-      fileFilter: String => Boolean,
-      ndvColumns: Set[String] = Set.empty,
-      kllColumns: Set[String] = Set.empty)
-      : (Seq[(Seq[String], StatsAggParts)], Seq[String], Int) =
-    timeBandPartsGroupedMulti(spark, table, Seq((fromUs, toUs)),
-      columns, schema, rangeColumns, sumColumns, groupOf, fileFilter,
-      ndvColumns, kllColumns)
-
-  /** Multi-band form of [[timeBandPartsGrouped]] — the grouped face of
-    * the OR-of-bands dashboard shape.
-    */
-  private[lake] def timeBandPartsGroupedMulti(
-      spark: SparkSession, table: String,
-      bands: Seq[(Long, Long)],
-      columns: Seq[String], schema: StructType,
-      rangeColumns: Set[String], sumColumns: Set[String],
-      groupOf: String => Seq[String],
-      fileFilter: String => Boolean,
-      ndvColumns: Set[String] = Set.empty,
-      kllColumns: Set[String] = Set.empty)
-      : (Seq[(Seq[String], StatsAggParts)], Seq[String], Int) = {
-    val (groups, toScan, contained) = timePartsGroupedCore(spark, table,
-      bands, bucketIdOf = None, columns, schema, rangeColumns, sumColumns,
-      groupOf, fileFilter, ndvColumns, kllColumns)
-    (groups.toSeq, toScan, contained)
-  }
-
-  /** TIME-BUCKET-grouped twin of [[timeBandPartsGrouped]] (r17 verdict
-    * task 1 — the domain's reporting shape, `GROUP BY tp_date` /
-    * `date_trunc` buckets): a file is metadata-eligible iff it is
-    * band-contained, proven null-ts-free, AND bucket-contained — its
-    * manifest ts range maps to ONE bucket id under `bucketIdOf` — so
-    * every row of the file shares the file's bucket and the full-file
-    * stats ARE that bucket's partial. After time-ordered compaction
-    * (the reference orders by tp_timestamp precisely so files don't
-    * straddle, compact.go:264-416) most files are day-contained, so a
-    * daily report over a year reads kilobytes of metadata plus the
-    * handful of multi-day straddlers. Group key = (bucket index,
-    * partition-key projection); files that straddle a bucket OR every
-    * band (or lack coverage) go to the scan list, classified
-    * conservatively exactly as [[timeBandPartsGrouped]]. `bands`
-    * carries the WHERE's disjoint merged window set (one full-range
-    * band when the query has no time filter).
-    */
-  private[lake] def timeBucketPartsGrouped(
-      spark: SparkSession, table: String,
-      bands: Seq[(Long, Long)], bucketIdOf: Long => Long,
-      columns: Seq[String], schema: StructType,
-      rangeColumns: Set[String], sumColumns: Set[String],
-      partOf: String => Seq[String],
-      fileFilter: String => Boolean,
-      ndvColumns: Set[String] = Set.empty,
-      kllColumns: Set[String] = Set.empty)
-      : (Seq[((Long, Seq[String]), StatsAggParts)], Seq[String], Int) = {
-    val (groups, toScan, contained) = timePartsGroupedCore(spark, table,
-      bands, bucketIdOf = Some(bucketIdOf), columns, schema, rangeColumns,
-      sumColumns, partOf, fileFilter, ndvColumns, kllColumns)
-    val out = groups.toSeq.map { case (key, p) =>
-      ((key.head.toLong, key.tail), p)
-    }
-    (out, toScan, contained)
-  }
-
-  /** Distinct `tp_date` count per group, PROVABLE from the manifest
-    * alone (r18 verdict task 6 — "how many active days"): every live
-    * file passing `fileFilter` must either be day-contained (its
-    * manifest ts range floors to ONE epoch day — it then contributes
-    * exactly that day: the min row sits on it, and no row can sit on
-    * another) or be all-null-ts (contributing no dates — SQL DISTINCT
-    * ignores nulls). One straddler, one half-known range, or one
-    * unrecorded live file → None: the set is no longer provable and
-    * the caller declines to the scan. Metadata-sized (one snapshot
-    * probe + the listing); keys are `groupOf`'s projection, aligned
-    * with [[statsAggregateGroupedIfCovered]]. Callers gate on the
-    * reader session being UTC (the tp_date derivation convention).
+  /** Distinct `tp_date` count per `groupOf` group, PROVABLE from the
+    * manifest alone ("how many active days"). Without `bands` every
+    * live file passing `fileFilter` must be day-contained (its manifest
+    * ts range floors to ONE epoch day — it then contributes exactly
+    * that day: the min row sits on it, and no row can sit on another)
+    * or all-null-ts (no dates — SQL DISTINCT ignores nulls). With
+    * `bands` a day-contained file must also lie inside one band or
+    * fully outside all of them: a file partially overlapping a band
+    * edge proves nothing, since no row is guaranteed inside. One such
+    * file, one half-known range, or one unrecorded live file → None:
+    * the set is no longer provable and the caller scans. Callers gate
+    * on the reader session being UTC (the tp_date derivation
+    * convention).
     */
   private[graft] def distinctDayCounts(
       spark: SparkSession, table: String,
-      groupOf: String => Seq[String],
-      fileFilter: String => Boolean): Option[Map[Seq[String], Long]] = {
+      bands: Option[Seq[(Long, Long)]],
+      groupOf: String => Seq[String] = _ => Nil,
+      fileFilter: String => Boolean = _ => true)
+      : Option[Map[Seq[String], Long]] = {
     if (!hasData(spark, table)) return Some(Map.empty)
     val snap = metaSnapshot(spark, table)
-    val live = dataFiles(spark, table).filter(fileFilter)
     val sets =
       scala.collection.mutable.Map[Seq[String],
         scala.collection.mutable.Set[Long]]()
-    live.foreach { f =>
+    dataFiles(spark, table).filter(fileFilter).foreach { f =>
       val set = sets.getOrElseUpdate(groupOf(f),
         scala.collection.mutable.Set.empty[Long])
       snap.manifest.get(f) match {
@@ -1824,9 +1612,13 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
         case Some(m) => (m.minUs, m.maxUs) match {
           case (None, None) => () // all-null-ts: no dates
           case (Some(mn), Some(mx)) =>
-            val d = Math.floorDiv(mn, 86400000000L)
-            if (d != Math.floorDiv(mx, 86400000000L)) return None
-            set += d
+            if (bands.forall(_.exists { case (lo, hi) =>
+                lo <= mn && mx <= hi })) {
+              val d = Math.floorDiv(mn, 86400000000L)
+              if (d != Math.floorDiv(mx, 86400000000L)) return None
+              set += d
+            } else if (!bands.exists(_.forall { case (lo, hi) =>
+                mx < lo || mn > hi })) return None // band-edge overlap
           case _ => return None // half-known range: not provable
         }
       }
@@ -1834,152 +1626,31 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
     Some(sets.map { case (k, s) => k -> s.size.toLong }.toMap)
   }
 
-  /** Banded twin of [[distinctDayCounts]] — "active days in
-    * [from, to]": provable iff every (filtered) ranged file is
-    * day-contained and either fully inside one band or fully outside
-    * all of them. A file PARTIALLY overlapping a band edge proves
-    * nothing — its min/max are real rows, but no row is guaranteed to
-    * land inside the band — so it declines. The count is the size of
-    * the day-id set of the inside files (each nonempty by
-    * construction: min/max are actual rows).
+  /** Per-group metadata partials over `files`, and the subset of them
+    * the metadata covers for every column of `needs` (the rest must
+    * scan). Driver-side and metadata-sized.
     */
-  private[graft] def distinctDayCountsBanded(
+  private def partials(
       spark: SparkSession, table: String,
-      bands: Seq[(Long, Long)],
-      fileFilter: String => Boolean): Option[Long] = {
-    if (!hasData(spark, table)) return Some(0L)
-    val snap = metaSnapshot(spark, table)
-    val live = dataFiles(spark, table).filter(fileFilter)
-    val days = scala.collection.mutable.Set.empty[Long]
-    live.foreach { f =>
-      snap.manifest.get(f) match {
-        case None => return None // live but unrecorded: can't prove
-        case Some(m) => (m.minUs, m.maxUs) match {
-          case (None, None) => () // all-null-ts: the band drops nulls
-          case (Some(mn), Some(mx)) =>
-            val inside = bands.exists { case (lo, hi) =>
-              lo <= mn && mx <= hi
-            }
-            if (inside) {
-              val d = Math.floorDiv(mn, 86400000000L)
-              if (d != Math.floorDiv(mx, 86400000000L)) return None
-              days += d
-            } else {
-              val outside = bands.forall { case (lo, hi) =>
-                mx < lo || mn > hi
-              }
-              if (!outside) return None // band-edge partial overlap
-            }
-          case _ => return None // half-known range: not provable
-        }
-      }
-    }
-    Some(days.size.toLong)
-  }
-
-  /** Ungrouped core: one partial over all covered files. */
-  private def statsAggParts(
-      spark: SparkSession, table: String,
-      columns: Seq[String], schema: StructType,
-      rangeColumns: Set[String],
-      sumColumns: Set[String]): StatsAggParts = {
-    val (groups, residual) = statsAggPartsGrouped(spark, table, columns,
-      schema, rangeColumns, columns.toSet, sumColumns, _ => Nil)
-    groups.values.headOption
-      .map(_.copy(residual = residual))
-      .getOrElse(StatsAggParts(0L, Map.empty, Map.empty, Map.empty,
-        Map.empty, residual))
-  }
-
-  /** Metadata-only GROUPED answer over partition columns — per-group
-    * count/min/max from the manifest+sidecar, the grouped twin of
-    * [[statsAggregateIfCovered]]. Group keys are the files' DIRECTORY
-    * values (exactly the values the scan would surface: partitionBy
-    * strips the columns from the files, so directory truth IS column
-    * truth). None when any live file is uncovered, any group column
-    * isn't a physical partition column, or the table has no data.
-    * Keys are the raw (Hive-unescaped) directory strings in
-    * `groupCols` order; `__HIVE_DEFAULT_PARTITION__` means null.
-    */
-  private[lake] def statsAggregateGroupedIfCovered(
-      spark: SparkSession, table: String,
-      groupCols: Seq[String], columns: Seq[String],
-      rangeColumns: Set[String],
-      sumColumns: Set[String] = Set.empty,
-      ndvColumns: Set[String] = Set.empty,
-      fileFilter: String => Boolean = _ => true,
-      kllColumns: Set[String] = Set.empty,
-      mgColumns: Set[String] = Set.empty,
-      countColumns: Set[String] = Set.empty)
-      : Option[Seq[(Seq[String], StatsAggParts)]] = {
-    if (groupCols.isEmpty ||
-      !groupCols.forall(TpSchema.partitionCols.contains)) return None
-    if (!hasData(spark, table)) return None
-    val schema = schemaOf(spark, table)
-    if (!columns.forall(schema.fieldNames.contains)) return None
-    val (groups, residual) = statsAggPartsGrouped(spark, table, columns,
-      schema, rangeColumns, countColumns, sumColumns,
-      f => {
-        val pv = partitionValues(relOf(table, f))
-        groupCols.map(pv.getOrElse(_, null))
-      },
-      fileFilter, ndvColumns, kllColumns, mgColumns)
-    if (residual.nonEmpty) None else Some(groups.toSeq)
-  }
-
-  /** Core: per-group metadata partials + the global residual list.
-    * In-process metadata only (the table's [[metaSnapshot]] and the
-    * listing); runs no Spark job and never touches data files.
-    * `groupOf` maps a file path to its group key (Nil = one global
-    * group).
-    */
-  /** @param fileFilter restricts the aggregate to files whose
-    *   partition directory passes a per-file-constant predicate (the
-    *   rule's partition-only WHERE support) — failing files leave BOTH
-    *   the totals and the residual set, exactly as partition pruning
-    *   would exclude them from a scan.
-    */
-  private def statsAggPartsGrouped(
-      spark: SparkSession, table: String,
-      columns: Seq[String], schema: StructType,
-      rangeColumns: Set[String],
-      countColumns: Set[String],
-      sumColumns: Set[String],
-      groupOf: String => Seq[String],
-      fileFilter: String => Boolean = _ => true,
-      ndvColumns: Set[String] = Set.empty,
-      kllColumns: Set[String] = Set.empty,
-      mgColumns: Set[String] = Set.empty)
-      : (Map[Seq[String], StatsAggParts], Seq[String]) = {
+      snap: Lake.MetaSnapshot, schema: StructType, needs: Needs,
+      files: Seq[String], keyOf: String => Lake.PartsKey)
+      : (Map[Lake.PartsKey, StatsAggParts], Set[String]) = {
     def dtOf(c: String): DataType = schema(c).dataType
     def minMaxFromZones(dt: DataType): Boolean = dt match {
       case ByteType | ShortType | IntegerType | LongType |
            FloatType | DoubleType | StringType => true
       case _ => false
     }
-
-    // live truth = the LISTING; manifest/sidecar newest-seq rows come
-    // from the per-mutation MetaSnapshot (r16 verdict task 3: ten
-    // consecutive metadata-served queries paid the manifest read ten
-    // times — now one token probe each). A live file with no manifest
-    // row is scan-residual — the manifest must not be trusted for
-    // counts it never recorded; a manifest row for a file the listing
-    // no longer holds is ignored (the old reconcile, as a filter).
-    val snap = metaSnapshot(spark, table)
-    val live = dataFiles(spark, table).filter(fileFilter)
-    val liveSet = live.toSet
-    val manifest: Map[String, Lake.ManifestStat] =
-      snap.manifest.filter { case (f, _) => liveSet(f) }
     val sidecar = snap.sidecar
     val utc = TpSchema.isUtcZone(spark.sessionState.conf.sessionLocalTimeZone)
+    import needs.{counts, kll, mg, ndv, ranges, sums}
 
     // tp_timestamp's min/max is the manifest's per-file ts range, and
     // tp_date's (dates are monotone in ts; UTC-writer convention) its
     // day truncation — so when nothing but the range of either is
     // wanted, no sidecar row is needed at all
     def manifestRangeOnly(c: String): Boolean =
-      rangeColumns(c) && !countColumns(c) && !sumColumns(c) &&
-        !ndvColumns(c) && !kllColumns(c) && !mgColumns(c) &&
+      ranges(c) && !counts(c) && !sums(c) && !ndv(c) && !kll(c) && !mg(c) &&
         (c == TpSchema.Timestamp ||
           (c == TpSchema.Date && dtOf(c) == DateType && utc))
 
@@ -1992,13 +1663,13 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
       // (ndv/quantile) stay scan-derived: there is no per-row sketch
       // for a column materialized from the path.
       if (TpSchema.partitionCols.contains(c))
-        return !ndvColumns(c) && !kllColumns(c) && !mgColumns(c) &&
+        return !ndv(c) && !kll(c) && !mg(c) &&
           (dtOf(c) match {
           case IntegerType | LongType => true
           // a string directory value has count/min/max but no sum —
           // approving it for a sum/avg would MatchError in the
           // aggregation branch below (r18 ADVICE-low)
-          case StringType => !sumColumns(c)
+          case StringType => !sums(c)
           case _ => false
         })
       if (manifestRangeOnly(c)) return true
@@ -2010,7 +1681,7 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
       // manifest. Estimator aggregates still need a real blob.
       if (c == TpSchema.Date && cov.isEmpty)
         return dtOf(c) == DateType && utc &&
-          !ndvColumns(c) && !kllColumns(c) && !sumColumns(c) &&
+          !ndv(c) && !kll(c) && !sums(c) &&
           sidecar.get((file, TpSchema.Timestamp)).exists(_.n == rows)
       // count(c): needs the sidecar's null/row counts, and they must
       // describe THIS file state (n == manifest rows; files are
@@ -2019,20 +1690,20 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
       if (!countOk) return false
       // sum(c): needs the per-file value sum — a null sum_v on a file
       // with non-null rows is a pre-sum sidecar row (re-seed to fix)
-      if (sumColumns(c) && !cov.exists(r =>
+      if (sums(c) && !cov.exists(r =>
         r.sumV.isDefined || r.nulls == r.n)) return false
       // ndv(c): needs the per-file HLL blob to union
-      if (ndvColumns(c) && !cov.exists(_.sketch.isDefined)) return false
+      if (ndv(c) && !cov.exists(_.sketch.isDefined)) return false
       // graft_quantile(c): needs the per-file KLL blob to merge
-      if (kllColumns(c) && !cov.exists(_.kll.isDefined)) return false
+      if (kll(c) && !cov.exists(_.kll.isDefined)) return false
       // graft_topk(c): needs the per-file frequent-items blob
-      if (mgColumns(c) && !cov.exists(_.mg.isDefined)) return false
-      if (!rangeColumns(c)) return true // count-only: null/row counts do
+      if (mg(c) && !cov.exists(_.mg.isDefined)) return false
+      if (!ranges(c)) return true // count-only: null/row counts do
       if (c == TpSchema.Timestamp) return true // min/max manifest-served
       // tp_date min/max = day-truncated manifest ts extremes (dates
       // are monotone in ts); exact only under the engine's UTC-writer
       // convention, so gated on the reader session being UTC like the
-      // splitBand date fold
+      // rule's date band fold
       if (c == TpSchema.Date && utc) return true
       val dt = dtOf(c)
       minMaxFromZones(dt) && (dt match {
@@ -2044,15 +1715,10 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
       })
     }
 
-    val residual: Seq[String] = live.filter { f =>
-      manifest.get(f) match {
-        case None => true // live but unrecorded: scan it
-        case Some(m) => !columns.forall(c => usable(f, m.rows, c))
-      }
-    }
-    val residualSet = residual.toSet
-    val covered: Seq[(String, Lake.ManifestStat)] =
-      manifest.toSeq.filterNot(kv => residualSet(kv._1))
+    val covered: Seq[(String, Lake.ManifestStat)] = files.flatMap(f =>
+      snap.manifest.get(f)
+        .filter(m => needs.columns.forall(usable(f, m.rows, _)))
+        .map(f -> _))
 
     // ---- metadata partial (driver-side, metadata-sized) ----
     def fromDouble(dt: DataType, d: Double): Any = dt match {
@@ -2064,7 +1730,7 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
       case _ => d
     }
 
-    val groups = covered.groupBy(kv => groupOf(kv._1))
+    val groups = covered.groupBy(kv => keyOf(kv._1))
       .map { case (key, files) =>
         val nRows: Long = files.map(_._2.rows).sum
         val cnt = scala.collection.mutable.Map[String, Long]()
@@ -2090,7 +1756,7 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
             merge(c, dtOf(c), day(m.minUs), day(m.maxUs))
           }
         files.foreach { case (file, m) =>
-          columns.foreach { c =>
+          needs.columns.foreach { c =>
             if (TpSchema.partitionCols.contains(c)) {
               // directory-truth column: one value for every row of the
               // file (usable() gated the type; DEFAULT_PARTITION = null)
@@ -2105,7 +1771,7 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
                 }).orNull
               if (v != null) {
                 cnt(c) += m.rows
-                if (sumColumns(c)) {
+                if (sums(c)) {
                   val lv = v match {
                     case i: Integer => i.longValue
                     case l: java.lang.Long => l.longValue
@@ -2113,7 +1779,7 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
                   sm(c) = sm.getOrElse(c, BigInt(0)) +
                     BigInt(lv) * m.rows
                 }
-                if (rangeColumns(c)) merge(c, dt, v, v)
+                if (ranges(c)) merge(c, dt, v, v)
               }
             } else if (manifestRangeOnly(c)) {
               // range-only time column: usable() asked for no sidecar
@@ -2126,14 +1792,14 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
               // ranges the day-truncated manifest extremes
               val tsr = sidecar((file, TpSchema.Timestamp))
               cnt(c) += tsr.n - tsr.nulls
-              if (rangeColumns(c)) manifestRange(c, m)
+              if (ranges(c)) manifestRange(c, m)
             } else {
             val r = sidecar((file, c))
             cnt(c) += r.n - r.nulls
-            if (sumColumns(c))
+            if (sums(c))
               r.sumV.foreach(v => sm(c) = sm.getOrElse(c, BigInt(0)) + v)
             val dt = dtOf(c)
-            if (!rangeColumns(c)) () // count-only column: no range merge
+            if (!ranges(c)) () // count-only column: no range merge
             else if (c == TpSchema.Timestamp ||
                 (c == TpSchema.Date && dt == DateType))
               manifestRange(c, m)
@@ -2151,31 +1817,27 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
         // covered file carries a blob. The BLOB is kept (not just the
         // estimate) so band hybrids can union it with the straddler
         // scan's sketch in-plan.
-        val ndvBlobs: Map[String, Array[Byte]] =
-          ndvColumns.intersect(columns.toSet).map { c =>
-            c -> graft.functions.NdvFns.unionBlob(
-              files.flatMap { case (file, _) => sidecar((file, c)).sketch })
-          }.toMap
+        val ndvBlobs: Map[String, Array[Byte]] = ndv.map { c =>
+          c -> graft.functions.NdvFns.unionBlob(
+            files.flatMap { case (file, _) => sidecar((file, c)).sketch })
+        }.toMap
         // quantiles: the same move over the KLL distribution sketches
-        val kllBlobs: Map[String, Array[Byte]] =
-          kllColumns.intersect(columns.toSet).map { c =>
-            c -> graft.functions.QuantileFns.mergeBlobs(
-              files.flatMap { case (file, _) => sidecar((file, c)).kll })
-          }.toMap
+        val kllBlobs: Map[String, Array[Byte]] = kll.map { c =>
+          c -> graft.functions.QuantileFns.mergeBlobs(
+            files.flatMap { case (file, _) => sidecar((file, c)).kll })
+        }.toMap
         // top-k: the frequent-items blobs merge the same way; the
         // CALLER checks the merged sketch's error bound (exact-only
         // serve gate) — usable() guaranteed every file carries a blob
-        val mgBlobs: Map[String, Array[Byte]] =
-          mgColumns.intersect(columns.toSet).map { c =>
-            c -> graft.functions.TopKFns.toBlob(
-              graft.functions.TopKFns.mergeBlobs(
-                files.flatMap { case (file, _) =>
-                  sidecar((file, c)).mg }))
-          }.toMap
+        val mgBlobs: Map[String, Array[Byte]] = mg.map { c =>
+          c -> graft.functions.TopKFns.toBlob(
+            graft.functions.TopKFns.mergeBlobs(
+              files.flatMap { case (file, _) => sidecar((file, c)).mg }))
+        }.toMap
         key -> StatsAggParts(nRows, cnt.toMap, mn.toMap, mx.toMap,
-          sm.toMap, Nil, ndvBlobs, kllBlobs, mgBlobs)
+          sm.toMap, ndvBlobs, kllBlobs, mgBlobs)
       }
-    (groups, residual)
+    (groups, covered.map(_._1).toSet)
   }
 
   /** Newest-seq per-(file, column) zone ranges from the colstats
@@ -2485,25 +2147,20 @@ object Lake {
     }
   private val writeConfLock = new Object
 
-  /** The metadata-served portion of a stats aggregate: totals over the
-    * files the manifest+sidecar answer EXACTLY, plus the residual file
-    * list they cannot. Shared core of `statsAggregateAudited` (which
-    * scans the residual and combines) and `statsAggregateIfCovered`
-    * (the optimizer-rule feed, which declines instead of scanning).
+  /** The metadata-served portion of an aggregate: totals over the
+    * files the manifest+sidecar answer EXACTLY. `sums` carries EXACT
+    * integral-column totals (BigInt — integer addition is
+    * order-independent, so per-file sums merge exactly; the consumer
+    * converts to the SQL result type and declines on overflow); a
+    * column with zero non-null rows is absent (SQL sum of nothing is
+    * null).
     */
-  /** `sums` carries EXACT integral-column totals (BigInt — integer
-    * addition is order-independent, so per-file sums merge exactly;
-    * the consumer converts to the SQL result type and declines on
-    * overflow); a column with zero non-null rows is absent (SQL sum
-    * of nothing is null).
-    */
-  private[lake] final case class StatsAggParts(
+  private[graft] final case class StatsAggParts(
       nRows: Long,
       counts: Map[String, Long],
       mins: Map[String, Any],
       maxs: Map[String, Any],
       sums: Map[String, BigInt],
-      residual: Seq[String],
       ndvBlobs: Map[String, Array[Byte]] = Map.empty,
       kllBlobs: Map[String, Array[Byte]] = Map.empty,
       mgBlobs: Map[String, Array[Byte]] = Map.empty) {
@@ -2511,6 +2168,43 @@ object Lake {
     def ndvs: Map[String, Long] = ndvBlobs.map { case (c, b) =>
       c -> graft.functions.NdvFns.blobEstimate(b)
     }
+  }
+
+  private[graft] object StatsAggParts {
+    val Empty: StatsAggParts =
+      StatsAggParts(0L, Map.empty, Map.empty, Map.empty, Map.empty)
+  }
+
+  /** What an answer reads from metadata, per column: min/max `ranges`,
+    * non-null `counts`, exact integral `sums`, and the `ndv`, `kll`
+    * (quantile) and `mg` (top-k) sketches.
+    */
+  private[graft] final case class Needs(
+      ranges: Set[String] = Set.empty,
+      counts: Set[String] = Set.empty,
+      sums: Set[String] = Set.empty,
+      ndv: Set[String] = Set.empty,
+      kll: Set[String] = Set.empty,
+      mg: Set[String] = Set.empty) {
+    val columns: Seq[String] = (ranges ++ counts ++ sums ++ ndv ++ kll ++ mg).toSeq
+  }
+
+  /** Partials key: (bucket id under a bucket key, `groupOf` projection). */
+  private[graft] type PartsKey = (Option[Long], Seq[String])
+
+  /** [[Lake.metaParts]]' answer: per-key partials over the files the
+    * metadata answers for, the files left to scan, and how many files
+    * answered.
+    */
+  private[graft] final case class MetaParts(
+      groups: Map[PartsKey, StatsAggParts],
+      toScan: Seq[String],
+      contained: Int) {
+    /** The one partial of an ungrouped answer (empty when no file
+      * answered).
+      */
+    def whole: StatsAggParts =
+      groups.values.headOption.getOrElse(StatsAggParts.Empty)
   }
 
   /** Newest-seq manifest row for one live file. */
@@ -2535,7 +2229,7 @@ object Lake {
   /** One table's metadata, collected once per mutation: the newest-seq
     * manifest rows (tombstones dropped) and newest-seq sidecar rows for
     * every stats column — the shared feed for the optimize-time probes
-    * ([[Lake.statsAggregateIfCovered]], `timeBandParts*`) and the
+    * ([[Lake.metaParts]], [[Lake.distinctDayCounts]]) and the
     * [[ZoneMapFileIndex]] loaders. Cached per `(root, table)` keyed by
     * [[Lake.dirToken]] over the manifest + sidecar directories: every
     * mutation path appends or swaps files there, so a token mismatch

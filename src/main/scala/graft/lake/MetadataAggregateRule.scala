@@ -17,58 +17,55 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
   * `OptimizeMetadataOnlyQuery` serves only partition-column aggregates
   * from listings; Delta rewrites count/min/max from its transaction
   * log the same way this rule does from the `_graft_colstats` sidecar.
-  * At 100 TB the difference is a full-corpus scan vs a metadata read.
   *
-  * Served aggregate family (each declining to the normal scan when
-  * its metadata precondition fails):
+  * Every served query shape — whole table, partition-only WHERE,
+  * GROUP BY partition columns, tp_timestamp/tp_date bands (OR-of-bands
+  * and IN-lists too), time-bucket keys (`tp_date`, `date_trunc`,
+  * `cast(ts AS date)`, the `year`/`month`/... extracts), and each
+  * combined — is one instance of a small algebra, rewritten by ONE
+  * path in three steps:
   *
-  *  - `count(*)` / `count(c)` — manifest row counts + sidecar nulls
-  *  - `min(c)` / `max(c)` — sidecar zones (integral under 2^53,
-  *    float/double in total order, strings in UTF8-byte order);
-  *    `tp_timestamp` and `tp_date` ride the manifest ts range on
-  *    EVERY table (dates are monotone in ts, UTC convention)
-  *  - `sum(c)` over integral columns — per-file DECIMAL sums merge in
-  *    BigInt, exact; declines past Long.MaxValue
-  *  - `avg(c)` over integral columns — exact sum / count with one
-  *    double division; declines past 2^53 and for float/double
-  *  - `ndv(c)` ([[graft.functions.NdvFns]]) — per-file HLL sketch
-  *    UNION for int/long/string columns
-  *  - `graft_quantile(c, p)` ([[graft.functions.QuantileFns]]) —
-  *    per-file KLL sketch MERGE for numeric columns
+  *  1. '''Shape''' ([[shapeOf]]): one pass over the Aggregate's child
+  *     down to a whole-table [[ZoneMapFileIndex]] relation through
+  *     column-pruning projections, filters and the optimizer's pulled-
+  *     out `_groupingexpression` bucket aliases. It yields the lake
+  *     table; the grouping keys (partition columns plus at most one
+  *     bucket grain that refines every bucket key); the output specs;
+  *     the time predicate as a disjoint band set (None = none); and
+  *     the partition-only file filter. Anything else keeps the plan.
+  *  2. '''Parts''' ([[Lake.metaParts]]): per (bucket, partition-key)
+  *     metadata partials over the files the manifest and sidecar
+  *     answer exactly — inside one band and one bucket, null-ts-free,
+  *     every needed statistic present — plus the files left to scan.
+  *  3. '''Plan''': one set of value gates over every partial, then
+  *     either the final [[LocalRelation]] (nothing left to scan,
+  *     injective keys), or a hybrid — a [[Union]] of metadata slot rows
+  *     and a partial Aggregate over a relation holding only the
+  *     straddling files (the original filter still applied row-level),
+  *     under a merge Aggregate carrying the original output attribute
+  *     ids — or a decline to the normal plan.
   *
-  * Shapes: ungrouped, GROUP BY physical partition columns (per-group
-  * answers keyed by file directories), partition-only WHERE clauses
-  * (Catalyst-evaluated per directory), and tp_timestamp/tp_date BAND
-  * hybrids (contained files from metadata, straddlers scanned in-plan
-  * and merged — avg via exact sum+count slots, ndv/quantile via
-  * sketch-byte slots).
+  * Served aggregates: `count(*)`/`count(c)`; `min`/`max` (integral
+  * under 2^53, float/double in total order, strings in UTF8-byte
+  * order, `tp_timestamp`/`tp_date` from the manifest ts range on every
+  * table); `sum` of integral columns (exact BigInt merge, declines past
+  * Long.MaxValue); `avg` of integral columns (exact sum / count, one
+  * double division, declines past 2^53); `ndv` and `graft_quantile`
+  * (per-file HLL/KLL sketch unions, merged as sketch bytes in a
+  * hybrid); and, only when metadata answers everything,
+  * `graft_topk` (exact-regime merge), `count(DISTINCT tp_date)` and
+  * literal outputs. Outputs derived from bucket keys alone are served
+  * by key substitution.
   *
-  * Fires ONLY when every piece is provably exact or estimator-defined:
-  *
-  *  - the plan is an [[Aggregate]] whose child reaches a
-  *    [[ZoneMapFileIndex]]-backed lake relation through at most
-  *    column-pruning projections — any join or expression in between
-  *    keeps the plan untouched
-  *  - the relation covers the WHOLE table ([[ZoneMapFileIndex.owner]]
-  *    is set only for full-table reads, never pre-pruned subsets)
-  *  - [[Lake.statsAggregateIfCovered]] confirms EVERY live file is
-  *    metadata-answerable (sidecar rows present and trusted where a
-  *    count, sum, sketch or value range needs them, no unrecorded
-  *    files, long bounds under 2^53, supported types) —
-  *    otherwise the rule DECLINES rather than scan at optimize time,
-  *    and the query runs its normal plan
-  *
-  * The metadata probe reads the table's cached metadata snapshot —
-  * manifest and sidecar parts read in-process, no Spark job — and
-  * runs only after the full structural match, so non-candidate
-  * queries pay a pattern match and nothing else. A `tp_timestamp` (or
-  * `tp_date`) that is only min/max'd needs no sidecar row at all: the
-  * manifest's per-file ranges answer it on every table. The rewrite
-  * replaces the aggregate with a one-row [[LocalRelation]] carrying
-  * the same attribute ids, types and nullability, so downstream
-  * operators and reuse are unaffected.
-  * The qi33 oracle gates exactness (DuckDB recomputes from raw rows)
-  * and pins files-read == 0 through the SQL path.
+  * A hybrid is allowed only under a time band or a bucket key; a
+  * whole-table or partition-grouped shape with any uncovered file
+  * declines, since the zone-map scan is then already the plain plan.
+  * The probe reads the table's cached metadata snapshot in-process (no
+  * Spark job) and runs only after the full structural match, so
+  * non-candidate queries pay a pattern match and nothing else. Every
+  * candidate logs one line: `served`, `hybrid: N contained, M
+  * straddlers`, or `declined: <reason>`. The qi28–qi55 oracles gate
+  * exactness against DuckDB recomputing from raw rows.
   */
 final case class MetadataAggregateRule(session: SparkSession)
   extends Rule[LogicalPlan] {
@@ -78,112 +75,85 @@ final case class MetadataAggregateRule(session: SparkSession)
   private val DayUs = 86400000000L
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
-    case agg: Aggregate if agg.groupingExpressions.isEmpty =>
-      safely(agg)(rewrite(agg))
-    case agg: Aggregate
-        if agg.groupingExpressions.forall(g =>
-          g.isInstanceOf[AttributeReference] &&
-            graft.lake.TpSchema.partitionCols.contains(
-              g.asInstanceOf[AttributeReference].name)) =>
-      // GROUP BY physical partition columns: per-group counts/ranges
-      // come from the manifest+sidecar keyed by each file's directory
-      safely(agg)(rewriteGrouped(agg))
-    case agg: Aggregate
-        if agg.groupingExpressions.nonEmpty &&
-          agg.groupingExpressions.forall(g =>
-            g.isInstanceOf[AttributeReference] ||
-              bucketValue(g).isDefined) =>
-      // GROUP BY a time bucket (`tp_date`, `date_trunc('day'/'hour'/
-      // 'minute', tp_timestamp)`), optionally with partition columns:
-      // THE reporting shape of the reference's domain — day-contained
-      // files contribute per-bucket metadata partials, straddlers
-      // scan and group in-plan, the final GROUP BY merges. The guard
-      // is structural only (the optimizer's PullOutGroupingExpressions
-      // hides `date_trunc` behind a `_groupingexpression` attribute
-      // computed in a Project below, so real classification needs the
-      // child); the rewrite resolves attrs through those aliases and
-      // declines cheaply when no bucket key emerges.
-      safely(agg)(rewriteBucketGrouped(agg))
+    case agg: Aggregate => decide(agg)
   }
 
-  /** Bucket grain of a time-bucket grouping expression, or None when
-    * `e` isn't one this rule can serve. Forms:
-    *
-    *  - the `tp_date` column itself (DateType) — day grain; the engine
-    *    derives `tp_date = date_trunc(day, tp_timestamp)` under its
-    *    always-UTC writer convention, so a file whose manifest ts
-    *    range is day-contained puts ALL its rows on one tp_date
-    *  - `date_trunc(grain, tp_timestamp)` for DAY/DD/HOUR/MINUTE/
-    *    SECOND (fixed micros widths), WEEK (fixed width, Monday
-    *    anchor), and the CALENDAR grains MONTH/QUARTER/YEAR (r18
-    *    verdict task 1 — THE monthly report; the reference's own
-    *    layout partitions by year/month, ducklake_table.go:36-44, so
-    *    month-contained files dominate there). Containment never
-    *    needed a fixed width — only a bucket ID function MONOTONE in
-    *    micros, so `idOf(min_ts) == idOf(max_ts)` proves every row of
-    *    the file shares the bucket ([[MetadataAggregateRule.BucketGrain]]).
-    *  - `cast(tp_timestamp AS date)` — the third spelling of day
-    *
-    * All are gated on the reader session being UTC (same reasoning as
-    * the splitBand date fold): a non-UTC session truncates in local
-    * time and signals a deployment where the UTC-writer convention may
-    * not hold. Exactly-UTC spellings (`Etc/UTC`, `Z`, `+00:00`) are
-    * accepted via [[TpSchema.isUtcZone]] normalization. The zone
-    * RESOLVED INTO the expression at analysis must be UTC too: a plan
-    * analyzed under a non-UTC session and collected after `SET time
-    * zone UTC` keeps the captured zone in its `date_trunc`/cast, so
-    * the straddler scan would truncate in that zone while the metadata
-    * side floors in UTC (r18 ADVICE-low) — such expressions decline.
+  /** The single entry point: shape, then rewrite, with one decision
+    * log line per candidate. An OPTIONAL rewrite must never fail a
+    * query that would run fine unrewritten, so any failure (an
+    * unevaluable shape, a transient metadata I/O error) falls open to
+    * the original plan (r16 ADVICE-high).
+    */
+  private def decide(agg: Aggregate): LogicalPlan =
+    try shapeOf(agg) match {
+      case None => agg
+      case Some(shape) =>
+        val (out, decision) =
+          rewrite(agg, shape).fold(r => (agg, s"declined: $r"), identity)
+        logInfo(s"metadata aggregate on '${shape.table}': $decision")
+        out
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        logWarning(s"metadata aggregate declined on error: ${e.getMessage}")
+        agg
+    }
+
+  /** Bucket grain of a time-bucket expression, or None when `e` isn't
+    * one this rule can serve ([[MetadataAggregateRule.bucketGrainOf]]):
+    * `tp_date`, `date_trunc(grain, tp_timestamp)` for every grain
+    * MILLISECOND..YEAR, `cast(tp_timestamp AS date)`, `trunc(tp_date,
+    * fmt)`. Containment never needs a fixed width — only a bucket id
+    * function MONOTONE in micros, so `idOf(min_ts) == idOf(max_ts)`
+    * proves every row of a file shares the bucket. All forms are gated
+    * on the reader session being UTC and on any zone resolved into
+    * the expression at analysis being UTC too (r18 ADVICE-low): the
+    * straddler scan would otherwise truncate in another zone than the
+    * metadata side.
     */
   private def bucketGrain(e: Expression): Option[BucketGrain] =
     MetadataAggregateRule.bucketGrainOf(session, e).map(_._1)
 
-  /** Bucket-FUNCTIONAL classification for grouping keys: grain + a
-    * bucket-instant → key-value function
-    * ([[MetadataAggregateRule.bucketValueOf]]). Superset of
-    * [[bucketGrain]] adding the extract family (`year`/`quarter`/
-    * `month`/`dayofmonth`/`dayofweek`/`weekday`/`hour`/`minute`), so
-    * `GROUP BY year(tp_timestamp), month(tp_timestamp)` — the
-    * reference's own physical partition layout — rides the hybrid.
+  /** Bucket-FUNCTIONAL grouping key: grain + a bucket-instant → key
+    * value function ([[MetadataAggregateRule.bucketValueOf]]), adding
+    * the extract family (`year`/`quarter`/`month`/`dayofmonth`/
+    * `dayofweek`/`weekday`/`hour`/`minute`) to [[bucketGrain]].
     */
   private def bucketValue(e: Expression): Option[(BucketGrain, Long => Any)] =
     MetadataAggregateRule.bucketValueOf(session, e).map(t => (t._1, t._3))
 
-  /** An OPTIONAL rewrite must never fail a query that would run fine
-    * unrewritten: any probe failure (an unevaluable shape the
-    * structural gates missed, a transient metadata I/O error) falls
-    * open to the original plan with a warning, never up to the user
-    * (r16 ADVICE-high: a subquery in the WHERE previously threw
-    * UnsupportedOperationException out of the optimizer).
+  /** Descend through alias/view wrappers, Filters (their AND-folded
+    * condition is returned), PURE column-pruning projections and
+    * projections whose other entries are bucket-grain aliases — the
+    * optimizer's PullOutGroupingExpressions materializes
+    * `date_trunc(...)` as a `_groupingexpression` column in exactly
+    * such a Project — to the relation; anything else disqualifies.
+    * An alias whose NAME shadows a column of its child disqualifies
+    * too (r18 ADVICE-medium). Returns the alias bindings so grouping
+    * attributes resolve back to their bucket expressions.
     */
-  private def safely(orig: Aggregate)
-      (attempt: => Option[LogicalPlan]): LogicalPlan =
-    try attempt.getOrElse(orig)
-    catch {
-      case scala.util.control.NonFatal(e) =>
-        logWarning(
-          s"metadata-aggregate rewrite declined on error: ${e.getMessage}")
-        orig
+  private def unwrap(p: LogicalPlan): Option[
+      (LogicalRelation, Option[Expression], Map[ExprId, Expression])] =
+    p match {
+      case s: SubqueryAlias => unwrap(s.child)
+      case v: View => unwrap(v.child)
+      case f: Filter => unwrap(f.child).map { case (lr, c, m) =>
+        (lr, Some(c.map(And(f.condition, _)).getOrElse(f.condition)), m)
+      }
+      case pr: Project
+          if pr.projectList.forall {
+            case _: AttributeReference => true
+            case al: Alias => bucketValue(al.child).isDefined &&
+              !pr.child.output.exists(_.name == al.name)
+            case _ => false
+          } =>
+        unwrap(pr.child).map { case (lr, c, m) =>
+          (lr, c, m ++ pr.projectList.collect {
+            case al: Alias => al.exprId -> al.child
+          })
+        }
+      case lr: LogicalRelation => Some((lr, None, Map.empty))
+      case _ => None
     }
-
-  /** Descend through alias/view wrappers, PURE column-pruning
-    * projections, and Filter nodes (their AND-folded condition is
-    * returned for the partition-only check) to the relation; anything
-    * else disqualifies.
-    */
-  private def unwrap(p: LogicalPlan)
-      : Option[(LogicalRelation, Option[Expression])] = p match {
-    case s: SubqueryAlias => unwrap(s.child)
-    case v: View => unwrap(v.child)
-    case f: Filter => unwrap(f.child).map { case (lr, c) =>
-      (lr, Some(c.map(And(f.condition, _)).getOrElse(f.condition)))
-    }
-    case pr: Project
-        if pr.projectList.forall(_.isInstanceOf[AttributeReference]) =>
-      unwrap(pr.child)
-    case lr: LogicalRelation => Some((lr, None))
-    case _ => None
-  }
 
   /** A WHERE clause is metadata-compatible iff it is deterministic and
     * references ONLY physical partition columns of convertible types —
@@ -206,12 +176,7 @@ final case class MetadataAggregateRule(session: SparkSession)
       case a: AttributeReference => a
       case _ => return None
     }
-    if (!attrs.forall(a =>
-      graft.lake.TpSchema.partitionCols.contains(a.name))) return None
-    if (!attrs.forall(_.dataType match {
-      case IntegerType | LongType | StringType => true
-      case _ => false
-    })) return None
+    if (!attrs.forall(isPartitionKey)) return None
     val bound = BindReferences.bindReference(cond,
       org.apache.spark.sql.catalyst.expressions.AttributeSeq(attrs))
     Some { file =>
@@ -222,6 +187,16 @@ final case class MetadataAggregateRule(session: SparkSession)
       r != null && r.asInstanceOf[Boolean] // null = filtered out (SQL)
     }
   }
+
+  /** A physical partition column whose directory string converts to
+    * its value exactly.
+    */
+  private def isPartitionKey(a: AttributeReference): Boolean =
+    graft.lake.TpSchema.partitionCols.contains(a.name) &&
+      (a.dataType match {
+        case IntegerType | LongType | StringType => true
+        case _ => false
+      })
 
   private def dirValueToInternal(
       s: String, dt: org.apache.spark.sql.types.DataType): Any =
@@ -234,50 +209,33 @@ final case class MetadataAggregateRule(session: SparkSession)
       case _ => org.apache.spark.unsafe.types.UTF8String.fromString(s)
     }
 
-  /** Explain-lint probe: Some(aggregated column names) when the
-    * OPTIMIZED plan still contains an Aggregate this rule was
-    * structurally able to serve — i.e. the rewrite was possible but
-    * DECLINED (missing sidecar coverage, unrecorded files, a bound
-    * past 2^53) — so `.explain` can tell the user what to enable.
-    * None when nothing was missed (not a candidate, or the rewrite
-    * fired and no Aggregate remains).
+  /** Explain-lint probe: the columns to enable stats on when the
+    * OPTIMIZED plan still holds an Aggregate whose shape the rule
+    * accepts — i.e. the rule declined it (missing sidecar coverage,
+    * unrecorded files, a bound past 2^53) — so `.explain` can tell the
+    * user what to enable. A served aggregate is gone from the plan, and
+    * a hybrid's merge and partial Aggregates have no lake relation
+    * under them, so neither lints.
     */
   private[graft] def missedCandidate(
       plan: LogicalPlan): Option[Seq[String]] =
     plan.collectFirst(Function.unlift {
-      case agg: Aggregate => structuralCandidate(agg)
+      case agg: Aggregate => shapeOf(agg).map { s =>
+        (s.specs.collect {
+          // the distinct-day proof rides the manifest's ts ranges
+          case DistinctDates(_) => graft.lake.TpSchema.Timestamp
+          case c: ColSpec => c.a.name
+        } ++ (if (s.hybridOk) Seq(graft.lake.TpSchema.Timestamp) else Nil))
+          .distinct
+      }
       case _ => None
     })
 
-  private def structuralCandidate(agg: Aggregate): Option[Seq[String]] = {
-    // time-bucket groupings (tp_date / date_trunc / cast-to-date,
-    // possibly pulled out as a _groupingexpression alias) lint too:
-    // their containment proof rides tp_timestamp stats, so the hint
-    // names that column
-    val bucketShaped: Boolean = {
-      val aliasMap =
-        unwrapBucket(agg.child).map(_._3).getOrElse(Map.empty)
-      val resolved = agg.groupingExpressions.map {
-        case a: AttributeReference => aliasMap.getOrElse(a.exprId, a)
-        case e => e
-      }
-      val grains = resolved.flatMap(bucketValue(_)).map(_._1)
-      grains.nonEmpty &&
-        // only lint shapes a containment grain could actually serve
-        grains.exists(a =>
-          grains.forall(b => MetadataAggregateRule.refines(a, b))) &&
-        resolved.forall(g => bucketValue(g).isDefined ||
-          (g.isInstanceOf[AttributeReference] &&
-            graft.lake.TpSchema.partitionCols.contains(
-              g.asInstanceOf[AttributeReference].name)))
-    }
-    if (!bucketShaped && !agg.groupingExpressions.forall(g =>
-      g.isInstanceOf[AttributeReference] &&
-        graft.lake.TpSchema.partitionCols.contains(
-          g.asInstanceOf[AttributeReference].name))) return None
-    val (lr, cond) = unwrap(agg.child)
-      .orElse(unwrapBucket(agg.child).map(t => (t._1, t._2)))
-      .getOrElse(return None)
+  /** Step 1: the aggregate as a [[Shape]], or None when it is not one
+    * the rule can answer. Pure: reads no metadata.
+    */
+  private def shapeOf(agg: Aggregate): Option[Shape] = {
+    val (lr, cond, aliases) = unwrap(agg.child).getOrElse(return None)
     val (lake, table) = (lr.relation match {
       case fs: HadoopFsRelation => fs.location match {
         case z: ZoneMapFileIndex => z.owner
@@ -285,49 +243,95 @@ final case class MetadataAggregateRule(session: SparkSession)
       }
       case _ => None
     }).getOrElse(return None)
-    // a filter must itself be metadata-compatible, or "could be
-    // served" would be a false promise: partition-only, or a
-    // tp_timestamp band (whose hybrid needs tp_timestamp stats — the
-    // lint then names that column in the enablement command)
-    val bandShaped = cond match {
-      case None => false
-      case Some(c) =>
-        if (partitionFilePredicate(lake, table, c).isDefined) false
-        else splitBand(c) match {
-          case Some((lo, hi, n, rest)) if n > 0 && lo <= hi &&
-              rest.forall(rc =>
-                partitionFilePredicate(lake, table, rc).isDefined) =>
-            true
+    val grouping = agg.groupingExpressions
+    val keys: Seq[Key] = grouping.map { g =>
+      val e = g match {
+        case a: AttributeReference => aliases.getOrElse(a.exprId, a)
+        case x => x
+      }
+      bucketValue(e) match {
+        case Some((gr, valueOf)) => BucketKey(gr, valueOf)
+        case None => g match {
+          case a: AttributeReference if isPartitionKey(a) => PartKey(a)
           case _ => return None
         }
+      }
     }
-    val groupRefs = AttributeSet(agg.groupingExpressions
-      .flatMap(_.references))
-    val specs = agg.aggregateExpressions.map {
-      // bare attrs are grouping-column pass-throughs in the grouped
-      // shape; the lint needn't re-validate their exprIds. Aliases
-      // over group keys (incl. derived casts in the bucket shape) are
-      // pass-throughs too.
-      case _: AttributeReference => Some(CountStar)
-      case al: Alias if al.references.nonEmpty &&
-          al.references.subsetOf(groupRefs) => Some(CountStar)
-      case e => classify(e)
+    // bucket keys contain on the FINEST grain present — one whose
+    // buckets refine every other key's (`year(ts), month(ts)` contains
+    // on MONTH); none (week × month) means no containment proof
+    val grains = keys.collect { case BucketKey(gr, _) => gr }
+    val grain =
+      if (grains.isEmpty) None
+      else Some(grains.find(a => grains.forall(refines(a, _)))
+        .getOrElse(return None))
+    val (bands, partCond) = cond match {
+      case None => (None, None)
+      case Some(c) =>
+        val (bs, nBand, rest) = splitBands(c).getOrElse(return None)
+        if (nBand > 0) {
+          if (bs.isEmpty) return None // contradictory band
+          (Some(bs), rest)
+        }
+        // splitBands drops band-neutral IS NOT NULL conjuncts from
+        // `rest`; only a bucket key's null-ts-free containment implies
+        // them, so elsewhere the whole condition must be partition-only
+        else (None, if (grain.isDefined) rest else Some(c))
     }
-    if (specs.exists(_.isEmpty)) None
-    else Some((specs.flatten.collect {
-      case CountCol(a) => a.name
-      case MinCol(a) => a.name
-      case MaxCol(a) => a.name
-      case SumCol(a) => a.name
-      case AvgCol(a) => a.name
-      case NdvCol(a) => a.name
-      case QuantileCol(a, _) => a.name
-      case TopKCol(a, _) => a.name
-      // distinct-day proof rides the manifest's tp_timestamp ranges
-      case DistinctDates(_) => graft.lake.TpSchema.Timestamp
-    } ++ (if (bandShaped || bucketShaped)
-            Seq(graft.lake.TpSchema.Timestamp)
-          else Nil)).distinct)
+    val fileFilter: String => Boolean = partCond match {
+      case None => _ => true
+      case Some(pc) =>
+        partitionFilePredicate(lake, table, pc).getOrElse(return None)
+    }
+    def keyIndex(e: Expression): Option[Int] = {
+      val i = grouping.indexWhere(_.semanticEquals(e))
+      if (i < 0) None else Some(i)
+    }
+    // an output DERIVED from bucket-shaped group keys only —
+    // `cast(day_bucket AS date)`, `year(tp_date)` — is served by
+    // substituting the key into the expression. Deterministic,
+    // aggregate-free, evaluable once keys are substituted, references
+    // ⊆ grouping attrs.
+    def derivedKey(al: Alias): Option[Spec] = {
+      val e = al.child
+      if (grain.isEmpty || !e.deterministic || e.references.isEmpty)
+        return None
+      if (e.find(x => x.isInstanceOf[AggregateExpression] ||
+        x.isInstanceOf[PlanExpression[_]] ||
+        (x.isInstanceOf[Unevaluable] &&
+          !x.isInstanceOf[AttributeReference])).isDefined) return None
+      if (!e.references.toSeq.forall {
+        case a: AttributeReference => keyIndex(a).isDefined
+        case _ => false
+      }) return None
+      Some(GroupDerived(e))
+    }
+    val specs: Seq[Spec] = agg.aggregateExpressions.map {
+      case a: AttributeReference => keyIndex(a).map(GroupKey)
+      case al @ Alias(child, _) =>
+        keyIndex(child).map(GroupKey)
+          .orElse(classify(al)).orElse(derivedKey(al))
+      case _ => None
+    }.map(_.getOrElse(return None))
+    // value specs read the RELATION's own columns, never an alias
+    // that merely carries a column's name
+    val relIds = lr.output.map(_.exprId).toSet
+    if (!specs.forall {
+      case c: ColSpec => relIds(c.a.exprId)
+      case _ => true
+    }) return None
+    val shape =
+      Shape(lr, lake, table, keys, grain, specs, bands, fileFilter)
+    // specs with no union slot answer only when the metadata answers
+    // everything: literal and top-k outputs never under a band or a
+    // bucket key, and a distinct-day count only ungrouped under a band
+    if (specs.exists {
+      case _: Passthrough | _: TopKCol => shape.hybridOk
+      case _: DistinctDates =>
+        grain.isDefined || (bands.isDefined && keys.nonEmpty)
+      case _ => false
+    }) return None
+    Some(shape)
   }
 
   private def classify(e: NamedExpression): Option[Spec] = e match {
@@ -343,8 +347,8 @@ final case class MetadataAggregateRule(session: SparkSession)
     // date set IS the manifest's per-file day set (a day-contained
     // file with a manifest range has at least its min row on that
     // day; null dates don't count in SQL DISTINCT). Proven or
-    // declined per file in Lake.distinctDayCounts; any straddler
-    // declines. UTC-gated like every tp_date derivation.
+    // declined per file in Lake.distinctDayCounts. UTC-gated like
+    // every tp_date derivation.
     else if (ae.isDistinct) ae.aggregateFunction match {
       case Count(Seq(a: AttributeReference))
           if a.name == graft.lake.TpSchema.Date &&
@@ -421,172 +425,182 @@ final case class MetadataAggregateRule(session: SparkSession)
       case _ => None
     }
 
-  /** Columns whose non-null count the answer reads: a column that is
-    * only min/max'd needs none, which lets the manifest alone answer a
-    * `tp_timestamp` range.
+  /** Steps 2 and 3: the metadata parts, the value gates, and the plan
+    * — Right(plan, decision) or Left(why the rule declines).
     */
-  private def countColumnsOf(specs: Seq[Spec]): Set[String] =
-    specs.collect {
-      case CountCol(a) => a.name
-      case AvgCol(a) => a.name
-    }.toSet
+  private def rewrite(agg: Aggregate, s: Shape)
+      : Either[String, (LogicalPlan, String)] = {
+    import scala.util.{Left, Right} // not Catalyst's string functions
+    val lake = s.lake
+    val partNames = s.keys.collect { case PartKey(a) => a.name }
+    val groupOf: String => Seq[String] = f => {
+      val pv = lake.partitionValues(lake.relOf(s.table, f))
+      partNames.map(pv.getOrElse(_, null))
+    }
+    val parts = lake.metaParts(session, s.table, needsOf(s.specs),
+      s.bands, s.grain.map(g => g.idOf _), groupOf, s.fileFilter)
+      .getOrElse(return Left("no data, or a column the table lacks"))
+    if (!s.hybridOk && parts.toScan.nonEmpty)
+      return Left(s"${parts.toScan.size} files not covered by metadata")
+    if (s.hybridOk && parts.contained == 0)
+      return Left("no file answers from metadata")
+    // an ungrouped answer is one row even when no file answered
+    val groups: Seq[(Lake.PartsKey, Lake.StatsAggParts)] =
+      if (s.keys.isEmpty) Seq(((None, Nil), parts.whole))
+      else parts.groups.toSeq
+    val gateFailure = s.specs.collectFirst {
+      case SumCol(a) if groups.exists(
+          _._2.sums.get(a.name).exists(!_.isValidLong)) =>
+        s"sum(${a.name}) has no exact BIGINT value"
+      // past 2^53 the exact sum's double loses losslessness
+      case AvgCol(a) if groups.exists(
+          _._2.sums.get(a.name).exists(_.abs > MaxExactAvgSum)) =>
+        s"avg(${a.name}) sums past 2^53"
+      // top-k: the MERGED sketch must be provably exact (no eviction)
+      case TopKCol(a, _) if groups.exists(g => !g._2.mgBlobs.get(a.name)
+          .exists(b => graft.functions.TopKFns.isExact(
+            graft.functions.TopKFns.fromBlob(b)))) =>
+        s"graft_topk(${a.name}) is not exact"
+    }
+    gateFailure.foreach(r => return Left(r))
+    val days: Map[Seq[String], Long] =
+      if (!s.specs.exists(_.isInstanceOf[DistinctDates])) Map.empty
+      else lake.distinctDayCounts(session, s.table, s.bands, groupOf,
+        s.fileFilter).getOrElse(return Left("active days not provable"))
 
-  private def rewrite(agg: Aggregate): Option[LogicalPlan] = {
-    val (lr, cond) = unwrap(agg.child).getOrElse(return None)
-    val (lake, table) = (lr.relation match {
-      case fs: HadoopFsRelation => fs.location match {
-        case z: ZoneMapFileIndex => z.owner
-        case _ => None
+    val grouping = agg.groupingExpressions
+    def keyIndex(a: AttributeReference): Option[Int] = {
+      val i = grouping.indexWhere(_.semanticEquals(a))
+      if (i < 0) None else Some(i)
+    }
+    // each bucket key's value from the containment bucket's START
+    // instant — constant across the bucket by the refinement gate
+    def keyValues(key: Lake.PartsKey): Seq[Any] = {
+      val dirs = key._2.iterator
+      s.keys.map {
+        case BucketKey(_, valueOf) => valueOf(s.grain.get.startUs(key._1.get))
+        case PartKey(a) => dirValueToInternal(dirs.next(), a.dataType)
       }
-      case _ => None
-    }).getOrElse(return None)
-    val fileFilter: String => Boolean = cond match {
-      case None => _ => true
-      case Some(c) =>
-        partitionFilePredicate(lake, table, c) match {
-          case Some(p) => p
-          // not partition-only: a tp_timestamp band (plus optional
-          // partition conjuncts) gets the HYBRID rewrite — contained
-          // files from metadata, straddlers scanned in-plan
-          case None => return rewriteBand(agg, lr, lake, table, c)
-        }
     }
-    // a WHERE that filters rows away can leave zero surviving rows in
-    // a group of aggregates whose types we can't synthesize a correct
-    // empty result for without the parts — handled below (nRows == 0
-    // still yields the correct count-0 / null-min row)
-    val specs = agg.aggregateExpressions.map(classify)
-    if (specs.exists(_.isEmpty)) return None
-    val flat = specs.flatten
-    val cols = flat.collect {
-      case CountCol(a) => a.name
-      case MinCol(a) => a.name
-      case MaxCol(a) => a.name
-      case SumCol(a) => a.name
-      case AvgCol(a) => a.name
-      case NdvCol(a) => a.name
-      case QuantileCol(a, _) => a.name
-      case TopKCol(a, _) => a.name
-    }.distinct
-    // count-only columns need just the sidecar's null/row counts; only
-    // min/max targets must also have exact zone ranges, only sum/avg
-    // targets the per-file value sums, and only ndv/quantile targets
-    // their blobs
-    val rangeCols = flat.collect {
-      case MinCol(a) => a.name
-      case MaxCol(a) => a.name
-    }.toSet
-    val sumCols = flat.collect {
-      case SumCol(a) => a.name
-      case AvgCol(a) => a.name
-    }.toSet
-    val ndvCols = flat.collect { case NdvCol(a) => a.name }.toSet
-    val kllCols = flat.collect { case QuantileCol(a, _) => a.name }.toSet
-    val mgCols = flat.collect { case TopKCol(a, _) => a.name }.toSet
-    val parts = lake.statsAggregateIfCovered(session, table, cols,
-      rangeCols, sumCols, ndvCols, fileFilter, kllCols, mgCols,
-      countColumnsOf(flat)).getOrElse(return None)
-    // a sum past Long.MaxValue has no exact BIGINT value — decline
-    if (!flat.collect { case SumCol(a) => a.name }.forall(c =>
-      parts.sums.get(c).forall(_.isValidLong))) return None
-    // an avg whose exact sum passes 2^53 loses double losslessness
-    if (!flat.collect { case AvgCol(a) => a.name }.forall(c =>
-      parts.sums.get(c).forall(_.abs <= MaxExactAvgSum))) return None
-    // top-k: the MERGED sketch must be provably exact (no eviction
-    // anywhere) — an approximate regime declines to the scan
-    if (!mgCols.forall(c => parts.mgBlobs.get(c).exists(b =>
-      graft.functions.TopKFns.isExact(
-        graft.functions.TopKFns.fromBlob(b))))) return None
-    // count(DISTINCT tp_date): provable only when every (filtered)
-    // file is day-contained — any straddler declines the whole rewrite
-    val distinctDays: Option[Long] =
-      if (!flat.exists(_.isInstanceOf[DistinctDates])) None
-      else lake.distinctDayCounts(session, table, _ => Nil, fileFilter)
-        match {
-          case None => return None
-          case Some(m) => Some(m.values.headOption.getOrElse(0L))
-        }
-    val values: Seq[Any] = flat.map {
-      case CountStar => parts.nRows
-      case CountCol(a) => parts.counts.getOrElse(a.name, 0L)
-      case MinCol(a) =>
-        CatalystTypeConverters.convertToCatalyst(
-          parts.mins.get(a.name).orNull)
-      case MaxCol(a) =>
-        CatalystTypeConverters.convertToCatalyst(
-          parts.maxs.get(a.name).orNull)
-      case SumCol(a) =>
-        parts.sums.get(a.name).map(s => Long.box(s.toLong)).orNull
-      case AvgCol(a) =>
-        val n = parts.counts.getOrElse(a.name, 0L)
-        if (n == 0L) null // SQL avg of no rows
-        else parts.sums.get(a.name)
-          .map(s => Double.box(s.toDouble / n)).orNull
-      case NdvCol(a) => Long.box(parts.ndvs.getOrElse(a.name, 0L))
-      case QuantileCol(a, prob) =>
-        parts.kllBlobs.get(a.name)
-          .flatMap(b =>
-            graft.functions.QuantileFns.blobQuantile(b, prob))
-          .map(Double.box).orNull
-      case TopKCol(a, k) => graft.functions.TopKFns.topKInternal(
-        graft.functions.TopKFns.fromBlob(parts.mgBlobs(a.name)), k)
-      case DistinctDates(_) => Long.box(distinctDays.get)
-      case Passthrough(v) => v // Literal.value is already internal
+    val keyed = groups.map { case (key, p) => (keyValues(key), key._2, p) }
+    // bucket id → key can be NON-injective for extract keys (two hour
+    // buckets on different days share one hour-of-day): then even a
+    // fully-contained answer needs the merge aggregate
+    val injective = keyed.map(_._1).distinct.size == keyed.size
+
+    if (parts.toScan.isEmpty && injective) {
+      val rows = keyed.map { case (kv, partVals, p) =>
+        InternalRow.fromSeq(s.specs.map {
+          case GroupKey(i) => kv(i)
+          // keys become Literals, then one driver-side eval
+          case GroupDerived(e) => e.transform {
+            case a: AttributeReference if keyIndex(a).isDefined =>
+              val i = keyIndex(a).get
+              Literal(kv(i), grouping(i).dataType)
+          }.eval(null)
+          case DistinctDates(_) => Long.box(days.getOrElse(partVals, 0L))
+          case sp => metaFinalValue(p, sp)
+        })
+      }
+      return Right((LocalRelation(agg.output, rows), "served"))
     }
-    logInfo(s"metadata-aggregate rewrite fired for lake table '$table': " +
-      s"${flat.size} aggregates answered from the manifest+sidecar")
-    Some(LocalRelation(agg.aggregateExpressions.map(_.toAttribute),
-      Seq(InternalRow.fromSeq(values))))
+    val valueSpecs = s.specs.filterNot(sp =>
+      sp.isInstanceOf[GroupKey] || sp.isInstanceOf[GroupDerived])
+    if (!s.hybridOk || valueSpecs.exists(slotTypesOf(_).isEmpty))
+      return Left("the answer needs a merge this shape cannot build")
+
+    // local side: key slots in grouping order, then value slots (avg
+    // spans two — an exact decimal sum and a count)
+    val nKeys = grouping.size
+    val keySlots = grouping.zipWithIndex.map { case (g, i) =>
+      AttributeReference(s"_mk_$i", g.dataType)()
+    }
+    val valSlotGroups: Seq[Seq[AttributeReference]] =
+      valueSpecs.zipWithIndex.map { case (sp, i) =>
+        slotTypesOf(sp).zipWithIndex.map { case (dt, j) =>
+          AttributeReference(s"_mv_${i}_$j", dt)()
+        }
+      }
+    val local = LocalRelation(keySlots ++ valSlotGroups.flatten,
+      keyed.map { case (kv, _, p) =>
+        InternalRow.fromSeq(kv ++ valueSpecs.flatMap(metaSlotValues(p, _)))
+      })
+
+    // straddler side: the ORIGINAL grouping expressions over a relation
+    // holding only the files left to scan, the original Filter intact
+    // (bucket expressions evaluate row-level, so straddler rows land in
+    // their true buckets, the null bucket included)
+    val fsRel = s.lr.relation.asInstanceOf[HadoopFsRelation]
+    val straddlerIndex =
+      new org.apache.spark.sql.execution.datasources.InMemoryFileIndex(
+        session, parts.toScan.map(new org.apache.hadoop.fs.Path(_)),
+        Map("basePath" -> lake.tableDir(s.table)), None)
+    val straddlerRel = HadoopFsRelation(straddlerIndex,
+      fsRel.partitionSchema, fsRel.dataSchema, fsRel.bucketSpec,
+      fsRel.fileFormat, fsRel.options)(session)
+    val swappedChild = agg.child.transform {
+      case l: LogicalRelation if l eq s.lr =>
+        s.lr.copy(relation = straddlerRel)
+    }
+    // prune the scan to the aggregated and grouped columns (the
+    // optimizer's ColumnPruning already ran); a pure count(*) reads
+    // the filter's columns anyway
+    val neededIds = (valueSpecs.collect { case c: ColSpec => c.a } ++
+      grouping.flatMap(_.references)).map(_.exprId).toSet
+    val needed = agg.child.output.filter(a => neededIds(a.exprId))
+    val pruned =
+      if (needed.nonEmpty) Project(needed, swappedChild) else swappedChild
+    val partialKeys: Seq[NamedExpression] = grouping.zipWithIndex.map {
+      case (a: AttributeReference, _) => a
+      case (g, i) => Alias(g, s"_mk_$i")()
+    }
+    val partial = Aggregate(grouping,
+      partialKeys ++ valueSpecs.zip(valSlotGroups).flatMap {
+        case (sp, slots) => partialSlotExprs(sp, slots)
+      }, pruned)
+    val union = Union(Seq(local, partial))
+    val unionOut = union.output
+
+    // merge under the ORIGINAL output names/exprIds: keys pass through,
+    // key-derived outputs read the union's key columns, counts and
+    // sums add, ranges re-extremize, avg divides the merged sum by the
+    // merged count, sketches union
+    val offsets = valSlotGroups.scanLeft(nKeys)(_ + _.size).iterator
+    val mergeExprs: Seq[NamedExpression] =
+      agg.aggregateExpressions.zip(s.specs).map {
+        case (orig, GroupKey(k)) =>
+          Alias(unionOut(k), orig.name)(exprId = orig.exprId)
+        case (orig, GroupDerived(e)) =>
+          Alias(e.transform {
+            case a: AttributeReference if keyIndex(a).isDefined =>
+              unionOut(keyIndex(a).get)
+          }, orig.name)(exprId = orig.exprId)
+        case (orig, sp) => mergeExprFor(sp, orig, unionOut, offsets.next())
+      }
+    Right((Aggregate(unionOut.take(nKeys), mergeExprs, union),
+      s"hybrid: ${parts.contained} contained, " +
+        s"${parts.toScan.size} straddlers"))
   }
 
-  /** TIME-BAND hybrid rewrite — the reference's dominant query shape
-    * (`WHERE tp_timestamp BETWEEN a AND b`, optionally with partition
-    * conjuncts) as plain SQL: files the manifest proves fully inside
-    * the band (and the sidecar proves null-ts-free) contribute their
-    * counts/sums/ranges as a one-row [[LocalRelation]]; only the
-    * edge-straddling files stay IN the plan, as a partial aggregate
-    * over a relation restricted to exactly those files (the original
-    * filter still applied row-level), merged by a final aggregate
-    * carrying the original output attribute ids. For a month-wide band
-    * over a year of files, the scan is two boundary days — through
-    * SQL, with no API call. The classification runs metadata-sized
-    * jobs at optimize time; the straddler scan executes distributed in
-    * the plan, never at optimize time. Declines (whole plan untouched)
-    * when no file is provably contained — then the zone-map FileIndex
-    * already prunes the scan to the overlapping files and a hybrid
-    * buys nothing.
-    */
-  /** Split a WHERE into a `tp_timestamp` band in micros and the
-    * residual non-band conjuncts. Strict bounds convert exactly
-    * (`> X` ≡ `>= X+1µs`); equality is the one-point band. `tp_date`
-    * comparisons fold into the SAME micros band (epoch-day × 86.4e9 —
-    * exact in a long for every representable date) because the engine
-    * derives `tp_date = date_trunc(day, tp_timestamp)` under its
-    * always-UTC sessions, so `tp_date >= D` ≡ `tp_timestamp >= D
-    * 00:00:00 UTC` row-for-row; pre-0.7 reference users filter on
-    * tp_date and previously paid a scan of every overlapping file
-    * (r16 verdict task 5). Date folding is gated on the READER
-    * session being UTC too — a non-UTC session parses date literals
-    * the same (days are TZ-free) but signals a deployment where the
-    * UTC-writer convention may not hold, so date conjuncts then land
-    * in the residual and the rewrite declines to the zoned scan.
-    * None when a band conjunct has a null/odd literal;
-    * `(lo, hi, 0, Some(cond))` when no band conjunct exists.
-    * Shared by [[rewriteBand]] and the explain-lint probe.
-    */
   private def conjunctsOf(e: Expression): Seq[Expression] = e match {
     case And(l, r) => conjunctsOf(l) ++ conjunctsOf(r)
     case x => Seq(x)
   }
 
-  private def splitBand(cond: Expression)
-      : Option[(Long, Long, Int, Option[Expression])] =
-    splitBandExprs(conjunctsOf(cond)).map { case (lo, hi, n, rest) =>
-      (lo, hi, n, rest.reduceOption(And))
-    }
-
-  /** [[splitBand]]'s core over an explicit conjunct list — reused by
-    * [[splitBands]] to fold each disjunct of an OR-of-bands.
+  /** Split a conjunct list into a `tp_timestamp` band in micros and
+    * the residual non-band conjuncts. Strict bounds convert exactly
+    * (`> X` ≡ `>= X+1µs`); equality is the one-point band. `tp_date`
+    * comparisons fold into the SAME micros band (epoch-day × 86.4e9 —
+    * exact in a long for every representable date) because the engine
+    * derives `tp_date = date_trunc(day, tp_timestamp)` under its
+    * always-UTC sessions, so `tp_date >= D` ≡ `tp_timestamp >= D
+    * 00:00:00 UTC` row-for-row (r16 verdict task 5). Date folding is
+    * gated on the READER session being UTC too — a non-UTC session
+    * parses date literals the same (days are TZ-free) but signals a
+    * deployment where the UTC-writer convention may not hold, so date
+    * conjuncts then land in the residual and the rewrite declines to
+    * the zoned scan. None when a band conjunct has a null/odd literal;
+    * `(lo, hi, 0, cs)` when no band conjunct exists.
     */
   private def splitBandExprs(cs: Seq[Expression])
       : Option[(Long, Long, Int, Seq[Expression])] = {
@@ -768,7 +782,7 @@ final case class MetadataAggregateRule(session: SparkSession)
     Some((lo, hi, nBand, rest.result()))
   }
 
-  /** Generalize [[splitBand]] to an OR of bands (r17 verdict task 6 —
+  /** Fold a WHERE into an OR of bands (r17 verdict task 6 —
     * the multi-window dashboard shape, `WHERE ts BETWEEN a AND b OR ts
     * BETWEEN c AND d`): at most ONE conjunct may be a disjunction
     * whose EVERY branch folds to a pure band (band leaves only, no
@@ -845,14 +859,16 @@ final case class MetadataAggregateRule(session: SparkSession)
       grest.reduceOption(And)))
   }
 
-  // ---- band-hybrid slot machinery (shared by both band rewrites) ----
+  // ---- hybrid slot machinery ----
   //
   // Most aggregates occupy ONE union slot (their mergeable partial is
   // themselves: counts/sums add, ranges re-extremize). `avg` needs TWO
   // — an exact DECIMAL(38,0) sum and a count — merged by one double
   // division at the very top, so the hybrid answer equals the pure-
   // metadata formula (exact total / count) regardless of how rows
-  // split between contained files and straddlers.
+  // split between contained files and straddlers. Literal, top-k and
+  // distinct-day outputs have no slot: they answer only from a final
+  // metadata row.
 
   private def slotTypesOf(s: Spec): Seq[org.apache.spark.sql.types.DataType] =
     s match {
@@ -865,10 +881,10 @@ final case class MetadataAggregateRule(session: SparkSession)
       // estimates don't add, sketches do
       case NdvCol(_) => Seq(org.apache.spark.sql.types.BinaryType)
       case QuantileCol(_, _) => Seq(org.apache.spark.sql.types.BinaryType)
-      case _ => Seq(LongType)
+      case _ => Nil
     }
 
-  /** Metadata-partial values for one spec, one per slot. */
+  /** Metadata-partial values for one slotted spec, one per slot. */
   private def metaSlotValues(
       parts: Lake.StatsAggParts, s: Spec): Seq[Any] = s match {
     case CountStar => Seq(parts.nRows)
@@ -885,13 +901,10 @@ final case class MetadataAggregateRule(session: SparkSession)
       parts.counts.getOrElse(a.name, 0L))
     case NdvCol(a) => Seq(parts.ndvBlobs.get(a.name).orNull)
     case QuantileCol(a, _) => Seq(parts.kllBlobs.get(a.name).orNull)
-    case _ => Seq(null)
+    case other => throw new IllegalArgumentException(s"no slot for $other")
   }
 
-  /** FINAL value for one spec when the band is fully contained (no
-    * straddler scan): the same arithmetic the ungrouped/grouped
-    * metadata paths use.
-    */
+  /** FINAL value for one value spec when nothing is left to scan. */
   private def metaFinalValue(parts: Lake.StatsAggParts, s: Spec): Any =
     s match {
       case AvgCol(a) =>
@@ -907,6 +920,7 @@ final case class MetadataAggregateRule(session: SparkSession)
           .map(Double.box).orNull
       case TopKCol(a, k) => graft.functions.TopKFns.topKInternal(
         graft.functions.TopKFns.fromBlob(parts.mgBlobs(a.name)), k)
+      case Passthrough(v) => v // Literal.value is already internal
       case other => metaSlotValues(parts, other).head
     }
 
@@ -914,27 +928,27 @@ final case class MetadataAggregateRule(session: SparkSession)
     * slots.
     */
   private def partialSlotExprs(
-      s: Spec, slots: Seq[AttributeReference]): Option[Seq[NamedExpression]] = {
+      s: Spec, slots: Seq[AttributeReference]): Seq[NamedExpression] = {
     def alias(fn: AggregateFunction, slot: AttributeReference) =
       Alias(fn.toAggregateExpression(), slot.name)(exprId = slot.exprId)
     s match {
-      case CountStar => Some(Seq(alias(Count(Literal(1)), slots.head)))
-      case CountCol(a) => Some(Seq(alias(Count(a), slots.head)))
-      case MinCol(a) => Some(Seq(alias(Min(a), slots.head)))
-      case MaxCol(a) => Some(Seq(alias(Max(a), slots.head)))
-      case SumCol(a) => Some(Seq(alias(Sum(a), slots.head)))
-      case AvgCol(a) => Some(Seq(
+      case CountStar => Seq(alias(Count(Literal(1)), slots.head))
+      case CountCol(a) => Seq(alias(Count(a), slots.head))
+      case MinCol(a) => Seq(alias(Min(a), slots.head))
+      case MaxCol(a) => Seq(alias(Max(a), slots.head))
+      case SumCol(a) => Seq(alias(Sum(a), slots.head))
+      case AvgCol(a) => Seq(
         // exact decimal accumulation: a long-typed straddler sum must
         // not wrap, and decimal(38,0) merges exactly with the metadata
         // partial's BigInt total
         alias(Sum(Cast(a,
           org.apache.spark.sql.types.DecimalType(38, 0))), slots.head),
-        alias(Count(a), slots(1))))
-      case NdvCol(a) => Some(Seq(
-        alias(graft.functions.NdvFns.NdvSketchAgg(a), slots.head)))
-      case QuantileCol(a, _) => Some(Seq(
-        alias(graft.functions.KllFns.KllSketchAgg(a), slots.head)))
-      case _ => None
+        alias(Count(a), slots(1)))
+      case NdvCol(a) =>
+        Seq(alias(graft.functions.NdvFns.NdvSketchAgg(a), slots.head))
+      case QuantileCol(a, _) =>
+        Seq(alias(graft.functions.KllFns.KllSketchAgg(a), slots.head))
+      case other => throw new IllegalArgumentException(s"no slot for $other")
     }
   }
 
@@ -943,795 +957,27 @@ final case class MetadataAggregateRule(session: SparkSession)
     */
   private def mergeExprFor(
       s: Spec, orig: NamedExpression,
-      unionOut: Seq[Attribute], off: Int): Option[NamedExpression] =
-    s match {
-      case CountStar | CountCol(_) | SumCol(_) => Some(Alias(
-        Sum(unionOut(off)).toAggregateExpression(), orig.name)(
-        exprId = orig.exprId))
-      case MinCol(_) => Some(Alias(
-        Min(unionOut(off)).toAggregateExpression(), orig.name)(
-        exprId = orig.exprId))
-      case MaxCol(_) => Some(Alias(
-        Max(unionOut(off)).toAggregateExpression(), orig.name)(
-        exprId = orig.exprId))
+      unionOut: Seq[Attribute], off: Int): NamedExpression = {
+    val merged: Expression = s match {
+      case CountStar | CountCol(_) | SumCol(_) =>
+        Sum(unionOut(off)).toAggregateExpression()
+      case MinCol(_) => Min(unionOut(off)).toAggregateExpression()
+      case MaxCol(_) => Max(unionOut(off)).toAggregateExpression()
       case AvgCol(_) =>
         val total = Sum(unionOut(off)).toAggregateExpression()
         val n = Sum(unionOut(off + 1)).toAggregateExpression()
-        Some(Alias(
-          If(EqualTo(n, Literal(0L)),
-            Literal(null, org.apache.spark.sql.types.DoubleType),
-            Divide(Cast(total, org.apache.spark.sql.types.DoubleType),
-              Cast(n, org.apache.spark.sql.types.DoubleType))),
-          orig.name)(exprId = orig.exprId))
-      case NdvCol(_) => Some(Alias(
-        graft.functions.NdvFns.NdvUnionAgg(unionOut(off))
-          .toAggregateExpression(), orig.name)(exprId = orig.exprId))
-      case QuantileCol(_, prob) => Some(Alias(
+        If(EqualTo(n, Literal(0L)),
+          Literal(null, org.apache.spark.sql.types.DoubleType),
+          Divide(Cast(total, org.apache.spark.sql.types.DoubleType),
+            Cast(n, org.apache.spark.sql.types.DoubleType)))
+      case NdvCol(_) => graft.functions.NdvFns.NdvUnionAgg(unionOut(off))
+        .toAggregateExpression()
+      case QuantileCol(_, prob) =>
         graft.functions.QuantileFns.QuantileUnionAgg(unionOut(off),
-          Literal(prob)).toAggregateExpression(), orig.name)(
-        exprId = orig.exprId))
-      case _ => None
+          Literal(prob)).toAggregateExpression()
+      case other => throw new IllegalArgumentException(s"no slot for $other")
     }
-
-  private def rewriteBand(
-      agg: Aggregate, lr: LogicalRelation,
-      lake: Lake, table: String,
-      cond: Expression): Option[LogicalPlan] = {
-    val (bands, nBand, partCond) = splitBands(cond).getOrElse(return None)
-    if (nBand == 0 || bands.isEmpty) return None
-    val fileFilter: String => Boolean = partCond match {
-      case None => _ => true
-      case Some(pc) =>
-        partitionFilePredicate(lake, table, pc).getOrElse(return None)
-    }
-    val specs = agg.aggregateExpressions.map(classify)
-    if (specs.exists(s => s.isEmpty ||
-      s.get.isInstanceOf[Passthrough] ||
-      // top-k sketches don't ride the band slot machinery (yet) —
-      // decline to the scan
-      s.get.isInstanceOf[TopKCol])) return None
-    val flat = specs.flatten
-    // count(DISTINCT tp_date) under a band — "active days in range":
-    // day sets don't slot-merge across a metadata/scan split, so this
-    // serves only FULLY CONTAINED (every ranged file day-contained and
-    // provably inside/outside the bands; straddlers decline below)
-    val bandedDistinct: Option[Long] =
-      if (!flat.exists(_.isInstanceOf[DistinctDates])) None
-      else lake.distinctDayCountsBanded(session, table, bands,
-        fileFilter) match {
-        case None => return None
-        case Some(n) => Some(n)
-      }
-    val cols = flat.collect {
-      case CountCol(a) => a.name
-      case MinCol(a) => a.name
-      case MaxCol(a) => a.name
-      case SumCol(a) => a.name
-      case AvgCol(a) => a.name
-      case NdvCol(a) => a.name
-      case QuantileCol(a, _) => a.name
-    }.distinct
-    val ndvColsB = flat.collect { case NdvCol(a) => a.name }.toSet
-    val kllColsB = flat.collect { case QuantileCol(a, _) => a.name }.toSet
-    val rangeCols = flat.collect {
-      case MinCol(a) => a.name
-      case MaxCol(a) => a.name
-    }.toSet
-    val sumColsS = flat.collect {
-      case SumCol(a) => a.name
-      case AvgCol(a) => a.name
-    }.toSet
-    if (!lake.hasData(session, table)) return None
-    val schema = lake.schemaOf(session, table)
-    if (!cols.forall(schema.fieldNames.contains)) return None
-    val (parts, straddlers, containedCount) = lake.timeMultiBandParts(
-      session, table, bands, cols, schema, rangeCols, sumColsS,
-      fileFilter, ndvColsB, kllColsB)
-    if (containedCount <= 0) return None // hybrid buys nothing
-    if (!flat.collect { case SumCol(a) => a.name }.toSet[String].forall(c =>
-      parts.sums.get(c).forall(_.isValidLong)))
-      return None
-
-    if (straddlers.isEmpty) {
-      // nothing to scan: emit the final row directly
-      logInfo(s"time-band rewrite fired for '$table': fully contained, " +
-        s"no straddlers")
-      return Some(LocalRelation(
-        agg.aggregateExpressions.map(_.toAttribute),
-        Seq(InternalRow.fromSeq(flat.map {
-          case DistinctDates(_) => Long.box(bandedDistinct.get)
-          case s => metaFinalValue(parts, s)
-        }))))
-    }
-    // a straddler's rows would need the distinct-day slot merge the
-    // classifier can't express — decline to the scan (slot machinery
-    // below has no DistinctDates shape)
-    if (bandedDistinct.isDefined) return None
-
-    val slotGroups: Seq[Seq[AttributeReference]] =
-      flat.zipWithIndex.map { case (sp, i) =>
-        slotTypesOf(sp).zipWithIndex.map { case (dt, j) =>
-          AttributeReference(s"_band_${i}_$j", dt)()
-        }
-      }
-    val localAttrs: Seq[AttributeReference] = slotGroups.flatten
-    val localValues: Seq[Any] = flat.flatMap(metaSlotValues(parts, _))
-    val local = LocalRelation(localAttrs,
-      Seq(InternalRow.fromSeq(localValues)))
-
-    // straddler-restricted relation with the ORIGINAL output attrs —
-    // the filter/projections above keep their bindings untouched
-    val fsRel = lr.relation.asInstanceOf[HadoopFsRelation]
-    val straddlerIndex =
-      new org.apache.spark.sql.execution.datasources.InMemoryFileIndex(
-        session, straddlers.map(new org.apache.hadoop.fs.Path(_)),
-        Map("basePath" -> lake.tableDir(table)), None)
-    val straddlerRel = HadoopFsRelation(straddlerIndex,
-      fsRel.partitionSchema, fsRel.dataSchema, fsRel.bucketSpec,
-      fsRel.fileFormat, fsRel.options)(session)
-    val swappedChild = agg.child.transform {
-      case l: LogicalRelation if l eq lr => lr.copy(relation = straddlerRel)
-    }
-    // prune the scan to the aggregated columns (the optimizer's
-    // ColumnPruning already ran; without this Project the straddler
-    // scan would read every column)
-    val neededNames = flat.collect {
-      case CountCol(a) => a; case MinCol(a) => a
-      case MaxCol(a) => a; case SumCol(a) => a; case AvgCol(a) => a
-      case NdvCol(a) => a; case QuantileCol(a, _) => a
-    }.map(_.exprId).toSet
-    val needed = agg.child.output.filter(a => neededNames.contains(a.exprId))
-    val pruned =
-      if (needed.nonEmpty) Project(needed, swappedChild)
-      else swappedChild // pure count(*): the filter column is read anyway
-    val partialExprs: Seq[NamedExpression] =
-      flat.zip(slotGroups).flatMap { case (s, slots) =>
-        partialSlotExprs(s, slots).getOrElse(return None)
-      }
-    val partial = Aggregate(Nil, partialExprs, pruned)
-    val union = Union(Seq(local, partial))
-    // merge under the ORIGINAL output names/exprIds: counts and sums
-    // add, ranges re-extremize, avg divides merged sum by merged count
-    val unionOut = union.output
-    val offsets: Seq[Int] =
-      slotGroups.scanLeft(0)(_ + _.size).init
-    val mergeExprs: Seq[NamedExpression] =
-      agg.aggregateExpressions.zip(flat).zip(offsets).map {
-        case ((orig, s), off) =>
-          mergeExprFor(s, orig, unionOut, off).getOrElse(return None)
-      }
-    logInfo(s"time-band rewrite fired for '$table': $containedCount " +
-      s"contained files from metadata, ${straddlers.size} straddlers " +
-      "scanned in-plan")
-    Some(Aggregate(Nil, mergeExprs, union))
-  }
-
-  /** GROUPED band hybrid: `GROUP BY partition columns` + a
-    * tp_timestamp band. Per-group metadata partials over the contained
-    * files become LOCAL rows (group-key slots + value slots); the
-    * straddler scan keeps the SAME grouping over the restricted
-    * relation, and the final GROUP BY over the union merges metadata
-    * groups with scanned groups wherever they overlap — no group
-    * alignment logic at all, the grouped merge IS the alignment.
-    */
-  private def rewriteBandGrouped(
-      agg: Aggregate, lr: LogicalRelation,
-      lake: Lake, table: String,
-      cond: Expression): Option[LogicalPlan] = {
-    val (bands, nBand, partCond) = splitBands(cond).getOrElse(return None)
-    if (nBand == 0 || bands.isEmpty) return None
-    val fileFilter: String => Boolean = partCond match {
-      case None => _ => true
-      case Some(pc) =>
-        partitionFilePredicate(lake, table, pc).getOrElse(return None)
-    }
-    val groupAttrs = agg.groupingExpressions
-      .map(_.asInstanceOf[AttributeReference])
-    if (!groupAttrs.forall(a => a.dataType match {
-      case IntegerType | LongType | StringType => true
-      case _ => false
-    })) return None
-    def keyIndex(a: AttributeReference): Option[Int] = {
-      val i = groupAttrs.indexWhere(_.exprId == a.exprId)
-      if (i < 0) None else Some(i)
-    }
-    val specs: Seq[Option[Spec]] = agg.aggregateExpressions.map {
-      case a: AttributeReference => keyIndex(a).map(GroupKey)
-      case Alias(a: AttributeReference, _) => keyIndex(a).map(GroupKey)
-      case e => classify(e)
-    }
-    if (specs.exists(s => s.isEmpty || s.get.isInstanceOf[Passthrough] ||
-      s.get.isInstanceOf[DistinctDates] || // day sets don't slot-merge
-      s.get.isInstanceOf[TopKCol])) // no band slot machinery for top-k
-      return None
-    val flat = specs.flatten
-    val valueSpecs = flat.filterNot(_.isInstanceOf[GroupKey])
-    val cols = valueSpecs.collect {
-      case CountCol(a) => a.name
-      case MinCol(a) => a.name
-      case MaxCol(a) => a.name
-      case SumCol(a) => a.name
-      case AvgCol(a) => a.name
-      case NdvCol(a) => a.name
-      case QuantileCol(a, _) => a.name
-    }.distinct
-    val rangeCols = valueSpecs.collect {
-      case MinCol(a) => a.name
-      case MaxCol(a) => a.name
-    }.toSet
-    val sumColsS = valueSpecs.collect {
-      case SumCol(a) => a.name
-      case AvgCol(a) => a.name
-    }.toSet
-    val ndvColsG = valueSpecs.collect { case NdvCol(a) => a.name }.toSet
-    val kllColsG =
-      valueSpecs.collect { case QuantileCol(a, _) => a.name }.toSet
-    if (!lake.hasData(session, table)) return None
-    val schema = lake.schemaOf(session, table)
-    if (!cols.forall(schema.fieldNames.contains)) return None
-    val (groups, straddlers, containedCount) =
-      lake.timeBandPartsGroupedMulti(
-        session, table, bands, cols, schema, rangeCols, sumColsS,
-        f => {
-          val pv = lake.partitionValues(lake.relOf(table, f))
-          groupAttrs.map(a => pv.getOrElse(a.name, null))
-        }, fileFilter, ndvColsG, kllColsG)
-    if (containedCount <= 0) return None // hybrid buys nothing
-    val sumOnlyS = valueSpecs.collect { case SumCol(a) => a.name }.toSet
-    if (!groups.forall { case (_, p) =>
-      sumOnlyS.forall(c => p.sums.get(c).forall(_.isValidLong))
-    }) return None
-
-    if (straddlers.isEmpty) {
-      // fully contained: emit the final rows directly
-      val rows = groups.map { case (key, parts) =>
-        InternalRow.fromSeq(flat.map {
-          case GroupKey(i) =>
-            dirValueToInternal(key(i), groupAttrs(i).dataType)
-          case s => metaFinalValue(parts, s)
-        })
-      }
-      logInfo(s"grouped time-band rewrite fired for '$table': fully " +
-        s"contained, ${groups.size} groups from metadata")
-      return Some(LocalRelation(
-        agg.aggregateExpressions.map(_.toAttribute), rows))
-    }
-
-    // local side: key slots then value slots, canonical order (avg
-    // spans two value slots — exact decimal sum + count)
-    val nKeys = groupAttrs.size
-    val keySlots = groupAttrs.zipWithIndex.map { case (a, i) =>
-      AttributeReference(s"_bgk_$i", a.dataType)()
-    }
-    val valSlotGroups: Seq[Seq[AttributeReference]] =
-      valueSpecs.zipWithIndex.map { case (sp, i) =>
-        slotTypesOf(sp).zipWithIndex.map { case (dt, j) =>
-          AttributeReference(s"_bgv_${i}_$j", dt)()
-        }
-      }
-    val valSlots = valSlotGroups.flatten
-    val localRows = groups.map { case (key, parts) =>
-      InternalRow.fromSeq(
-        groupAttrs.indices.map(i =>
-          dirValueToInternal(key(i), groupAttrs(i).dataType)) ++
-          valueSpecs.flatMap(s => metaSlotValues(parts, s)))
-    }
-    val local = LocalRelation(keySlots ++ valSlots, localRows)
-
-    // straddler side: SAME grouping over the restricted relation
-    val fsRel = lr.relation.asInstanceOf[HadoopFsRelation]
-    val straddlerIndex =
-      new org.apache.spark.sql.execution.datasources.InMemoryFileIndex(
-        session, straddlers.map(new org.apache.hadoop.fs.Path(_)),
-        Map("basePath" -> lake.tableDir(table)), None)
-    val straddlerRel = HadoopFsRelation(straddlerIndex,
-      fsRel.partitionSchema, fsRel.dataSchema, fsRel.bucketSpec,
-      fsRel.fileFormat, fsRel.options)(session)
-    val swappedChild = agg.child.transform {
-      case l: LogicalRelation if l eq lr => lr.copy(relation = straddlerRel)
-    }
-    val neededIds = (valueSpecs.collect {
-      case CountCol(a) => a; case MinCol(a) => a
-      case MaxCol(a) => a; case SumCol(a) => a; case AvgCol(a) => a
-      case NdvCol(a) => a; case QuantileCol(a, _) => a
-    } ++ groupAttrs).map(_.exprId).toSet
-    val needed = agg.child.output.filter(a => neededIds.contains(a.exprId))
-    val pruned =
-      if (needed.nonEmpty) Project(needed, swappedChild) else swappedChild
-    val partialValueExprs: Seq[NamedExpression] =
-      valueSpecs.zip(valSlotGroups).flatMap { case (s, slots) =>
-        partialSlotExprs(s, slots).getOrElse(return None)
-      }
-    val partial = Aggregate(groupAttrs,
-      groupAttrs.map(a => a: NamedExpression) ++ partialValueExprs,
-      pruned)
-    val union = Union(Seq(local, partial))
-    val unionOut = union.output
-    // value-slot OFFSET per flat position (duplicate specs are fine:
-    // the mapping is positional, never by equality)
-    val valueOffsets: Seq[Int] =
-      valSlotGroups.scanLeft(0)(_ + _.size).init
-    val valueIdx: Map[Int, Int] = {
-      var v = -1
-      flat.zipWithIndex.flatMap {
-        case (s, i) if !s.isInstanceOf[GroupKey] =>
-          v += 1; Some(i -> valueOffsets(v))
-        case _ => None
-      }.toMap
-    }
-    val mergeExprs: Seq[NamedExpression] =
-      agg.aggregateExpressions.zip(flat).zipWithIndex.map {
-        case (((orig, GroupKey(k))), _) =>
-          Alias(unionOut(k), orig.name)(exprId = orig.exprId)
-        case ((orig, s), i) =>
-          mergeExprFor(s, orig, unionOut, nKeys + valueIdx(i))
-            .getOrElse(return None)
-      }
-    logInfo(s"grouped time-band rewrite fired for '$table': " +
-      s"${groups.size} metadata groups + ${straddlers.size} straddler " +
-      "files scanned in-plan")
-    Some(Aggregate(unionOut.take(nKeys), mergeExprs, union))
-  }
-
-  /** TIME-BUCKET grouped hybrid (r17 verdict task 1): `GROUP BY
-    * tp_date` or `GROUP BY date_trunc(grain, tp_timestamp)`, optionally
-    * with partition-column keys and a tp_timestamp/tp_date band WHERE —
-    * THE reporting query of the reference's domain (its from/to view
-    * filters exist to feed it, cmd/connect.go:262-311), previously a
-    * full scan while every piece it needs existed. Files that are
-    * band-contained AND bucket-contained (manifest ts range inside one
-    * bucket — after time-ordered compaction most files are
-    * day-contained, reference compact.go:264-416 orders by
-    * tp_timestamp precisely so files don't straddle) contribute
-    * per-bucket metadata partials as LOCAL rows keyed by their bucket;
-    * straddlers keep the ORIGINAL grouping expressions over the
-    * restricted relation; the final GROUP BY over the union merges
-    * them — the grouped merge IS the bucket alignment, exactly as in
-    * [[rewriteBandGrouped]]. At 100 TB a daily report over a year
-    * reads kilobytes of metadata plus the boundary files.
-    */
-  /** [[unwrap]] variant for the bucket-grouped shape: additionally
-    * accepts Projects whose non-attribute entries are ONLY aliases of
-    * bucket-grain expressions — the optimizer's
-    * PullOutGroupingExpressions materializes `date_trunc(...)` as a
-    * `_groupingexpression` column in exactly such a Project. Arbitrary
-    * computed aliases still disqualify (an alias shadowing a real
-    * column name would otherwise let the rule serve the WRONG column's
-    * file stats). Returns the alias bindings so grouping attrs resolve
-    * back to their bucket expressions.
-    */
-  private def unwrapBucket(p: LogicalPlan): Option[
-      (LogicalRelation, Option[Expression], Map[ExprId, Expression])] =
-    p match {
-      case s: SubqueryAlias => unwrapBucket(s.child)
-      case v: View => unwrapBucket(v.child)
-      case f: Filter => unwrapBucket(f.child).map { case (lr, c, m) =>
-        (lr, Some(c.map(And(f.condition, _)).getOrElse(f.condition)), m)
-      }
-      case pr: Project
-          if pr.projectList.forall {
-            case _: AttributeReference => true
-            // only bucket-grain aliases pass, and only when the alias
-            // NAME doesn't shadow a column of the child (r18
-            // ADVICE-medium: `tp_date AS value` would otherwise let
-            // downstream NAME-keyed stats lookups serve the wrong
-            // column's stats; the optimizer's own pulled-out
-            // `_groupingexpression…` names can never collide)
-            case al: Alias => bucketValue(al.child).isDefined &&
-              !pr.child.output.exists(_.name == al.name)
-            case _ => false
-          } =>
-        unwrapBucket(pr.child).map { case (lr, c, m) =>
-          (lr, c, m ++ pr.projectList.collect {
-            case al: Alias => al.exprId -> al.child
-          })
-        }
-      case lr: LogicalRelation => Some((lr, None, Map.empty))
-      case _ => None
-    }
-
-  private def rewriteBucketGrouped(agg: Aggregate): Option[LogicalPlan] = {
-    val (lr, cond, aliasMap) =
-      unwrapBucket(agg.child).getOrElse(return None)
-    val (lake, table) = (lr.relation match {
-      case fs: HadoopFsRelation => fs.location match {
-        case z: ZoneMapFileIndex => z.owner
-        case _ => None
-      }
-      case _ => None
-    }).getOrElse(return None)
-    // grouping layout: resolve attrs through the pulled-out aliases,
-    // then require EXACTLY ONE bucket key and partition attrs otherwise
-    val grouping = agg.groupingExpressions
-    val resolved: Seq[Expression] = grouping.map {
-      case a: AttributeReference => aliasMap.getOrElse(a.exprId, a)
-      case e => e
-    }
-    // bucket-functional keys (1..n, all deriving from ONE containment
-    // grain): `GROUP BY tp_date`, `GROUP BY date_trunc('month', ts)`,
-    // and the multi-key layout report `GROUP BY year(ts), month(ts)` —
-    // containment proves on the FINEST grain present (one whose
-    // buckets refine every other key's), each key's value derived from
-    // that bucket's start instant
-    val bucketVals: Map[Int, (BucketGrain, Long => Any)] =
-      resolved.indices.flatMap(i =>
-        bucketValue(resolved(i)).map(i -> _)).toMap
-    if (bucketVals.isEmpty) return None
-    val grains = bucketVals.values.map(_._1).toSeq
-    val grain = grains.find(a =>
-      grains.forall(b => MetadataAggregateRule.refines(a, b)))
-      .getOrElse(return None) // e.g. week × month: no common refinement
-    val partAttrs: Seq[AttributeReference] = grouping.zipWithIndex
-      .filter(p => !bucketVals.contains(p._2))
-      .map(_._1 match {
-        case a: AttributeReference => a
-        case _ => return None
-      })
-    if (!partAttrs.forall(a =>
-      graft.lake.TpSchema.partitionCols.contains(a.name))) return None
-    if (!partAttrs.forall(a => a.dataType match {
-      case IntegerType | LongType | StringType => true
-      case _ => false
-    })) return None
-    // WHERE: a tp band set (folded date conjuncts and OR-of-bands
-    // included) + partition residual; no WHERE at all = the full
-    // range — bucket containment alone still makes most files
-    // metadata-servable
-    val (bands, partCond) = cond match {
-      case None => (Seq((Long.MinValue, Long.MaxValue)), None)
-      case Some(c) => splitBands(c) match {
-        case Some((bs, n, rest)) =>
-          (if (n > 0) bs
-           else Seq((Long.MinValue, Long.MaxValue)), rest)
-        case None => return None
-      }
-    }
-    if (bands.isEmpty) return None
-    val fileFilter: String => Boolean = partCond match {
-      case None => _ => true
-      case Some(pc) =>
-        partitionFilePredicate(lake, table, pc).getOrElse(return None)
-    }
-    // grouping position -> position among partAttrs
-    val partIdxOf: Map[Int, Int] = grouping.indices
-      .filter(!bucketVals.contains(_)).zipWithIndex.toMap
-
-    def keyIndex(e: Expression): Option[Int] = {
-      val i = grouping.indexWhere(_.semanticEquals(e))
-      if (i < 0) None else Some(i)
-    }
-    // an output DERIVED from group keys only — `cast(day_bucket AS
-    // date)`, `year(tp_date)` — is served by substituting the key into
-    // the expression (Literal on the metadata side, the union's key
-    // column on the straddler side). Deterministic, aggregate-free,
-    // evaluable, references ⊆ grouping attrs.
-    def derivedKey(al: Alias): Option[Spec] = {
-      val e = al.child
-      if (!e.deterministic) return None
-      // attrs are Unevaluable but get substituted (Literal / union
-      // column) before any eval — only OTHER unevaluable nodes
-      // (subqueries, grouping__id, ...) disqualify
-      if (e.find(x => x.isInstanceOf[AggregateExpression] ||
-        x.isInstanceOf[PlanExpression[_]] ||
-        (x.isInstanceOf[Unevaluable] &&
-          !x.isInstanceOf[AttributeReference])).isDefined) return None
-      if (e.references.isEmpty) return None
-      if (!e.references.toSeq.forall {
-        case a: AttributeReference => keyIndex(a).isDefined
-        case _ => false
-      }) return None
-      Some(GroupDerived(e))
-    }
-    val specs: Seq[Option[Spec]] = agg.aggregateExpressions.map {
-      case a: AttributeReference => keyIndex(a).map(GroupKey)
-      case al @ Alias(child, _) =>
-        keyIndex(child).map(GroupKey)
-          .orElse(classify(al)).orElse(derivedKey(al))
-      case e => classify(e)
-    }
-    if (specs.exists(s => s.isEmpty || s.get.isInstanceOf[Passthrough] ||
-      s.get.isInstanceOf[DistinctDates] || // day sets don't slot-merge
-      s.get.isInstanceOf[TopKCol])) // no band slot machinery for top-k
-      return None
-    val flat = specs.flatten
-    def isKeyish(s: Spec): Boolean =
-      s.isInstanceOf[GroupKey] || s.isInstanceOf[GroupDerived]
-    val valueSpecs = flat.filterNot(isKeyish)
-    val cols = valueSpecs.collect {
-      case CountCol(a) => a.name
-      case MinCol(a) => a.name
-      case MaxCol(a) => a.name
-      case SumCol(a) => a.name
-      case AvgCol(a) => a.name
-      case NdvCol(a) => a.name
-      case QuantileCol(a, _) => a.name
-    }.distinct
-    val rangeCols = valueSpecs.collect {
-      case MinCol(a) => a.name
-      case MaxCol(a) => a.name
-    }.toSet
-    val sumColsS = valueSpecs.collect {
-      case SumCol(a) => a.name
-      case AvgCol(a) => a.name
-    }.toSet
-    val ndvColsG = valueSpecs.collect { case NdvCol(a) => a.name }.toSet
-    val kllColsG =
-      valueSpecs.collect { case QuantileCol(a, _) => a.name }.toSet
-    if (!lake.hasData(session, table)) return None
-    val schema = lake.schemaOf(session, table)
-    if (!cols.forall(schema.fieldNames.contains)) return None
-    val (groups, straddlers, containedCount) = lake.timeBucketPartsGrouped(
-      session, table, bands, grain.idOf, cols, schema, rangeCols, sumColsS,
-      f => {
-        val pv = lake.partitionValues(lake.relOf(table, f))
-        partAttrs.map(a => pv.getOrElse(a.name, null))
-      }, fileFilter, ndvColsG, kllColsG)
-    if (containedCount <= 0) return None // hybrid buys nothing
-    val sumOnlyS = valueSpecs.collect { case SumCol(a) => a.name }.toSet
-    if (!groups.forall { case (_, p) =>
-      sumOnlyS.forall(c => p.sums.get(c).forall(_.isValidLong))
-    }) return None
-
-    def keyInternal(i: Int, bucket: Long, partVals: Seq[String]): Any =
-      bucketVals.get(i) match {
-        // each bucket key's value from the containment bucket's START
-        // instant — constant across the bucket by the refinement gate
-        case Some((_, valueOf)) => valueOf(grain.startUs(bucket))
-        case None =>
-          dirValueToInternal(partVals(partIdxOf(i)), grouping(i).dataType)
-      }
-    // driver-side eval of a key-derived output for one metadata group:
-    // keys become Literals, then one eval (resolved + deterministic +
-    // non-Unevaluable by derivedKey's gates; a throwing expr falls
-    // open through safely())
-    def evalDerived(e: Expression, bucket: Long,
-        partVals: Seq[String]): Any =
-      e.transform {
-        case a: AttributeReference if keyIndex(a).isDefined =>
-          val i = keyIndex(a).get
-          Literal(keyInternal(i, bucket, partVals), grouping(i).dataType)
-      }.eval(null)
-
-    // bucket id → key can be NON-injective for extract keys (two hour
-    // buckets on different days share one hour-of-day), in which case
-    // even a fully-contained answer still needs the merge aggregate —
-    // the direct emit below is only sound when every realized group
-    // maps to a distinct key tuple
-    lazy val injectiveKeys = {
-      val tuples = groups.map { case ((bucket, partVals), _) =>
-        grouping.indices.map(keyInternal(_, bucket, partVals))
-      }
-      tuples.distinct.size == tuples.size
-    }
-    if (straddlers.isEmpty && injectiveKeys) {
-      // fully contained: emit the final rows directly
-      val rows = groups.map { case ((bucket, partVals), parts) =>
-        InternalRow.fromSeq(flat.map {
-          case GroupKey(i) => keyInternal(i, bucket, partVals)
-          case GroupDerived(e) => evalDerived(e, bucket, partVals)
-          case s => metaFinalValue(parts, s)
-        })
-      }
-      logInfo(s"bucket-grouped time rewrite fired for '$table': fully " +
-        s"contained, ${groups.size} bucket groups from metadata")
-      return Some(LocalRelation(
-        agg.aggregateExpressions.map(_.toAttribute), rows))
-    }
-
-    // local side: key slots in grouping order, then value slots
-    val nKeys = grouping.size
-    val keySlots = grouping.zipWithIndex.map { case (g, i) =>
-      AttributeReference(s"_tbk_$i", g.dataType)()
-    }
-    val valSlotGroups: Seq[Seq[AttributeReference]] =
-      valueSpecs.zipWithIndex.map { case (sp, i) =>
-        slotTypesOf(sp).zipWithIndex.map { case (dt, j) =>
-          AttributeReference(s"_tbv_${i}_$j", dt)()
-        }
-      }
-    val valSlots = valSlotGroups.flatten
-    val localRows = groups.map { case ((bucket, partVals), parts) =>
-      InternalRow.fromSeq(
-        grouping.indices.map(keyInternal(_, bucket, partVals)) ++
-          valueSpecs.flatMap(s => metaSlotValues(parts, s)))
-    }
-    val local = LocalRelation(keySlots ++ valSlots, localRows)
-
-    // straddler side: the ORIGINAL grouping expressions (date_trunc
-    // evaluates row-level in-plan — straddler rows land in their true
-    // buckets, including the null bucket for null-ts rows) over the
-    // restricted relation, original Filter intact
-    val fsRel = lr.relation.asInstanceOf[HadoopFsRelation]
-    val straddlerIndex =
-      new org.apache.spark.sql.execution.datasources.InMemoryFileIndex(
-        session, straddlers.map(new org.apache.hadoop.fs.Path(_)),
-        Map("basePath" -> lake.tableDir(table)), None)
-    val straddlerRel = HadoopFsRelation(straddlerIndex,
-      fsRel.partitionSchema, fsRel.dataSchema, fsRel.bucketSpec,
-      fsRel.fileFormat, fsRel.options)(session)
-    val swappedChild = agg.child.transform {
-      case l: LogicalRelation if l eq lr => lr.copy(relation = straddlerRel)
-    }
-    val neededIds = (valueSpecs.collect {
-      case CountCol(a) => a; case MinCol(a) => a
-      case MaxCol(a) => a; case SumCol(a) => a; case AvgCol(a) => a
-      case NdvCol(a) => a; case QuantileCol(a, _) => a
-    }.map(_.exprId) ++
-      grouping.flatMap(_.references.map(_.exprId))).toSet
-    val needed = agg.child.output.filter(a => neededIds.contains(a.exprId))
-    val pruned =
-      if (needed.nonEmpty) Project(needed, swappedChild) else swappedChild
-    val partialKeys: Seq[NamedExpression] = grouping.zipWithIndex.map {
-      case (a: AttributeReference, _) => a
-      case (g, i) => Alias(g, s"_tbk_$i")()
-    }
-    val partialValueExprs: Seq[NamedExpression] =
-      valueSpecs.zip(valSlotGroups).flatMap { case (s, slots) =>
-        partialSlotExprs(s, slots).getOrElse(return None)
-      }
-    val partial = Aggregate(grouping,
-      partialKeys ++ partialValueExprs, pruned)
-    val union = Union(Seq(local, partial))
-    val unionOut = union.output
-    val valueOffsets: Seq[Int] =
-      valSlotGroups.scanLeft(0)(_ + _.size).init
-    val valueIdx: Map[Int, Int] = {
-      var v = -1
-      flat.zipWithIndex.flatMap {
-        case (s, i) if !isKeyish(s) =>
-          v += 1; Some(i -> valueOffsets(v))
-        case _ => None
-      }.toMap
-    }
-    val mergeExprs: Seq[NamedExpression] =
-      agg.aggregateExpressions.zip(flat).zipWithIndex.map {
-        case (((orig, GroupKey(k))), _) =>
-          Alias(unionOut(k), orig.name)(exprId = orig.exprId)
-        case (((orig, GroupDerived(e))), _) =>
-          // key-derived output: substitute the union's key columns
-          // into the expression (functionally determined by the keys)
-          Alias(e.transform {
-            case a: AttributeReference if keyIndex(a).isDefined =>
-              unionOut(keyIndex(a).get)
-          }, orig.name)(exprId = orig.exprId)
-        case ((orig, s), i) =>
-          mergeExprFor(s, orig, unionOut, nKeys + valueIdx(i))
-            .getOrElse(return None)
-      }
-    logInfo(s"bucket-grouped time rewrite fired for '$table': " +
-      s"${groups.size} bucket groups from metadata + " +
-      s"${straddlers.size} straddler files scanned in-plan")
-    Some(Aggregate(unionOut.take(nKeys), mergeExprs, union))
-  }
-
-  /** Partition-grouped rewrite: `GROUP BY tp_partition/tp_index/
-    * tp_year/tp_month` with the same aggregate family — one output row
-    * per partition group present in the manifest, group-key values
-    * taken from the files' directories (partitionBy strips the columns
-    * from the files, so directory truth IS column truth).
-    */
-  private def rewriteGrouped(agg: Aggregate): Option[LogicalPlan] = {
-    val (lr, cond) = unwrap(agg.child).getOrElse(return None)
-    val (lake, table) = (lr.relation match {
-      case fs: HadoopFsRelation => fs.location match {
-        case z: ZoneMapFileIndex => z.owner
-        case _ => None
-      }
-      case _ => None
-    }).getOrElse(return None)
-    val fileFilter: String => Boolean = cond match {
-      case None => _ => true
-      case Some(c) =>
-        partitionFilePredicate(lake, table, c) match {
-          case Some(p) => p
-          // not partition-only: try the GROUPED band hybrid
-          case None => return rewriteBandGrouped(agg, lr, lake, table, c)
-        }
-    }
-    val groupAttrs = agg.groupingExpressions
-      .map(_.asInstanceOf[AttributeReference])
-    // group-key types the directory string can be converted to exactly
-    if (!groupAttrs.forall(a => a.dataType match {
-      case IntegerType | LongType | StringType => true
-      case _ => false
-    })) return None
-    def keyIndex(a: AttributeReference): Option[Int] = {
-      val i = groupAttrs.indexWhere(_.exprId == a.exprId)
-      if (i < 0) None else Some(i)
-    }
-    val specs: Seq[Option[Spec]] = agg.aggregateExpressions.map {
-      case a: AttributeReference => keyIndex(a).map(GroupKey)
-      case Alias(a: AttributeReference, _) => keyIndex(a).map(GroupKey)
-      case e => classify(e)
-    }
-    if (specs.exists(_.isEmpty)) return None
-    val flat = specs.flatten
-    val cols = flat.collect {
-      case CountCol(a) => a.name
-      case MinCol(a) => a.name
-      case MaxCol(a) => a.name
-      case SumCol(a) => a.name
-      case AvgCol(a) => a.name
-      case NdvCol(a) => a.name
-      case QuantileCol(a, _) => a.name
-      case TopKCol(a, _) => a.name
-    }.distinct
-    val rangeCols = flat.collect {
-      case MinCol(a) => a.name
-      case MaxCol(a) => a.name
-    }.toSet
-    val sumCols = flat.collect {
-      case SumCol(a) => a.name
-      case AvgCol(a) => a.name
-    }.toSet
-    val ndvCols = flat.collect { case NdvCol(a) => a.name }.toSet
-    val kllCols = flat.collect { case QuantileCol(a, _) => a.name }.toSet
-    val mgCols = flat.collect { case TopKCol(a, _) => a.name }.toSet
-    val groups = lake.statsAggregateGroupedIfCovered(session, table,
-      groupAttrs.map(_.name), cols, rangeCols, sumCols, ndvCols,
-      fileFilter, kllCols, mgCols, countColumnsOf(flat))
-      .getOrElse(return None)
-    // any group's sum past Long.MaxValue (or avg sum past 2^53):
-    // decline the whole rewrite
-    val sumOnly = flat.collect { case SumCol(a) => a.name }.toSet
-    val avgCols = flat.collect { case AvgCol(a) => a.name }.toSet
-    if (!groups.forall { case (_, parts) =>
-      sumOnly.forall(c => parts.sums.get(c).forall(_.isValidLong)) &&
-        avgCols.forall(c =>
-          parts.sums.get(c).forall(_.abs <= MaxExactAvgSum)) &&
-        // per-group top-k: every group's merged sketch must be exact
-        mgCols.forall(c => parts.mgBlobs.get(c).exists(b =>
-          graft.functions.TopKFns.isExact(
-            graft.functions.TopKFns.fromBlob(b))))
-    }) return None
-    // count(DISTINCT tp_date) per group: the manifest's day set keyed
-    // by the SAME partition-value projection, provable only when every
-    // (filtered) file is day-contained
-    val dayCounts: Option[Map[Seq[String], Long]] =
-      if (!flat.exists(_.isInstanceOf[DistinctDates])) None
-      else lake.distinctDayCounts(session, table,
-        f => {
-          val pv = lake.partitionValues(lake.relOf(table, f))
-          groupAttrs.map(a => pv.getOrElse(a.name, null))
-        }, fileFilter) match {
-          case None => return None
-          case Some(m) => Some(m)
-        }
-    val rows = groups.map { case (key, parts) =>
-      InternalRow.fromSeq(flat.map {
-        case GroupKey(i) =>
-          dirValueToInternal(key(i), groupAttrs(i).dataType)
-        case DistinctDates(_) =>
-          Long.box(dayCounts.get.getOrElse(key, 0L))
-        case CountStar => parts.nRows
-        case CountCol(a) => parts.counts.getOrElse(a.name, 0L)
-        case MinCol(a) =>
-          CatalystTypeConverters.convertToCatalyst(
-            parts.mins.get(a.name).orNull)
-        case MaxCol(a) =>
-          CatalystTypeConverters.convertToCatalyst(
-            parts.maxs.get(a.name).orNull)
-        case SumCol(a) =>
-          parts.sums.get(a.name).map(s => Long.box(s.toLong)).orNull
-        case AvgCol(a) =>
-          val n = parts.counts.getOrElse(a.name, 0L)
-          if (n == 0L) null
-          else parts.sums.get(a.name)
-            .map(s => Double.box(s.toDouble / n)).orNull
-        case NdvCol(a) => Long.box(parts.ndvs.getOrElse(a.name, 0L))
-        case QuantileCol(a, prob) =>
-          parts.kllBlobs.get(a.name)
-            .flatMap(b =>
-              graft.functions.QuantileFns.blobQuantile(b, prob))
-            .map(Double.box).orNull
-        case TopKCol(a, k) => graft.functions.TopKFns.topKInternal(
-          graft.functions.TopKFns.fromBlob(parts.mgBlobs(a.name)), k)
-        case Passthrough(v) => v
-      })
-    }
-    logInfo(s"metadata-aggregate GROUPED rewrite fired for lake table " +
-      s"'$table': ${groups.size} groups from the manifest+sidecar")
-    Some(LocalRelation(agg.aggregateExpressions.map(_.toAttribute), rows))
+    Alias(merged, orig.name)(exprId = orig.exprId)
   }
 }
 
@@ -2005,16 +1251,19 @@ object MetadataAggregateRule {
     }
   }
 
+  /** One output of the aggregate, as the rewrite answers it. */
   private sealed trait Spec
+  /** An aggregate over one lake column. */
+  private sealed trait ColSpec extends Spec { def a: AttributeReference }
   private case object CountStar extends Spec
-  private final case class CountCol(a: AttributeReference) extends Spec
-  private final case class MinCol(a: AttributeReference) extends Spec
-  private final case class MaxCol(a: AttributeReference) extends Spec
-  private final case class SumCol(a: AttributeReference) extends Spec
-  private final case class AvgCol(a: AttributeReference) extends Spec
-  private final case class NdvCol(a: AttributeReference) extends Spec
+  private final case class CountCol(a: AttributeReference) extends ColSpec
+  private final case class MinCol(a: AttributeReference) extends ColSpec
+  private final case class MaxCol(a: AttributeReference) extends ColSpec
+  private final case class SumCol(a: AttributeReference) extends ColSpec
+  private final case class AvgCol(a: AttributeReference) extends ColSpec
+  private final case class NdvCol(a: AttributeReference) extends ColSpec
   private final case class QuantileCol(
-      a: AttributeReference, p: Double) extends Spec
+      a: AttributeReference, p: Double) extends ColSpec
 
   /** Exactness bound for serving `avg`: with |exact sum| <= 2^53 the
     * BigInt→double conversion is lossless and any per-row double
@@ -2022,13 +1271,15 @@ object MetadataAggregateRule {
     * quotient bit-matches a scan's. Past it the rule declines.
     */
   private val MaxExactAvgSum: BigInt = BigInt(1) << 53
+  /** A literal output. */
   private final case class Passthrough(value: Any) extends Spec
+  /** The grouping key at position `i`, passed through. */
   private final case class GroupKey(i: Int) extends Spec
   /** `count(DISTINCT tp_date)` answered from the manifest's per-file
     * day set when every file is day-contained (r18 verdict task 6).
     */
   private final case class DistinctDates(a: AttributeReference)
-      extends Spec
+      extends ColSpec
   /** An output functionally derived from group keys only (cast of the
     * bucket, `year(tp_date)`, ...): served by key substitution.
     */
@@ -2038,7 +1289,46 @@ object MetadataAggregateRule {
     * stays provably EXACT (no eviction anywhere — TopKFns.isExact).
     */
   private final case class TopKCol(a: AttributeReference, k: Int)
-      extends Spec
+      extends ColSpec
+
+  /** The metadata an answer reads, derived once from its specs. A
+    * column only min/max'd needs no count, which lets the manifest
+    * alone answer a `tp_timestamp` range.
+    */
+  private def needsOf(specs: Seq[Spec]): Lake.Needs = Lake.Needs(
+    ranges = specs.collect { case MinCol(a) => a.name
+                             case MaxCol(a) => a.name }.toSet,
+    counts = specs.collect { case CountCol(a) => a.name
+                             case AvgCol(a) => a.name }.toSet,
+    sums = specs.collect { case SumCol(a) => a.name
+                           case AvgCol(a) => a.name }.toSet,
+    ndv = specs.collect { case NdvCol(a) => a.name }.toSet,
+    kll = specs.collect { case QuantileCol(a, _) => a.name }.toSet,
+    mg = specs.collect { case TopKCol(a, _) => a.name }.toSet)
+
+  /** A grouping key: a physical partition column (directory truth), or
+    * a time-bucket expression valued from its bucket's start instant.
+    */
+  private sealed trait Key
+  private final case class PartKey(a: AttributeReference) extends Key
+  private final case class BucketKey(
+      grain: BucketGrain, valueOf: Long => Any) extends Key
+
+  /** A candidate aggregate: the lake table under it, its keys (with
+    * the containment grain when any key is a bucket), one spec per
+    * output, the time predicate's disjoint micros bands (None = no
+    * time predicate) and the partition-only file filter.
+    */
+  private final case class Shape(
+      lr: LogicalRelation, lake: Lake, table: String,
+      keys: Seq[Key], grain: Option[BucketGrain], specs: Seq[Spec],
+      bands: Option[Seq[(Long, Long)]],
+      fileFilter: String => Boolean) {
+    /** Straddler scans are allowed only under a time band or a bucket
+      * key; elsewhere the zone-map scan already is the plain plan.
+      */
+    def hybridOk: Boolean = bands.isDefined || grain.isDefined
+  }
 
   /** Idempotent per-session install into
     * `spark.experimental.extraOptimizations` — the embedded/library

@@ -1598,7 +1598,7 @@ class MetadataAggregateRuleSpec extends AnyFunSuite with SparkTest {
     val (lake, _) = dayLake()
     // `tp_date AS v` shadows the data column `v`; min(v) then refers to
     // the ALIASED dates. If the rule resolved by NAME it would serve
-    // the physical v column's stats (doubles) — the unwrapBucket guard
+    // the physical v column's stats (doubles) — the rule's unwrap guard
     // rejects shadowing aliases instead (r18 ADVICE-medium). Pinned by
     // value equality against the stock scan, whichever path runs.
     val shadowed = spark.table("bq")
@@ -1995,7 +1995,8 @@ class MetadataAggregateRuleSpec extends AnyFunSuite with SparkTest {
           "WHERE tp_year = (SELECT max(tp_year) FROM dtab_plain)"),
       ("avg past 2^53, whole", "declined",
         "SELECT avg(big) AS a FROM dtab"),
-      ("avg past 2^53, contained band", "served",
+      // every path gates avg on its exact sum staying within 2^53
+      ("avg past 2^53, contained band", "declined",
         "SELECT avg(big) AS a FROM dtab WHERE tp_timestamp BETWEEN " +
           "timestamp'2024-03-05 00:00:00' AND timestamp'2024-03-05 23:59:59'"))
     val nonUtcRows: Seq[(String, String, String)] = Seq(

@@ -355,15 +355,14 @@ class StatsAggregateSpec extends AnyFunSuite with SparkTest {
     // infers as INT here, its dir value is all-numeric, so it stays a
     // legitimate sum target below)
     val c = "tp_partition"
-    assert(lake.statsAggregateIfCovered(spark, t, Seq(c),
-      rangeColumns = Set.empty, sumColumns = Set(c)).isEmpty,
+    def covered(needs: Lake.Needs): Option[Lake.StatsAggParts] =
+      lake.metaParts(spark, t, needs).filter(_.toScan.isEmpty).map(_.whole)
+    assert(covered(Lake.Needs(sums = Set(c))).isEmpty,
       s"string partition column '$c' must decline as a sum target")
     // the same column WITHOUT the sum request still serves
-    assert(lake.statsAggregateIfCovered(spark, t, Seq(c),
-      rangeColumns = Set(c), sumColumns = Set.empty).isDefined)
+    assert(covered(Lake.Needs(ranges = Set(c))).isDefined)
     // integral partition columns keep their directory-truth sums
     for (ic <- Seq("tp_year", "tp_index"))
-      assert(lake.statsAggregateIfCovered(spark, t, Seq(ic),
-        rangeColumns = Set.empty, sumColumns = Set(ic)).isDefined, ic)
+      assert(covered(Lake.Needs(sums = Set(ic))).isDefined, ic)
   }
 }

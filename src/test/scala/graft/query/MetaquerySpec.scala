@@ -119,6 +119,23 @@ class MetaquerySpec extends AnyFunSuite with SparkTest {
         "tp_timestamp >= timestamp'2024-03-01 12:00:00'")
     assert(bandMiss.contains("WARNING") &&
       bandMiss.contains("tp_timestamp"), bandMiss)
+    // OR-of-bands and IN-lists are band shapes too: their misses lint
+    val orMiss = Metaquery.handle(spark, lake, st,
+      ".explain select count(*) as n from metrics where " +
+        "tp_timestamp < timestamp'2024-03-01 06:00:00' or " +
+        "tp_timestamp > timestamp'2024-03-01 18:00:00'")
+    assert(orMiss.contains("WARNING") &&
+      orMiss.contains("tp_timestamp"), orMiss)
+    val inMiss = Metaquery.handle(spark, lake, st,
+      ".explain select count(*) as n from metrics where " +
+        "tp_date in (DATE'2024-03-01', DATE'2024-03-02')")
+    assert(inMiss.contains("WARNING") &&
+      inMiss.contains("tp_timestamp"), inMiss)
+    // a banded top-k is never served, stats or not: no promise made
+    val topkBand = Metaquery.handle(spark, lake, st,
+      ".explain select graft_topk(tp_partition, 2) as t from metrics " +
+        "where tp_timestamp >= timestamp'2024-03-01 12:00:00'")
+    assert(!topkBand.contains("could be answered"), topkBand)
     // a GROUP BY tp_date / date_trunc bucket that missed the hybrid
     // (no tp_timestamp stats → no containment proof) names that
     // column in the hint — the reporting-query enablement story
