@@ -237,9 +237,11 @@ object Maintenance {
         lit(grainUs.toDouble)).cast("long")
     // NOTE: a file can never MIX null and non-null ts rows here — the
     // enrich path derives tp_year/tp_month from tp_timestamp, so null
-    // rows route to the null-partition dirs at write time; ranged
-    // files are therefore null-free and the bucket rule's tsNulls==0
-    // proof holds for every aligned output automatically.
+    // rows route to the null-partition dirs at write time. Ranged
+    // files are therefore null-free, and the rewrite's manifest
+    // append records that as a fact (`ts_nulls = 0` from the output
+    // footers), which is the null-free proof the metadata rule's
+    // band and bucket containment reads.
     val perFile = st.withColumn("dir", dirCol)
       .withColumn("b1", bucketOf("min_ts"))
       .withColumn("b2", bucketOf("max_ts"))
@@ -584,9 +586,8 @@ object Maintenance {
       // append (r14 advice) — get stats computed by scanning exactly
       // those files. vacuum is the valve that re-syncs a drifted
       // manifest to listing truth, in full.
-      val known = lake.fileStats(spark, table, reconcileWithListing = true)
-      val knownFiles = known.select("file").collect()
-        .map(_.getString(0)).toSet // metadata-sized: one path per file
+      val known = lake.liveManifest(spark, table, reconcileWithListing = true)
+      val knownFiles = known.map(_.file).toSet // one path per file
       // files whose NEWEST manifest row is a tombstone but that still
       // physically exist (a crash between tombstone and delete) are
       // NOT "unrecorded" — recovering them would resurrect deleted
@@ -597,16 +598,12 @@ object Maintenance {
       val unrecorded = lake.dataFiles(spark, table)
         .filterNot(knownFiles).filterNot(tombstoned)
       val recovered = lake.statsFor(spark, table, unrecorded)
-      // r19: the rewritten manifest is driver-local rows (known is a
-      // LocalRelation since the ManifestIO change; recovered is a Seq)
-      // — write it directly instead of a coalesce(1) Spark job
+      // r19: the rewritten manifest is driver-local rows — write it
+      // directly instead of a coalesce(1) Spark job; every recorded
+      // field (ts_nulls too) carries over
       val seqNo = lake.nextSeq(spark, table)
-      val liveRows =
-        known.collect().toSeq.map(r => ManifestIO.MRow(
-          r.getString(0), r.getLong(1),
-          Option(r.getTimestamp(2)), Option(r.getTimestamp(3)), seqNo)) ++
-        recovered.map { case (f, n, lo, hi) =>
-          ManifestIO.MRow(f, n, Option(lo), Option(hi), seqNo) }
+      val liveRows = known.map(_.copy(seq = seqNo)) ++
+        recovered.map(_.row(seqNo))
       val manifestDir = s"${lake.tableDir(table)}/_graft_manifest"
       val tmp = s"${lake.tableDir(table)}/_graft_manifest_new"
       val old = s"${lake.tableDir(table)}/_graft_manifest_old"
@@ -653,25 +650,21 @@ object Maintenance {
       val fs = p.getFileSystem(conf)
       if (!fs.exists(p)) return 0L
       val home = new Path(lake.tableDir(table)).toUri.getPath
-      val rows = spark.read.parquet(manifestDir).collect().toSeq
-      val schema = spark.read.parquet(manifestDir).schema
-      val fileIdx = schema.fieldIndex("file")
+      // driver-side rows in, driver-side rows out: every recorded
+      // field (ts_nulls too) passes through unchanged
       var moved = 0L
-      val fixed = rows.map { r =>
-        val f = r.getString(fileIdx)
-        if (f.startsWith(home + "/")) r
+      val fixed = ManifestIO.readManifest(conf, manifestDir).map { r =>
+        if (r.file.startsWith(home + "/")) r
         else {
           moved += 1
-          Row.fromSeq(r.toSeq.updated(fileIdx,
-            s"$home/${lake.relOf(table, f)}"))
+          r.copy(file = s"$home/${lake.relOf(table, r.file)}")
         }
       }
       if (moved == 0) return 0L
       val tmp = new Path(s"${lake.tableDir(table)}/_graft_manifest_new")
       val old = new Path(s"${lake.tableDir(table)}/_graft_manifest_old")
-      spark.createDataFrame(
-          spark.sparkContext.parallelize(fixed, 1), schema)
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      fs.delete(tmp, true)
+      ManifestIO.writeManifest(conf, tmp.toString, fixed)
       fs.delete(old, true)
       if (fs.exists(p)) fs.rename(p, old)
       fs.rename(tmp, p)

@@ -28,7 +28,7 @@ import org.apache.spark.sql.catalyst.util.DateTimeUtils
   * distributed jobs whose inputs and outputs are kilobytes. This object
   * replaces them with direct parquet reads/writes on the driver:
   *
-  *  - [[footerStats]]: per-file (rows, min_ts, max_ts) from parquet
+  *  - [[footerStats]]: per-file (rows, min_ts, max_ts, ts_nulls) from parquet
   *    FOOTERS — the stats the writer already computed — instead of
   *    re-scanning the data. At 100 TB an append's stats cost drops from
   *    a full read of the new files' timestamp column to one ~KB footer
@@ -55,9 +55,22 @@ import org.apache.spark.sql.catalyst.util.DateTimeUtils
   */
 private[lake] object ManifestIO {
 
+  /** One manifest row. `tsNulls` is the file's null `tp_timestamp`
+    * count — the recorded proof that a ranged file holds no null-ts
+    * row — and None in parts written before the column existed.
+    */
   final case class MRow(
       file: String, rows: Long,
-      minTs: Option[Timestamp], maxTs: Option[Timestamp], seq: Long)
+      minTs: Option[Timestamp], maxTs: Option[Timestamp], seq: Long,
+      tsNulls: Option[Long] = None)
+
+  /** The stats a manifest row records for one data file. */
+  final case class FileStat(
+      file: String, rows: Long,
+      minTs: Option[Timestamp], maxTs: Option[Timestamp],
+      tsNulls: Option[Long]) {
+    def row(seq: Long): MRow = MRow(file, rows, minTs, maxTs, seq, tsNulls)
+  }
 
   private val ManifestSchema: MessageType = MessageTypeParser.parseMessageType(
     """message spark_schema {
@@ -66,6 +79,7 @@ private[lake] object ManifestIO {
       |  optional int64 min_ts (TIMESTAMP(MICROS,true));
       |  optional int64 max_ts (TIMESTAMP(MICROS,true));
       |  required int64 seq;
+      |  optional int64 ts_nulls;
       |}""".stripMargin)
 
   /** Write one manifest parquet file with `rows` into `dir` (created if
@@ -92,6 +106,7 @@ private[lake] object ManifestIO {
       r.minTs.foreach(t => g.append("min_ts", DateTimeUtils.fromJavaTimestamp(t)))
       r.maxTs.foreach(t => g.append("max_ts", DateTimeUtils.fromJavaTimestamp(t)))
       g.append("seq", r.seq)
+      r.tsNulls.foreach(n => g.append("ts_nulls", n))
       writer.write(g)
     } finally writer.close()
     val fs = dst.getFileSystem(conf)
@@ -123,7 +138,8 @@ private[lake] object ManifestIO {
 
   /** All manifest rows under `dir` (no reconciliation — callers fold).
     * Handles both timestamp vintages: INT96 (Spark's historical
-    * default) and INT64 TIMESTAMP(MICROS) (direct-written).
+    * default) and INT64 TIMESTAMP(MICROS) (direct-written); parts
+    * without `ts_nulls` read it as None.
     */
   def readManifest(conf: Configuration, dir: String): Seq[MRow] =
     manifestParts(conf, dir).flatMap(readManifestFile(conf, _))
@@ -219,7 +235,11 @@ private[lake] object ManifestIO {
           g.getLong("rows", 0),
           tsField(g, "min_ts", file),
           tsField(g, "max_ts", file),
-          g.getLong("seq", 0))
+          g.getLong("seq", 0),
+          if (g.getType.containsField("ts_nulls") &&
+            g.getFieldRepetitionCount("ts_nulls") > 0)
+            Some(g.getLong("ts_nulls", 0))
+          else None)
         g = reader.read()
       }
     } finally reader.close()
@@ -330,14 +350,6 @@ private[lake] object ManifestIO {
       } finally r.close()
     } catch { case _: Exception => None }
 
-  /** Per-file (rows, min/max of `tsCol`) from parquet footers — the
-    * exact values the old scan computed (row count includes null-ts
-    * rows; min/max over non-null values; all-null file → (None, None)).
-    * Returns None when ANY file's footer cannot prove the answer
-    * (missing column, non-INT64-micros physical type, absent or
-    * untrustworthy stats) — the caller then scans, as before. Files
-    * with zero rows are skipped, matching the scan's groupBy semantics.
-    */
   /** Run `body` over `items` on a bounded thread pool (footer reads
     * are ~ms of CPU + one small I/O each, but a local ChecksumFS open
     * costs ~10 ms of latency — 84 serial opens after a compaction
@@ -373,11 +385,21 @@ private[lake] object ManifestIO {
     } finally pool.shutdown()
   }
 
+  /** Per-file stats of `tsCol` from parquet footers — the exact
+    * values the old scan computed (row count includes null-ts rows;
+    * min/max over non-null values; all-null file → (None, None); the
+    * null count summed over the blocks, None when a block does not
+    * record it). Returns None when ANY file's footer cannot prove the
+    * rows or the range (missing column, non-INT64-micros physical
+    * type, absent or untrustworthy stats) — the caller then scans, as
+    * before. Files with zero rows are skipped, matching the scan's
+    * groupBy semantics.
+    */
   def footerStats(
       conf: Configuration, files: Seq[String], tsCol: String)
-      : Option[Seq[(String, Long, Option[Timestamp], Option[Timestamp])]] = {
-    // per-file result: Right(Some(row)) served, Right(None) = 0-row
-    // file (skipped), Left = cannot prove → caller falls back
+      : Option[Seq[FileStat]] = {
+    // per-file result: Some(Some(stat)) served, Some(None) = 0-row
+    // file (skipped), None = cannot prove → caller falls back
     val results = parMap(files)(f => footerStatsOne(conf, f, tsCol))
     if (results.exists(_.isEmpty)) None
     else Some(results.flatMap(_.get))
@@ -385,53 +407,50 @@ private[lake] object ManifestIO {
 
   private def footerStatsOne(
       conf: Configuration, f: String, tsCol: String)
-      : Option[Option[(String, Long, Option[Timestamp], Option[Timestamp])]] = {
-    val out = Seq.newBuilder[(String, Long, Option[Timestamp], Option[Timestamp])]
-    Seq(f).foreach { f =>
-      val r = try ParquetFileReader.open(
-        HadoopInputFile.fromPath(new Path(f), conf))
-      catch { case _: Exception => return None }
-      try {
-        val footer = r.getFooter
-        val schema = footer.getFileMetaData.getSchema
-        if (!schema.containsField(tsCol)) return None
-        val fld = schema.getType(schema.getFieldIndex(tsCol))
-        val micros = fld.isPrimitive &&
-          fld.asPrimitiveType.getPrimitiveTypeName ==
-            PrimitiveType.PrimitiveTypeName.INT64 &&
-          (fld.getLogicalTypeAnnotation match {
-            case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-              t.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS &&
-                t.isAdjustedToUTC
-            case _ => false
-          })
-        if (!micros) return None
-        var rows = 0L
-        var mn: Option[Long] = None
-        var mx: Option[Long] = None
-        val blocks = footer.getBlocks.asScala
-        for (b <- blocks; if b.getRowCount > 0) {
-          rows += b.getRowCount
-          val col = b.getColumns.asScala
-            .find(_.getPath.toDotString == tsCol).getOrElse(return None)
-          val st = col.getStatistics
-          if (st == null || st.isEmpty) return None
-          if (st.hasNonNullValue) {
-            val lo = st.genericGetMin.asInstanceOf[java.lang.Long].longValue()
-            val hi = st.genericGetMax.asInstanceOf[java.lang.Long].longValue()
-            if (!mn.exists(_ <= lo)) mn = Some(lo)
-            if (!mx.exists(_ >= hi)) mx = Some(hi)
-          } else if (!st.isNumNullsSet || st.getNumNulls != b.getRowCount) {
-            // no values and can't prove all-null: don't guess
-            return None
-          }
+      : Option[Option[FileStat]] = {
+    val r = try ParquetFileReader.open(
+      HadoopInputFile.fromPath(new Path(f), conf))
+    catch { case _: Exception => return None }
+    try {
+      val footer = r.getFooter
+      val schema = footer.getFileMetaData.getSchema
+      if (!schema.containsField(tsCol)) return None
+      val fld = schema.getType(schema.getFieldIndex(tsCol))
+      val micros = fld.isPrimitive &&
+        fld.asPrimitiveType.getPrimitiveTypeName ==
+          PrimitiveType.PrimitiveTypeName.INT64 &&
+        (fld.getLogicalTypeAnnotation match {
+          case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
+            t.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS &&
+              t.isAdjustedToUTC
+          case _ => false
+        })
+      if (!micros) return None
+      var rows = 0L
+      var mn: Option[Long] = None
+      var mx: Option[Long] = None
+      var nulls: Option[Long] = Some(0L)
+      for (b <- footer.getBlocks.asScala; if b.getRowCount > 0) {
+        rows += b.getRowCount
+        val col = b.getColumns.asScala
+          .find(_.getPath.toDotString == tsCol).getOrElse(return None)
+        val st = col.getStatistics
+        if (st == null || st.isEmpty) return None
+        nulls = nulls.filter(_ => st.isNumNullsSet)
+          .map(_ + st.getNumNulls)
+        if (st.hasNonNullValue) {
+          val lo = st.genericGetMin.asInstanceOf[java.lang.Long].longValue()
+          val hi = st.genericGetMax.asInstanceOf[java.lang.Long].longValue()
+          if (!mn.exists(_ <= lo)) mn = Some(lo)
+          if (!mx.exists(_ >= hi)) mx = Some(hi)
+        } else if (!st.isNumNullsSet || st.getNumNulls != b.getRowCount) {
+          // no values and can't prove all-null: don't guess
+          return None
         }
-        if (rows > 0)
-          out += ((f, rows,
-            mn.map(DateTimeUtils.toJavaTimestamp),
-            mx.map(DateTimeUtils.toJavaTimestamp)))
-      } finally r.close()
-    }
-    Some(out.result().headOption)
+      }
+      Some(if (rows == 0) None else Some(FileStat(f, rows,
+        mn.map(DateTimeUtils.toJavaTimestamp),
+        mx.map(DateTimeUtils.toJavaTimestamp), nulls)))
+    } finally r.close()
   }
 }

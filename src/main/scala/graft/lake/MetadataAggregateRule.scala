@@ -37,13 +37,23 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
   *     metadata partials over the files the manifest and sidecar
   *     answer exactly — inside one band and one bucket, null-ts-free,
   *     every needed statistic present — plus the files left to scan.
+  *     A file's null-ts-free proof is a recorded manifest fact (its
+  *     `ts_nulls`, from the parquet footer at write time), so band and
+  *     bucket shapes need no `tp_timestamp` colstats; manifest rows
+  *     written before that field fall back to the sidecar's count.
   *  3. '''Plan''': one set of value gates over every partial, then
   *     either the final [[LocalRelation]] (nothing left to scan,
   *     injective keys), or a hybrid — a [[Union]] of metadata slot rows
-  *     and a partial Aggregate over a relation holding only the
-  *     straddling files (the original filter still applied row-level),
-  *     under a merge Aggregate carrying the original output attribute
-  *     ids — or a decline to the normal plan.
+  *     and the rows of a relation holding only the straddling files
+  *     (the original filter still applied row-level) in slot form,
+  *     under ONE merge Aggregate carrying the original output attribute
+  *     ids (sketch outputs aggregate the straddlers first) — or a
+  *     decline to the normal plan.
+  *  4. '''Driver-side finish''' ([[foldOnDriver]]): a global ORDER BY
+  *     over a served relation sorts its rows on the driver, and the
+  *     Project/Filter/LIMIT above fold into it, so a served dashboard
+  *     query with ORDER BY ... LIMIT plans a bare local scan and runs
+  *     no Spark job.
   *
   * Served aggregates: `count(*)`/`count(c)`; `min`/`max` (integral
   * under 2^53, float/double in total order, strings in UTF8-byte
@@ -55,11 +65,15 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
   * hybrid); and, only when metadata answers everything,
   * `graft_topk` (exact-regime merge), `count(DISTINCT tp_date)` and
   * literal outputs. Outputs derived from bucket keys alone are served
-  * by key substitution.
+  * by key substitution. A hybrid avg is gated on its MERGED total: the
+  * metadata sum plus, over the straddlers, rows × max(|min|, |max|)
+  * from their zone maps must stay within 2^53.
   *
   * A hybrid is allowed only under a time band or a bucket key; a
   * whole-table or partition-grouped shape with any uncovered file
   * declines, since the zone-map scan is then already the plain plan.
+  * A `--from/--to` view is the same whole-table relation under the
+  * window predicate, so its aggregates are bands like any other.
   * The probe reads the table's cached metadata snapshot in-process (no
   * Spark job) and runs only after the full structural match, so
   * non-candidate queries pay a pattern match and nothing else. Every
@@ -74,9 +88,56 @@ final case class MetadataAggregateRule(session: SparkSession)
 
   private val DayUs = 86400000000L
 
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
-    case agg: Aggregate => decide(agg)
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    foldOnDriver(plan.transformDown { case agg: Aggregate => decide(agg) })
+
+  /** Evaluate the operators right above a served [[LocalRelation]] on
+    * the driver, so the answer is planned as a bare local scan: a
+    * global Sort with a deterministic order becomes a sorted relation,
+    * and Spark's own `ConvertToLocalRelation` folds the Project,
+    * Filter and Limit over it. Without this an ORDER BY over a few
+    * served rows plans a range shuffle and runs Spark jobs. The
+    * optimizer ran those folds before this rule, so it would not fold
+    * these itself. Rows are few (one per group), so the ordering is
+    * interpreted: no code generation for a handful of rows.
+    */
+  private def foldOnDriver(plan: LogicalPlan): LogicalPlan =
+    plan.transformUp {
+      case Sort(order, true, l: LocalRelation, _)
+          if isServed(l) && order.forall(o => evaluable(o.child)) =>
+        val ord = new InterpretedOrdering(order, l.output)
+        served(l.copy(data = l.data.sorted(ord)))
+      case p @ Project(_, l: LocalRelation) if isServed(l) =>
+        servedIfLocal(org.apache.spark.sql.catalyst.optimizer
+          .ConvertToLocalRelation(p))
+      case f @ Filter(_, l: LocalRelation) if isServed(l) =>
+        servedIfLocal(org.apache.spark.sql.catalyst.optimizer
+          .ConvertToLocalRelation(f))
+      case g @ GlobalLimit(_, LocalLimit(_, l: LocalRelation))
+          if isServed(l) =>
+        servedIfLocal(org.apache.spark.sql.catalyst.optimizer
+          .ConvertToLocalRelation(g))
+    }
+
+  private def isServed(l: LocalRelation): Boolean =
+    l.getTagValue(ServedTag).isDefined
+
+  private def served(l: LocalRelation): LocalRelation = {
+    l.setTagValue(ServedTag, ())
+    l
   }
+
+  private def servedIfLocal(p: LogicalPlan): LogicalPlan = p match {
+    case l: LocalRelation => served(l)
+    case other => other
+  }
+
+  /** An expression the driver can evaluate over the served rows. */
+  private def evaluable(e: Expression): Boolean =
+    e.deterministic && !e.exists {
+      case _: AttributeReference => false
+      case x => x.isInstanceOf[Unevaluable] || x.isInstanceOf[PlanExpression[_]]
+    }
 
   /** The single entry point: shape, then rewrite, with one decision
     * log line per candidate. An OPTIONAL rewrite must never fail a
@@ -238,7 +299,7 @@ final case class MetadataAggregateRule(session: SparkSession)
     val (lr, cond, aliases) = unwrap(agg.child).getOrElse(return None)
     val (lake, table) = (lr.relation match {
       case fs: HadoopFsRelation => fs.location match {
-        case z: ZoneMapFileIndex => z.owner
+        case z: ZoneMapFileIndex => Some(z.owner)
         case _ => None
       }
       case _ => None
@@ -438,7 +499,8 @@ final case class MetadataAggregateRule(session: SparkSession)
       partNames.map(pv.getOrElse(_, null))
     }
     val parts = lake.metaParts(session, s.table, needsOf(s.specs),
-      s.bands, s.grain.map(g => g.idOf _), groupOf, s.fileFilter)
+      s.bands, s.grain.map(g => g.idOf _), groupOf, s.fileFilter,
+      Some(s.lr.schema))
       .getOrElse(return Left("no data, or a column the table lacks"))
     if (!s.hybridOk && parts.toScan.nonEmpty)
       return Left(s"${parts.toScan.size} files not covered by metadata")
@@ -452,9 +514,14 @@ final case class MetadataAggregateRule(session: SparkSession)
       case SumCol(a) if groups.exists(
           _._2.sums.get(a.name).exists(!_.isValidLong)) =>
         s"sum(${a.name}) has no exact BIGINT value"
-      // past 2^53 the exact sum's double loses losslessness
-      case AvgCol(a) if groups.exists(
-          _._2.sums.get(a.name).exists(_.abs > MaxExactAvgSum)) =>
+      // past 2^53 the exact sum's double loses losslessness; a
+      // hybrid's merged total adds at most the straddlers' zone bound
+      // to each group's metadata sum
+      case AvgCol(a) if parts.scanBounds.get(a.name).exists(_.isEmpty) =>
+        s"avg(${a.name}) has a straddler without a zone"
+      case AvgCol(a) if groups.exists(_._2.sums.getOrElse(a.name, BigInt(0))
+          .abs + parts.scanBounds.get(a.name).flatten.getOrElse(BigInt(0)) >
+          MaxExactAvgSum) =>
         s"avg(${a.name}) sums past 2^53"
       // top-k: the MERGED sketch must be provably exact (no eviction)
       case TopKCol(a, _) if groups.exists(g => !g._2.mgBlobs.get(a.name)
@@ -502,7 +569,7 @@ final case class MetadataAggregateRule(session: SparkSession)
           case sp => metaFinalValue(p, sp)
         })
       }
-      return Right((LocalRelation(agg.output, rows), "served"))
+      return Right((served(LocalRelation(agg.output, rows)), "served"))
     }
     val valueSpecs = s.specs.filterNot(sp =>
       sp.isInstanceOf[GroupKey] || sp.isInstanceOf[GroupDerived])
@@ -529,12 +596,16 @@ final case class MetadataAggregateRule(session: SparkSession)
     // straddler side: the ORIGINAL grouping expressions over a relation
     // holding only the files left to scan, the original Filter intact
     // (bucket expressions evaluate row-level, so straddler rows land in
-    // their true buckets, the null bucket included)
+    // their true buckets, the null bucket included). Its index takes
+    // the statuses of the walk metaParts made: no re-stat, and no
+    // parallel-listing job past 32 straddlers.
     val fsRel = s.lr.relation.asInstanceOf[HadoopFsRelation]
+    val straddlers = lake.locatedStatuses(session, parts.toScan)
     val straddlerIndex =
       new org.apache.spark.sql.execution.datasources.InMemoryFileIndex(
-        session, parts.toScan.map(new org.apache.hadoop.fs.Path(_)),
-        Map("basePath" -> lake.tableDir(s.table)), None)
+        session, straddlers.map(_.getPath),
+        Map("basePath" -> lake.tableDir(s.table)), None,
+        ListedStatusCache.perFile(straddlers))
     val straddlerRel = HadoopFsRelation(straddlerIndex,
       fsRel.partitionSchema, fsRel.dataSchema, fsRel.bucketSpec,
       fsRel.fileFormat, fsRel.options)(session)
@@ -554,11 +625,21 @@ final case class MetadataAggregateRule(session: SparkSession)
       case (a: AttributeReference, _) => a
       case (g, i) => Alias(g, s"_mk_$i")()
     }
-    val partial = Aggregate(grouping,
-      partialKeys ++ valueSpecs.zip(valSlotGroups).flatMap {
-        case (sp, slots) => partialSlotExprs(sp, slots)
-      }, pruned)
-    val union = Union(Seq(local, partial))
+    // each straddler ROW enters the union as slot values the merge
+    // folds like a metadata partial — one aggregation, one exchange;
+    // sketch specs have no row form, so their straddlers aggregate
+    // first
+    val rowSlots = valueSpecs.zip(valSlotGroups).map {
+      case (sp, slots) => rowSlotExprs(sp, slots)
+    }
+    val straddlerSide =
+      if (rowSlots.forall(_.isDefined))
+        Project(partialKeys ++ rowSlots.flatMap(_.get), pruned)
+      else Aggregate(grouping,
+        partialKeys ++ valueSpecs.zip(valSlotGroups).flatMap {
+          case (sp, slots) => partialSlotExprs(sp, slots)
+        }, pruned)
+    val union = Union(Seq(local, straddlerSide))
     val unionOut = union.output
 
     // merge under the ORIGINAL output names/exprIds: keys pass through,
@@ -952,6 +1033,30 @@ final case class MetadataAggregateRule(session: SparkSession)
     }
   }
 
+  /** One straddler row's values for a spec's slots, merged by the same
+    * expression as the metadata partials: a count slot holds 1 per
+    * (non-null) row, a sum slot the value, a range slot the value. None
+    * for the sketch specs, which only merge as sketches.
+    */
+  private def rowSlotExprs(
+      s: Spec, slots: Seq[AttributeReference]): Option[Seq[NamedExpression]] = {
+    def alias(e: Expression, slot: AttributeReference) =
+      Alias(e, slot.name)(exprId = slot.exprId)
+    def nonNull(a: Expression) = If(IsNull(a), Literal(0L), Literal(1L))
+    s match {
+      case CountStar => Some(Seq(alias(Literal(1L), slots.head)))
+      case CountCol(a) => Some(Seq(alias(nonNull(a), slots.head)))
+      case MinCol(a) => Some(Seq(alias(a, slots.head)))
+      case MaxCol(a) => Some(Seq(alias(a, slots.head)))
+      case SumCol(a) => Some(Seq(alias(Cast(a, LongType), slots.head)))
+      case AvgCol(a) => Some(Seq(
+        alias(Cast(a, org.apache.spark.sql.types.DecimalType(38, 0)),
+          slots.head),
+        alias(nonNull(a), slots(1))))
+      case _ => None
+    }
+  }
+
   /** Final merge expression over the union for one spec at its slot
     * offset, carrying the ORIGINAL output name/exprId.
     */
@@ -984,6 +1089,10 @@ final case class MetadataAggregateRule(session: SparkSession)
 object MetadataAggregateRule {
 
   private val DayUsC = 86400000000L
+
+  /** Marks a [[LocalRelation]] holding a served answer. */
+  private val ServedTag =
+    org.apache.spark.sql.catalyst.trees.TreeNodeTag[Unit]("graft.metaServed")
 
   /** Grain + UNDERLYING source attribute of a bucket expression — the
     * classification behind the class's `bucketGrain` and the rewrite

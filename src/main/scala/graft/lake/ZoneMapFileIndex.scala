@@ -69,36 +69,33 @@ private[lake] final case class ColumnZone(
   * bounds compare in UTF8 BYTE order (not Java UTF-16 order — they
   * differ above the BMP) because that is the order Spark's min/max
   * computed the sidecar bounds in.
-  */
-/** @param owner the (lake, table) this index scans ALL live files of —
-  *   set only for whole-table reads, never for pre-pruned subsets, so
-  *   [[MetadataAggregateRule]] can safely answer whole-table aggregates
-  *   from the owner's metadata.
-  */
-/** @param initialToken the owner table's [[Lake.metaToken]] at
-  *   construction time (owner-set indexes only): `listFiles` re-probes
-  *   it and refreshes the delegate's eager listing when the table has
-  *   mutated since — so a long-lived registered view serves the SAME
-  *   state on the scanned path as the metadata-aggregate rule serves
-  *   on the rewritten path (r16 ADVICE-low: an in-session append used
-  *   to make a rewritten count fresh while a trivially-filtered count
-  *   scanned the stale registration-time snapshot). The token probe is
-  *   one metadata-dir listing; the re-list fires only on mutation.
-  */
-/** @param owningSession the session that built this index (owner-set
-  *   indexes only): freshness probes run against ITS Hadoop conf, not
-  *   `SparkSession.active`'s — in a multi-session JVM (Spark
-  *   Connect-style serving) the active session at listFiles time may
-  *   belong to a different tenant with different conf (r17 verdict
-  *   nit 1).
+  *
+  * @param owner the (lake, table) this index scans ALL live files of:
+  *   every lake view is this whole-table relation (a `--from/--to`
+  *   window is a predicate above it), so [[MetadataAggregateRule]] can
+  *   answer its aggregates from the owner's metadata.
+  * @param initialToken the owner table's [[Lake.metaToken]] at
+  *   construction time: `listFiles` re-probes it and refreshes the
+  *   delegate's eager listing when the table has mutated since — so a
+  *   long-lived registered view serves the SAME state on the scanned
+  *   path as the metadata-aggregate rule serves on the rewritten path
+  *   (r16 ADVICE-low: an in-session append used to make a rewritten
+  *   count fresh while a trivially-filtered count scanned the stale
+  *   registration-time snapshot). The token probe is one metadata-dir
+  *   listing; the re-list fires only on mutation.
+  * @param owningSession the session that built this index: freshness
+  *   probes run against ITS Hadoop conf, not `SparkSession.active`'s —
+  *   in a multi-session JVM (Spark Connect-style serving) the active
+  *   session at listFiles time may belong to a different tenant with
+  *   different conf (r17 verdict nit 1).
   */
 private[lake] class ZoneMapFileIndex(
     delegate: FileIndex,
     loadZones: () => Map[String, Map[String, ColumnZone]],
-    loadTsZones: () => Map[String, Map[String, ColumnZone]] = () => Map.empty,
-    val owner: Option[(Lake, String)] = None,
-    initialToken: Option[String] = None,
-    owningSession: Option[org.apache.spark.sql.SparkSession] = None)
+    loadTsZones: () => Map[String, Map[String, ColumnZone]],
+    val owner: (Lake, String),
+    initialToken: String,
+    owningSession: org.apache.spark.sql.SparkSession)
   extends FileIndex {
 
   /** Owner token as of the delegate's last (re-)listing. None forces
@@ -109,15 +106,14 @@ private[lake] class ZoneMapFileIndex(
     * stale across appends the way the r16 lazy-once fields could
     * (verdict task 4).
     */
-  @volatile private var lastToken: Option[String] = initialToken
+  @volatile private var lastToken: Option[String] = Some(initialToken)
 
   /** Re-list the delegate iff the owner table mutated since the last
     * listing (or an explicit `refresh()` cleared the token).
     */
-  private def ensureFresh(): Unit = owner.foreach { case (lake, table) =>
-    val spark = owningSession
-      .getOrElse(org.apache.spark.sql.SparkSession.active)
-    val tok = lake.metaToken(spark, table)
+  private def ensureFresh(): Unit = {
+    val (lake, table) = owner
+    val tok = lake.metaToken(owningSession, table)
     if (!lastToken.contains(tok)) synchronized {
       if (!lastToken.contains(tok)) {
         delegate.refresh()
@@ -395,19 +391,31 @@ private[lake] object ZoneMapFileIndex {
     }
 }
 
-/** A [[FileStatusCache]] holding files a directory walk already found,
-  * each as its own root: an `InMemoryFileIndex` over those roots takes
-  * their statuses from here instead of listing them again — and so
-  * never launches Spark's parallel-listing job, which it otherwise
-  * does past `parallelPartitionDiscovery.threshold` (32) roots. After
-  * `refresh()` the cache is empty and the index lists for real.
+/** A [[FileStatusCache]] that answers an `InMemoryFileIndex`'s roots
+  * from walks the lake makes itself: `listed` maps each root to its
+  * leaf files as a walk already found them, and after `refresh()`
+  * `relist` walks again. The index then never lists through Spark — so
+  * it never launches Spark's parallel-listing job, which it otherwise
+  * does past `parallelPartitionDiscovery.threshold` (32) entries. A
+  * root `relist` does not answer is listed by the index for real.
   */
-private[lake] final class ListedStatusCache(listed: Seq[FileStatus])
+private[lake] final class ListedStatusCache(
+    listed: Map[Path, Array[FileStatus]],
+    relist: () => Map[Path, Array[FileStatus]] = () => Map.empty)
   extends FileStatusCache {
-  @volatile private var byPath: Map[Path, Array[FileStatus]] =
-    listed.map(st => st.getPath -> Array(st)).toMap
+  @volatile private var byRoot: Option[Map[Path, Array[FileStatus]]] =
+    Some(listed)
   override def getLeafFiles(path: Path): Option[Array[FileStatus]] =
-    byPath.get(path)
+    synchronized {
+      if (byRoot.isEmpty) byRoot = Some(relist())
+      byRoot.get.get(path)
+    }
   override def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit = ()
-  override def invalidateAll(): Unit = byPath = Map.empty
+  override def invalidateAll(): Unit = synchronized { byRoot = None }
+}
+
+private[lake] object ListedStatusCache {
+  /** Each status its own root, as the hybrid's straddler index lists. */
+  def perFile(statuses: Seq[FileStatus]): ListedStatusCache =
+    new ListedStatusCache(statuses.map(st => st.getPath -> Array(st)).toMap)
 }

@@ -310,15 +310,24 @@ object Perplexity {
         col("e.k2").as("k2"))
       .agg(count(lit(1)).as("n"))
       .localCheckpoint()
-    counts.where(col("tag") === "u")
-      .select(col("k1").as("tok"), col("n").as("c"))
-      .write.mode("overwrite").parquet(s"$path/unigrams")
-    counts.where(col("tag") === "b")
-      .select(col("k1").as("p"), col("k2").as("c"), col("n").as("c2"))
-      .write.mode("overwrite").parquet(s"$path/bigrams")
-    counts.where(col("tag") === "s")
-      .select(col("k1").as("c"), col("n").as("cu"))
-      .write.mode("overwrite").parquet(s"$path/uni2")
+    // the checkpointed blocks stay in executor storage until released:
+    // unpersist the checkpoint's RDD once the three writes are done, or
+    // when one fails (Dataset.unpersist only drops CacheManager entries)
+    try {
+      counts.where(col("tag") === "u")
+        .select(col("k1").as("tok"), col("n").as("c"))
+        .write.mode("overwrite").parquet(s"$path/unigrams")
+      counts.where(col("tag") === "b")
+        .select(col("k1").as("p"), col("k2").as("c"), col("n").as("c2"))
+        .write.mode("overwrite").parquet(s"$path/bigrams")
+      counts.where(col("tag") === "s")
+        .select(col("k1").as("c"), col("n").as("cu"))
+        .write.mode("overwrite").parquet(s"$path/uni2")
+    } finally counts.queryExecution.analyzed.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.unpersist(blocking = false); ()
+      case _ => ()
+    }
   }
 
   /** Train-and-save under `path` unless a fresh artifact (same text

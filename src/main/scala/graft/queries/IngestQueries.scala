@@ -2,7 +2,7 @@ package graft.queries
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -897,10 +897,19 @@ object IngestQueries {
       // are non-null by construction, so row-level addition is
       // value-identical to per-column sums) while the agg width drops
       // 300× (r13 verdict task 6; the row expression stays inside
-      // whole-stage codegen)
+      // whole-stage codegen). The addition is a BALANCED tree (depth
+      // 9): a left-deep 300-term chain is deep enough to overflow the
+      // stack in Spark's Column-to-expression conversion on some runs.
+      // Every term is a non-null bigint under 1000003, so the grouping
+      // cannot change the value.
+      def balancedSum(cs: Seq[Column]): Column =
+        if (cs.size == 1) cs.head
+        else cs.splitAt(cs.size / 2) match {
+          case (l, r) => balancedSum(l) + balancedSum(r)
+        }
       val checksum = t.agg(
           count(lit(1)).as("n"),
-          sum((1 to 300).map(i => col(f"c$i%03d")).reduce(_ + _)).as("s1"),
+          sum(balancedSum((1 to 300).map(i => col(f"c$i%03d")))).as("s1"),
           (sum(col("meta.u")) + sum(element_at(col("tags"), 1)) +
             sum(element_at(col("tags"), 2))).as("s2"))
         .select(lit("__checksum").as("key"),

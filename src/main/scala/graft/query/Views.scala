@@ -17,7 +17,8 @@ import graft.lake.{Lake, TpSchema}
   * derived from the time range, so Catalyst prunes partition
   * directories BEFORE listing files — at 100 TB the difference between
   * touching one month and touching the lake. The residual
-  * `tp_timestamp` bounds then skip row groups via parquet min/max.
+  * `tp_timestamp` bounds then skip whole files via the manifest's
+  * per-file ranges and row groups via parquet min/max.
   */
 object Views {
 
@@ -91,12 +92,12 @@ object Views {
     // manifest) but no data files — spark.read would fail schema
     // inference and one emptied table would break the whole session.
     // Skip it: querying it then gets the "no data collected" shaping.
-    // The same walk feeds a time-pruned view's file index.
+    // The same walk feeds the view's file index.
     val tables = lake.listTables(spark)
       .map(t => t -> lake.listDataFiles(spark, t))
       .filter(_._2.nonEmpty)
     tables.foreach { case (t, listed) =>
-      withPredicate(lake.readPruned(spark, t, f.from, f.to, listed), f)
+      withPredicate(lake.read(spark, t, listed), f)
         .createOrReplaceTempView(t)
     }
     // materialized rollups surface as <table>_rollup_<name> views —
@@ -110,14 +111,15 @@ object Views {
     tables.map(_._1) ++ live.map(_.viewName)
   }
 
-  /** The filtered DataFrame for one table (the view body). A time
-    * range additionally consults the stats manifest to skip whole
-    * files ([[Lake.readPruned]]); the predicate still applies in full,
-    * so pruning is a pure scan reduction, never a semantics change.
+  /** The filtered DataFrame for one table (the view body): the
+    * whole-table relation with the filters' predicate over it. Its
+    * `tp_timestamp` bounds skip whole files through the manifest time
+    * zones, its partition bounds skip directories, and an aggregate
+    * over it stays visible to the metadata-aggregate rule.
     */
   def filtered(spark: SparkSession, lake: Lake, table: String,
       f: Filters): DataFrame =
-    withPredicate(lake.readPruned(spark, table, f.from, f.to), f)
+    withPredicate(lake.read(spark, table), f)
 
   private def withPredicate(base: DataFrame, f: Filters): DataFrame =
     predicate(f).map(base.where).getOrElse(base)

@@ -14,9 +14,10 @@ import graft.query.Render
 
 /** The Spark-job budget of a cold `graft query`: lake metadata (the
   * manifest, the colstats sidecar, file listings) is read in-process,
-  * so a metadata-served aggregate runs no job at all and a
-  * time-windowed lookup runs only its own query — however many files
-  * the window keeps. Jobs are counted with a listener around an
+  * so a metadata-served aggregate runs no job at all — its ORDER BY
+  * and LIMIT included, and under a `--from/--to` window whose files
+  * the metadata covers — and a time-windowed lookup runs only its own
+  * query, however many files the window keeps. Jobs are counted with a listener around an
   * in-process `Main.run`, and the rows must equal the plain-scan
   * answer.
   */
@@ -66,6 +67,49 @@ class JobBudgetSpec extends AnyFunSuite with SparkTest {
     assert(rc === 0, out)
     assert(out === want)
     assert(jobs === 0, s"metadata-served aggregate launched $jobs job(s)")
+  }
+
+  test("a served GROUP BY ... ORDER BY, with or without LIMIT, runs no " +
+      "Spark job") {
+    val ts = col(TpSchema.Timestamp)
+    val cases = Seq(
+      "SELECT tp_index, count(*) AS n, min(tp_timestamp) AS lo, " +
+        "max(tp_timestamp) AS hi FROM web GROUP BY tp_index " +
+        "ORDER BY tp_index" ->
+        plain.groupBy("tp_index").agg(count(lit(1)).as("n"),
+          min(ts).as("lo"), max(ts).as("hi")).orderBy("tp_index"),
+      "SELECT tp_month, count(*) AS n FROM web GROUP BY tp_month " +
+        "ORDER BY tp_month" ->
+        plain.groupBy("tp_month").agg(count(lit(1)).as("n"))
+          .orderBy("tp_month"),
+      "SELECT tp_index, count(*) AS n, max(bytes) AS b FROM web " +
+        "GROUP BY tp_index ORDER BY tp_index DESC LIMIT 2" ->
+        plain.groupBy("tp_index").agg(count(lit(1)).as("n"),
+          max("bytes").as("b")).orderBy(col("tp_index").desc).limit(2))
+    for ((sql, truth) <- cases) {
+      val want = Render.csv(truth)
+      val (rc, out, jobs) = query(sql)
+      assert(rc === 0, out)
+      assert(out === want, sql)
+      assert(jobs === 0, s"served '$sql' launched $jobs job(s)")
+    }
+  }
+
+  test("a --from/--to count over whole months of contained files runs " +
+      "no Spark job") {
+    val lo = java.sql.Timestamp.valueOf("2024-03-01 00:00:00")
+    val hi = java.sql.Timestamp.valueOf("2024-05-31 23:59:59")
+    val want = Render.csv(plain
+      .where(col(TpSchema.Timestamp).between(lo, hi))
+      .agg(count(lit(1)).as("n"), max("bytes").as("b"),
+        min(TpSchema.Timestamp).as("lo")))
+    val (rc, out, jobs) = query(
+      "SELECT count(*) AS n, max(bytes) AS b, min(tp_timestamp) AS lo " +
+        "FROM web",
+      "--from", "2024-03-01T00:00:00", "--to", "2024-05-31T23:59:59")
+    assert(rc === 0, out)
+    assert(out === want)
+    assert(jobs === 0, s"windowed metadata count launched $jobs job(s)")
   }
 
   test("a --from/--to lookup keeping more than 32 files runs exactly " +

@@ -59,16 +59,16 @@ class ManifestIOSpec extends AnyFunSuite with SparkTest {
     val got = ManifestIO.footerStats(
       conf, Seq(plain, mixed, allNull), TpSchema.Timestamp)
     assert(got.isDefined, "micros-annotated files must serve from footers")
-    val byFile = got.get.map(r => r._1 -> r).toMap
+    val byFile = got.get.map(r => r.file -> r).toMap
     for (f <- Seq(plain, mixed)) {
       val (n, lo, hi) = scanStats(f)
-      val (_, gn, glo, ghi) = byFile(f)
+      val ManifestIO.FileStat(_, gn, glo, ghi, _) = byFile(f)
       assert(gn === n, s"rows $f")
       assert(glo === Some(lo) && ghi === Some(hi), s"range $f")
     }
     // all-null file: count includes null rows, range is absent —
     // exactly what the scan's min/max would produce (null)
-    val (_, an, alo, ahi) = byFile(allNull)
+    val ManifestIO.FileStat(_, an, alo, ahi, _) = byFile(allNull)
     assert(an === 2L && alo.isEmpty && ahi.isEmpty)
   }
 
@@ -89,6 +89,63 @@ class ManifestIOSpec extends AnyFunSuite with SparkTest {
       .filter(_.getName.endsWith(".parquet")).head.getAbsolutePath
     assert(ManifestIO.footerStats(conf, Seq(f), TpSchema.Timestamp).isEmpty,
       "INT96 carries no stats; the footer path must decline, not guess")
+  }
+
+  test("ts_nulls: footer == scan on every null shape, the scan " +
+      "fallback records it too, and parts without it read as None") {
+    val base = Files.createTempDirectory("graft_mion").toString
+    val files = Seq(
+      writeParquet(s"$base/a", Seq(1L -> Some("2024-03-01 10:00:00"),
+        2L -> Some("2024-03-02 11:30:00"))),
+      writeParquet(s"$base/b", Seq(1L -> Some("2024-03-05 00:00:01"),
+        2L -> None, 3L -> Some("2024-03-04 12:00:00"), 4L -> None)),
+      writeParquet(s"$base/c", Seq(1L -> None, 2L -> None)))
+    def scanNulls(f: String): Long = {
+      val r = spark.read.parquet(f)
+        .agg(count(lit(1)), count(col(TpSchema.Timestamp))).head()
+      r.getLong(0) - r.getLong(1)
+    }
+    val footer = ManifestIO.footerStats(conf, files, TpSchema.Timestamp).get
+    assert(footer.map(_.tsNulls) === files.map(f => Some(scanNulls(f))))
+    assert(footer.map(_.tsNulls.get) === Seq(0L, 2L, 2L))
+
+    // an INT96 file has no footer stats: statsFor scans, and the scan
+    // records the same null count
+    val lake = Lake(s"$base/lake")
+    import spark.implicits._
+    val prev = spark.conf.getOption("spark.sql.parquet.outputTimestampType")
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
+    try Seq[(Long, Option[String])]((1L, Some("2024-03-01 10:00:00")),
+        (2L, None), (3L, Some("2024-03-02 10:00:00")))
+      .toDF("event_id", "ts_s")
+      .select(col("event_id"),
+        col("ts_s").cast("timestamp").as(TpSchema.Timestamp))
+      .coalesce(1).write.mode("overwrite").parquet(s"$base/lake/t/k=1")
+    finally prev.fold(
+      spark.conf.unset("spark.sql.parquet.outputTimestampType"))(
+      spark.conf.set("spark.sql.parquet.outputTimestampType", _))
+    val f96 = new java.io.File(s"$base/lake/t/k=1").listFiles()
+      .filter(_.getName.endsWith(".parquet")).head.getAbsolutePath
+    assert(ManifestIO.footerStats(conf, Seq(f96), TpSchema.Timestamp).isEmpty)
+    val scanned = lake.statsFor(spark, "t", Seq(f96))
+    assert(scanned.map(_.tsNulls) === Seq(Some(1L)))
+    assert(scanned.map(_.rows) === Seq(3L))
+
+    // a part written before the column existed reads it as None; a
+    // direct-written part carries it, and Spark reads both
+    val dir = s"$base/m"
+    val t1 = Timestamp.valueOf("2024-03-01 10:00:00")
+    Seq(("/x/old.parquet", 5L, t1, t1, 1L))
+      .toDF("file", "rows", "min_ts", "max_ts", "seq")
+      .coalesce(1).write.mode("append").parquet(dir)
+    ManifestIO.writeManifest(conf, dir, Seq(
+      footer(1).row(2L).copy(file = "/x/new.parquet")))
+    val rows = ManifestIO.readManifest(conf, dir).map(r => r.file -> r).toMap
+    assert(rows("/x/old.parquet").tsNulls === None)
+    assert(rows("/x/new.parquet").tsNulls === Some(2L))
+    val viaSpark = spark.read.option("mergeSchema", "true").parquet(dir)
+      .where(col("file") === "/x/new.parquet").select("ts_nulls").head()
+    assert(viaSpark.getLong(0) === 2L)
   }
 
   test("writeManifest round-trips through BOTH readers and mixes with " +

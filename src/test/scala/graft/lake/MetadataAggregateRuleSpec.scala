@@ -303,8 +303,10 @@ class MetadataAggregateRuleSpec extends AnyFunSuite with SparkTest {
     val r2 = q2.head()
     assert(r2.getLong(0) === 400L)
     assert(r2.getLong(1) === (200 until 600).map(_.toLong).sum)
-    // without tp_timestamp stats there is no containment proof: the
-    // rewrite declines and the zoned scan reads the overlapping files
+    // without tp_timestamp stats the manifest's recorded ts_nulls is
+    // the containment proof; a manifest written before it existed has
+    // no proof: the rewrite declines and the zoned scan reads the
+    // overlapping files
     val lake2 = Lake(
       Files.createTempDirectory("graft_metaagg_tb2").toString)
     val spec2 = PartitionSpec("tbq2", "p0", tpIndexColumn = Some("idx"))
@@ -320,9 +322,12 @@ class MetadataAggregateRuleSpec extends AnyFunSuite with SparkTest {
     }
     lake2.enableColumnStats(spark, "tbq2", Seq("v", "event_id"))
     Views.register(spark, lake2, Views.Filters())
-    val q3 = spark.sql("SELECT count(*) AS n FROM tbq2 WHERE " +
+    def q3 = spark.sql("SELECT count(*) AS n FROM tbq2 WHERE " +
       "tp_timestamp >= timestamp'2024-03-05 01:00:00' AND " +
       "tp_timestamp <= timestamp'2024-03-05 02:59:59'")
+    assert(ScanAudit.filesReadAfterRun(q3) === 0)
+    assert(q3.head().getLong(0) === 200L)
+    OlderManifests.dropTsNulls(spark, lake2, "tbq2")
     assert(ScanAudit.filesReadAfterRun(q3) > 0)
     assert(q3.head().getLong(0) === 200L)
   }
@@ -1225,8 +1230,9 @@ class MetadataAggregateRuleSpec extends AnyFunSuite with SparkTest {
         "non-UTC session must not serve tp_date buckets from metadata")
       assert(q.agg(sum(col("n"))).head().getLong(0) === 650L)
     } finally spark.conf.set(tzKey, prev)
-    // no tp_timestamp sidecar row → no null-ts-free proof → no file is
-    // ever bucket-contained → decline (scan), answers intact
+    // no tp_timestamp sidecar row: the manifest's ts_nulls proves the
+    // file null-ts-free; without it (an older manifest) no file is ever
+    // bucket-contained → decline (scan), answers intact
     val lake2 = Lake(Files.createTempDirectory("graft_metaagg_bg2").toString)
     val spec2 = PartitionSpec("bq2", "p0", tpIndexColumn = Some("idx"))
     val raw = spark.range(0, 50).select(
@@ -1237,8 +1243,11 @@ class MetadataAggregateRuleSpec extends AnyFunSuite with SparkTest {
     lake2.append(spark, "bq2", TpSchema.enrich(raw, spec2))
     lake2.enableColumnStats(spark, "bq2", Seq("v"))
     Views.register(spark, lake2, Views.Filters())
-    val q2 = spark.sql(
+    def q2 = spark.sql(
       "SELECT tp_date, count(v) AS n FROM bq2 GROUP BY 1")
+    assert(ScanAudit.filesReadAfterRun(q2) === 0)
+    assert(q2.head().getLong(1) === 50L)
+    OlderManifests.dropTsNulls(spark, lake2, "bq2")
     assert(ScanAudit.filesReadAfterRun(q2) > 0)
     assert(q2.head().getLong(1) === 50L)
   }
@@ -1345,24 +1354,24 @@ class MetadataAggregateRuleSpec extends AnyFunSuite with SparkTest {
         .agg(count(lit(1)).as("n"), sum(col("event_id")).as("s"))
         .head()
     // WEEK equality: the Mar-4 (Monday) week covers the Mar 4-6 day
-    // slices (metadata) + the Mar-7 straddler (scan); the null file
-    // scans too and its rows fail the filter row-level
+    // slices and the Mar 7-9 run (all metadata); the null file, which
+    // the manifest's ts_nulls proves all-null, is band-excluded
     val qw = spark.sql("SELECT count(*) AS n, sum(event_id) AS s " +
       "FROM bq WHERE date_trunc('WEEK', tp_timestamp) = " +
       "timestamp'2024-03-04 00:00:00'")
     val fw = ScanAudit.filesReadAfterRun(qw)
-    assert(fw > 0 && fw * 2 < total,
-      s"week-eq fold should scan only straddler+null files: $fw of $total")
+    assert(fw === 0,
+      s"week-eq fold should read no file: $fw of $total")
     assert(qw.head() === truthFor(
       date_trunc("WEEK", col("tp_timestamp")) ===
         lit(java.sql.Timestamp.valueOf("2024-03-04 00:00:00"))))
     // MONTH >= an UNALIGNED instant: first month start >= Feb 15 is
-    // Mar 1 — every dated row qualifies, only the null file scans
+    // Mar 1 — every dated row qualifies, the null file is excluded
     val qm = spark.sql("SELECT count(*) AS n, sum(event_id) AS s " +
       "FROM bq WHERE date_trunc('MONTH', tp_timestamp) >= " +
       "timestamp'2024-02-15 00:00:00'")
     val fm = ScanAudit.filesReadAfterRun(qm)
-    assert(fm > 0 && fm * 2 < total, s"$fm of $total")
+    assert(fm === 0, s"$fm of $total")
     assert(qm.head().getLong(0) === 640L)
     // equality to a NON-start is unsatisfiable: empty result, right
     // answer regardless of path
@@ -1388,7 +1397,7 @@ class MetadataAggregateRuleSpec extends AnyFunSuite with SparkTest {
     val qd = spark.sql("SELECT count(*) AS n FROM bq " +
       "WHERE trunc(tp_date, 'MM') = DATE'2024-03-01'")
     val fd = ScanAudit.filesReadAfterRun(qd)
-    assert(fd > 0 && fd * 2 < total, s"$fd of $total")
+    assert(fd === 0, s"$fd of $total")
     assert(qd.head().getLong(0) === 640L)
     // the SCAN path (no aggregate) prunes too: BucketFilterBandRule
     // rewrites the trunc comparison into a pushable ts band, so the
@@ -1397,9 +1406,9 @@ class MetadataAggregateRuleSpec extends AnyFunSuite with SparkTest {
       "WHERE date_trunc('WEEK', tp_timestamp) = " +
       "timestamp'2024-03-04 00:00:00'")
     val fs0 = ScanAudit.filesReadAfterRun(qs)
-    // week files (Mar 4-6 days + the straddler) + the unknown-zone
-    // null file = 5; the Mar 1-3 files are skipped at listing time
-    assert(fs0 === 5 && fs0 < total,
+    // week files (Mar 4-6 days + the straddler) = 4; the Mar 1-3
+    // files and the all-null-ts file are skipped at listing time
+    assert(fs0 === 4 && fs0 < total,
       s"plain scan must prune non-week files: $fs0 of $total")
     // fixture arithmetic, independent of any rewrite: days Mar 4-6
     // (100 rows each) + the Mar 7-9 straddler (40) = the Mar-4 week
@@ -1416,19 +1425,18 @@ class MetadataAggregateRuleSpec extends AnyFunSuite with SparkTest {
   test("year(ts) comparisons fold into bands: the archive filter " +
       "WHERE year(ts) = 2024 serves from metadata and prunes the scan") {
     val (lake, total) = dayLake() // all dated rows in March 2024
-    // aggregate path: the year band contains every dated file; only
-    // the null-ts file scans
+    // aggregate path: the year band contains every dated file, and
+    // the manifest proves the null-ts file all-null: nothing scans
     val q = spark.sql("SELECT count(*) AS n, sum(event_id) AS s " +
       "FROM bq WHERE year(tp_timestamp) = 2024")
     val f = ScanAudit.filesReadAfterRun(q)
-    assert(f > 0 && f * 2 < total,
-      s"year-eq should scan only the null file: $f of $total")
+    assert(f === 0, s"year-eq should read no file: $f of $total")
     assert(q.head().getLong(0) === 640L)
     // the DATE-source spelling folds the same way
     val qd = spark.sql("SELECT count(*) AS n FROM bq " +
       "WHERE year(tp_date) = 2024")
     val fd = ScanAudit.filesReadAfterRun(qd)
-    assert(fd > 0 && fd * 2 < total, s"$fd of $total")
+    assert(fd === 0, s"$fd of $total")
     assert(qd.head().getLong(0) === 640L)
     // range operators: >= / < restate as bucket-start bounds
     assert(spark.sql("SELECT count(*) AS n FROM bq " +
@@ -1447,12 +1455,12 @@ class MetadataAggregateRuleSpec extends AnyFunSuite with SparkTest {
       .orderBy("tp_date").collect().toSeq
     assert(qg.collect().toSeq === truthG)
     // SCAN path: year(ts) = 2023 matches nothing dated — the zone-map
-    // index prunes every dated file, only the unknown-range null file
-    // is read, and its rows fail the filter row-level
+    // index prunes every dated file, and the null file too: its
+    // manifest row records every ts as null
     val qs = spark.sql(
       "SELECT event_id FROM bq WHERE year(tp_timestamp) = 2023")
     val fs0 = ScanAudit.filesReadAfterRun(qs)
-    assert(fs0 === 1 && qs.count() === 0L,
+    assert(fs0 === 0 && qs.count() === 0L,
       s"2023 scan must prune all dated files: read $fs0 of $total")
     // negation stays null-exact: NOT(year = 2024) is false for every
     // dated row and NULL (dropped) for null-ts rows
@@ -1464,7 +1472,7 @@ class MetadataAggregateRuleSpec extends AnyFunSuite with SparkTest {
     val qx = spark.sql("SELECT count(*) AS n FROM bq " +
       "WHERE extract(YEAR FROM tp_timestamp) = 2024")
     val fx = ScanAudit.filesReadAfterRun(qx)
-    assert(fx > 0 && fx * 2 < total, s"extract(YEAR): $fx of $total")
+    assert(fx === 0, s"extract(YEAR): $fx of $total")
     assert(qx.head().getLong(0) === 640L)
     assert(spark.sql("SELECT count(*) AS n FROM bq " +
       "WHERE date_part('year', tp_timestamp) = 2024")
@@ -1479,14 +1487,12 @@ class MetadataAggregateRuleSpec extends AnyFunSuite with SparkTest {
     // aggregate path: two day members = two bands; the two day files
     // serve from metadata, nothing else scans (Mar 1 and Mar 3 files
     // are band-contained; all other files are band-excluded)
-    val q = spark.sql("SELECT count(*) AS n, sum(event_id) AS s " +
+    def q = spark.sql("SELECT count(*) AS n, sum(event_id) AS s " +
       "FROM bq WHERE tp_date IN (DATE'2024-03-01', DATE'2024-03-03')")
     val f = ScanAudit.filesReadAfterRun(q)
-    // the unknown-range null-ts file can't be band-excluded — it
-    // scans (and its rows fail the filter row-level); everything
-    // else serves or prunes
-    assert(f === 1, s"two-day IN should scan only the null file: " +
-      s"$f of $total")
+    // the null-ts file is band-excluded too: the manifest's ts_nulls
+    // proves it all-null, so a band can admit none of its rows
+    assert(f === 0, s"two-day IN should read no file: $f of $total")
     assert(q.head().getLong(0) === 200L)
     // year IN: both years fold to one merged band covering everything
     val qy = spark.sql("SELECT count(*) AS n FROM bq " +
@@ -1508,13 +1514,13 @@ class MetadataAggregateRuleSpec extends AnyFunSuite with SparkTest {
       .orderBy("tp_date").collect().toSeq
     assert(qg.collect().toSeq === truthG)
     // scan path: a bucket-expression IN prunes files through the
-    // zone map — months that match nothing dated leave only the
-    // unknown-range null file
-    val qs = spark.sql("SELECT event_id FROM bq " +
+    // zone map — months that match nothing dated, and the all-null
+    // file, leave nothing to read
+    def qs = spark.sql("SELECT event_id FROM bq " +
       "WHERE date_trunc('MONTH', tp_timestamp) IN " +
       "(timestamp'2024-02-01 00:00:00', timestamp'2024-04-01 00:00:00')")
     val fs0 = ScanAudit.filesReadAfterRun(qs)
-    assert(fs0 === 1 && qs.count() === 0L,
+    assert(fs0 === 0 && qs.count() === 0L,
       s"feb/apr IN must prune all March files: read $fs0 of $total")
     // a NULL member keeps the IN unfolded (never true, only
     // null/true semantics) — answers stay correct via the plain scan
@@ -1528,9 +1534,15 @@ class MetadataAggregateRuleSpec extends AnyFunSuite with SparkTest {
     val qb = spark.sql("SELECT count(*) AS n FROM bq WHERE tp_date IN " +
       members.map(d => s"DATE'$d'").mkString("(", ", ", ")"))
     val fb = ScanAudit.filesReadAfterRun(qb)
-    assert(fb === 1,
-      s"InSet fold should scan only the null file: $fb of $total")
+    assert(fb === 0, s"InSet fold should read no file: $fb of $total")
     assert(qb.head().getLong(0) === 200L)
+    // a manifest written before ts_nulls proves nothing about the
+    // unknown-range null file: it scans on both paths (and its rows
+    // fail the filter row-level)
+    OlderManifests.dropTsNulls(spark, lake, "bq")
+    assert(ScanAudit.filesReadAfterRun(q) === 1)
+    assert(q.head().getLong(0) === 200L)
+    assert(ScanAudit.filesReadAfterRun(qs) === 1)
   }
 
   test("exactly-UTC zone spellings (Etc/UTC, Z, +00:00) SERVE; a real " +
@@ -1905,11 +1917,13 @@ class MetadataAggregateRuleSpec extends AnyFunSuite with SparkTest {
   test("decision table: every served/hybrid/declined shape of the rule, " +
       "each equal to the plain scan") {
     val lake = Lake(Files.createTempDirectory("graft_metaagg_dt").toString)
-    val spec = PartitionSpec("dtab", "p0", tpIndexColumn = Some("idx"))
     // two day-contained days and one run that crosses midnight, so
-    // day buckets and bands have contained files AND straddlers
-    for (start <- Seq("2024-03-05 00:00:00", "2024-04-11 00:00:00",
-        "2024-05-20 20:00:00")) {
+    // day buckets and bands have contained files AND straddlers. `dtns`
+    // holds the same rows with no tp_timestamp colstats, as a collected
+    // log table: its null-ts-free proof is the manifest's ts_nulls.
+    for (t <- Seq("dtab", "dtns");
+         start <- Seq("2024-03-05 00:00:00", "2024-04-11 00:00:00",
+           "2024-05-20 20:00:00")) {
       val raw = spark.range(0, 40, 1, 4).select(
         col("id").as("event_id"),
         expr(s"timestamp '$start' + " +
@@ -1919,14 +1933,21 @@ class MetadataAggregateRuleSpec extends AnyFunSuite with SparkTest {
         when(col("id") % 3 === 0, lit("alpha")).otherwise(lit("beta"))
           .as("cat"),
         // 40 × 2^51 per append: the exact sum passes 2^53
-        lit(1L << 51).as("big"))
-      lake.append(spark, "dtab", TpSchema.enrich(raw, spec))
+        lit(1L << 51).as("big"),
+        // ~2^53/100 per row: the 80 rows of the contained days sum to
+        // 0.8 × 2^53, but with the 40 straddling rows' zone bound the
+        // merged total could reach 1.2 × 2^53
+        lit(90071992547409L).as("mid"))
+      lake.append(spark, t, TpSchema.enrich(raw,
+        PartitionSpec(t, "p0", tpIndexColumn = Some("idx"))))
     }
     lake.enableColumnStats(spark, "dtab",
-      Seq("v", "cat", "big", "tp_timestamp"))
+      Seq("v", "cat", "big", "mid", "tp_timestamp"))
+    lake.enableColumnStats(spark, "dtns", Seq("v", "cat"))
     Views.register(spark, lake, Views.Filters())
-    spark.read.option("basePath", lake.tableDir("dtab"))
-      .parquet(lake.tableDir("dtab")).createOrReplaceTempView("dtab_plain")
+    for (t <- Seq("dtab", "dtns"))
+      spark.read.option("basePath", lake.tableDir(t))
+        .parquet(lake.tableDir(t)).createOrReplaceTempView(s"${t}_plain")
 
     val band = "tp_timestamp BETWEEN timestamp'2024-03-05 00:00:00' " +
       "AND timestamp'2024-05-20 22:00:00'"
@@ -1998,21 +2019,62 @@ class MetadataAggregateRuleSpec extends AnyFunSuite with SparkTest {
       // every path gates avg on its exact sum staying within 2^53
       ("avg past 2^53, contained band", "declined",
         "SELECT avg(big) AS a FROM dtab WHERE tp_timestamp BETWEEN " +
-          "timestamp'2024-03-05 00:00:00' AND timestamp'2024-03-05 23:59:59'"))
+          "timestamp'2024-03-05 00:00:00' AND timestamp'2024-03-05 23:59:59'"),
+      // the hybrid gates the MERGED total: contained sum plus the
+      // straddlers' rows × max(|min|, |max|)
+      ("avg hybrid: partials pass 2^53, merged bound does not",
+        "declined", s"SELECT count(*) AS n, avg(mid) AS a FROM dtab " +
+          s"WHERE $band"),
+      ("avg hybrid within 2^53 after the merge", "hybrid",
+        "SELECT count(*) AS n, avg(mid) AS a FROM dtab WHERE " +
+          "tp_timestamp BETWEEN timestamp'2024-04-01 00:00:00' AND " +
+          "timestamp'2024-05-20 22:00:00'"),
+      // no tp_timestamp colstats: ts_nulls in the manifest proves the
+      // contained files null-free
+      ("band without ts colstats", "hybrid",
+        s"SELECT count(*) AS n, min(v) AS lo, max(v) AS hi FROM dtns " +
+          s"WHERE $band"),
+      ("bucket day without ts colstats", "hybrid",
+        "SELECT tp_date, count(*) AS n FROM dtns GROUP BY tp_date"),
+      // a served answer's ORDER BY / LIMIT / HAVING run on the driver
+      ("sorted: GROUP BY partition ORDER BY", "served",
+        "SELECT tp_index, count(*) AS n, max(v) AS hi FROM dtab " +
+          "GROUP BY tp_index ORDER BY tp_index DESC"),
+      ("sorted: bucket month ORDER BY LIMIT", "served",
+        "SELECT date_trunc('MONTH', tp_timestamp) AS m, count(*) AS n " +
+          "FROM dtab GROUP BY date_trunc('MONTH', tp_timestamp) " +
+          "ORDER BY m DESC LIMIT 2"),
+      ("sorted: HAVING + ORDER BY an aggregate", "served",
+        "SELECT year(tp_timestamp) AS y, month(tp_timestamp) AS mo, " +
+          "count(*) AS n FROM dtab " +
+          "GROUP BY year(tp_timestamp), month(tp_timestamp) " +
+          "HAVING count(*) > 1 ORDER BY max(v), mo"))
     val nonUtcRows: Seq[(String, String, String)] = Seq(
       ("non-UTC session, bucket day", "declined",
         "SELECT tp_date, count(*) AS n FROM dtab GROUP BY tp_date"),
       ("non-UTC session, tp_date band", "declined",
         "SELECT count(*) AS n FROM dtab WHERE tp_date = DATE'2024-03-05'"))
 
-    def check(rows: Seq[(String, String, String)]): Seq[String] =
+    // `plain` names the scan each view is compared with; an ORDER BY
+    // result is compared in order, and a served one must plan as a
+    // bare local scan (no sort, no exchange)
+    def check(rows: Seq[(String, String, String)],
+        plain: String = "plain"): Seq[String] =
       rows.flatMap { case (name, want, sql) =>
         val got = decision(spark.sql(sql))
-        val plain = sql.replaceAll("FROM dtab\\b", "FROM dtab_plain")
-        val same = spark.sql(sql).collect().map(_.toString).sorted.toSeq ==
-          spark.sql(plain).collect().map(_.toString).sorted.toSeq
+        val scan = sql.replaceAll("FROM (dtab|dtns)\\b", s"FROM $$1_$plain")
+        val ordered = sql.contains("ORDER BY")
+        def rowsOf(q: String) = {
+          val r = spark.sql(q).collect().map(_.toString).toSeq
+          if (ordered) r else r.sorted
+        }
+        val same = rowsOf(sql) == rowsOf(scan)
+        val bare = !ordered || want != "served" ||
+          spark.sql(sql).queryExecution.executedPlan
+            .isInstanceOf[org.apache.spark.sql.execution.LocalTableScanExec]
         (if (got == want) Nil else Seq(s"$name: want $want, got $got")) ++
-          (if (same) Nil else Seq(s"$name: result differs from the scan"))
+          (if (same) Nil else Seq(s"$name: result differs from the scan")) ++
+          (if (bare) Nil else Seq(s"$name: not a bare local scan"))
       }
     val tzKey = "spark.sql.session.timeZone"
     val prev = spark.conf.get(tzKey)
@@ -2020,7 +2082,55 @@ class MetadataAggregateRuleSpec extends AnyFunSuite with SparkTest {
       spark.conf.set(tzKey, "America/New_York")
       check(nonUtcRows)
     } finally spark.conf.set(tzKey, prev)
-    val wrong = check(utcRows) ++ nonUtc
+
+    // `--from/--to` views: the whole-table relation under the window
+    // predicate, so every aggregate shape reaches the rule as a band.
+    // A month-aligned window covers the March and April files whole;
+    // one that ends inside the May run leaves its files straddling.
+    def windowRows(f: Views.Filters, rows: Seq[(String, String, String)])
+        : Seq[String] = {
+      Views.register(spark, lake, f)
+      for (t <- Seq("dtab", "dtns"))
+        spark.table(s"${t}_plain").where(Views.predicate(f).get)
+          .createOrReplaceTempView(s"${t}_wplain")
+      try check(rows, "wplain")
+      finally Views.register(spark, lake, Views.Filters())
+    }
+    val aligned = Views.Filters(
+      from = Some(java.sql.Timestamp.valueOf("2024-03-01 00:00:00")),
+      to = Some(java.sql.Timestamp.valueOf("2024-04-30 23:59:59")))
+    val ragged = Views.Filters(
+      from = Some(java.sql.Timestamp.valueOf("2024-04-01 00:00:00")),
+      to = Some(java.sql.Timestamp.valueOf("2024-05-21 03:00:00")))
+    val windowed =
+      windowRows(aligned, Seq(
+        ("window, whole months: count/min/max/avg", "served",
+          "SELECT count(*) AS n, min(v) AS lo, max(v) AS hi, " +
+            "avg(v) AS a FROM dtns"),
+        ("window, whole months: GROUP BY partition ORDER BY", "served",
+          "SELECT tp_index, count(*) AS n FROM dtns GROUP BY tp_index " +
+            "ORDER BY tp_index"),
+        ("window, whole months: bucket day", "served",
+          "SELECT tp_date, count(*) AS n FROM dtns GROUP BY tp_date"),
+        ("window, whole months: bucket month", "served",
+          "SELECT date_trunc('MONTH', tp_timestamp) AS m, count(*) AS n " +
+            "FROM dtab GROUP BY date_trunc('MONTH', tp_timestamp)"),
+        ("window, whole months: extra band", "served",
+          s"SELECT count(*) AS n FROM dtns WHERE $orBands"),
+        ("window, whole months: a lookup still scans", "declined",
+          "SELECT event_id, v FROM dtns WHERE v = 35"))) ++
+      windowRows(ragged, Seq(
+        ("window, straddled: count/min/max", "hybrid",
+          "SELECT count(*) AS n, min(v) AS lo, max(v) AS hi FROM dtns"),
+        ("window, straddled: GROUP BY partition", "hybrid",
+          "SELECT tp_index, count(*) AS n FROM dtns GROUP BY tp_index"),
+        ("window, straddled: bucket day", "hybrid",
+          "SELECT tp_date, count(*) AS n, sum(v) AS s FROM dtab " +
+            "GROUP BY tp_date"))) ++
+      windowRows(aligned.copy(indexes = Seq("1")), Seq(
+        ("window + --index: count", "served",
+          "SELECT count(*) AS n, max(v) AS hi FROM dtns")))
+    val wrong = check(utcRows) ++ nonUtc ++ windowed
     assert(wrong.isEmpty, wrong.mkString("\n"))
   }
 }

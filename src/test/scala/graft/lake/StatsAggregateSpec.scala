@@ -319,18 +319,24 @@ class StatsAggregateSpec extends AnyFunSuite with SparkTest {
     res.schema.fieldNames.foreach { f =>
       assert(m.getAs[Any](f) === truth.getAs[Any](f), s"field $f")
     }
-    // no tp_timestamp stats → no containment proof → everything
+    // no tp_timestamp stats: the manifest's recorded ts_nulls is the
+    // containment proof, so slices 1 and 2 answer from metadata; a
+    // manifest written before ts_nulls has no proof → everything
     // overlapping scans (correct, not accelerated)
     val lake2 = Lake(Files.createTempDirectory("graft_statsagg_tb2").toString)
     for (i <- 0 until 4) lake2.append(spark, "tb",
       slice(i)) // reuse generator; table name inside spec is "tb"
     lake2.enableColumnStats(spark, "tb", Seq("v", "event_id"))
-    val (_, scanned2) = lake2.timeBandAggregateAudited(spark, "tb",
+    def scanned2 = lake2.timeBandAggregateAudited(spark, "tb",
       java.sql.Timestamp.valueOf("2024-03-05 01:00:00"),
       java.sql.Timestamp.valueOf("2024-03-05 02:59:59"),
-      Seq("v"))
+      Seq("v"))._2
+    assert(scanned2.isEmpty,
+      "the manifest's ts_nulls proves the contained slices null-ts-free")
+    OlderManifests.dropTsNulls(spark, lake2, "tb")
     assert(scanned2.nonEmpty,
-      "without tp_timestamp stats nothing may be metadata-contained")
+      "without ts_nulls or tp_timestamp stats nothing may be " +
+        "metadata-contained")
   }
 
   test("unknown column and empty-table guards") {

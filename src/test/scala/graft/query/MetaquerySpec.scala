@@ -112,8 +112,17 @@ class MetaquerySpec extends AnyFunSuite with SparkTest {
       ".explain select count(*) as n, max(score) as mx from metrics")
     assert(served.contains("LocalTableScan"), served)
     assert(!served.contains("could be answered"), served)
-    // a tp_timestamp band that missed the HYBRID (no tp_timestamp
-    // stats → no containment proof) names that column in the hint
+    // the manifest's recorded ts_nulls proves the files null-ts-free,
+    // so a band is served with no tp_timestamp stats
+    val bandServed = Metaquery.handle(spark, lake, st,
+      ".explain select count(*) as n from metrics where " +
+        "tp_timestamp >= timestamp'2024-03-01 12:00:00'")
+    assert(bandServed.contains("LocalTableScan") &&
+      !bandServed.contains("could be answered"), bandServed)
+    // a manifest written before ts_nulls existed carries no such
+    // proof: with no tp_timestamp stats either, a tp_timestamp band
+    // misses the HYBRID and the hint names that column
+    graft.lake.OlderManifests.dropTsNulls(spark, lake, "metrics")
     val bandMiss = Metaquery.handle(spark, lake, st,
       ".explain select count(*) as n from metrics where " +
         "tp_timestamp >= timestamp'2024-03-01 12:00:00'")
