@@ -38,8 +38,23 @@ import graft.query.{Metaquery, Render, Views}
   */
 object Main {
 
+  /** The process entry. For `query`, one daemon thread reads the
+    * lake's metadata ([[Lake.prefetch]]) while the SparkSession starts:
+    * the start is mostly single-threaded class loading, so the reads
+    * use otherwise idle cores, and the session takes their results
+    * from the caches it checks first. Nothing waits for the thread,
+    * and [[run]] (the in-process entry) starts none.
+    */
   def main(args: Array[String]): Unit = {
     quietLogging()
+    if (args.headOption.contains("query")) {
+      val opts = parseArgs(args.drop(1))
+      val lake = Lake(opts.flag("lake-dir").getOrElse("lake"))
+      val t = new Thread(() => lake.prefetch(opts.positional.mkString("\n")),
+        "graft-lake-prefetch")
+      t.setDaemon(true)
+      t.start()
+    }
     val spark = SparkSession.builder()
       .appName("graft")
       .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))

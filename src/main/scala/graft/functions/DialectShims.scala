@@ -221,6 +221,11 @@ object DialectShims {
     Registered.once(spark, "dialect") {
       val reg = spark.sessionState.functionRegistry
       builders.foreach { case (name, b) =>
+        // a shim that overrides a Spark built-in (`len`, `string_agg`)
+        // drops it first: replacing a registered name logs a WARN
+        // line on stderr in every process
+        reg.dropFunction(
+          org.apache.spark.sql.catalyst.FunctionIdentifier(name))
         reg.createOrReplaceTempFunction(name, b, "built-in") }
     }
 

@@ -52,8 +52,10 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
   def hasData(spark: SparkSession, table: String): Boolean =
     tableExists(spark, table) && dataFiles(spark, table).nonEmpty
 
-  def listTables(spark: SparkSession): Seq[String] = {
-    val f = fs(spark, root)
+  def listTables(spark: SparkSession): Seq[String] =
+    listTables(fs(spark, root))
+
+  private def listTables(f: FileSystem): Seq[String] = {
     val rootPath = new Path(root)
     if (!f.exists(rootPath)) Seq.empty
     else f.listStatus(rootPath).toSeq.filter(_.isDirectory)
@@ -105,6 +107,65 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
 
   def isEvolved(spark: SparkSession, table: String): Boolean =
     fs(spark, root).exists(evolvedMarker(table))
+
+  /** Read, while a `graft query` process starts its session, the lake
+    * metadata that session will read anyway, into the JVM-wide caches
+    * it checks first: the Spark schema in each table's first data-file
+    * footer ([[Lake.footerSchema]], which [[zoneMappedRead]] consults)
+    * and, for the tables `sql` names, the [[Lake.MetaSnapshot]] that
+    * [[metaSnapshot]] serves to the metadata rule and both zone
+    * families. Named tables go first. The session never waits for this:
+    * whatever is not cached when it looks is loaded the usual way.
+    *
+    * Read-only and optimistic: a table with a pending swap-aside is
+    * skipped (the session's own read heals it), and a snapshot is
+    * stored only when the token read after the load equals the one
+    * read before it. Any failure is swallowed; the session then meets
+    * the same fault and reports it. `base` is copied with Hadoop's
+    * `FileSystem` cache disabled for the lake's scheme, so no
+    * `FileSystem` built from this private conf lands in the shared
+    * cache the session will use. No Spark job runs here.
+    */
+  private[graft] def prefetch(
+      sql: String,
+      base: org.apache.hadoop.conf.Configuration =
+        new org.apache.hadoop.conf.Configuration()): Unit =
+    try {
+      val conf = new org.apache.hadoop.conf.Configuration(base)
+      val scheme = Option(new Path(root).toUri.getScheme)
+        .getOrElse(FileSystem.getDefaultUri(conf).getScheme)
+      conf.setBoolean(s"fs.$scheme.impl.disable.cache", true)
+      val f = new Path(root).getFileSystem(conf)
+      try {
+        val named = """[A-Za-z0-9_]+""".r.findAllIn(sql.toLowerCase).toSet
+        val (queried, rest) = listTables(f).partition(t => named(t.toLowerCase))
+        def each(tables: Seq[String])(body: String => Unit): Unit =
+          tables.foreach { t =>
+            try if (!f.exists(evolvedMarker(t))) body(t)
+            catch { case scala.util.control.NonFatal(_) => () }
+          }
+        each(queried) { t =>
+          prefetchFooter(f, conf, t)
+          if (!swapAsidePending(f, t)) {
+            val snap = loadSnapshot(f, conf, t)
+            if (!swapAsidePending(f, t) && metaToken(f, t) == snap.token)
+              Lake.storeSnapshot(snapshotKey(t), snap)
+          }
+        }
+        each(rest)(prefetchFooter(f, conf, _))
+      } finally f.close()
+    } catch { case scala.util.control.NonFatal(_) => () }
+
+  private def prefetchFooter(
+      f: FileSystem, conf: org.apache.hadoop.conf.Configuration,
+      table: String): Unit =
+    // the file the session's index lists first: listDataFiles order,
+    // empty files skipped as the index skips them
+    listDataFiles(f, table).find(_.len > 0).foreach { lf =>
+      val p = f.makeQualified(new Path(lf.path))
+      Lake.footerSchema(p, lf.len, lf.modified)(
+        ManifestIO.sparkSchemaOf(conf, p))
+    }
 
   def schemaOf(spark: SparkSession, table: String): StructType =
     read(spark, table).schema
@@ -710,8 +771,11 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
     * sorted by path.
     */
   private[graft] def listDataFiles(
-      spark: SparkSession, table: String): Seq[Lake.ListedFile] = {
-    val f = fs(spark, root)
+      spark: SparkSession, table: String): Seq[Lake.ListedFile] =
+    listDataFiles(fs(spark, root), table)
+
+  private def listDataFiles(
+      f: FileSystem, table: String): Seq[Lake.ListedFile] = {
     val base = new Path(tableDir(table))
     val baseUri = base.toUri.getPath
     walkFiles(f, base).filter { lf =>
@@ -789,11 +853,21 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
     * under the table lock from every manifest/colstats open.
     */
   private[lake] def healSwapAsides(
-      spark: SparkSession, table: String): Unit = locked(table) {
-    val f = fs(spark, root)
-    Lake.recoverSwapAside(f, manifestDir(table))
-    Lake.recoverSwapAside(f, colStatsDir(table))
-  }
+      spark: SparkSession, table: String): Unit =
+    healSwapAsides(fs(spark, root), table)
+
+  private def healSwapAsides(f: FileSystem, table: String): Unit =
+    locked(table) {
+      Lake.recoverSwapAside(f, manifestDir(table))
+      Lake.recoverSwapAside(f, colStatsDir(table))
+    }
+
+  /** A manifest or sidecar swap left an aside dir (`_new`/`_old`):
+    * mid-swap in a writer, or crashed until [[healSwapAsides]] runs.
+    */
+  private def swapAsidePending(f: FileSystem, table: String): Boolean =
+    Seq(manifestDir(table), colStatsDir(table)).exists(d =>
+      f.exists(new Path(d + "_new")) || f.exists(new Path(d + "_old")))
 
   /** Per-file manifest stats (rows, min_ts, max_ts, null-ts count)
     * for exactly `files`. One output row per file; metadata-sized.
@@ -1064,8 +1138,8 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
     * dirs hold one small parquet per mutation, self-compacted at the
     * threshold.
     */
-  private def dirToken(spark: SparkSession, dir: String): String = {
-    val files = walkFiles(fs(spark, root), new Path(dir))
+  private def dirToken(f: FileSystem, dir: String): String = {
+    val files = walkFiles(f, new Path(dir))
     val h = java.security.MessageDigest.getInstance("SHA-256")
     files.sortBy(_.path).foreach { lf =>
       h.update(lf.path.getBytes("UTF-8")); h.update(lf.len.toString.getBytes)
@@ -1074,45 +1148,62 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
   }
 
   private[lake] def metaToken(spark: SparkSession, table: String): String =
-    dirToken(spark, manifestDir(table)) + "|" +
-      dirToken(spark, colStatsDir(table))
+    metaToken(fs(spark, root), table)
+
+  private def metaToken(f: FileSystem, table: String): String =
+    dirToken(f, manifestDir(table)) + "|" + dirToken(f, colStatsDir(table))
 
   /** The table's [[Lake.MetaSnapshot]] — read in-process once per
     * mutation (manifest and sidecar parts, no Spark job), then served
     * from the JVM-wide cache on a matching token (one cheap
-    * metadata-dir listing per probe).
+    * metadata-dir listing per probe). A cold `graft query` usually
+    * finds it cached already: [[prefetch]] loads it while the session
+    * starts, through the same [[loadSnapshot]], and this probe's token
+    * check decides whether that copy still holds.
     */
   private[lake] def metaSnapshot(
       spark: SparkSession, table: String): Lake.MetaSnapshot = {
-    val key = s"$root#$table"
-    val probe = metaToken(spark, table)
+    val f = fs(spark, root)
+    val key = snapshotKey(table)
+    val probe = metaToken(f, table)
     Lake.cachedSnapshot(key).filter(_.token == probe) match {
       case Some(hit) => Lake.noteHit(key); hit
       case None =>
         Lake.noteMiss(key)
         val snap = locked(table) {
-          healSwapAsides(spark, table)
-          // token re-read AFTER healing (the heal may swap the dirs)
-          val token = metaToken(spark, table)
-          val conf = spark.sessionState.newHadoopConf()
-          // r19 optimization: direct driver-side manifest read — the
-          // probe already collects to a Map, so the Spark read+shuffle
-          // job bought nothing (metadata-sized dir by construction)
-          val manifest: Map[String, Lake.ManifestStat] =
-            ManifestIO.readManifest(conf, manifestDir(table))
-              .groupBy(_.file).valuesIterator.map(_.maxBy(_.seq))
-              .filter(_.rows >= 0L)
-              .map(r => r.file ->
-                Lake.ManifestStat(r.rows, r.minTs, r.maxTs, r.tsNulls))
-              .toMap
-          // the sidecar the same way: newest-seq rows folded
-          // in-process, no schema-inference job, no shuffle aggregate
-          val sidecar = ManifestIO.readSidecar(conf, colStatsDir(table))
-          Lake.MetaSnapshot(token, manifest, sidecar)
+          healSwapAsides(f, table)
+          // token read AFTER healing (the heal may swap the dirs)
+          loadSnapshot(f, spark.sessionState.newHadoopConf(), table)
         }
         Lake.storeSnapshot(key, snap)
         snap
     }
+  }
+
+  private def snapshotKey(table: String): String = s"$root#$table"
+
+  /** Read the table's manifest and sidecar into a snapshot stamped with
+    * the token read before them. The one loader behind [[metaSnapshot]]
+    * and [[prefetch]]; it neither heals nor caches.
+    */
+  private[lake] def loadSnapshot(
+      f: FileSystem, conf: org.apache.hadoop.conf.Configuration,
+      table: String): Lake.MetaSnapshot = {
+    val token = metaToken(f, table)
+    // r19 optimization: direct driver-side manifest read — the probe
+    // already collects to a Map, so the Spark read+shuffle job bought
+    // nothing (metadata-sized dir by construction)
+    val manifest: Map[String, Lake.ManifestStat] =
+      ManifestIO.readManifest(conf, manifestDir(table))
+        .groupBy(_.file).valuesIterator.map(_.maxBy(_.seq))
+        .filter(_.rows >= 0L)
+        .map(r => r.file ->
+          Lake.ManifestStat(r.rows, r.minTs, r.maxTs, r.tsNulls))
+        .toMap
+    // the sidecar the same way: newest-seq rows folded in-process, no
+    // schema-inference job, no shuffle aggregate
+    val sidecar = ManifestIO.readSidecar(conf, colStatsDir(table))
+    Lake.MetaSnapshot(token, manifest, sidecar)
   }
 
   /** Files whose NEWEST manifest row is a tombstone — dead by
@@ -1931,6 +2022,11 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
     * candidates, so the prunings compose. Both zone families load
     * lazily and only when a pushed conjunct references them, so a
     * filter-free scan pays nothing.
+    *
+    * The data schema comes from the first listed file's footer through
+    * the [[Lake.footerSchema]] cache, checked before any read: a cold
+    * `graft query` finds it there from [[prefetch]], and a long session
+    * re-registering views reads each footer once.
     */
   private def zoneMappedRead(
       spark: SparkSession, table: String,
@@ -1975,9 +2071,11 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
     // metadata — read it driver-side (~ms) instead of the 1-task
     // inferSchema job every lake read used to launch; the job path
     // stays as the fallback for foreign files.
+    val head = leafFiles.head
     val dataSchema = forceNullable(
-      ManifestIO.sparkSchemaOf(
-          spark.sessionState.newHadoopConf(), leafFiles.head.getPath)
+      Lake.footerSchema(head.getPath, head.getLen, head.getModificationTime)(
+          ManifestIO.sparkSchemaOf(
+            spark.sessionState.newHadoopConf(), head.getPath))
         .orElse(fmt
           .inferSchema(spark, Map.empty[String, String], leafFiles.take(1)))
         .getOrElse(return plain))
@@ -2352,13 +2450,36 @@ object Lake {
     */
   private[lake] val MetaSnapshotCacheMax = 64
 
-  private val metaSnapshots =
-    new java.util.LinkedHashMap[String, MetaSnapshot](
-      16, 0.75f, /* accessOrder = */ true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, MetaSnapshot]): Boolean =
-        size() > MetaSnapshotCacheMax
+  /** An access-ordered map that drops its eldest entry past `max`. */
+  private def lru[K, V](max: Int): java.util.LinkedHashMap[K, V] =
+    new java.util.LinkedHashMap[K, V](16, 0.75f, /* accessOrder = */ true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
+        size() > max
     }
+
+  private val metaSnapshots = lru[String, MetaSnapshot](MetaSnapshotCacheMax)
+
+  /** Spark schemas read from data-file footers, keyed by (qualified
+    * path, length, mtime): data files are immutable and uuid-named, so
+    * a key never names two contents. One entry per table in practice
+    * (the file its read binds the schema from), capped like the
+    * snapshots.
+    */
+  private val footerSchemas =
+    lru[(String, Long, Long), StructType](MetaSnapshotCacheMax)
+
+  /** The footer schema of `file` from the cache, else from `read`;
+    * a schema read is cached, a miss (None) is not.
+    */
+  private[lake] def footerSchema(file: Path, len: Long, mtime: Long)(
+      read: => Option[StructType]): Option[StructType] = {
+    val key = (file.toString, len, mtime)
+    footerSchemas.synchronized(Option(footerSchemas.get(key))).orElse {
+      val got = read
+      got.foreach(st => footerSchemas.synchronized(footerSchemas.put(key, st)))
+      got
+    }
+  }
 
   /** Per-(root#table) (hits, misses) — the probe-memoization pin. */
   private val metaCacheCounters =

@@ -5,6 +5,8 @@ import java.sql.{Date, Timestamp}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.LocalTableScanExec
 import org.apache.spark.sql.types._
 
@@ -17,11 +19,12 @@ import org.apache.spark.sql.types._
   * csv/json/line STREAM through `toLocalIterator` — the driver holds
   * one partition at a time; a result already in memory (a local
   * relation, like a metadata-served aggregate) is read in place, with
-  * no Spark job — and the `*To` variants write each rendered
-  * row straight to the output sink, so a huge result never accumulates
-  * in driver memory (the String convenience wrappers DO buffer; the CLI
-  * uses the streaming forms). `table` must buffer to compute column
-  * widths and is capped at `maxRows`.
+  * no Spark job and no generated code (`table` too) — and the `*To`
+  * variants write each rendered row straight to the output sink, so a
+  * huge result never accumulates in driver memory (the String
+  * convenience wrappers DO buffer; the CLI uses the streaming forms).
+  * `table` must buffer to compute column widths and is capped at
+  * `maxRows`.
   */
 object Render {
 
@@ -157,14 +160,27 @@ object Render {
     }
   }
 
-  /** `df`'s rows in order: read in place when the executed plan is a
-    * local table scan held in memory (`toLocalIterator` would launch a
-    * job to stream rows already at hand), else streamed.
+  /** `df`'s rows in order: [[localRows]] when it has them, else
+    * streamed.
     */
   private def rows(df: DataFrame): Iterator[Row] =
+    localRows(df).getOrElse(df.toLocalIterator().asScala)
+
+  /** `df`'s rows when its executed plan is a local table scan held in
+    * memory (a metadata-served aggregate, a literal row), converted in
+    * place: no job, and no generated code. `collect()` would compile
+    * two projections (the scan's unsafe projection and the row
+    * deserializer) to hand back one row; the type converters build the
+    * same external values — the ones `collect()` returns — without
+    * compiling anything.
+    */
+  private[query] def localRows(df: DataFrame): Option[Iterator[Row]] =
     df.queryExecution.executedPlan match {
-      case _: LocalTableScanExec => df.collect().iterator
-      case _ => df.toLocalIterator().asScala
+      case scan: LocalTableScanExec =>
+        val toRow = CatalystTypeConverters.createToScalaConverter(
+          DataTypeUtils.fromAttributes(scan.output))
+        Some(scan.rows.iterator.map(r => toRow(r).asInstanceOf[Row]))
+      case _ => None
     }
 
   private def buffered(body: Appendable => Unit): String = {
@@ -176,8 +192,9 @@ object Render {
   /** ASCII table with a box border (interactive display; buffered). */
   def table(df: DataFrame, maxRows: Int = 10000): String = {
     val cols = df.columns.toSeq
-    val rows = df.limit(maxRows).collect().toSeq
-      .map(_.toSeq.map(cell))
+    val limited = df.limit(maxRows)
+    val rows = localRows(limited).getOrElse(limited.collect().iterator)
+      .map(_.toSeq.map(cell)).toSeq
     renderTable(cols +: rows, headerRow = true)
   }
 

@@ -879,6 +879,18 @@ object StreamIngest {
       sample: DataFrame, keyCol: String, tsCol: String,
       horizonSecs: Long, rowScale: Double,
       bucketed: Boolean, heapRowsPerPartition: Long,
+      windowSecs: Long): StreamSizing =
+    weightedState(sample, count(lit(1)), keyCol, tsCol, horizonSecs,
+      rowScale, bucketed, heapRowsPerPartition, windowSecs)
+
+  /** [[autoState]] with each sample row counting `rowCount`'s share:
+    * `count(lit(1))` counts rows, `sum(w)` weights each row by its own
+    * extrapolation factor (see [[sampledJoinSizing]]).
+    */
+  private def weightedState(
+      sample: DataFrame, rowCount: Column, keyCol: String, tsCol: String,
+      horizonSecs: Long, rowScale: Double,
+      bucketed: Boolean, heapRowsPerPartition: Long,
       windowSecs: Long): StreamSizing = {
     val spark = sample.sparkSession
     // ONE bounded two-level aggregate over the sample yields every
@@ -897,7 +909,7 @@ object StreamIngest {
     // and uniform keys give c2 = 1/K exactly — while a skewed stream
     // concentrates c2 in its hot keys and needs coarser triggers.
     val d = sample.where(col(tsCol).isNotNull)
-      .groupBy(col(keyCol)).agg(count(lit(1)).as("c"),
+      .groupBy(col(keyCol)).agg(rowCount.as("c"),
         min(col(tsCol)).as("mn"), max(col(tsCol)).as("mx"))
       .agg(sum(col("c")).as("n"),
         count(col(keyCol)).as("k"),
@@ -906,14 +918,15 @@ object StreamIngest {
         ((unix_micros(max(col("mx")).cast("timestamp")) -
           unix_micros(min(col("mn")).cast("timestamp"))) / 1000000L)
           .cast("long").as("span")).head()
-    val nSample = if (d.isNullAt(0)) 0L else d.getLong(0)
+    // counts are longs, weighted counts doubles
+    def num(i: Int): Double = d.getAs[Number](i).doubleValue
+    val nSample = if (d.isNullAt(0)) 0.0 else num(0)
     val n = math.round(nSample * math.max(1.0, rowScale))
     val k = math.max(1L, if (d.isNullAt(1)) 1L else d.getLong(1))
     val span = if (d.isNullAt(4)) 0L else d.getLong(4)
-    val topShare = if (nSample <= 0L) 0.0
-      else d.getLong(2).toDouble / nSample
-    val c2 = if (nSample <= 0L) 1.0 / k
-      else d.getDouble(3) / (nSample.toDouble * nSample)
+    val topShare = if (nSample <= 0.0) 0.0 else num(2) / nSample
+    val c2 = if (nSample <= 0.0) 1.0 / k
+      else d.getDouble(3) / (nSample * nSample)
     val maxP = math.max(1, spark.sparkContext.defaultParallelism)
     // salt when the hottest key alone would out-fill its fair share
     // of the machine by ≥ MinSaltFactor; spread it over ~topShare·maxP
@@ -1109,14 +1122,18 @@ object StreamIngest {
   /** Two-sided interval-join sizing from INBOX SAMPLES (r20, r19
     * verdict task 1): sample each side via [[inboxSample]] (first/last
     * by mtime + evenly spaced middles), project both to `(k, t)` with
-    * `mapSide`, blend the byte ratios into `rowScale`, and derive the
-    * state layout with [[autoState]]. Through r19 the qi22/24/27
+    * `mapSide`, weight each side's rows by that side's own byte ratio,
+    * and derive the state layout with [[autoState]]'s weighted form.
+    * One ratio blended over both inboxes would extrapolate a side of
+    * thin rows by the other side's ratio: with a fully-sampled inbox
+    * of thin rows beside a partly-sampled one of fat rows, the blend
+    * counts the thin rows several times over. Through r19 the qi22/24/27
     * sizing pass parsed BOTH full inboxes before the stream started —
     * at a 100 TB/day feed that sizing pass IS a day's scan (the r13
     * rehearsal measured the analogous full parse at 15% of a 10M-event
     * drain). On an inbox small enough that the sample covers every
     * file, the derivation is IDENTICAL to the full-parse one by
-    * construction (sample = whole inbox, rowScale = 1) —
+    * construction (sample = whole inbox, every weight 1) —
     * StreamIngestSpec pins that equivalence, which is what lets the
     * bench queries use the at-scale path without an oracle risk:
     * sizing outputs only shape state layout, never rows.
@@ -1128,11 +1145,16 @@ object StreamIngest {
       mapSide: DataFrame => DataFrame,
       horizonSecs: Long, bucketed: Boolean = false,
       sampleFiles: Int = 4): StreamSizing = {
-    val (ls, lb, ltb) = inboxSample(spark, leftDir, leftSchema, sampleFiles)
-    val (rs, rb, rtb) = inboxSample(spark, rightDir, rightSchema, sampleFiles)
-    val scale = (ltb + rtb).toDouble / math.max(1L, lb + rb)
-    autoState(mapSide(ls).unionByName(mapSide(rs)), "k", "t",
-      horizonSecs, rowScale = scale, bucketed = bucketed)
+    def side(dir: String, schema: StructType): DataFrame = {
+      val (sample, sampled, total) =
+        inboxSample(spark, dir, schema, sampleFiles)
+      mapSide(sample).withColumn("w",
+        lit(math.max(1.0, total.toDouble / math.max(1L, sampled))))
+    }
+    weightedState(side(leftDir, leftSchema)
+        .unionByName(side(rightDir, rightSchema)), sum(col("w")),
+      "k", "t", horizonSecs, rowScale = 1.0, bucketed = bucketed,
+      heapRowsPerPartition = BucketedStateRowsPerPartition, windowSecs = 0L)
   }
 
   /** Streaming exact dedup with bounded state: drops rows whose key was

@@ -130,4 +130,23 @@ class JobBudgetSpec extends AnyFunSuite with SparkTest {
     assert(out === want)
     assert(jobs === 1, s"windowed lookup launched $jobs job(s)")
   }
+
+  test("after a lake prefetch, the served count still runs no job and " +
+      "the --from/--to lookup exactly one") {
+    val served = "SELECT count(*) AS n, min(tp_timestamp) AS lo, " +
+      "max(tp_timestamp) AS hi FROM web"
+    val lookup = "SELECT req_id, user, bytes FROM web WHERE user = 'u3' " +
+      "ORDER BY req_id LIMIT 100"
+    val want = Render.csv(plain.agg(count(lit(1)).as("n"),
+      min(TpSchema.Timestamp).as("lo"), max(TpSchema.Timestamp).as("hi")))
+    lake.prefetch(served)
+    val (rc, out, jobs) = query(served)
+    assert(rc === 0, out)
+    assert(out === want)
+    assert(jobs === 0, s"metadata-served aggregate launched $jobs job(s)")
+    lake.prefetch(lookup)
+    val (rc2, out2, jobs2) = query(lookup, "--from", From, "--to", To)
+    assert(rc2 === 0, out2)
+    assert(jobs2 === 1, s"windowed lookup launched $jobs2 job(s)")
+  }
 }

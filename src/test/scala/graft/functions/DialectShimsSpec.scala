@@ -202,4 +202,42 @@ class DialectShimsSpec extends AnyFunSuite with SparkTest {
         "('2024-01-01') v(s)").queryExecution.executedPlan.toString
     assert(!plan.contains("BatchEvalPython") && !plan.contains("ScalaUDF"))
   }
+
+  test("registration logs no WARN, and the overriding shims still win") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{Configurator, Property}
+    val warns = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val probe = new AbstractAppender("shim-warn-probe", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN))
+          warns.add(s"${e.getLoggerName}: ${e.getMessage.getFormattedMessage}")
+    }
+    probe.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val rootCfg = ctx.getConfiguration.getRootLogger
+    val registry =
+      "org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry"
+    val before = LogManager.getLogger(registry).getLevel
+    // the registry's warnings must reach the probe whatever the
+    // configured levels are
+    Configurator.setLevel(registry, Level.WARN)
+    rootCfg.addAppender(probe, Level.WARN, null)
+    ctx.updateLoggers()
+    val fresh = spark.newSession()
+    try DialectShims.register(fresh)
+    finally {
+      rootCfg.removeAppender("shim-warn-probe")
+      ctx.updateLoggers()
+      Configurator.setLevel(registry, before)
+      probe.stop()
+    }
+    assert(warns.isEmpty, warns)
+    // duckdb: len('hello') = 5 as BIGINT (Spark's own len is INT)
+    assert(fresh.sql("SELECT len('hello')").head().get(0) == 5L)
+    assert(fresh.sql("SELECT string_agg(x, '|') FROM VALUES ('a'),('b') " +
+      "AS t(x)").head().getString(0) == "a|b")
+  }
 }

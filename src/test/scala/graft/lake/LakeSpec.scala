@@ -1699,4 +1699,24 @@ class LakeSpec extends AnyFunSuite with SparkTest {
     assert(res.chunksProcessed == 4)
     assert(lake.read(spark, "e2e").count() == 35)
   }
+
+  test("prefetch caches the first data file's footer schema, the one " +
+      "lake.read binds") {
+    val lake = newLake()
+    lake.append(spark, "t", sampleBatch(100))
+    lake.prefetch("")
+    val f = new org.apache.hadoop.fs.Path(lake.root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val first = lake.listDataFiles(spark, "t").find(_.len > 0).get
+    val footer = Lake.footerSchema(
+        f.makeQualified(new org.apache.hadoop.fs.Path(first.path)),
+        first.len, first.modified)(fail("the footer schema was not cached"))
+      .get
+    val read = lake.read(spark, "t").schema
+    val partitionCols = Seq("tp_partition", "tp_index", "tp_year", "tp_month")
+    assert(read.fieldNames.toSeq ===
+      footer.fieldNames.toSeq ++ partitionCols)
+    assert(read.fields.take(footer.size).map(_.dataType).toSeq ===
+      footer.fields.map(_.dataType).toSeq)
+  }
 }

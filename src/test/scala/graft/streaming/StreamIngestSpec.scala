@@ -525,6 +525,51 @@ class StreamIngestSpec extends AnyFunSuite with SparkTest {
     assert(sampled.rows == 120 && sampled.keys == 14, sampled)
   }
 
+  test("sampledJoinSizing scales each side by its own byte ratio") {
+    // lopsided inboxes: 12 files of 10 fat rows beside 2 files of 100
+    // thin rows. The sample takes 4 of the fat files (byte ratio 3) and
+    // both thin ones (ratio 1); one blended ratio (about 2.3 here)
+    // would extrapolate the fully-read thin side too
+    val root = Files.createTempDirectory("graft_sjs_lop").toString
+    def writeSide(name: String, files: Int, rows: Int, pad: Int,
+        keyBase: Int): String = {
+      val d = new java.io.File(root, name); d.mkdirs()
+      (0 until files).foreach { i =>
+        val f = new java.io.File(d, s"chunk$i.json")
+        val w = new java.io.PrintWriter(f)
+        // fixed-width lines: every file of a side has the same size
+        try (0 until rows).foreach { j =>
+          val k = keyBase + (i * rows + j) % 7
+          w.println(f"""{"user_id": $k, "ts": "2024-03-01 $i%02d:""" +
+            f"""${j % 60}%02d:00", "pad": "${"x" * pad}"}""")
+        } finally w.close()
+        f.setLastModified(1700000000000L + i * 60000L); ()
+      }
+      d.getPath
+    }
+    val lDir = writeSide("fat", files = 12, rows = 10, pad = 400, keyBase = 100)
+    val rDir = writeSide("thin", files = 2, rows = 100, pad = 0, keyBase = 200)
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("user_id",
+        org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("ts",
+        org.apache.spark.sql.types.StringType)))
+    val mapSide = (d: org.apache.spark.sql.DataFrame) =>
+      d.select(col("user_id").as("k"), to_timestamp(col("ts")).as("t"))
+    val sampled = StreamIngest.sampledJoinSizing(spark,
+      lDir, schema, rDir, schema, mapSide,
+      horizonSecs = 7200L, bucketed = true)
+    val full = StreamIngest.autoState(
+      mapSide(spark.read.schema(schema).json(lDir))
+        .unionByName(mapSide(spark.read.schema(schema).json(rDir))),
+      "k", "t", horizonSecs = 7200L, rowScale = 1.0, bucketed = true)
+    // 4 sampled fat files × 10 rows × 3 + 200 thin rows × 1
+    assert(full.rows == 320, full)
+    assert(sampled.rows == full.rows, s"sampled=$sampled full=$full")
+    assert(sampled.keys == full.keys && sampled.spanSecs == full.spanSecs,
+      s"sampled=$sampled full=$full")
+  }
+
   test("legacy flat-marker sweep runs once per commit root, not per batch") {
     val root = Files.createTempDirectory("graft_markers_sweep").toString
     val commits = new org.apache.hadoop.fs.Path(s"$root/_stream_commits")
