@@ -329,18 +329,14 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
     */
   def syncCatalogStats(
       spark: SparkSession, table: String): Option[(Long, Long)] = {
-    val live = fileStats(spark, table, reconcileWithListing = false)
-    val tot = live.agg(sum("rows")).head()
-    if (tot.isNullAt(0) || tot.getLong(0) <= 0L) return None
-    val rows = tot.getLong(0)
+    val live = liveManifest(spark, table, reconcileWithListing = false)
+    val rows = live.map(_.rows).sum
+    if (rows <= 0L) return None
     val f = fs(spark, root)
-    val sampled = live.select(col("file"), col("rows"))
-      .where(col("rows") > 0).limit(4).collect()
-      .flatMap { r =>
-        scala.util.Try(
-          (f.getFileStatus(new Path(r.getString(0))).getLen,
-            r.getLong(1))).toOption
-      }
+    val sampled = live.filter(_.rows > 0).take(4).flatMap { r =>
+      scala.util.Try((f.getFileStatus(new Path(r.file)).getLen, r.rows))
+        .toOption
+    }
     val bytesPerRow =
       if (sampled.isEmpty) 64.0 // no reachable file: nominal row width
       else sampled.map(_._1).sum.toDouble /
@@ -400,40 +396,27 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
     }
   }
 
-  /** `input_file_name()` → the scheme-less, percent-decoded path form
-    * manifest rows use — as a Column expression, because colstats
-    * seeding is a DISTRIBUTED write (files × columns rows at 100 TB;
-    * the collect-based java.net.URI normalization statsFor uses is
-    * fine per-append but not per-table).
-    */
-  private def normalizedFileCol(c: Column): Column =
-    // url_decode applies FORM semantics ('+' → space), but the rest of
-    // the lake normalizes via java.net.URI.getPath, which percent-
-    // decodes only — a literal '+' in a path (escapePathName doesn't
-    // escape it) must survive. Pre-escaping '+' to %2B makes
-    // url_decode's form rule unreachable while %XX decoding (including
-    // the re-escaped %2B → '+') stays exact (r16 ADVICE: the mismatch
-    // silently dropped such files from merged CBO stats forever).
-    url_decode(regexp_replace(regexp_replace(regexp_replace(c,
-      "^[a-zA-Z][a-zA-Z0-9+.-]*://[^/]*", ""),
-      "^[a-zA-Z][a-zA-Z0-9+.-]*:/", "/"),
-      "\\+", "%2B"))
-
-  /** One scan of exactly `files` → per-(file, column) stat rows
-    * appended to the sidecar: HLL sketch (int/long/string/binary
-    * natively, everything else through a string cast — NDV is
-    * cast-invariant), null count, row count, string length sums and
-    * numeric min/max as doubles (mergeable forms of avgLen/maxLen and
-    * range bounds).
+  /** Per-(file, column) stat rows for exactly `files`, appended to the
+    * sidecar as one part: HLL sketch (int/long/string/binary natively,
+    * everything else through a string cast — NDV is cast-invariant),
+    * null count, row count, string length sums and numeric min/max as
+    * doubles (mergeable forms of avgLen/maxLen and range bounds).
+    *
+    * One scan and one `groupBy(file)` aggregate computes every stats
+    * column at once; its result (one row per file, metadata the
+    * table's [[metaSnapshot]] holds in driver memory anyway) is
+    * collected and split into per-column rows on the driver, and
+    * [[ManifestIO.writeSidecar]] writes them without a Spark job. The
+    * read of `files` lists nothing and infers nothing
+    * ([[knownFilesRead]]), so the pass is one aggregate: two jobs
+    * under adaptive execution, however many columns.
     */
   private def appendColStats(
       spark: SparkSession, table: String,
       files: Seq[String], allColumns: Seq[String]): Unit = {
     if (files.isEmpty || allColumns.isEmpty) return
     val seqNo = nextSeq(spark, table)
-    val src = spark.read.option("basePath", tableDir(table))
-      .parquet(files: _*)
-      .withColumn("__file", normalizedFileCol(input_file_name()))
+    val src = readFiles(spark, table, statusesOf(spark, files))
     val schema = src.schema
     // a marker written before the first append (fresh-table
     // stats_columns) may name columns the data turned out not to
@@ -457,57 +440,65 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
         case ByteType | ShortType | IntegerType | LongType => true
         case _ => false
       }
+      def none(t: String): Column = lit(null).cast(t)
       Seq(
-        hll_sketch_agg(sketchIn).as(s"__sk_$c"),
+        hll_sketch_agg(sketchIn),
+        sum(when(col(c).isNull, 1L).otherwise(0L)),
+        if (isStr) sum(length(col(c)).cast("long")) else none("long"),
+        if (isStr) max(length(col(c)).cast("long")) else none("long"),
+        if (isNum) min(col(c).cast("double")) else none("double"),
+        if (isNum) max(col(c).cast("double")) else none("double"),
+        // string zone maps: lexicographic per-file range — prunes
+        // source/URL/category predicates the numeric range can't
+        if (isStr) min(col(c)) else none("string"),
+        if (isStr) max(col(c)) else none("string"),
         // per-file KLL quantile sketch (numeric only): the mergeable
         // distribution feed for CatalogColumnStat.histogram — CBO's
-        // answer to skewed-value filter selectivity (r16 task 4)
-        (if (isNum) graft.functions.KllFns.kllAgg(spark, col(c))
-         else max(lit(null).cast("binary"))).as(s"__kll_$c"),
+        // answer to skewed-value filter selectivity
+        if (isNum) graft.functions.KllFns.kllAgg(spark, col(c))
+        else none("binary"),
         // per-file frequent-items sketch (string columns only): the
         // mergeable "top talkers" feed — exact while never evicting,
         // which is the metadata serve gate (TopKFns)
-        (if (isStr) graft.functions.TopKFns.topkSketchAgg(spark, col(c))
-         else max(lit(null).cast("binary"))).as(s"__mg_$c"),
-        sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"__nl_$c"),
-        (if (isStr) sum(length(col(c)).cast("long"))
-         else max(lit(null).cast("long"))).as(s"__sl_$c"),
-        (if (isStr) max(length(col(c)).cast("long"))
-         else max(lit(null).cast("long"))).as(s"__ml_$c"),
-        (if (isNum) min(col(c).cast("double"))
-         else min(lit(null).cast("double"))).as(s"__mn_$c"),
-        (if (isNum) max(col(c).cast("double"))
-         else max(lit(null).cast("double"))).as(s"__mx_$c"),
-        // string zone maps: lexicographic per-file range — prunes
-        // source/URL/category predicates the numeric range can't
-        (if (isStr) min(col(c))
-         else min(lit(null).cast("string"))).as(s"__ms_$c"),
-        (if (isStr) max(col(c))
-         else max(lit(null).cast("string"))).as(s"__xs_$c"),
+        if (isStr) graft.functions.TopKFns.topkSketchAgg(spark, col(c))
+        else none("binary"),
         // per-file value sum (integral columns only): integer addition
         // is order-independent, so per-file sums merge into an EXACT
         // table sum — the metadata-aggregate feed for sum(int_col).
         // DECIMAL(38,0) accumulation: a long sum could overflow (ANSI
         // would fail the ingest); the fold converts back at answer time
-        (if (isIntegral) sum(col(c).cast("decimal(38,0)"))
-         else max(lit(null).cast("decimal(38,0)"))).as(s"__sv_$c"))
+        if (isIntegral) sum(col(c).cast("decimal(38,0)"))
+        else none("decimal(38,0)"))
     }
-    val allAggs = count(lit(1)).as("__n") +: aggs
-    val perFile = src.groupBy(col("__file"))
-      .agg(allAggs.head, allAggs.tail: _*)
-    val rows = columns.map { c =>
-      perFile.select(
-        col("__file").as("file"), lit(c).as("column"),
-        col(s"__sk_$c").as("sketch"), col(s"__nl_$c").as("nulls"),
-        col("__n").as("n"), col(s"__sl_$c").as("sum_len"),
-        col(s"__ml_$c").as("max_len"), col(s"__mn_$c").as("min_d"),
-        col(s"__mx_$c").as("max_d"), col(s"__ms_$c").as("min_s"),
-        col(s"__xs_$c").as("max_s"), col(s"__kll_$c").as("kll"),
-        col(s"__mg_$c").as("mg"),
-        col(s"__sv_$c").as("sum_v"), lit(seqNo).as("seq"))
-    }.reduce(_.unionByName(_))
-    rows.coalesce(1).write.mode(SaveMode.Append)
-      .parquet(colStatsDir(table))
+    val perFile = src.groupBy(input_file_name())
+      .agg(count(lit(1)), aggs: _*)
+      .collect()
+    // input_file_name() yields percent-encoded URIs; java.net.URI
+    // .getPath strips scheme and authority and decodes, landing on the
+    // manifest's path form (see statsForScan)
+    val paths = perFile.map(r => new java.net.URI(r.getString(0)).getPath)
+    val width = aggs.length / columns.length
+    // column-major: one column's rows (and sketches) side by side
+    // compress better
+    val rows = columns.zipWithIndex.flatMap { case (c, i) =>
+      val at = 2 + i * width
+      perFile.toSeq.zip(paths).map { case (r, file) =>
+        def opt[T](j: Int): Option[T] =
+          if (r.isNullAt(at + j)) None else Some(r.getAs[T](at + j))
+        (file, c) -> Lake.SideStat(
+          sketch = opt[Array[Byte]](0), nulls = r.getLong(at + 1),
+          n = r.getLong(1),
+          sumLen = opt[Long](2), maxLen = opt[Long](3),
+          minD = opt[Double](4), maxD = opt[Double](5),
+          minS = opt[String](6), maxS = opt[String](7),
+          kll = opt[Array[Byte]](8), mg = opt[Array[Byte]](9),
+          sumV = opt[java.math.BigDecimal](10)
+            .map(d => BigInt(d.toBigIntegerExact)),
+          seq = seqNo)
+      }
+    }
+    ManifestIO.writeSidecar(
+      spark.sessionState.newHadoopConf(), colStatsDir(table), rows)
   }
 
   /** Enable incremental column stats for `columns`: ONE seeding scan
@@ -523,8 +514,8 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
       columns: Seq[String]): Unit = locked(table) {
     require(columns.nonEmpty, "enableColumnStats: no columns given")
     val f = fs(spark, root)
-    val live = fileStats(spark, table, reconcileWithListing = false)
-      .select("file").collect().map(_.getString(0)).toSeq
+    val live = liveManifest(spark, table, reconcileWithListing = false)
+      .map(_.file)
     if (live.nonEmpty) {
       val schema = read(spark, table).schema
       columns.foreach(c => require(schema.fieldNames.contains(c),
@@ -897,8 +888,7 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
       spark: SparkSession, table: String,
       files: Seq[String]): Seq[ManifestIO.FileStat] =
     {
-      val raw = spark.read
-        .option("basePath", tableDir(table)).parquet(files: _*)
+      val raw = readFiles(spark, table, statusesOf(spark, files))
         .select(col(TpSchema.Timestamp))
         .withColumn("file", input_file_name())
         .groupBy("file")
@@ -926,11 +916,10 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
     * removed, sharing the columns so old and new manifest files mix
     * without schema merging and `max_by(seq)` reconciliation makes the
     * newest row win. A mutation's added and removed sets are disjoint,
-    * so one `seq` covers both halves — and one `coalesce(1)` parquet
-    * append (plus, when files were added, one narrow pruned scan of
-    * just those files for rowcount + min/max tp_timestamp) is the
-    * mutation's entire manifest cost; the r13 shape paid two append
-    * jobs per overwrite. With every removal path tombstoning, the
+    * so one `seq` covers both halves — and one driver-written part
+    * (the added files' row counts and tp_timestamp ranges come from
+    * their footers, see [[statsFor]]) is the mutation's entire
+    * manifest cost; the r13 shape paid two append jobs per overwrite. With every removal path tombstoning, the
     * manifest alone answers "what files are live" and planning never
     * needs a live recursive listing (verdict r12 task 4) — the listing
     * reconciliation remains as [[fileStats]]' local-FS mode and
@@ -951,9 +940,10 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
     // ManifestIO readers both consume mixed old/new dirs.
     ManifestIO.writeManifest(spark.sessionState.newHadoopConf(),
       manifestDir(table), statsRows ++ tombRows)
-    // incremental column stats, when enabled: the same added files,
-    // one extra scan of exactly them (removals need nothing — merge
-    // time semi-joins against the live manifest)
+    // incremental column stats, when enabled: one aggregate over
+    // exactly the added files, every stats column at once, written as
+    // one driver-side sidecar part (removals need nothing — merge time
+    // semi-joins against the live manifest)
     val csCols = colStatsColumns(spark, table)
     if (csCols.nonEmpty && added.nonEmpty)
       appendColStats(spark, table, added, csCols)
@@ -961,18 +951,21 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
   }
 
   /** Collapse the manifest to its newest-row-per-file live shape once
-    * it exceeds `manifestCompactThreshold` files — one `coalesce(1)`
-    * append per mutation is the right write shape, but a
-    * mutation-heavy table that is never vacuumed accumulates one tiny
-    * parquet file per mutation and every planning read
-    * ([[manifestMaxSeq]], [[fileStats]]) then opens N small files
-    * (r14 verdict task 4). This is vacuum's rewrite minus the listing
-    * reconciliation (pure metadata, no filesystem walk), under the
-    * same table lock and the same aside→in→drop swap (a crash at any
-    * point leaves the old or the new manifest whole). Stats are
-    * IDENTICAL before and after by construction: fileStats reads
-    * newest-per-file and drops tombstoned files, which is exactly the
-    * row set this rewrite keeps.
+    * it exceeds `manifestCompactThreshold` files — one part per
+    * mutation is the right write shape, but a mutation-heavy table that
+    * is never vacuumed accumulates one tiny parquet file per mutation
+    * and every planning read ([[manifestMaxSeq]], [[fileStats]]) then
+    * opens N small files (r14 verdict task 4). The colstats sidecar
+    * accumulates the same way and collapses at the same threshold to
+    * its snapshot's live rows (newest row per (file, column), dead
+    * files dropped). This is vacuum's rewrite minus the listing
+    * reconciliation (pure metadata, no filesystem walk): both dirs are
+    * written on the driver ([[ManifestIO.writeManifest]],
+    * [[ManifestIO.writeSidecar]]), no Spark job, under the same table
+    * lock and the same aside→in→drop swap (a crash at any point leaves
+    * the old or the new dir whole). Stats are IDENTICAL before and
+    * after by construction: fileStats reads newest-per-file and drops
+    * tombstoned files, which is exactly the row set this rewrite keeps.
     */
   private def maybeCompactManifest(
       spark: SparkSession, table: String): Unit = {
@@ -994,11 +987,13 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
       if (!filesys.rename(src, dst))
         throw new java.io.IOException(
           s"manifest swap rename failed: $src -> $dst")
-    def swap(dir: Path, rows: DataFrame): Unit = {
+    // `write` fills the `_new` aside (tmp + _SUCCESS), then the
+    // aside→in→drop renames put it in place
+    def swap(dir: Path)(write: String => Unit): Unit = locked(table) {
       val tmp = new Path(dir.toString + "_new")
       val old = new Path(dir.toString + "_old")
-      rows.coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(tmp.toString)
+      filesys.delete(tmp, true)
+      write(tmp.toString)
       filesys.delete(old, true)
       if (filesys.exists(dir)) renameOrThrow(dir, old)
       renameOrThrow(tmp, dir)
@@ -1007,51 +1002,45 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
     }
     healSwapAsides(spark, table)
     val mdir = new Path(manifestDir(table))
-    if (countFiles(mdir) > manifestCompactThreshold) locked(table) {
-      // r19: the live manifest rows are reconciled driver-side now —
-      // write the compacted dir directly (tmp + _SUCCESS + the same
-      // aside→in→drop renames), no Spark job
+    if (countFiles(mdir) > manifestCompactThreshold) swap(mdir) { tmp =>
       val seqNo = nextSeq(spark, table)
       val rows = ManifestIO.readManifest(
           spark.sessionState.newHadoopConf(), manifestDir(table))
         .groupBy(_.file).valuesIterator.map(_.maxBy(_.seq))
         .filter(_.rows >= 0L)
         .map(_.copy(seq = seqNo)).toSeq
-      val tmp = new Path(mdir.toString + "_new")
-      val old = new Path(mdir.toString + "_old")
-      filesys.delete(tmp, true)
-      ManifestIO.writeManifest(
-        spark.sessionState.newHadoopConf(), tmp.toString, rows)
-      filesys.delete(old, true)
-      if (filesys.exists(mdir)) renameOrThrow(mdir, old)
-      renameOrThrow(tmp, mdir)
-      filesys.delete(old, true)
-      ()
+      ManifestIO.writeManifest(spark.sessionState.newHadoopConf(), tmp, rows)
     }
-    // the colstats sidecar accumulates the same way (one file per
-    // mutation on an enabled table): same threshold, same swap —
-    // newest row per (file, column), dead files dropped
     val cdir = new Path(colStatsDir(table))
-    if (countFiles(cdir) > manifestCompactThreshold) locked(table) {
-      swap(cdir, liveSidecar(spark, table))
+    if (countFiles(cdir) > manifestCompactThreshold) swap(cdir) { tmp =>
+      // column-major, as appendColStats writes its parts
+      ManifestIO.writeSidecar(spark.sessionState.newHadoopConf(), tmp,
+        liveSidecarRows(spark, table).sortBy { case ((f, c), _) => (c, f) })
     }
   }
 
   /** The snapshot's newest-seq sidecar rows for files the manifest
-    * holds live, as a local DataFrame in [[Lake.SidecarSchema]] — the
-    * metadata-sized input of the sidecar compaction and the
-    * catalog-stats merge.
+    * holds live — the metadata-sized input of the sidecar compaction
+    * and, as a local DataFrame in [[Lake.SidecarSchema]]
+    * ([[liveSidecar]]), of the catalog-stats merge.
     */
-  private def liveSidecar(spark: SparkSession, table: String): DataFrame = {
+  private def liveSidecarRows(
+      spark: SparkSession, table: String)
+      : Seq[((String, String), Lake.SideStat)] = {
     val snap = metaSnapshot(spark, table)
-    val rows = snap.sidecar.toSeq.collect {
-      case ((file, column), s) if snap.manifest.contains(file) =>
-        Row(file, column, s.sketch.orNull, s.nulls, s.n,
-          s.sumLen.map(Long.box).orNull, s.maxLen.map(Long.box).orNull,
-          s.minD.map(Double.box).orNull, s.maxD.map(Double.box).orNull,
-          s.minS.orNull, s.maxS.orNull, s.kll.orNull, s.mg.orNull,
-          s.sumV.map(v => new java.math.BigDecimal(v.bigInteger)).orNull,
-          s.seq)
+    snap.sidecar.toSeq.filter { case ((file, _), _) =>
+      snap.manifest.contains(file)
+    }
+  }
+
+  private def liveSidecar(spark: SparkSession, table: String): DataFrame = {
+    val rows = liveSidecarRows(spark, table).map { case ((file, column), s) =>
+      Row(file, column, s.sketch.orNull, s.nulls, s.n,
+        s.sumLen.map(Long.box).orNull, s.maxLen.map(Long.box).orNull,
+        s.minD.map(Double.box).orNull, s.maxD.map(Double.box).orNull,
+        s.minS.orNull, s.maxS.orNull, s.kll.orNull, s.mg.orNull,
+        s.sumV.map(v => new java.math.BigDecimal(v.bigInteger)).orNull,
+        s.seq)
     }
     spark.createDataFrame(rows.asJava, Lake.SidecarSchema)
   }
@@ -1081,12 +1070,16 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
     *    LakeSpec pins the two modes equal across every mutation path.
     */
   def fileStats(spark: SparkSession, table: String): DataFrame =
-    fileStats(spark, table,
-      reconcileWithListing = isLocalFs(fs(spark, root)))
+    fileStatsOf(spark, liveManifest(spark, table))
 
   def fileStats(
       spark: SparkSession, table: String,
-      reconcileWithListing: Boolean): DataFrame = {
+      reconcileWithListing: Boolean): DataFrame =
+    fileStatsOf(spark, liveManifest(spark, table, reconcileWithListing))
+
+  /** `rows`, manifest rows, as a [[fileStats]] DataFrame. */
+  private[lake] def fileStatsOf(
+      spark: SparkSession, rows: Seq[ManifestIO.MRow]): DataFrame = {
     val schema = StructType(Seq(
       StructField("file", StringType),
       StructField("rows", org.apache.spark.sql.types.LongType,
@@ -1094,11 +1087,16 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
       StructField("min_ts", org.apache.spark.sql.types.TimestampType),
       StructField("max_ts", org.apache.spark.sql.types.TimestampType)))
     spark.createDataFrame(
-      liveManifest(spark, table, reconcileWithListing).map(r =>
-        org.apache.spark.sql.Row(
-          r.file, r.rows, r.minTs.orNull, r.maxTs.orNull)).asJava,
+      rows.map(r => org.apache.spark.sql.Row(
+        r.file, r.rows, r.minTs.orNull, r.maxTs.orNull)).asJava,
       schema)
   }
+
+  /** [[liveManifest]] in [[fileStats]]' default liveness mode. */
+  private[lake] def liveManifest(
+      spark: SparkSession, table: String): Seq[ManifestIO.MRow] =
+    liveManifest(spark, table,
+      reconcileWithListing = isLocalFs(fs(spark, root)))
 
   /** The newest manifest row of every live file — [[fileStats]]' rows
     * with every recorded field, `ts_nulls` included.
@@ -1251,17 +1249,9 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
     def keep(m: Lake.ManifestStat): Boolean =
       to.forall(t => m.minTs.forall(_.compareTo(t) <= 0)) &&
         from.forall(t => m.maxTs.forall(_.compareTo(t) >= 0))
-    readFiles(spark, table,
-      dataFiles(spark, table).filter(f => manifest.get(f).forall(keep)))
+    readFiles(spark, table, listDataFiles(spark, table)
+      .filter(f => manifest.get(f.path).forall(keep)))
   }
-
-  /** A plain read of exactly `files` (partition columns kept); no file
-    * at all reads the table's schema with no rows.
-    */
-  private def readFiles(
-      spark: SparkSession, table: String, files: Seq[String]): DataFrame =
-    if (files.isEmpty) read(spark, table).where(lit(false))
-    else spark.read.option("basePath", tableDir(table)).parquet(files: _*)
 
   /** ZONE-MAP pruned read over ANY numeric column with colstats
     * enabled — the generalization of [[readPruned]]'s tp_timestamp
@@ -1310,8 +1300,8 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
     if (!fs(spark, root).exists(new Path(colStatsDir(table))))
       return read(spark, table)
     val sidecar = metaSnapshot(spark, table).sidecar
-    readFiles(spark, table, dataFiles(spark, table)
-      .filter(f => sidecar.get((f, column)).forall(keep)))
+    readFiles(spark, table, listDataFiles(spark, table)
+      .filter(f => sidecar.get((f.path, column)).forall(keep)))
   }
 
   /** JOIN-KEY file skipping: the runtime-filter move at the FILE
@@ -1579,8 +1569,7 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
 
     // ---- residual scan: ONE aggregate job over exactly the gap ----
     if (planned.toScan.nonEmpty) {
-      val files = spark.read.option("basePath", tableDir(table))
-        .parquet(planned.toScan.map(_.path): _*)
+      val files = readFiles(spark, table, planned.toScan)
       val df = band.fold(files) { case (from, to) =>
         files.where(col(TpSchema.Timestamp) >= lit(from) &&
           col(TpSchema.Timestamp) <= lit(to))
@@ -2013,75 +2002,117 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
     * a predicate over it, so the metadata-aggregate rule always sees
     * the table it answers for.
     *
-    * The index takes its leaf files from `listed`, the caller's walk
-    * of the table, as located statuses (scans schedule worse without
-    * block locations), and re-walks on refresh — it never lists
-    * through Spark, so no parallel-listing job however many
-    * directories a level holds (see [[ListedStatusCache]]). Partition
-    * pruning happens inside `listFiles` before the zone maps see the
-    * candidates, so the prunings compose. Both zone families load
-    * lazily and only when a pushed conjunct references them, so a
-    * filter-free scan pays nothing.
-    *
-    * The data schema comes from the first listed file's footer through
-    * the [[Lake.footerSchema]] cache, checked before any read: a cold
-    * `graft query` finds it there from [[prefetch]], and a long session
-    * re-registering views reads each footer once.
+    * The relation is [[knownFilesRead]] over `listed`, the caller's
+    * walk of the table, re-walked on refresh: no listing or inference
+    * job. Partition pruning happens inside `listFiles` before the zone
+    * maps see the candidates, so the prunings compose. Both zone
+    * families load lazily and only when a pushed conjunct references
+    * them, so a filter-free scan pays nothing.
     */
   private def zoneMappedRead(
       spark: SparkSession, table: String,
+      listed: Seq[Lake.ListedFile]): DataFrame =
+    knownFilesRead(spark, table, listed, () => listDataFiles(spark, table),
+      idx => new ZoneMapFileIndex(idx,
+        () => loadZoneMaps(spark, table),
+        () => loadTsZones(spark, table),
+        owner = (this, table),
+        // pin the freshness token NOW: the index just took the walk's
+        // listing, so the first listFiles needn't re-list
+        initialToken = metaToken(spark, table),
+        // and the session: freshness probes must use the conf of the
+        // session that owns this relation, not whichever session is
+        // active at listFiles time (multi-session JVM)
+        owningSession = spark))
+      .getOrElse(spark.read.option("basePath", tableDir(table))
+        .parquet(tableDir(table)))
+
+  /** A plain read of exactly `listed`, some of a table's data files as
+    * a walk or a stat found them (partition columns kept), with no
+    * listing or inference job: [[knownFilesRead]] over them. An
+    * evolved table keeps the schema-merging read, which infers from
+    * every footer; no file at all reads the table's schema with no
+    * rows.
+    */
+  private[lake] def readFiles(
+      spark: SparkSession, table: String,
       listed: Seq[Lake.ListedFile]): DataFrame = {
+    def sparkRead = spark.read.option("basePath", tableDir(table))
+    if (listed.isEmpty) read(spark, table).where(lit(false))
+    else if (isEvolved(spark, table))
+      sparkRead.option("mergeSchema", "true").parquet(listed.map(_.path): _*)
+    else knownFilesRead(spark, table, listed, () => listed)
+      .getOrElse(sparkRead.parquet(listed.map(_.path): _*))
+  }
+
+  /** A DataFrame over exactly `listed` through an `InMemoryFileIndex`
+    * rooted at the table dir, whose leaf files are `listed` as located
+    * statuses (scans schedule worse without block locations) and, after
+    * a refresh, `relist()` — it never lists through Spark, so no
+    * parallel-listing job however many directories the files span (see
+    * [[ListedStatusCache]]). `wrap` may put another index over it (the
+    * zone maps). Partition columns come from the leaf paths, as a
+    * `basePath` read derives them.
+    *
+    * The data schema comes from the first leaf's footer through the
+    * [[Lake.footerSchema]] cache, checked before any read: a cold
+    * `graft query` finds it there from [[prefetch]], and a long session
+    * re-registering views reads each footer once. Spark-written
+    * footers carry the catalyst schema in key-value metadata; a
+    * foreign file falls back to Spark's one-task inference. None when
+    * the index holds no file or no schema can be read; callers then
+    * read through Spark. Non-evolved tables only: their files share
+    * one schema (the drift check enforces it at ingest).
+    */
+  private def knownFilesRead(
+      spark: SparkSession, table: String, listed: Seq[Lake.ListedFile],
+      relist: () => Seq[Lake.ListedFile],
+      wrap: org.apache.spark.sql.execution.datasources.InMemoryFileIndex =>
+        org.apache.spark.sql.execution.datasources.FileIndex = identity)
+      : Option[DataFrame] = {
     import org.apache.spark.sql.execution.datasources.{
       HadoopFsRelation, InMemoryFileIndex}
     import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-    def plain: DataFrame =
-      spark.read.option("basePath", tableDir(table)).parquet(tableDir(table))
     val dir = fs(spark, root).makeQualified(new Path(tableDir(table)))
     def leaves(files: Seq[Lake.ListedFile]) =
       Map(dir -> locatedStatuses(spark, files).toArray)
     val idx = new InMemoryFileIndex(spark, Seq(dir),
       Map("basePath" -> tableDir(table)), None,
-      new ListedStatusCache(leaves(listed),
-        () => leaves(listDataFiles(spark, table))))
+      new ListedStatusCache(leaves(listed), () => leaves(relist())))
     val leafFiles = idx.allFiles()
-    if (leafFiles.isEmpty) return plain
-    val zoneIdx = new ZoneMapFileIndex(idx,
-      () => loadZoneMaps(spark, table),
-      () => loadTsZones(spark, table),
-      owner = (this, table),
-      // pin the freshness token NOW: the index above just took the
-      // walk's listing, so the first listFiles needn't re-list
-      initialToken = metaToken(spark, table),
-      // and the session: freshness probes must use the conf of the
-      // session that owns this relation, not whichever session is
-      // active at listFiles time (multi-session JVM)
-      owningSession = spark)
-    // non-evolved tables have a uniform file schema (the drift check
-    // enforces it at ingest), so one footer yields the data schema.
-    // Read it through the FileStatus, NOT a path string: a Hive-escaped
-    // partition value ('%3A' etc.) does not survive the
+    if (leafFiles.isEmpty) return None
+    // Read the footer through the FileStatus, NOT a path string: a
+    // Hive-escaped partition value ('%3A' etc.) does not survive the
     // Path→String→DataFrameReader round-trip (the '%' re-escapes).
-    // Partition columns stay out of it (footer holds data columns only).
-    // Force nullability the way DataFrameReader does: a footer written
-    // from a non-nullable batch marks the field REQUIRED, and binding
-    // that schema table-wide would let Catalyst fold `col IS NULL` to
-    // false even though OTHER files hold nulls.
+    // Partition columns stay out of it (footer holds data columns
+    // only). Force nullability the way DataFrameReader does: a footer
+    // written from a non-nullable batch marks the field REQUIRED, and
+    // binding that schema table-wide would let Catalyst fold
+    // `col IS NULL` to false even though OTHER files hold nulls.
     val fmt = new ParquetFileFormat
-    // r19: Spark-written footers carry the catalyst schema in KV
-    // metadata — read it driver-side (~ms) instead of the 1-task
-    // inferSchema job every lake read used to launch; the job path
-    // stays as the fallback for foreign files.
     val head = leafFiles.head
-    val dataSchema = forceNullable(
-      Lake.footerSchema(head.getPath, head.getLen, head.getModificationTime)(
-          ManifestIO.sparkSchemaOf(
-            spark.sessionState.newHadoopConf(), head.getPath))
-        .orElse(fmt
-          .inferSchema(spark, Map.empty[String, String], leafFiles.take(1)))
-        .getOrElse(return plain))
-    val relation = HadoopFsRelation(zoneIdx, idx.partitionSchema,
-      dataSchema, None, fmt, Map.empty)(spark)
-    spark.baseRelationToDataFrame(relation)
+    Lake.footerSchema(head.getPath, head.getLen, head.getModificationTime)(
+        ManifestIO.sparkSchemaOf(
+          spark.sessionState.newHadoopConf(), head.getPath))
+      .orElse(fmt
+        .inferSchema(spark, Map.empty[String, String], leafFiles.take(1)))
+      .map { schema =>
+        spark.baseRelationToDataFrame(HadoopFsRelation(wrap(idx),
+          idx.partitionSchema, forceNullable(schema), None, fmt,
+          Map.empty)(spark))
+      }
+  }
+
+  /** `files`, bare data-file paths, with the length and modification
+    * time one stat each finds.
+    */
+  private[lake] def statusesOf(
+      spark: SparkSession, files: Seq[String]): Seq[Lake.ListedFile] = {
+    val f = fs(spark, root)
+    files.map { p =>
+      val st = f.getFileStatus(new Path(p))
+      Lake.ListedFile(p, st.getLen, st.getModificationTime)
+    }
   }
 
   /** `files` as the statuses a Hadoop listing returns for them: fully

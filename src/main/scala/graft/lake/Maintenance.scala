@@ -22,9 +22,9 @@ import org.apache.spark.sql.functions._
 object Maintenance {
 
   /** Planning observability for the rehearsal: how many manifest rows
-    * the last [[compact]] call's driver-side planner actually
-    * collected vs the table's live-file total — the r16 task-7 bound
-    * (candidates only, zero at the compaction fixed point).
+    * the last [[compact]] call planned to rewrite (the rows of the
+    * directories that need work) vs the table's live-file total — the
+    * r16 task-7 bound (zero at the compaction fixed point).
     */
   final case class PlanProbe(manifestRows: Long, collectedRows: Long)
   @volatile var lastCompactPlan: PlanProbe = PlanProbe(0L, 0L)
@@ -79,10 +79,14 @@ object Maintenance {
 
   /** Compaction (compact.go:80-89, 264-434): merge small files and
     * rewrite time-ordered where per-file time ranges overlap. Planning
-    * runs on the manifest (metadata-sized, driver-side — the
-    * reference's sweep, partition_key.go:96-170); the rewrite is ONE
-    * pruned read + ONE dynamic-overwrite write covering every partition
-    * dir that needs work. Returns (filesBefore, filesAfter).
+    * runs on the driver over the live manifest rows (metadata-sized,
+    * no Spark job — the reference's sweep, partition_key.go:96-170);
+    * the rewrite is ONE pruned read + ONE dynamic-overwrite write
+    * covering every partition dir that needs work, whatever their
+    * number (a shuffle and a write: two jobs per regime), and the
+    * mutation's manifest and colstats append adds one stats aggregate
+    * over the new files (two jobs, see `Lake.appendColStats`). Returns
+    * (filesBefore, filesAfter).
     */
   def compact(
       spark: SparkSession, lake: Lake, table: String,
@@ -94,53 +98,23 @@ object Maintenance {
     // object stores it trusts tombstones — fileStats scaladoc). The
     // only listings below are SCOPED to the rewritten dirs.
     //
-    // The driver collects only CANDIDATE dirs' rows (r16 task 7): the
-    // work predicate is pre-evaluated AS A DATAFRAME — per-dir file
-    // count vs the target-implied ideal exactly, overlap via a
-    // running-max window (a conservative SUPERSET of the exact
-    // consecutive-pair check, re-run driver-side below on the
-    // survivors). A 10⁵–10⁶-file table at its compaction fixed point
-    // collects ZERO rows where it used to materialize every manifest
-    // row; worst case (every dir needs work) equals the old cost —
-    // and then the rewrite dwarfs planning anyway.
-    val st = lake.fileStats(spark, table)
-    val before = st.count()
-    val dirCol = regexp_replace(col("file"), "/[^/]*$", "")
-    val win = org.apache.spark.sql.expressions.Window
-      .partitionBy("dir").orderBy("min_ts")
-      .rowsBetween(org.apache.spark.sql.expressions.Window
-        .unboundedPreceding, -1)
-    val candidateDirs = st.withColumn("dir", dirCol)
-      .withColumn("ovl",
-        col("min_ts") < max("max_ts").over(win))
-      .groupBy("dir").agg(
-        count(lit(1)).as("nf"), sum("rows").as("nr"),
-        max(when(col("ovl"), 1).otherwise(0)).as("anyovl"))
-      .where(col("nf") =!=
-        greatest(lit(1L), ceil(col("nr") / lit(targetFileRows.toDouble))) ||
-        col("anyovl") === 1)
-      .select("dir")
-    val stats = st.withColumn("dir", dirCol)
-      .join(broadcast(candidateDirs), "dir").drop("dir")
-      .collect().map(r =>
-        FileRange(r.getAs[String]("file"), r.getAs[Long]("rows"),
-          Option(r.getAs[Timestamp]("min_ts")),
-          Option(r.getAs[Timestamp]("max_ts"))))
-    lastCompactPlan = PlanProbe(before, stats.length.toLong)
-    val byDir = stats.groupBy(f => dirOf(lake, table, f.file))
-    // a dir needs work when its file count differs from what the
-    // target size implies (too many small files OR too-large files) or
-    // its file time-ranges overlap. "length > 1" alone would rewrite
-    // every large multi-file dir on every run — compaction must reach
-    // a fixed point, or post-collect auto-compaction rewrites the
-    // whole table after each ingest batch. (Exact predicate, re-run on
-    // the pre-filtered candidates — the DataFrame filter above may
-    // only over-approximate.)
-    val work = byDir.filter { case (_, fs) =>
-      val rows = fs.map(_.rows).sum
-      val ideal = math.max(1, math.ceil(rows.toDouble / targetFileRows).toInt)
-      fs.length != ideal || hasOverlap(fs.toSeq)
-    }
+    // Planning runs on the driver over the live manifest rows, which
+    // it holds anyway: no Spark job. A dir needs work when its file
+    // count differs from what the target size implies (too many small
+    // files OR too-large files) or its file time-ranges overlap.
+    // "length > 1" alone would rewrite every large multi-file dir on
+    // every run — compaction must reach a fixed point, or post-collect
+    // auto-compaction rewrites the whole table after each ingest batch.
+    val live = lake.liveManifest(spark, table)
+    val before = live.size.toLong
+    val work = live.map(r => FileRange(r.file, r.rows, r.minTs, r.maxTs))
+      .groupBy(f => dirOf(lake, table, f.file))
+      .filter { case (_, fs) =>
+        val rows = fs.map(_.rows).sum
+        val ideal = math.max(1, math.ceil(rows.toDouble / targetFileRows).toInt)
+        fs.length != ideal || hasOverlap(fs)
+      }
+    lastCompactPlan = PlanProbe(before, work.values.map(_.length).sum.toLong)
     if (work.isEmpty) return (before, before)
 
     // Two rewrite regimes, split by per-dir volume (partition_stress
@@ -225,8 +199,9 @@ object Maintenance {
       anchorUs: Long = 0L): (Long, Long) = lake.locked(table) {
     require(grainUs > 0, "compactAligned: grain must be positive")
     replayPendingRemovals(spark, lake, table)
-    val st = lake.fileStats(spark, table)
-    val before = st.count()
+    val live = lake.liveManifest(spark, table)
+    val before = live.size.toLong
+    val st = lake.fileStatsOf(spark, live)
     val dirCol = regexp_replace(col("file"), "/[^/]*$", "")
     // bucket ids of each file's manifest range: floor division, exact
     // in double (micros stay under 2^53 through year ~2255 and every
@@ -845,10 +820,7 @@ object Maintenance {
           s"${files.size} snapshot file(s) were removed since backup " +
           s"${backup.getName} (compaction/retention) — first: " +
           missing.take(3).mkString(", "))
-    val base = spark.read.option("basePath", lake.tableDir(table))
-    val reader = if (lake.isEvolved(spark, table))
-      base.option("mergeSchema", "true") else base
-    reader.parquet(files: _*)
+    lake.readFiles(spark, table, lake.statusesOf(spark, files))
   }
 
   /** Manifest backup dirs of a table, oldest → newest (stamp order). */

@@ -40,6 +40,9 @@ import org.apache.spark.sql.catalyst.util.DateTimeUtils
   *    the manifest dir (tmp-name + rename, same crash contract as the
   *    committer's rename), byte-compatible with the Spark-written
   *    manifest schema so old and new files mix freely.
+  *  - [[writeSidecar]]: the same for a `_graft_colstats` part — the
+  *    per-(file, column) rows a mutation's one stats aggregate
+  *    collected, or a compacted sidecar's live rows.
   *  - [[readManifest]] / [[maxSeq]]: direct reads of the manifest rows
   *    (both INT96- and INT64-timestamp vintages); maxSeq comes from
   *    footer stats alone — no data pages touched.
@@ -50,8 +53,9 @@ import org.apache.spark.sql.catalyst.util.DateTimeUtils
   *
   * Everything here is exact-equivalence plumbing: ManifestIOSpec pins
   * footer stats == scan stats (including all-null and null-mixed
-  * timestamp files), write→Spark-read round-trips, and readSidecar ==
-  * Spark read + newest-seq fold across sidecar vintages.
+  * timestamp files), write→Spark-read round-trips, readSidecar ==
+  * Spark read + newest-seq fold across sidecar vintages, and
+  * writeSidecar → readSidecar / Spark read round-trips.
   */
 private[lake] object ManifestIO {
 
@@ -83,38 +87,112 @@ private[lake] object ManifestIO {
       |}""".stripMargin)
 
   /** Write one manifest parquet file with `rows` into `dir` (created if
-    * absent). Tmp-name + rename so readers never observe a partial file
-    * — the same visibility contract as Spark's commit rename.
+    * absent), under [[writePart]]'s visibility contract.
     */
   def writeManifest(
       conf: Configuration, dir: String,
-      rows: Seq[MRow]): Unit = {
-    val uuid = java.util.UUID.randomUUID().toString
-    val tmp = new Path(s"$dir/.part-$uuid.snappy.parquet.tmp")
-    val dst = new Path(s"$dir/part-$uuid-graft.snappy.parquet")
-    val writer = ExampleParquetWriter.builder(
-        org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(tmp, conf))
-      .withConf(conf)
-      .withType(ManifestSchema)
-      .withCompressionCodec(CompressionCodecName.SNAPPY)
-      .build()
-    val gf = new SimpleGroupFactory(ManifestSchema)
-    try rows.foreach { r =>
-      val g = gf.newGroup()
+      rows: Seq[MRow]): Unit =
+    writePart(conf, dir, ManifestSchema, Map.empty, rows) { (g, r) =>
       g.append("file", Binary.fromString(r.file))
       g.append("rows", r.rows)
       r.minTs.foreach(t => g.append("min_ts", DateTimeUtils.fromJavaTimestamp(t)))
       r.maxTs.foreach(t => g.append("max_ts", DateTimeUtils.fromJavaTimestamp(t)))
       g.append("seq", r.seq)
       r.tsNulls.foreach(n => g.append("ts_nulls", n))
+    }
+
+  /** The parquet form of [[Lake.SidecarSchema]], as Spark writes it:
+    * every field optional, `sum_v` a 16-byte DECIMAL(38,0).
+    */
+  private val SidecarParquet: MessageType = MessageTypeParser.parseMessageType(
+    """message spark_schema {
+      |  optional binary file (UTF8);
+      |  optional binary column (UTF8);
+      |  optional binary sketch;
+      |  optional int64 nulls;
+      |  optional int64 n;
+      |  optional int64 sum_len;
+      |  optional int64 max_len;
+      |  optional double min_d;
+      |  optional double max_d;
+      |  optional binary min_s (UTF8);
+      |  optional binary max_s (UTF8);
+      |  optional binary kll;
+      |  optional binary mg;
+      |  optional fixed_len_byte_array(16) sum_v (DECIMAL(38,0));
+      |  optional int64 seq;
+      |}""".stripMargin)
+
+  /** Write one `_graft_colstats` part with `rows` into `dir`, under
+    * [[writePart]]'s visibility contract: the [[readSidecar]] twin.
+    * The footer carries [[Lake.SidecarSchema]] as Spark's row
+    * metadata, so a Spark read of a directory mixing these parts with
+    * Spark-written ones infers the same schema from either.
+    */
+  def writeSidecar(
+      conf: Configuration, dir: String,
+      rows: Seq[((String, String), Lake.SideStat)]): Unit =
+    writePart(conf, dir, SidecarParquet,
+        Map(SparkRowMetadata -> Lake.SidecarSchema.json), rows) {
+      case (g, ((file, column), s)) =>
+        g.append("file", Binary.fromString(file))
+        g.append("column", Binary.fromString(column))
+        s.sketch.foreach(b => g.append("sketch", Binary.fromConstantByteArray(b)))
+        g.append("nulls", s.nulls)
+        g.append("n", s.n)
+        s.sumLen.foreach(g.append("sum_len", _))
+        s.maxLen.foreach(g.append("max_len", _))
+        s.minD.foreach(g.append("min_d", _))
+        s.maxD.foreach(g.append("max_d", _))
+        s.minS.foreach(v => g.append("min_s", Binary.fromString(v)))
+        s.maxS.foreach(v => g.append("max_s", Binary.fromString(v)))
+        s.kll.foreach(b => g.append("kll", Binary.fromConstantByteArray(b)))
+        s.mg.foreach(b => g.append("mg", Binary.fromConstantByteArray(b)))
+        s.sumV.foreach(v => g.append("sum_v", decimal16(v)))
+        g.append("seq", s.seq)
+    }
+
+  /** `v` as DECIMAL(38,0)'s 16-byte big-endian two's complement. */
+  private def decimal16(v: BigInt): Binary = {
+    val raw = v.toByteArray
+    require(raw.length <= 16, s"colstats sum_v $v overflows decimal(38,0)")
+    val out = Array.fill[Byte](16)(if (v.signum < 0) -1 else 0)
+    System.arraycopy(raw, 0, out, 16 - raw.length, raw.length)
+    Binary.fromConstantByteArray(out)
+  }
+
+  private val SparkRowMetadata = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** Write one snappy parquet part of `schema` with `rows` into `dir`
+    * (created if absent). Tmp-name + rename so readers never observe a
+    * partial file — the same visibility contract as Spark's commit
+    * rename — then a `_SUCCESS` marker, as a Spark write leaves one.
+    */
+  private def writePart[R](
+      conf: Configuration, dir: String, schema: MessageType,
+      meta: Map[String, String], rows: Seq[R])(fill: (Group, R) => Unit): Unit = {
+    val uuid = java.util.UUID.randomUUID().toString
+    val tmp = new Path(s"$dir/.part-$uuid.snappy.parquet.tmp")
+    val dst = new Path(s"$dir/part-$uuid-graft.snappy.parquet")
+    val writer = ExampleParquetWriter.builder(
+        org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(tmp, conf))
+      .withConf(conf)
+      .withType(schema)
+      .withExtraMetaData(meta.asJava)
+      .withCompressionCodec(CompressionCodecName.SNAPPY)
+      .build()
+    val gf = new SimpleGroupFactory(schema)
+    try rows.foreach { r =>
+      val g = gf.newGroup()
+      fill(g, r)
       writer.write(g)
     } finally writer.close()
     val fs = dst.getFileSystem(conf)
     if (!fs.rename(tmp, dst)) {
       fs.delete(tmp, false)
-      throw new java.io.IOException(s"manifest rename failed: $tmp -> $dst")
+      throw new java.io.IOException(s"metadata part rename failed: $tmp -> $dst")
     }
-    // preserve the Spark-writer invariant that a COMPLETE manifest dir
+    // preserve the Spark-writer invariant that a COMPLETE metadata dir
     // carries a _SUCCESS marker — healSwapAsides discriminates a
     // finished `_new` from a partial one by exactly this file
     val marker = new Path(s"$dir/_SUCCESS")
@@ -344,7 +422,7 @@ private[lake] object ManifestIO {
       val r = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
       try {
         Option(r.getFooter.getFileMetaData.getKeyValueMetaData
-            .get("org.apache.spark.sql.parquet.row.metadata"))
+            .get(SparkRowMetadata))
           .map(org.apache.spark.sql.types.DataType.fromJson)
           .collect { case s: org.apache.spark.sql.types.StructType => s }
       } finally r.close()

@@ -1,6 +1,6 @@
 package graft.cli
 
-import java.io.{ByteArrayOutputStream, PrintStream}
+import java.io.{ByteArrayOutputStream, File, PrintStream, PrintWriter}
 import java.nio.file.Files
 
 import org.apache.spark.JobCounter
@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTest
 import graft.config.PartitionSpec
-import graft.lake.{Lake, TpSchema}
+import graft.lake.{Lake, SidecarReference, TpSchema}
 import graft.query.Render
 
 /** The Spark-job budget of a cold `graft query`: lake metadata (the
@@ -20,6 +20,11 @@ import graft.query.Render
   * query, however many files the window keeps. Jobs are counted with a listener around an
   * in-process `Main.run`, and the rows must equal the plain-scan
   * answer.
+  *
+  * The write path has budgets too: a `collect` of a JSONL chunk set
+  * into a table with 4 stats columns, a `compact`, and the
+  * `table analyze --columns` seed. After each, the colstats sidecar
+  * must equal a reference aggregate of the live files.
   */
 class JobBudgetSpec extends AnyFunSuite with SparkTest {
 
@@ -148,5 +153,120 @@ class JobBudgetSpec extends AnyFunSuite with SparkTest {
     val (rc2, out2, jobs2) = query(lookup, "--from", From, "--to", To)
     assert(rc2 === 0, out2)
     assert(jobs2 === 1, s"windowed lookup launched $jobs2 job(s)")
+  }
+
+  // ---- write path ------------------------------------------------------
+
+  private val StatsCols = Seq("req_id", "user", "bytes", "tp_index")
+
+  private def write(f: File, text: String): Unit = {
+    f.getParentFile.mkdirs()
+    val w = new PrintWriter(f, "UTF-8")
+    try w.print(text) finally w.close()
+  }
+
+  /** Chunk set `round` of the JSONL source, replacing the inbox's
+    * previous one: 4 chunks of 90 rows over 3 months and 2 accounts
+    * (about 60 rows per partition dir and collect), with null and
+    * empty-string users and null byte counts.
+    */
+  private def stage(dir: File, round: Int): Unit = {
+    Option(new File(dir, "inbox").listFiles).foreach(_.foreach(_.delete()))
+    (0 until 4).foreach { c =>
+      val lines = (0 until 90).map { j =>
+        val id = round * 1000 + c * 100 + j
+        val ts = java.time.Instant.parse("2024-01-01T00:00:00Z")
+          .plusSeconds(id.toLong * 104729L % (90L * 86400L))
+        val user = id % 11 match {
+          case 0 => "null"
+          case 1 => "\"\""
+          case k => "\"u" + k + "\""
+        }
+        val bytes = if (id % 13 == 0) "null" else (id * 37L % 5000L).toString
+        s"""{"ts":"$ts","req_id":$id,"user":$user,"bytes":$bytes,""" +
+          s""""account":"a${id % 2}"}"""
+      }
+      write(new File(dir, s"inbox/chunk_${round}_$c.jsonl"),
+        lines.mkString("", "\n", "\n"))
+    }
+  }
+
+  /** A config dir with one JSONL-fed table `http` whose stats columns
+    * are [[StatsCols]], and a lake holding its first collect.
+    */
+  private def writeFixture(): File = {
+    val dir = Files.createTempDirectory("graft_jobs_write").toFile
+    write(new File(dir, "config/http.tpc"),
+      s"""table "http" {
+         |  column "tp_timestamp" { source = "ts" }
+         |  column "req_id" { type = "bigint" }
+         |  column "user" { type = "varchar" }
+         |  column "bytes" { type = "bigint" }
+         |  column "account" { type = "varchar" }
+         |  stats_columns = [${StatsCols.map("\"" + _ + "\"").mkString(", ")}]
+         |}
+         |partition "http" "main" {
+         |  tp_index = "account"
+         |  source "file" {
+         |    paths = ["${dir.getPath}/inbox/"]
+         |  }
+         |}
+         |""".stripMargin)
+    stage(dir, 0)
+    val (rc, out, _) = cliJobs(dir, collectArgs: _*)
+    assert(rc === 0 && out.contains("Collected http.main: 360 rows"), out)
+    dir
+  }
+
+  private val collectArgs = Seq("collect", "http.main", "--compact", "false",
+    "--progress", "false", "--from", "2024-01-01T00:00:00")
+
+  /** (rc, stdout, jobs launched) of one in-process CLI call over the
+    * write fixture's lake and config.
+    */
+  private def cliJobs(dir: File, args: String*): (Int, String, Int) = {
+    val bos = new ByteArrayOutputStream()
+    val (rc, jobs) = JobCounter.count(spark.sparkContext) {
+      Main.run(spark, args ++ Seq("--lake-dir", s"${dir.getPath}/lake",
+        "--config-dir", s"${dir.getPath}/config"),
+        new PrintStream(bos, true, "UTF-8"))
+    }
+    (rc, new String(bos.toByteArray, "UTF-8").trim, jobs)
+  }
+
+  private def assertSidecar(dir: File): Unit = {
+    val lake = Lake(s"${dir.getPath}/lake")
+    val bad = SidecarReference.mismatches(spark, lake, "http")
+    assert(bad.isEmpty, bad.take(5).mkString("\n"))
+  }
+
+  test("a collect of a JSONL chunk set into a table with 4 stats columns " +
+      "runs at most 5 jobs") {
+    val dir = writeFixture()
+    stage(dir, 1)
+    val (rc, out, jobs) = cliJobs(dir, collectArgs: _*)
+    assert(rc === 0 && out.contains("Collected http.main: 360 rows"), out)
+    assert(jobs <= 5, s"collect launched $jobs job(s)")
+    assertSidecar(dir)
+  }
+
+  test("a compact of two collects runs at most 4 jobs") {
+    val dir = writeFixture()
+    stage(dir, 1)
+    assert(cliJobs(dir, collectArgs: _*)._1 === 0)
+    val (rc, out, jobs) = cliJobs(dir, "compact", "http")
+    assert(rc === 0 && out.contains("Compacted http: 12 files -> 6 files"), out)
+    assert(jobs <= 4, s"compact launched $jobs job(s)")
+    assertSidecar(dir)
+  }
+
+  test("table analyze --columns (seed, catalog stats and column stats " +
+      "merge) runs at most 4 jobs") {
+    val dir = writeFixture()
+    val (rc, out, jobs) = cliJobs(dir, "table", "analyze", "http",
+      "--columns", "req_id,user,bytes")
+    assert(rc === 0 && out.contains("column user: "), out)
+    assert(jobs <= 4, s"analyze --columns launched $jobs job(s)")
+    assertSidecar(dir)
   }
 }

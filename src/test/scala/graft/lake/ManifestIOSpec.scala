@@ -304,4 +304,114 @@ class ManifestIOSpec extends AnyFunSuite with SparkTest {
     assert(e.getMessage.contains("part-00000-bare.parquet"), e.getMessage)
     assert(e.getMessage.contains("min_ts"), e.getMessage)
   }
+
+  // ---- driver-written sidecar parts -------------------------------------
+
+  private val TwoTo65 = BigInt(2).pow(65)
+
+  private def sideStat(
+      seq: Long, sumV: Option[BigInt] = None, minS: Option[String] = None,
+      kll: Option[Array[Byte]] = None, mg: Option[Array[Byte]] = None,
+      sumLen: Option[Long] = None): Lake.SideStat =
+    Lake.SideStat(nulls = seq, n = 10L, minD = Some(-1.5), maxD = Some(9.0),
+      minS = minS, maxS = minS.map(_ + "z"), sumV = sumV,
+      sketch = Some(Array[Byte](1, seq.toByte)), kll = kll, mg = mg,
+      sumLen = sumLen, maxLen = sumLen.map(_ / 2), seq = seq)
+
+  /** A SideStat's fields with byte arrays as Seqs, for equality. */
+  private def fields(s: Lake.SideStat): Seq[Any] =
+    s.productIterator.map {
+      case Some(b: Array[Byte]) => Some(b.toSeq)
+      case v => v
+    }.toSeq
+
+  private val driverRows = Seq(
+    ("/t/f1.parquet", "v") -> sideStat(2L, sumV = Some(TwoTo65),
+      kll = Some(Array[Byte](3, 4)), sumLen = Some(40L)),
+    ("/t/f2.parquet", "v") -> sideStat(2L, sumV = Some(-TwoTo65)),
+    ("/t/f1.parquet", "s") -> sideStat(2L, minS = Some(""),
+      mg = Some(Array[Byte](5, 6)), sumLen = Some(0L)),
+    ("/t/f2.parquet", "s") -> sideStat(2L))
+
+  test("writeSidecar round-trips through readSidecar and a Spark read: " +
+      "±2^65 sums, null kll/mg/sum_len and an empty min_s survive") {
+    val dir = Files.createTempDirectory("graft_miows").toString + "/cs"
+    ManifestIO.writeSidecar(conf, dir, driverRows)
+    assert(new java.io.File(dir, "_SUCCESS").exists)
+    val parts = new java.io.File(dir).listFiles.map(_.getName)
+      .filter(n => !n.startsWith("_") && !n.startsWith("."))
+    assert(parts.length === 1 && parts.head.endsWith(".snappy.parquet"),
+      parts.mkString(", "))
+    // the driver part is snappy-compressed like a Spark-written one
+    val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(s"$dir/${parts.head}"), conf))
+    try {
+      import scala.jdk.CollectionConverters._
+      val codecs = footer.getFooter.getBlocks.asScala
+        .flatMap(_.getColumns.asScala.map(_.getCodec)).toSet
+      assert(codecs === Set(
+        org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY))
+    } finally footer.close()
+
+    val got = ManifestIO.readSidecar(conf, dir)
+    assert(got.keySet === driverRows.map(_._1).toSet)
+    driverRows.foreach { case (k, s) => assert(fields(got(k)) === fields(s), k) }
+    assert(got(("/t/f1.parquet", "s")).minS === Some(""))
+    assert(got(("/t/f2.parquet", "s")).sumLen.isEmpty)
+
+    // Spark reads the part as Lake.SidecarSchema, inferred or given
+    assert(spark.read.parquet(dir).schema === Lake.SidecarSchema)
+    val viaSpark = spark.read.schema(Lake.SidecarSchema).parquet(dir)
+      .collect().map { r =>
+        def opt[T](name: String): Option[T] = {
+          val i = r.fieldIndex(name)
+          if (r.isNullAt(i)) None else Some(r.getAs[T](i))
+        }
+        (r.getAs[String]("file"), r.getAs[String]("column")) -> fields(
+          Lake.SideStat(r.getAs[Long]("nulls"), r.getAs[Long]("n"),
+            opt[Double]("min_d"), opt[Double]("max_d"),
+            opt[String]("min_s"), opt[String]("max_s"),
+            opt[java.math.BigDecimal]("sum_v").map(d => BigInt(d.toBigInteger)),
+            opt[Array[Byte]]("sketch"), opt[Array[Byte]]("kll"),
+            opt[Array[Byte]]("mg"), opt[Long]("sum_len"),
+            opt[Long]("max_len"), r.getAs[Long]("seq")))
+      }.toMap
+    assert(viaSpark === driverRows.map { case (k, s) => k -> fields(s) }.toMap)
+    assert(spark.read.parquet(dir).where(col("sum_v") === lit(
+        new java.math.BigDecimal((-TwoTo65).bigInteger))).count() === 1L)
+  }
+
+  test("a sidecar dir mixing Spark-written and driver-written parts " +
+      "folds by seq; a leftover .tmp part is invisible to readers") {
+    import org.apache.spark.sql.Row
+    val dir = Files.createTempDirectory("graft_miowm").toString + "/cs"
+    // Spark-written part: seq 1 for every key driverRows holds, and
+    // seq 3 for one of them (newer than the driver part's seq 2)
+    def sparkRow(file: String, column: String, seq: Long): Row =
+      Row(file, column, Array[Byte](9), 0L, 10L, null, null, 1.0, 2.0,
+        null, null, null, null, null, seq)
+    val sparkRows = driverRows.map { case ((f, c), _) => sparkRow(f, c, 1L) } :+
+      sparkRow("/t/f2.parquet", "v", 3L)
+    spark.createDataFrame(java.util.Arrays.asList(sparkRows: _*),
+        Lake.SidecarSchema)
+      .coalesce(1).write.mode("append").parquet(dir)
+    ManifestIO.writeSidecar(conf, dir, driverRows)
+    // a crashed writer's tmp part: hidden by name, never read
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(dir, ".part-dead.snappy.parquet.tmp"),
+      Array[Byte](1, 2, 3))
+    val got = ManifestIO.readSidecar(conf, dir)
+    assert(got.keySet === driverRows.map(_._1).toSet)
+    assert(got(("/t/f2.parquet", "v")).seq === 3L)
+    driverRows.filter(_._1 != (("/t/f2.parquet", "v"))).foreach {
+      case (k, s) => assert(fields(got(k)) === fields(s), k)
+    }
+    // Spark agrees: both parts read, the tmp part skipped, newest seq
+    val newest = spark.read.parquet(dir).groupBy("file", "column")
+      .agg(max("seq").as("seq")).collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    assert(newest === got.map { case (k, s) => k -> s.seq })
+    assert(spark.read.parquet(dir).count() === sparkRows.length + driverRows.length)
+  }
 }
