@@ -359,6 +359,8 @@ object ScaleRehearsal {
         // propagation instantly (maxIter=1), so this times the
         // large-star/small-star fallback pure — the O(log n) claim
         // under measurement. Expect sec ~ log(N) * per-round cost.
+        // Broadcasts are off for the call: a pair list that fits in
+        // one is labeled on the driver and never reaches the fallback.
         val n = 10000L * m
         val pPath = s"$root/path_x$m"
         ensureFixture(pPath, s"path;$PathVersion;n=$n") {
@@ -367,9 +369,13 @@ object ScaleRehearsal {
             .write.mode("overwrite").parquet(pPath)
         }
         val pairs = spark.read.parquet(pPath)
-        record("starpath", m, n, time {
+        val bcast = "spark.sql.autoBroadcastJoinThreshold"
+        val prevBcast = spark.conf.getOption(bcast)
+        spark.conf.set(bcast, "-1")
+        try record("starpath", m, n, time {
           noop(operators.Components.connectedComponents(pairs, maxIter = 1))
         })
+        finally prevBcast.fold(spark.conf.unset(bcast))(spark.conf.set(bcast, _))
       }
       // ---- skewed-key join: AQE split vs salted (SkewJoin claims) --
       if (families("skewjoin")) {

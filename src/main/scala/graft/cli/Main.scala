@@ -7,7 +7,7 @@ import java.time.format.DateTimeFormatter
 
 import scala.util.matching.Regex
 
-import org.apache.spark.sql.{AnalysisException, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 
 import graft.config.{Hcl, PartitionSpec, TableSpec, Workspace}
 import graft.ingest.Ingest
@@ -398,6 +398,16 @@ object Main {
     out.println(graft.query.Render.table(manifest))
   }
 
+  /** `df` behind a lazy local checkpoint, and its row count. The count
+    * is the one execution that materializes the checkpoint, so a later
+    * plan over the returned DataFrame reads it instead of recomputing
+    * `df`.
+    */
+  private[cli] def checkpointAndCount(df: DataFrame): (DataFrame, Long) = {
+    val checkpointed = df.localCheckpoint(eager = false)
+    (checkpointed, checkpointed.count())
+  }
+
   /** `curate <table> <out-dir> --id-column --text-column [--gates]
     * [--dedup] [--threshold] [--classify-column --classify-seeds
     * [--classify-min]] [--buckets]` — the one-command training-data
@@ -413,7 +423,9 @@ object Main {
     * Each surviving set is localCheckpoint'ed at the stage boundary:
     * the report needs a count per stage anyway, and without it stage
     * N+1's lineage would replay stages 1..N (and the final write all
-    * of them) — the funnel is materialize-as-you-go by design.
+    * of them) — the funnel is materialize-as-you-go by design. The
+    * checkpoint is lazy and the stage's count is the action that
+    * materializes it ([[checkpointAndCount]]): one execution a stage.
     */
   private def curateCmd(
       spark: SparkSession, lake: Lake, opts: Opts, out: PrintStream): Unit = {
@@ -440,11 +452,9 @@ object Main {
         s"(columns: ${df.columns.mkString(", ")})"))
     var n = df.count()
     out.println(s"Curate $table: $n docs")
-    def stage(name: String)(
-        step: org.apache.spark.sql.DataFrame =>
-          org.apache.spark.sql.DataFrame): Unit = {
-      df = step(df).localCheckpoint()
-      val after = df.count()
+    def stage(name: String)(step: DataFrame => DataFrame): Unit = {
+      val (checkpointed, after) = checkpointAndCount(step(df))
+      df = checkpointed
       out.println(s"  $name: $n -> $after")
       n = after
     }
@@ -905,7 +915,7 @@ object Main {
     */
   private def dedupCmd(
       spark: SparkSession, lake: Lake, opts: Opts, out: PrintStream): Unit = {
-    import org.apache.spark.sql.functions.{col, sum}
+    import org.apache.spark.sql.functions.{coalesce, col, count, lit, sum}
     import graft.operators.{Components, Dedup}
     // --tune: the LSH banding planner — no table needed, pure s-curve
     // arithmetic over the hash budget (Dedup.lshPlan scaladoc)
@@ -941,9 +951,9 @@ object Main {
         val groups = (if (mode == "exact") Dedup.exact(df, idCol, textCol)
           else Dedup.normalized(df, idCol, textCol))
           .where(col("n_copies") > 1)
-        val dupGroups = groups.count()
-        val dupRows = if (dupGroups == 0) 0L
-          else groups.agg(sum(col("n_copies") - 1)).head().getLong(0)
+        val report = groups.agg(count(lit(1)),
+          coalesce(sum(col("n_copies") - 1), lit(0L))).head()
+        val (dupGroups, dupRows) = (report.getLong(0), report.getLong(1))
         out.println(s"Table $table: $total rows, $dupGroups duplicate " +
           s"groups, $dupRows redundant rows ($mode)")
         out.println(graft.query.Render.table(
@@ -1055,9 +1065,9 @@ object Main {
               .limit(20)))
         } else {
           val stats = Components.componentStats(labeled)
-          val clusters = stats.count()
-          val dropped = if (clusters == 0) 0L
-            else stats.agg(sum("n_dropped")).head().getLong(0)
+          val report = stats.agg(count(lit(1)),
+            coalesce(sum("n_dropped"), lit(0L))).head()
+          val (clusters, dropped) = (report.getLong(0), report.getLong(1))
           out.println(s"Table $table: $total rows, $clusters near-dup " +
             s"clusters at jaccard >= $threshold, $dropped droppable rows")
           out.println(graft.query.Render.table(

@@ -366,8 +366,8 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
   // sketch, null count, length and numeric-range aggregates — into a
   // `_graft_colstats` sidecar (the DuckLake ducklake_file_column_stats
   // shape, compaction_types.go:64-120), and `table analyze` merges
-  // the sketches (hll_union_agg) into CatalogColumnStat at constant
-  // metadata cost. Liveness needs no tombstones: data files are
+  // the sketches (an HLL union on the driver) into CatalogColumnStat
+  // at constant metadata cost. Liveness needs no tombstones: data files are
   // immutable and replaced by new names, so a semi-join against the
   // manifest's live file set at merge time is exact.
 
@@ -577,28 +577,39 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
     */
   def syncCatalogColumnStats(
       spark: SparkSession, table: String, histograms: Boolean)
-      : Option[Map[String, (Long, Long)]] = {
+      : Option[Map[String, (Long, Long)]] =
+    catalogColumnStats(spark, table, histograms).map { stats =>
+      if (catalogEntry(spark, table).isDefined) {
+        // table-level numbers first (manifest-derived), then ONE alter
+        // carrying both so the column stats land atomically with them
+        val base = syncCatalogStats(spark, table)
+        base.foreach { case (rows, size) =>
+          spark.sessionState.catalog.alterTableStats(
+            org.apache.spark.sql.catalyst.TableIdentifier(table),
+            Some(org.apache.spark.sql.catalyst.catalog.CatalogStatistics(
+              BigInt(size), Some(BigInt(rows)), stats)))
+          spark.catalog.refreshTable(s"`$table`")
+        }
+      }
+      stats.map { case (c, s) =>
+        c -> ((s.distinctCount.get.toLong, s.nullCount.get.toLong))
+      }
+    }
+
+  /** The per-column `CatalogColumnStat`s merged from the live sidecar
+    * rows, or None when column stats aren't enabled.
+    */
+  private[lake] def catalogColumnStats(
+      spark: SparkSession, table: String, histograms: Boolean)
+      : Option[Map[String, org.apache.spark.sql.catalyst.catalog.CatalogColumnStat]] = {
     val cols = colStatsColumns(spark, table)
     if (cols.isEmpty) return None
-    val sidecar = locked(table) {
+    val live = locked(table) {
       healSwapAsides(spark, table)
       if (!fs(spark, root).exists(new Path(colStatsDir(table))))
         return None
-      liveSidecar(spark, table)
+      liveSidecarRows(spark, table)
     }
-    val merged = sidecar.groupBy("column").agg(
-        hll_sketch_estimate(hll_union_agg(col("sketch"))).as("ndv"),
-        sum("nulls").as("nulls"), sum("n").as("n"),
-        sum("sum_len").as("sum_len"), max("max_len").as("max_len"),
-        min("min_d").as("min_d"), max("max_d").as("max_d"),
-        // table-level distribution: union of the per-file KLL
-        // sketches — valid only when EVERY live file contributed one
-        // (a partial union would mis-weight the histogram, which can
-        // bias estimates either direction; missing-sketch files flip
-        // histograms off instead, conservatively)
-        graft.functions.KllFns.kllMerge(spark, col("kll")).as("kllm"),
-        sum(when(col("kll").isNull, 1L).otherwise(0L)).as("kll_missing"))
-      .collect()
     val schema = read(spark, table).schema
     def extString(dt: DataType, d: Double): Option[String] = dt match {
       case IntegerType | LongType | ShortType | ByteType =>
@@ -609,51 +620,41 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
         // formatter-dependent — a wrong range bound misestimates
         // silently, so omit rather than guess
     }
-    val stats = merged.map { r =>
-      val c = r.getString(0)
+    // the sidecar rows are already on the driver: sketches union,
+    // counters sum, ranges fold, with no Spark job
+    val byDouble = Ordering.Double.TotalOrdering
+    val stats = live.groupBy { case ((_, c), _) => c }.map { case (c, group) =>
+      val ss = group.map(_._2)
       val dt = schema(c).dataType
-      val ndv = if (r.isNullAt(1)) 0L else r.getLong(1)
-      val nulls = r.getLong(2)
-      val n = r.getLong(3)
-      val nonNull = math.max(0L, n - nulls)
-      val avgLen = if (!r.isNullAt(4) && nonNull > 0)
-        Some(math.max(1L, math.round(r.getLong(4).toDouble / nonNull)))
-        else None
-      val maxLen = if (r.isNullAt(5)) None else Some(r.getLong(5))
-      val minS = if (r.isNullAt(6)) None
-        else extString(dt, r.getDouble(6))
-      val maxS = if (r.isNullAt(7)) None
-        else extString(dt, r.getDouble(7))
-      // equi-height histogram from the merged KLL union — only when
-      // every live file contributed a sketch (see the agg comment)
+      val ndv = graft.functions.NdvFns.unionEstimate(ss.flatMap(_.sketch))
+      val nulls = ss.map(_.nulls).sum
+      val nonNull = math.max(0L, ss.map(_.n).sum - nulls)
+      val avgLen = ss.flatMap(_.sumLen).reduceOption(_ + _)
+        .filter(_ => nonNull > 0)
+        .map(l => math.max(1L, math.round(l.toDouble / nonNull)))
+      val maxLen = ss.flatMap(_.maxLen).maxOption
+      val minS = ss.flatMap(_.minD).minOption(byDouble).flatMap(extString(dt, _))
+      val maxS = ss.flatMap(_.maxD).maxOption(byDouble).flatMap(extString(dt, _))
+      // table-level distribution: union of the per-file KLL sketches —
+      // valid only when EVERY live file contributed one (a partial
+      // union would mis-weight the histogram, which can bias estimates
+      // either direction; missing-sketch files flip histograms off
+      // instead, conservatively)
       val histogram =
         if (histograms && dt.isInstanceOf[NumericType] &&
-          !r.isNullAt(8) && r.getLong(9) == 0L)
+          ss.forall(_.kll.isDefined))
           graft.functions.KllFns.equiHeightHistogram(
-            r.getAs[Array[Byte]](8), Lake.HistogramBins, ndv)
+            graft.functions.QuantileFns.mergeBlobs(ss.flatMap(_.kll)),
+            Lake.HistogramBins, ndv)
         else None
-      c -> (org.apache.spark.sql.catalyst.catalog.CatalogColumnStat(
+      c -> org.apache.spark.sql.catalyst.catalog.CatalogColumnStat(
         distinctCount = Some(BigInt(ndv)),
         min = minS, max = maxS,
         nullCount = Some(BigInt(nulls)),
         avgLen = avgLen, maxLen = maxLen,
-        histogram = histogram),
-        (ndv, nulls))
-    }.toMap
-    if (catalogEntry(spark, table).isDefined) {
-      // table-level numbers first (manifest-derived), then ONE alter
-      // carrying both so the column stats land atomically with them
-      val base = syncCatalogStats(spark, table)
-      base.foreach { case (rows, size) =>
-        spark.sessionState.catalog.alterTableStats(
-          org.apache.spark.sql.catalyst.TableIdentifier(table),
-          Some(org.apache.spark.sql.catalyst.catalog.CatalogStatistics(
-            BigInt(size), Some(BigInt(rows)),
-            stats.map { case (k, v) => k -> v._1 })))
-        spark.catalog.refreshTable(s"`$table`")
-      }
+        histogram = histogram)
     }
-    Some(stats.map { case (k, v) => k -> v._2 })
+    Some(stats)
   }
 
   /** The removal twin of [[syncCatalogPartitions]]: a catalog
@@ -1021,28 +1022,15 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
 
   /** The snapshot's newest-seq sidecar rows for files the manifest
     * holds live — the metadata-sized input of the sidecar compaction
-    * and, as a local DataFrame in [[Lake.SidecarSchema]]
-    * ([[liveSidecar]]), of the catalog-stats merge.
+    * and of the catalog-stats merge.
     */
-  private def liveSidecarRows(
+  private[lake] def liveSidecarRows(
       spark: SparkSession, table: String)
       : Seq[((String, String), Lake.SideStat)] = {
     val snap = metaSnapshot(spark, table)
     snap.sidecar.toSeq.filter { case ((file, _), _) =>
       snap.manifest.contains(file)
     }
-  }
-
-  private def liveSidecar(spark: SparkSession, table: String): DataFrame = {
-    val rows = liveSidecarRows(spark, table).map { case ((file, column), s) =>
-      Row(file, column, s.sketch.orNull, s.nulls, s.n,
-        s.sumLen.map(Long.box).orNull, s.maxLen.map(Long.box).orNull,
-        s.minD.map(Double.box).orNull, s.maxD.map(Double.box).orNull,
-        s.minS.orNull, s.maxS.orNull, s.kll.orNull, s.mg.orNull,
-        s.sumV.map(v => new java.math.BigDecimal(v.bigInteger)).orNull,
-        s.seq)
-    }
-    spark.createDataFrame(rows.asJava, Lake.SidecarSchema)
   }
 
   private def recordStats(

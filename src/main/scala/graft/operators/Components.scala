@@ -1,7 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.annotation.tailrec
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Connected components over a candidate-pair edge list — the last
@@ -9,7 +13,9 @@ import org.apache.spark.storage.StorageLevel
   * the keep/drop decision needs GROUPS (a chain a–b, b–c is one
   * cluster even though (a,c) never collided).
   *
-  * Algorithm: iterative min-label propagation. Each node starts
+  * Algorithm: a pair list that fits in a broadcast is labeled on the
+  * driver by a union-find; a larger one by iterative min-label
+  * propagation, where each node starts
   * labeled with its own id; every round each node takes the minimum
   * label among itself and its neighbors; at the fixed point every
   * member of a component carries the component's minimum id. Rounds
@@ -19,6 +25,21 @@ import org.apache.spark.storage.StorageLevel
   *  - The input is the *verified pair list* (ids only, already
   *    threshold-filtered), which is orders of magnitude smaller than
   *    the corpus — this never touches document text or signatures.
+  *  - Size selection. The pair list is materialized once
+  *    (MEMORY_AND_DISK). If it fits in
+  *    `spark.sql.autoBroadcastJoinThreshold` bytes at 16 bytes per
+  *    pair, it is `take`n to the driver and labeled there in one pass,
+  *    and the result is a LocalRelation. On small corpora the cost of
+  *    propagation is its fixed per-job overhead, not data: about 7 SQL
+  *    executions and 15 Spark jobs per call to label ~30 pairs. The
+  *    threshold is the bound Spark already applies to a relation it
+  *    may pull to the driver for a broadcast, so the driver never
+  *    holds more than a broadcast join of the same pairs would, and
+  *    no option of its own is needed. At -1 (broadcasts off), or for
+  *    a longer list, propagation runs over the same materialization,
+  *    so the upstream sketch/verify pipeline is never computed twice.
+  *    A change to propagation or star contraction must be tested with
+  *    the threshold at -1: small pair lists never reach them.
   *  - Near-duplicate graphs in web-scale corpora are dense clumps of
   *    copies, so the diameter — and hence round count — is small
   *    (single digits); `maxIter` caps the propagation rounds, and the
@@ -45,19 +66,86 @@ import org.apache.spark.storage.StorageLevel
   * brief: sketch pipelines emit pairs; the keep/drop decision needs
   * groups.
   *
+  * A null id is unknown, so it links nothing: the other id of its
+  * pair is labeled by its other pairs alone, and the null id gets one
+  * (null, null) row.
+  *
   * @param pairs DataFrame with two id columns (`id_a`, `id_b`)
   * @return (id, component) — one row per node that appears in any
   *         pair; `component` is the minimum id of its component
   */
 object Components {
 
+  /** Bytes one (id_a, id_b) pair of longs counts against
+    * `spark.sql.autoBroadcastJoinThreshold` when the size selection
+    * decides whether the pair list may be labeled on the driver.
+    */
+  private val PairBytes = 16L
+
   def connectedComponents(pairs: DataFrame, maxIter: Int = 25): DataFrame = {
     val spark = pairs.sparkSession
+    // the one materialization of the pair list: the driver path reads
+    // it once and the distributed path builds its edges from it, so
+    // the upstream sketch/verify pipeline is never computed twice
     val edgesRaw = pairs
       .select(col("id_a").cast("long").as("src"), col("id_b").cast("long").as("dst"))
-    // symmetrize so one join per round sees both directions
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+    val small = if (threshold < 0) None else {
+      val maxPairs = math.min(threshold / PairBytes, Int.MaxValue - 1L).toInt
+      Some(edgesRaw.take(maxPairs + 1)).filter(_.length <= maxPairs)
+    }
+    small match {
+      case Some(rows) =>
+        val out = labelOnDriver(spark, rows, edgesRaw.schema)
+        edgesRaw.unpersist()
+        out
+      case None => propagate(edgesRaw, maxIter)
+    }
+  }
+
+  /** Union-find over pairs already on the driver: linking the larger
+    * root under the smaller keeps each class's root at its minimum id,
+    * the label propagation converges to. Same relation, schema and
+    * nullability as [[propagate]], as a LocalRelation.
+    */
+  private def labelOnDriver(
+      spark: SparkSession, pairs: Array[Row], edgeSchema: StructType)
+      : DataFrame = {
+    val ids = pairs.flatMap(r => (0 to 1).filterNot(r.isNullAt).map(r.getLong))
+      .distinct.sorted
+    val parent = Array.range(0, ids.length)
+    @tailrec def find(i: Int): Int =
+      if (parent(i) == i) i
+      else { parent(i) = parent(parent(i)); find(parent(i)) }
+    pairs.foreach { r =>
+      if (!r.isNullAt(0) && !r.isNullAt(1)) {
+        val ra = find(java.util.Arrays.binarySearch(ids, r.getLong(0)))
+        val rb = find(java.util.Arrays.binarySearch(ids, r.getLong(1)))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+    }
+    val labeled = ids.indices.map(i => Row(ids(i), ids(find(i))))
+    val nullRow =
+      if (pairs.exists(r => r.isNullAt(0) || r.isNullAt(1))) Seq(Row(null, null))
+      else Nil
+    val schema = StructType(Seq(
+      StructField("id", LongType, edgeSchema.exists(_.nullable)),
+      StructField("component", LongType, nullable = true)))
+    spark.createDataFrame((labeled ++ nullRow).asJava, schema)
+  }
+
+  /** Min-label propagation, with the star-contraction fallback, over
+    * the materialized (src, dst) pair list; releases it before
+    * returning.
+    */
+  private def propagate(edgesRaw: DataFrame, maxIter: Int): DataFrame = {
+    val spark = edgesRaw.sparkSession
+    // symmetrize so one join per round sees both directions; a null
+    // end links nothing (its edge becomes a self-loop of the other end)
     val edges = edgesRaw
       .union(edgesRaw.select(col("dst").as("src"), col("src").as("dst")))
+      .select(col("src"), coalesce(col("dst"), col("src")).as("dst"))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
 
@@ -126,6 +214,7 @@ object Components {
       .localCheckpoint(true)
     labels.unpersist()
     edges.unpersist()
+    edgesRaw.unpersist()
     out
   }
 

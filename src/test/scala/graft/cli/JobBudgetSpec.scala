@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTest
 import graft.config.PartitionSpec
-import graft.lake.{Lake, SidecarReference, TpSchema}
+import graft.lake.{CatalogStatsReference, Lake, SidecarReference, TpSchema}
 import graft.query.Render
 
 /** The Spark-job budget of a cold `graft query`: lake metadata (the
@@ -25,6 +25,10 @@ import graft.query.Render
   * into a table with 4 stats columns, a `compact`, and the
   * `table analyze --columns` seed. After each, the colstats sidecar
   * must equal a reference aggregate of the live files.
+  *
+  * So do the corpus commands: `dedup --mode near` and
+  * `curate --gates both --dedup near` on a docs table with planted
+  * exact and near duplicate groups, whose report lines are pinned.
   */
 class JobBudgetSpec extends AnyFunSuite with SparkTest {
 
@@ -260,13 +264,133 @@ class JobBudgetSpec extends AnyFunSuite with SparkTest {
     assertSidecar(dir)
   }
 
-  test("table analyze --columns (seed, catalog stats and column stats " +
-      "merge) runs at most 4 jobs") {
+  test("table analyze --columns (seed, catalog stats and a driver-side " +
+      "column stats merge) runs at most 2 jobs") {
     val dir = writeFixture()
     val (rc, out, jobs) = cliJobs(dir, "table", "analyze", "http",
       "--columns", "req_id,user,bytes")
     assert(rc === 0 && out.contains("column user: "), out)
-    assert(jobs <= 4, s"analyze --columns launched $jobs job(s)")
+    assert(jobs <= 2, s"analyze --columns launched $jobs job(s)")
     assertSidecar(dir)
+    val bad = CatalogStatsReference.mismatches(spark,
+      Lake(s"${dir.getPath}/lake"), "http")
+    assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
+  // ---- corpus commands -------------------------------------------------
+
+  private val Words = ("the of and to in is was for on that with as by at " +
+    "from it this be are which an or have has had were not but their they " +
+    "its one all been more river mountain village market harbor library " +
+    "garden bridge winter summer history science music language engineer " +
+    "council school museum railway festival forest island station coast " +
+    "valley province century building research student teacher farmer " +
+    "painter writer doctor opened built founded visited described recorded " +
+    "measured improved ancient modern quiet busy narrow wide northern " +
+    "southern local public early later small large famous common simple " +
+    "careful").split(" ").toIndexedSeq
+
+  private val ExactGroups = Seq(2, 3, 2)
+  private val NearClusters = Seq(2, 2, 3)
+  private val Docs = 60
+
+  /** A lake with one `docs` table (doc_id, text) of [[Docs]] documents:
+    * groups of exact copies ([[ExactGroups]]), clusters of near copies
+    * with one word in 60 replaced ([[NearClusters]]), and distinct
+    * prose or symbol junk for the rest, in shuffled id order.
+    */
+  private lazy val docsLake: Lake = {
+    val rnd = new scala.util.Random(12)
+    def sentence = {
+      val ws = Seq.fill(8 + rnd.nextInt(8))(Words(rnd.nextInt(Words.size)))
+      (ws.head.capitalize +: ws.tail).mkString(" ") + "."
+    }
+    def prose = Seq.fill(6 + rnd.nextInt(6))(sentence).mkString(" ")
+    def junk = Seq.fill(5 + rnd.nextInt(20))(
+      Seq("#", "$$", "{x}", "!!", "...", "@@", "lorem", "ipsum")(rnd.nextInt(8)))
+      .mkString(" ")
+    def edit(text: String) = {
+      val ws = text.split(" ")
+      (0 until math.max(1, ws.length / 60)).foreach { _ =>
+        ws(rnd.nextInt(ws.length)) = Words(rnd.nextInt(Words.size))
+      }
+      ws.mkString(" ")
+    }
+    val planted = ExactGroups.flatMap { k => val t = prose; Seq.fill(k)(t) } ++
+      NearClusters.flatMap { k => val t = prose; t +: Seq.fill(k - 1)(edit(t)) }
+    val texts = planted ++ Seq.fill(Docs - planted.size)(
+      if (rnd.nextInt(4) == 0) junk else prose)
+    val ids = rnd.shuffle((1 to Docs).toList)
+    import spark.implicits._
+    val raw = ids.zip(texts).map { case (id, t) => (id.toLong, t) }
+      .toDF("doc_id", "text")
+      .withColumn("tp_timestamp", expr("timestamp '2024-03-01 00:00:00'"))
+    val lake = Lake(Files.createTempDirectory("graft_jobs_docs").toString)
+    lake.append(spark, "docs", TpSchema.enrich(raw, PartitionSpec("docs", "p0")))
+    lake
+  }
+
+  /** (rc, stdout, jobs launched) of one in-process CLI call over the
+    * docs lake.
+    */
+  private def corpusJobs(args: String*): (Int, String, Int) = {
+    val config = Files.createTempDirectory("graft_jobs_cfg").toString
+    val bos = new ByteArrayOutputStream()
+    val (rc, jobs) = JobCounter.count(spark.sparkContext) {
+      Main.run(spark, args ++ Seq("--lake-dir", docsLake.root,
+        "--config-dir", config), new PrintStream(bos, true, "UTF-8"))
+    }
+    (rc, new String(bos.toByteArray, "UTF-8").trim, jobs)
+  }
+
+  private val DocCols = Seq("--id-column", "doc_id", "--text-column", "text")
+
+  test("dedup --mode near on a docs table with planted groups runs at " +
+      "most 16 jobs") {
+    val (rc, out, jobs) = corpusJobs(Seq("dedup", "docs", "--mode", "near") ++
+      DocCols: _*)
+    assert(rc === 0, out)
+    val clusters = ExactGroups.size + NearClusters.size
+    val droppable = (ExactGroups ++ NearClusters).map(_ - 1).sum
+    assert(out.linesIterator.next() === s"Table docs: $Docs rows, $clusters " +
+      s"near-dup clusters at jaccard >= 0.8, $droppable droppable rows", out)
+    assert(jobs <= 16, s"dedup --mode near launched $jobs job(s)")
+  }
+
+  test("curate --gates both --dedup near on a docs table with planted " +
+      "groups runs at most 32 jobs") {
+    val outDir = Files.createTempDirectory("graft_jobs_curated").toString
+    val (rc, out, jobs) = corpusJobs(Seq("curate", "docs", outDir,
+      "--gates", "both", "--dedup", "near", "--buckets", "head,middle") ++
+      DocCols: _*)
+    assert(rc === 0, out)
+    // the gates drop the junk; near dedup then drops every planted copy
+    val copies = (ExactGroups ++ NearClusters).map(_ - 1).sum
+    assert(out.linesIterator.toSeq.init === Seq(
+      s"Curate docs: $Docs docs",
+      "  rules (both): 60 -> 51",
+      s"  dedup (near): 51 -> ${51 - copies}",
+      "  buckets (head,middle): 43 -> 29"), out)
+    assert(out.linesIterator.toSeq.last === s"Wrote 29 docs to $outDir", out)
+    assert(jobs <= 32, s"curate launched $jobs job(s)")
+  }
+
+  test("a curate stage's count materializes its lazy checkpoint, and the " +
+      "next stage reads it instead of recomputing the upstream") {
+    val evals = spark.sparkContext.longAccumulator("upstream rows")
+    val bump = udf { (x: Long) => evals.add(1); x }.asNondeterministic()
+    val upstream = spark.range(0, 100, 1, 4).select(bump(col("id")).as("id"))
+      .where(col("id") % 3 =!= 0)
+    val ((checkpointed, n), jobs) = JobCounter.count(spark.sparkContext)(
+      Main.checkpointAndCount(upstream))
+    assert(n === 66)
+    assert(evals.value === 100L)
+    val (next, nextJobs) = JobCounter.count(spark.sparkContext)(
+      checkpointed.where(col("id") % 2 === 0).count())
+    assert(next === 33)
+    assert(evals.value === 100L, "the next stage recomputed the upstream")
+    // the count is the one execution: a map stage and its result
+    assert(jobs <= 2, s"checkpoint and count launched $jobs job(s)")
+    assert(nextJobs <= 2, s"a count over the checkpoint launched $nextJobs job(s)")
   }
 }

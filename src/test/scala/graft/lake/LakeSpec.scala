@@ -176,6 +176,10 @@ class LakeSpec extends AnyFunSuite with SparkTest {
       val fStats = lake.syncCatalogColumnStats(spark, "cbo_f").get
       assert(lake.syncCatalogColumnStats(spark, "cbo_d1").isDefined)
       assert(lake.syncCatalogColumnStats(spark, "cbo_d2").isDefined)
+      Seq("cbo_f", "cbo_d1", "cbo_d2").foreach { t =>
+        val bad = CatalogStatsReference.mismatches(spark, lake, t)
+        assert(bad.isEmpty, bad.mkString("\n"))
+      }
       // HLL NDV within sketch tolerance of the true 1000
       assert(fStats("k1")._1 > 900 && fStats("k1")._1 < 1100, fStats)
       assert(fStats("k1")._2 == 0L, fStats)
@@ -197,6 +201,8 @@ class LakeSpec extends AnyFunSuite with SparkTest {
       Maintenance.compact(spark, lake, "cbo_d1")
       val afterC = lake.syncCatalogColumnStats(spark, "cbo_d1").get
       assert(afterC("d1k")._1 > 45 && afterC("d1k")._1 < 55, afterC)
+      val bad = CatalogStatsReference.mismatches(spark, lake, "cbo_d1")
+      assert(bad.isEmpty, bad.mkString("\n"))
     } finally prev.foreach { case (k, v) =>
       v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
     }
@@ -1163,6 +1169,8 @@ class LakeSpec extends AnyFunSuite with SparkTest {
     // no analyze/backfill scan ever ran
     val stats = lake.syncCatalogColumnStats(spark, "t").get
     assert(stats.contains("v") && stats("v")._1 >= 28, stats)
+    val bad = CatalogStatsReference.mismatches(spark, lake, "t")
+    assert(bad.isEmpty, bad.mkString("\n"))
     assert(!stats.contains("no_such_col"))
     // and the zone maps are live from file one
     val q = lake.read(spark, "t").where(col("v") > 1e9)
@@ -1213,6 +1221,10 @@ class LakeSpec extends AnyFunSuite with SparkTest {
       val estUniform = estBytes()
       assert(lake.syncCatalogColumnStats(spark, "kf").isDefined)
       assert(lake.syncCatalogColumnStats(spark, "kd").isDefined)
+      Seq("kf", "kd").foreach { t =>
+        val bad = CatalogStatsReference.mismatches(spark, lake, t)
+        assert(bad.isEmpty, bad.mkString("\n"))
+      }
       val estHist = estBytes()
       // the histogram must collapse the estimate by well over 4×
       // (truth is ~170× below uniform; one equi-height bin bounds the
@@ -1321,6 +1333,8 @@ class LakeSpec extends AnyFunSuite with SparkTest {
     val before = lake.syncCatalogColumnStats(spark, "t").get("v")
     Maintenance.vacuum(spark, lake, "t")
     val after = lake.syncCatalogColumnStats(spark, "t").get("v")
+    val bad = CatalogStatsReference.mismatches(spark, lake, "t")
+    assert(bad.isEmpty, bad.mkString("\n"))
     // disjoint id ranges → 100 distinct v total; NDV is HLL (±5%)
     assert(before._1 < 70, s"fixture must start under-counted: $before")
     assert(after._1 >= 90 && after._1 <= 110,

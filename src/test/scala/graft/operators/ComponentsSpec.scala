@@ -1,16 +1,87 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTest
 
+/** Every labeling case runs through both size-selected paths: the
+  * default, where a broadcast-sized pair list is labeled on the driver,
+  * and the distributed propagation/star-contraction path, forced with
+  * `spark.sql.autoBroadcastJoinThreshold` at -1. Both must equal a
+  * local union-find reference.
+  */
 class ComponentsSpec extends AnyFunSuite with SparkTest {
   import spark.implicits._
 
-  private def components(pairs: Seq[(Long, Long)], maxIter: Int = 25) =
-    Components.connectedComponents(
-        pairs.toDF("id_a", "id_b"), maxIter)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+  private val Threshold = "spark.sql.autoBroadcastJoinThreshold"
+
+  private def withThreshold[T](value: String)(body: => T): T = {
+    val prev = spark.conf.getOption(Threshold)
+    spark.conf.set(Threshold, value)
+    try body
+    finally prev.fold(spark.conf.unset(Threshold))(spark.conf.set(Threshold, _))
+  }
+
+  private def onDriver(labeled: DataFrame): Boolean =
+    labeled.queryExecution.analyzed.isInstanceOf[LocalRelation]
+
+  /** (driver, distributed) labelings of `pairs`; each must have taken
+    * its path, and the driver's schema must be propagation's: `id` as
+    * nullable as the input ids, `component` nullable (a min aggregate).
+    * The star-contraction fallback types `component` as its `id`.
+    */
+  private def bothPaths(
+      pairs: DataFrame, maxIter: Int): (DataFrame, DataFrame) = {
+    val driver = Components.connectedComponents(pairs, maxIter)
+    val distributed = withThreshold("-1")(
+      Components.connectedComponents(pairs, maxIter))
+    assert(onDriver(driver), "a small pair list must be labeled on the driver")
+    assert(!onDriver(distributed), "threshold -1 must label distributed")
+    val id = distributed.schema("id")
+    assert(driver.schema == StructType(Seq(id,
+      StructField("component", LongType, nullable = true))))
+    assert(distributed.schema("component").nullable || !id.nullable)
+    (driver, distributed)
+  }
+
+  private def labels(labeled: DataFrame): Map[Long, Long] =
+    labeled.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** Union-find reference: each id present in a pair, labeled with the
+    * minimum id of its class.
+    */
+  private def reference(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val present = edges.flatMap(e => Seq(e._1, e._2)).distinct.sorted
+    val at = present.zipWithIndex.toMap
+    val parent = Array.tabulate(present.size)(identity)
+    def find(x: Int): Int = {
+      var r = x; while (parent(r) != r) r = parent(r)
+      var c = x
+      while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(at(a)), find(at(b)))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    present.map(id => id -> present.filter(p => find(at(p)) == find(at(id))).min)
+      .toMap
+  }
+
+  /** The labeling of `pairs`, after checking that the driver and the
+    * distributed path both give the union-find reference.
+    */
+  private def components(pairs: Seq[(Long, Long)], maxIter: Int = 25) = {
+    val (driver, distributed) = bothPaths(pairs.toDF("id_a", "id_b"), maxIter)
+    val want = reference(pairs)
+    val got = labels(driver)
+    assert(got == want, s"driver path: $pairs")
+    assert(labels(distributed) == want, s"distributed path: $pairs")
+    got
+  }
 
   test("chain a-b, b-c is one component even though (a,c) never paired") {
     assert(components(Seq((1L, 2L), (2L, 3L))) ==
@@ -46,22 +117,69 @@ class ComponentsSpec extends AnyFunSuite with SparkTest {
   }
 
   test("componentStats reports size and drop count per cluster") {
-    val labeled = Components.connectedComponents(
-      Seq((1L, 2L), (2L, 3L), (100L, 200L)).toDF("id_a", "id_b"))
-    val stats = Components.componentStats(labeled)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(stats == Set((1L, 3L, 2L), (100L, 2L, 1L)))
+    val (driver, distributed) = bothPaths(
+      Seq((1L, 2L), (2L, 3L), (100L, 200L)).toDF("id_a", "id_b"), 25)
+    for (labeled <- Seq(driver, distributed)) {
+      val stats = Components.componentStats(labeled)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      assert(stats == Set((1L, 3L, 2L), (100L, 2L, 1L)))
+    }
   }
 
   test("no cached plans leak past the call") {
     val before = spark.sparkContext.getPersistentRDDs.size
     components(Seq((1L, 2L), (3L, 4L)))
-    // connectedComponents persists edges + per-round labels, all
-    // unpersisted before return; the only survivor is the
+    // the distributed path persists the pairs, edges and per-round
+    // labels, all unpersisted before return; the only survivor is the
     // localCheckpointed result (reclaimed by ContextCleaner when the
     // returned DataFrame is released)
     val after = spark.sparkContext.getPersistentRDDs.size
     assert(after <= before + 1, s"persistent RDDs grew $before -> $after")
+  }
+
+  test("the driver path releases the materialized pairs and keeps no RDD") {
+    val before = spark.sparkContext.getPersistentRDDs.size
+    val labeled = Components.connectedComponents(
+      Seq((1L, 2L), (3L, 4L), (2L, 3L)).toDF("id_a", "id_b"))
+    assert(onDriver(labeled))
+    val after = spark.sparkContext.getPersistentRDDs.size
+    assert(after == before, s"persistent RDDs grew $before -> $after")
+    assert(labels(labeled) == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L))
+  }
+
+  test("a threshold one pair below the list's size labels distributed") {
+    // 3 pairs (a duplicate included) are 48 bytes at 16 bytes a pair
+    val pairs = Seq((7L, 8L), (8L, 9L), (7L, 8L)).toDF("id_a", "id_b")
+    val want = Map(7L -> 7L, 8L -> 7L, 9L -> 7L)
+    val below = withThreshold("47")(Components.connectedComponents(pairs))
+    assert(!onDriver(below), "47 bytes cannot hold 3 pairs")
+    assert(labels(below) == want)
+    val fits = withThreshold("48")(Components.connectedComponents(pairs))
+    assert(onDriver(fits), "48 bytes hold 3 pairs")
+    assert(labels(fits) == want)
+    val empty = withThreshold("0")(Components.connectedComponents(
+      Seq.empty[(Long, Long)].toDF("id_a", "id_b")))
+    assert(onDriver(empty) && empty.isEmpty)
+  }
+
+  test("null ids link nothing and give one (null, null) row on both paths") {
+    // (2, null) and (null, 5) must not join 2's cluster to 5, and the
+    // null id takes no neighbor's label
+    val pairs = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (Some(2L), None), (None, Some(5L)),
+      (None, None), (Some(7L), Some(8L)))
+      .toDF("id_a", "id_b")
+    val want = Set[(Option[Long], Option[Long])](
+      (Some(1L), Some(1L)), (Some(2L), Some(1L)), (Some(5L), Some(5L)),
+      (Some(7L), Some(7L)), (Some(8L), Some(7L)), (None, None))
+    def rows(labeled: DataFrame) = labeled.as[(Option[Long], Option[Long])]
+      .collect().toSet
+    for (maxIter <- Seq(25, 1)) { // 1 forces the star-contraction fallback
+      val (driver, distributed) = bothPaths(pairs, maxIter)
+      assert(driver.schema("id").nullable)
+      assert(rows(driver) == want)
+      assert(rows(distributed) == want, s"maxIter $maxIter")
+    }
   }
 
   test("canonicalBy keeps the highest-quality member, id tiebreak") {
@@ -94,7 +212,7 @@ class ComponentsSpec extends AnyFunSuite with SparkTest {
   test("star contraction agrees with union-find on seeded random graphs") {
     // force the fallback on every shape (maxIter=1 defeats propagation
     // for any graph of diameter > 1) and check the exact component
-    // labeling against a local union-find reference — the property the
+    // labeling against the union-find reference — the property the
     // Kiveris alternation must hold on clumps, chains, rings and
     // disconnected mixtures alike
     val rnd = new scala.util.Random(42)
@@ -105,26 +223,8 @@ class ComponentsSpec extends AnyFunSuite with SparkTest {
         (rnd.nextInt(nNodes).toLong, rnd.nextInt(nNodes).toLong))
         .filter { case (a, b) => a != b }
       if (edges.nonEmpty) {
-        // union-find reference
-        val parent = Array.tabulate(nNodes)(identity)
-        def find(x: Int): Int = {
-          var r = x; while (parent(r) != r) r = parent(r)
-          var c = x
-          while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
-          r
-        }
-        edges.foreach { case (a, b) =>
-          val (ra, rb) = (find(a.toInt), find(b.toInt))
-          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-        }
-        val present = edges.flatMap(e => Seq(e._1, e._2)).distinct
-        val expect = present.map { id =>
-          // component = min id within the union-find class among present nodes
-          val root = find(id.toInt)
-          id -> present.filter(p => find(p.toInt) == root).min
-        }.toMap
         val got = components(edges, maxIter = 1)
-        assert(got == expect, s"trial $trial: $edges")
+        assert(got == reference(edges), s"trial $trial: $edges")
       }
     }
   }
@@ -136,9 +236,11 @@ class ComponentsSpec extends AnyFunSuite with SparkTest {
     // prove the fallback keeps clusters separate while merging chains.
     val pathA = (0L until 9998L by 2).map(i => (i, i + 2))     // evens 0..9998
     val pathB = (1L until 9999L by 2).map(i => (i, i + 2))     // odds 1..9999
-    val got = components(pathA ++ pathB, maxIter = 25)
-    assert(got.size == 10000)
-    assert((0L until 10000L by 2).forall(got(_) == 0L))
-    assert((1L until 10000L by 2).forall(got(_) == 1L))
+    val (driver, distributed) = bothPaths((pathA ++ pathB).toDF("id_a", "id_b"), 25)
+    for (got <- Seq(labels(driver), labels(distributed))) {
+      assert(got.size == 10000)
+      assert((0L until 10000L by 2).forall(got(_) == 0L))
+      assert((1L until 10000L by 2).forall(got(_) == 1L))
+    }
   }
 }
