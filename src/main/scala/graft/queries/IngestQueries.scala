@@ -1,14 +1,19 @@
 package graft.queries
 
+import java.io.File
 import java.sql.Timestamp
+
+import org.apache.commons.io.FileUtils
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.Tables
 import graft.config.{ColumnSpec, FormatSpec, PartitionSpec, TableSpec}
 import graft.ingest.{Formats, Ingest, SchemaInference, Synthetic}
 import graft.lake.{Lake, Maintenance, TpSchema}
+import graft.lake.Artifacts.workRoot
 import graft.query.Views
 
 /** Driver-facing queries exercising the ENGINE — the ingest/lake/view/
@@ -24,12 +29,8 @@ object IngestQueries {
 
   // ---- fixture plumbing ----------------------------------------------
 
-  private def workRoot(sfDir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_work/" +
-      sfDir.replaceAll("[^A-Za-z0-9]", "_")
-
   /** Build a fixture at most once per JVM: the FIRST query to touch
-    * `root` in this process rmrfs and rebuilds (so stale /tmp state
+    * `root` in this process deletes and rebuilds (so stale /tmp state
     * from an earlier build never leaks in), later queries reuse it —
     * qi31/qi33 and qi37/qi38 build byte-identical lakes, and paying
     * the multi-append construction twice per bench run bought nothing.
@@ -40,7 +41,7 @@ object IngestQueries {
   private def fixtureOnce(root: String)(build: => Unit): Unit =
     builtFixtures.synchronized {
       if (!builtFixtures.contains(root)) {
-        rmrf(root)
+        FileUtils.deleteDirectory(new File(root))
         build
         builtFixtures += root
       }
@@ -243,15 +244,6 @@ object IngestQueries {
     lake
   }
 
-  private def rmrf(path: String): Unit = {
-    def rec(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rec)
-      f.delete()
-    }
-    val f = new java.io.File(path)
-    if (f.exists()) rec(f)
-  }
-
   /** events → deterministic JSONL chunk files (timestamp serialized at
     * full micros so the round-trip is value-exact).
     */
@@ -310,6 +302,58 @@ object IngestQueries {
     root
   }
 
+  /** qi22/qi24/qi27: `join` over the purchases (`p_id`, `p_ts`,
+    * `p_user`) and errors (`e_id`, `e_ts`, `e_user`) streams of the
+    * shared inbox fixture, drained into the memory sink `<name>_mem`;
+    * returns each match with its exact micros delta, ordered.
+    *
+    * Stream-stream join state = 4 stores PER shuffle partition, each
+    * paying commit/snapshot overhead every micro-batch — the partition
+    * count is frozen into the state layout at the first checkpoint, so
+    * it must be derived BEFORE start(). It is sized from the INBOX
+    * SAMPLE (sampledJoinSizing) rather than a full parse of both
+    * feeds: at this fixture's 2-files-per-side geometry the sample IS
+    * the whole inbox, so the derivation is identical (StreamIngestSpec
+    * pins the equivalence); at 100 TB it is the difference between
+    * sizing from 4 files and re-reading a day. Restored after start so
+    * batch queries keep the session default.
+    */
+  private def ijoinQuery(s: SparkSession, dir: String, name: String,
+      bucketedSizing: Boolean = false)(
+      join: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val inboxes = ijoinInboxFixture(s, dir)
+    val fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
+    val (lDir, rDir) = (s"$inboxes/purchases", s"$inboxes/errors")
+    val lSchema = SchemaInference.inferJson(s, jsonlFiles(lDir).take(1))
+    val rSchema = SchemaInference.inferJson(s, jsonlFiles(rDir).take(1))
+    def side(inbox: String, schema: StructType, p: String): DataFrame =
+      s.readStream.schema(schema).json(inbox)
+        .select(col("event_id").as(s"${p}_id"),
+          to_timestamp(col("ts"), fmt).as(s"${p}_ts"),
+          col("user_id").as(s"${p}_user"))
+    val joined = join(side(lDir, lSchema, "p"), side(rDir, rSchema, "e"))
+    val sizing = graft.streaming.StreamIngest.sampledJoinSizing(s,
+      lDir, lSchema, rDir, rSchema,
+      d => d.select(col("user_id").as("k"),
+        to_timestamp(col("ts"), fmt).as("t")),
+      horizonSecs = 3600L + 3600L, bucketed = bucketedSizing)
+    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
+    val q = try {
+      s.conf.set("spark.sql.shuffle.partitions",
+        sizing.shufflePartitions.toString)
+      joined.writeStream.format("memory")
+        .queryName(s"${name}_mem").outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    q.awaitTermination()
+    s.table(s"${name}_mem")
+      .select(col("p_id"), col("e_id"), col("p_user"),
+        (unix_micros(col("e_ts")) - unix_micros(col("p_ts")))
+          .as("delta_us"))
+      .orderBy("p_id", "e_id")
+  }
+
   /** The shared per-sfDir lake, built once per JVM: `events_lake`
     * ingested from 4 JSONL chunks with tp_index = event_type, partition
     * name p0. Reused by every read-only engine query.
@@ -317,17 +361,10 @@ object IngestQueries {
   private val fixtures =
     new java.util.concurrent.ConcurrentHashMap[String, Lake]()
 
-  /** Drop the per-JVM fixture cache so a subsequent run rebuilds the
-    * shared lake from scratch — Bench uses this between protocol runs
-    * so both time the SAME code path (build + query), not run 1 the
-    * build and run 2 a warm read.
-    */
-  private[graft] def resetFixtures(): Unit = fixtures.clear()
-
   private[graft] def sharedLake(spark: SparkSession, sfDir: String): Lake =
     fixtures.computeIfAbsent(sfDir, { _ =>
       val root = s"${workRoot(sfDir)}/lake"
-      rmrf(root)
+      FileUtils.deleteDirectory(new File(root))
       val jl = eventsJsonlFixture(spark, sfDir, chunks = 4)
       val lake = Lake(root)
       Ingest.collectJsonl(spark, lake,
@@ -362,7 +399,7 @@ object IngestQueries {
     // deterministically; the oracle recomputes the report.
     "qi02_ingest_validate" -> ((s, dir) => {
       val root = s"${workRoot(dir)}/qi02"
-      rmrf(root)
+      FileUtils.deleteDirectory(new File(root))
       val src = Tables.load(s, dir, "events").select(
         col("event_id"),
         when(col("event_id") % 101 === 0, lit(null))
@@ -410,7 +447,7 @@ object IngestQueries {
     // and breaks meta_null/hash.
     "qi04_struct_convert" -> ((s, dir) => {
       val root = s"${workRoot(dir)}/qi04"
-      rmrf(root)
+      FileUtils.deleteDirectory(new File(root))
       Tables.load(s, dir, "events").select(
         col("event_id"),
         date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts"),
@@ -447,7 +484,7 @@ object IngestQueries {
     // FAIL-FAST drift detection; the typed error lists changed columns.
     "qi05_schema_drift" -> ((s, dir) => {
       val root = s"${workRoot(dir)}/qi05"
-      rmrf(root)
+      FileUtils.deleteDirectory(new File(root))
       val base = Tables.load(s, dir, "events")
         .select(col("event_id"),
           date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts"),
@@ -478,7 +515,7 @@ object IngestQueries {
     // dirs minus rows in [from, to]; the oracle is the complement scan.
     "qi06_partition_delete" -> ((s, dir) => {
       val root = s"${workRoot(dir)}/qi06"
-      rmrf(root)
+      FileUtils.deleteDirectory(new File(root))
       val jl = eventsJsonlFixture(s, dir, chunks = 2)
       val lake = Lake(s"$root/lake")
       Ingest.collectJsonl(s, lake,
@@ -499,7 +536,7 @@ object IngestQueries {
     // lost or duplicated; CompactionSpec asserts the file-level effects.
     "qi07_compact" -> ((s, dir) => {
       val root = s"${workRoot(dir)}/qi07"
-      rmrf(root)
+      FileUtils.deleteDirectory(new File(root))
       val jl = eventsJsonlFixture(s, dir, chunks = 6)
       val lake = Lake(s"$root/lake")
       // 3 separate appends → ≥3 files per partition dir, overlapping
@@ -527,7 +564,7 @@ object IngestQueries {
     // 2-decimal in the fixture and rendered %.2f.
     "qi08_grok_ingest" -> ((s, dir) => {
       val root = s"${workRoot(dir)}/qi08"
-      rmrf(root)
+      FileUtils.deleteDirectory(new File(root))
       Tables.load(s, dir, "events").select(concat(
           date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS"),
           lit(" UTC ["),
@@ -569,7 +606,7 @@ object IngestQueries {
     // null_if rule.
     "qi09_delimited_ingest" -> ((s, dir) => {
       val root = s"${workRoot(dir)}/qi09"
-      rmrf(root)
+      FileUtils.deleteDirectory(new File(root))
       Tables.load(s, dir, "events").select(
           col("event_id"),
           date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts"),
@@ -611,7 +648,7 @@ object IngestQueries {
     // the microsecond timestamp stride) is oracle-checked.
     "qi10_synthetic" -> ((s, dir) => {
       val root = s"${workRoot(dir)}/qi10"
-      rmrf(root)
+      FileUtils.deleteDirectory(new File(root))
       val lake = Lake(s"$root/lake")
       val batch = Synthetic.dataFrame(s,
         Synthetic.Spec(cols = 11, rows = 20000, chunkSize = 5000,
@@ -647,7 +684,7 @@ object IngestQueries {
     // closed-form fixture, digest via sha256 over the shared hex text.
     "qi11_multimodal" -> ((s, dir) => {
       val root = s"${workRoot(dir)}/qi11"
-      rmrf(root)
+      FileUtils.deleteDirectory(new File(root))
       val d = col("doc_id")
       val w = (d % 640 + 16).cast("int")
       val h = (d % 480 + 16).cast("int")
@@ -697,7 +734,7 @@ object IngestQueries {
     // double-ingested or dropped micro-batch breaks count/sum/hash.
     "qi13_stream_ingest" -> ((s, dir) => {
       val root = s"${workRoot(dir)}/qi13"
-      rmrf(root)
+      FileUtils.deleteDirectory(new File(root))
       val inbox = eventsJsonlFixture(s, dir, chunks = 4)
       val lake = Lake(s"$root/lake")
       // r19: infer from ONE chunk, not the whole inbox (collectJsonl's
@@ -727,7 +764,7 @@ object IngestQueries {
     // or double-counting across the overlap breaks count/sum/hash.
     "qi15_stream_window" -> ((s, dir) => {
       val root = s"${workRoot(dir)}/qi15"
-      rmrf(root)
+      FileUtils.deleteDirectory(new File(root))
       val inbox = eventsJsonlFixture(s, dir, chunks = 4)
       val schema = SchemaInference.inferJson(s, jsonlFiles(inbox).take(1))
       val stream = s.readStream.schema(schema).json(inbox)
@@ -758,7 +795,7 @@ object IngestQueries {
     // misordered _reject_reason string.
     "qi21_stream_router" -> ((s, dir) => {
       val root = s"${workRoot(dir)}/qi21"
-      rmrf(root)
+      FileUtils.deleteDirectory(new File(root))
       val inbox = eventsJsonlFixture(s, dir, chunks = 4)
       val lake = Lake(s"$root/lake")
       val schema = SchemaInference.inferJson(s, jsonlFiles(inbox).take(1))
@@ -798,58 +835,13 @@ object IngestQueries {
     // off by a boundary), or a micro-batch replay duplicate breaks
     // the hash. delta_us is an exact integer micros difference — no
     // seconds-truncation ambiguity between engines.
-    "qi22_stream_interval_join" -> ((s, dir) => {
-      val root = s"${workRoot(dir)}/qi22"
-      rmrf(root)
-      val inboxes = ijoinInboxFixture(s, dir)
-      val fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-      val lSchema = SchemaInference.inferJson(s, jsonlFiles(s"$inboxes/purchases").take(1))
-      val rSchema = SchemaInference.inferJson(s, jsonlFiles(s"$inboxes/errors").take(1))
-      val lhs = s.readStream.schema(lSchema).json(s"$inboxes/purchases")
-        .select(col("event_id").as("p_id"),
-          to_timestamp(col("ts"), fmt).as("p_ts"),
-          col("user_id").as("p_user"))
-      val rhs = s.readStream.schema(rSchema).json(s"$inboxes/errors")
-        .select(col("event_id").as("e_id"),
-          to_timestamp(col("ts"), fmt).as("e_ts"),
-          col("user_id").as("e_user"))
-      val joined = graft.streaming.StreamIngest.intervalJoin(
-        lhs, rhs, "p_user", "e_user", "p_ts", "e_ts",
-        before = "30 minutes", after = "30 minutes",
-        leftDelay = "1 hour", rightDelay = "1 hour")
-      // stream-stream join state = 4 stores PER shuffle partition,
-      // each paying commit/snapshot overhead every micro-batch — the
-      // partition count is frozen into the state layout at the first
-      // checkpoint, so it must be derived BEFORE start(). autoState
-      // computes it from the observed key cardinality (the hand-set 8
-      // of round 12, now an operating mode); restored after start so
-      // batch queries keep the session default. r20: sized from the
-      // INBOX SAMPLE (sampledJoinSizing) instead of a full parse of
-      // both feeds — at this fixture's 2-files-per-side geometry the
-      // sample IS the whole inbox, so the derivation is identical
-      // (StreamIngestSpec pins the equivalence); at 100 TB it is the
-      // difference between sizing from 4 files and re-reading a day.
-      val sizing = graft.streaming.StreamIngest.sampledJoinSizing(s,
-        s"$inboxes/purchases", lSchema, s"$inboxes/errors", rSchema,
-        d => d.select(col("user_id").as("k"),
-          to_timestamp(col("ts"), fmt).as("t")),
-        horizonSecs = 3600L + 3600L, bucketed = true)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      val q = try {
-        s.conf.set("spark.sql.shuffle.partitions",
-          sizing.shufflePartitions.toString)
-        joined.writeStream.format("memory")
-          .queryName("qi22_mem").outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      q.awaitTermination()
-      s.table("qi22_mem")
-        .select(col("p_id"), col("e_id"), col("p_user"),
-          (unix_micros(col("e_ts")) - unix_micros(col("p_ts")))
-            .as("delta_us"))
-        .orderBy("p_id", "e_id")
-    }),
+    "qi22_stream_interval_join" -> ((s, dir) =>
+      ijoinQuery(s, dir, "qi22", bucketedSizing = true) { (l, r) =>
+        graft.streaming.StreamIngest.intervalJoin(
+          l, r, "p_user", "e_user", "p_ts", "e_ts",
+          before = "30 minutes", after = "30 minutes",
+          leftDelay = "1 hour", rightDelay = "1 hour")
+      }),
 
     // Wide-schema end-to-end (verdict r12 task 5): a 300+-column table
     // — 300 derived bigint columns plus a struct and an array — through
@@ -862,7 +854,7 @@ object IngestQueries {
     // null-poisoned cast anywhere in the width breaks the hash.
     "qi23_wide_collect" -> ((s, dir) => {
       val root = s"${workRoot(dir)}/qi23"
-      rmrf(root)
+      FileUtils.deleteDirectory(new File(root))
       val lake = Lake(s"$root/lake")
       val spec = PartitionSpec("events_w300", "p0",
         tpIndexColumn = Some("event_type"))
@@ -927,48 +919,13 @@ object IngestQueries {
     // would correctly derive 1 (= plain qi22, exercising nothing);
     // the skew-triggered derivation is pinned in StreamIngestSpec and
     // measured in the stream_skew rehearsal.
-    "qi24_stream_ijoin_salted" -> ((s, dir) => {
-      val root = s"${workRoot(dir)}/qi24"
-      rmrf(root)
-      val inboxes = ijoinInboxFixture(s, dir)
-      val fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-      val lSchema = SchemaInference.inferJson(s, jsonlFiles(s"$inboxes/purchases").take(1))
-      val rSchema = SchemaInference.inferJson(s, jsonlFiles(s"$inboxes/errors").take(1))
-      val lhs = s.readStream.schema(lSchema).json(s"$inboxes/purchases")
-        .select(col("event_id").as("p_id"),
-          to_timestamp(col("ts"), fmt).as("p_ts"),
-          col("user_id").as("p_user"))
-      val rhs = s.readStream.schema(rSchema).json(s"$inboxes/errors")
-        .select(col("event_id").as("e_id"),
-          to_timestamp(col("ts"), fmt).as("e_ts"),
-          col("user_id").as("e_user"))
-      val joined = graft.streaming.StreamIngest.saltedIntervalJoin(
-        lhs, rhs, "p_user", "e_user", "p_ts", "e_ts",
-        before = "30 minutes", after = "30 minutes",
-        leftDelay = "1 hour", rightDelay = "1 hour", factor = 4)
-      // sized from the inbox sample — see qi22 (identical derivation
-      // at this geometry, at-scale shape at 100 TB)
-      val sizing = graft.streaming.StreamIngest.sampledJoinSizing(s,
-        s"$inboxes/purchases", lSchema, s"$inboxes/errors", rSchema,
-        d => d.select(col("user_id").as("k"),
-          to_timestamp(col("ts"), fmt).as("t")),
-        horizonSecs = 3600L + 3600L)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      val q = try {
-        s.conf.set("spark.sql.shuffle.partitions",
-          sizing.shufflePartitions.toString)
-        joined.writeStream.format("memory")
-          .queryName("qi24_mem").outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      q.awaitTermination()
-      s.table("qi24_mem")
-        .select(col("p_id"), col("e_id"), col("p_user"),
-          (unix_micros(col("e_ts")) - unix_micros(col("p_ts")))
-            .as("delta_us"))
-        .orderBy("p_id", "e_id")
-    }),
+    "qi24_stream_ijoin_salted" -> ((s, dir) =>
+      ijoinQuery(s, dir, "qi24") { (l, r) =>
+        graft.streaming.StreamIngest.saltedIntervalJoin(
+          l, r, "p_user", "e_user", "p_ts", "e_ts",
+          before = "30 minutes", after = "30 minutes",
+          leftDelay = "1 hour", rightDelay = "1 hour", factor = 4)
+      }),
 
     // The time-BUCKETED salted interval join against the same DuckDB
     // range-join oracle as qi22/qi24: the (key, salt, bucket) state
@@ -978,50 +935,13 @@ object IngestQueries {
     // (a match straddling a bucket edge dropped or doubled), a
     // floor-division defect on the bucket id, or a salt/bucket
     // interaction breaks the hash.
-    "qi27_stream_ijoin_bucketed" -> ((s, dir) => {
-      val root = s"${workRoot(dir)}/qi27"
-      rmrf(root)
-      val inboxes = ijoinInboxFixture(s, dir)
-      val fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-      val lSchema = SchemaInference.inferJson(s, jsonlFiles(s"$inboxes/purchases").take(1))
-      val rSchema = SchemaInference.inferJson(s, jsonlFiles(s"$inboxes/errors").take(1))
-      val lhs = s.readStream.schema(lSchema).json(s"$inboxes/purchases")
-        .select(col("event_id").as("p_id"),
-          to_timestamp(col("ts"), fmt).as("p_ts"),
-          col("user_id").as("p_user"))
-      val rhs = s.readStream.schema(rSchema).json(s"$inboxes/errors")
-        .select(col("event_id").as("e_id"),
-          to_timestamp(col("ts"), fmt).as("e_ts"),
-          col("user_id").as("e_user"))
-      val joined = graft.streaming.StreamIngest.bucketedIntervalJoin(
-        lhs, rhs, "p_user", "e_user", "p_ts", "e_ts",
-        before = "30 minutes", after = "30 minutes",
-        leftDelay = "1 hour", rightDelay = "1 hour", factor = 3)
-      // size the frozen state layout before start() (the qi22 lesson;
-      // same derivation as qi24 — session-default partitions would pay
-      // 4 stores × 32 partitions of commit per trigger); sized from
-      // the inbox sample like qi22/qi24
-      val sizing = graft.streaming.StreamIngest.sampledJoinSizing(s,
-        s"$inboxes/purchases", lSchema, s"$inboxes/errors", rSchema,
-        d => d.select(col("user_id").as("k"),
-          to_timestamp(col("ts"), fmt).as("t")),
-        horizonSecs = 3600L + 3600L)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      val q = try {
-        s.conf.set("spark.sql.shuffle.partitions",
-          sizing.shufflePartitions.toString)
-        joined.writeStream.format("memory")
-          .queryName("qi27_mem").outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      q.awaitTermination()
-      s.table("qi27_mem")
-        .select(col("p_id"), col("e_id"), col("p_user"),
-          (unix_micros(col("e_ts")) - unix_micros(col("p_ts")))
-            .as("delta_us"))
-        .orderBy("p_id", "e_id")
-    }),
+    "qi27_stream_ijoin_bucketed" -> ((s, dir) =>
+      ijoinQuery(s, dir, "qi27") { (l, r) =>
+        graft.streaming.StreamIngest.bucketedIntervalJoin(
+          l, r, "p_user", "e_user", "p_ts", "e_ts",
+          before = "30 minutes", after = "30 minutes",
+          leftDelay = "1 hour", rightDelay = "1 hour", factor = 3)
+      }),
 
     // Zone-map pruned scan from the colstats sidecar: events land in
     // three VALUE-BANDED appends (per-file value ranges disjoint — the
@@ -1832,7 +1752,7 @@ object IngestQueries {
     // or a digest mismatch across the JSONL round-trip breaks the hash.
     "qi25_stream_incremental_dedup" -> ((s, dir) => {
       val root = s"${workRoot(dir)}/qi25"
-      rmrf(root)
+      FileUtils.deleteDirectory(new File(root))
       val docs = Tables.load(s, dir, "documents")
         .select("doc_id", "text", "source", "n_chars")
       val maxId = docs.agg(max("doc_id")).head().getLong(0)
@@ -1884,7 +1804,7 @@ object IngestQueries {
         require(dst.setLastModified(1000000000000L + i * 60000L),
           s"qi25: setLastModified failed for $dst")
       }
-      rmrf(s"$root/slice_staging")
+      FileUtils.deleteDirectory(new File(s"$root/slice_staging"))
       val schema = SchemaInference.inferJson(s, jsonlFiles(s"$root/inbox").take(1))
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).json(s"$root/inbox")
@@ -1908,7 +1828,7 @@ object IngestQueries {
     // bytes a time-ordered layout does — PERF.md round-14 zorder).
     "qi26_zorder_compact" -> ((s, dir) => {
       val root = s"${workRoot(dir)}/qi26"
-      rmrf(root)
+      FileUtils.deleteDirectory(new File(root))
       val jl = eventsJsonlFixture(s, dir, chunks = 4)
       val lake = Lake(s"$root/lake")
       Ingest.collectJsonl(s, lake,
@@ -1951,7 +1871,7 @@ object IngestQueries {
     // stale value after the merge breaks the hash.
     "qi16_upsert" -> ((s, dir) => {
       val root = s"${workRoot(dir)}/qi16"
-      rmrf(root)
+      FileUtils.deleteDirectory(new File(root))
       val jl = eventsJsonlFixture(s, dir, chunks = 2)
       val lake = Lake(s"$root/lake")
       val spec = PartitionSpec("events_up", "p0",
@@ -1987,7 +1907,7 @@ object IngestQueries {
     // both be exact.
     "qi14_legacy_import" -> ((s, dir) => {
       val root = s"${workRoot(dir)}/qi14"
-      rmrf(root)
+      FileUtils.deleteDirectory(new File(root))
       Tables.load(s, dir, "events")
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"))
@@ -2052,7 +1972,7 @@ object IngestQueries {
     // overwrite) provably loses nothing and double-counts nothing.
     "qi18_rollup" -> ((s, dir) => {
       val root = s"${workRoot(dir)}/qi18"
-      rmrf(root)
+      FileUtils.deleteDirectory(new File(root))
       val lake = Lake(s"$root/lake")
       val spec = PartitionSpec("events_r", "p0",
         tpIndexColumn = Some("event_type"))
@@ -2107,7 +2027,7 @@ object IngestQueries {
     // left the table unreadable breaks the hash.
     "qi19_vacuum_restore" -> ((s, dir) => {
       val root = s"${workRoot(dir)}/qi19"
-      rmrf(root)
+      FileUtils.deleteDirectory(new File(root))
       val lake = Lake(s"$root/lake")
       val spec = PartitionSpec("events_v", "p0",
         tpIndexColumn = Some("event_type"))
@@ -2121,7 +2041,8 @@ object IngestQueries {
           timestampColumn = "ts"))
       Maintenance.backupManifest(s, lake, "events_v")
       Maintenance.vacuum(s, lake, "events_v")
-      rmrf(s"${lake.tableDir("events_v")}/_graft_manifest")
+      FileUtils.deleteDirectory(
+        new File(s"${lake.tableDir("events_v")}/_graft_manifest"))
       Maintenance.restoreManifest(s, lake, "events_v")
       lake.read(s, "events_v")
         .groupBy(col("tp_index").cast("string").as("tp_index"))
@@ -2138,7 +2059,7 @@ object IngestQueries {
     // pre-backup ones) diverges from the oracle's parity split.
     "qi20_snapshot_read" -> ((s, dir) => {
       val root = s"${workRoot(dir)}/qi20"
-      rmrf(root)
+      FileUtils.deleteDirectory(new File(root))
       val lake = Lake(s"$root/lake")
       val spec = PartitionSpec("events_s", "p0",
         tpIndexColumn = Some("event_type"))

@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.{LongType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The scale-rehearsal generators are measurement fixtures: their
@@ -74,5 +78,35 @@ class ScaleRehearsalSpec extends AnyFunSuite with SparkTest {
       assert(!ts.before(lo) && ts.before(hi), ts)
       assert(r.getDouble(4) >= 0.0)
     }
+  }
+
+  test("stream inbox: per-type row counts, and a reader of typed rows") {
+    val n = 2000L
+    val root = java.nio.file.Files.createTempDirectory("stream-inbox").toFile
+    try {
+      val inbox = s"$root/inbox"
+      ScaleRehearsal.streamInbox(spark, inbox, n, slices = 4)
+      val ev = ScaleRehearsal.events(spark, n)
+      def typed(t: String) = ev.where(col("event_type") === t).count()
+      val purchases = spark.read.json(s"$inbox/purchases").count()
+      assert(purchases > 0 && purchases == typed("purchase"))
+      assert(spark.read.json(s"$inbox/errors").count() == typed("error"))
+      assert(spark.read.json(s"$inbox/all").count() == n)
+      // one file per slice and side, so the file source replays the
+      // slices as separate micro-batches
+      assert(new java.io.File(s"$inbox/purchases").listFiles()
+        .count(_.getName.endsWith(".json")) == 4)
+
+      val stream = ScaleRehearsal.inboxStream(spark, s"$inbox/purchases",
+        "p_id", "p_ts", "p_user", mfpt = 1)
+      assert(stream.schema.map(f => f.name -> f.dataType) == Seq(
+        "p_id" -> LongType, "p_ts" -> TimestampType, "p_user" -> LongType))
+      val q = stream.writeStream.format("memory").queryName("inbox_spec")
+        .trigger(Trigger.AvailableNow()).start()
+      try q.awaitTermination() finally q.stop()
+      val drained = spark.table("inbox_spec")
+      assert(drained.count() == purchases)
+      assert(drained.where(col("p_ts").isNull).count() == 0)
+    } finally FileUtils.deleteDirectory(root)
   }
 }
