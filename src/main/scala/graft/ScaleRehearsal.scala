@@ -566,7 +566,7 @@ object ScaleRehearsal {
       // the _graft_colstats sidecar skip whole files on a
       // NON-partition numeric predicate — the file-skipping move
       // partition pruning can't make (value isn't a partition column)
-      // and tp_timestamp readPruned can't either (wrong column). The
+      // and tp_timestamp zone pruning can't either (wrong column). The
       // claims: pruned input bytes track the SELECTED BAND's share of
       // the table, not the table size, and results are identical to
       // the full scan. Fixture: 8 value-banded appends (disjoint

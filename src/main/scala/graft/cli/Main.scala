@@ -7,7 +7,8 @@ import java.time.format.DateTimeFormatter
 
 import scala.util.matching.Regex
 
-import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row,
+  SparkSession}
 
 import graft.config.{Hcl, PartitionSpec, TableSpec, Workspace}
 import graft.ingest.Ingest
@@ -2001,260 +2002,149 @@ object Main {
           }
         }
       case Some("aggregate") =>
-        // count/min/max answered from the manifest + colstats sidecar
-        // — scan-free when every live file is covered, one bounded
-        // residual scan otherwise (Lake.statsAggregate scaladoc). The
-        // CLI face of the MetadataAggregateRule rewrite, for when the
-        // user wants the numbers (and the audit) without a SQL session.
+        // one DataFrame aggregate per report section over the table's
+        // relation, under the --from/--to window when one is given —
+        // the plan `graft query` runs for the same SQL. The metadata
+        // aggregate rule answers each from the manifest + colstats
+        // sidecar when every file is covered, as a hybrid (contained
+        // files from metadata, straddlers scanned in-plan) under a
+        // window or a --by bucket, and leaves the plain scan otherwise.
+        // Each section's audit is the number of data files it read.
+        import org.apache.spark.sql.functions.{col, count, countDistinct,
+          expr, lit, max, min}
         val t = opts.positional.lift(1).getOrElse(
           throw new IllegalArgumentException(
             "table aggregate requires a name"))
         require(lake.tableExists(spark, t), s"no lake table '$t'")
+        require(lake.hasData(spark, t),
+          s"table aggregate: table '$t' has no data files")
         val cols = opts.flag("columns")
           .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
           .getOrElse(lake.colStatsColumns(spark, t))
         require(cols.nonEmpty, "table aggregate requires --columns " +
           "(or stats-enabled columns on the table)")
-        opts.flag("by") match {
-          // --by minute…year: the per-bucket report — THE
-          // reporting query of the reference's domain, served through
-          // the SQL bucket hybrid (bucket-contained files answer from
-          // metadata, straddlers scan and merge in-plan). Runs the
-          // same registered-view path a SQL session gets; the audit
-          // line reports the in-plan scan.
-          case Some(grainRaw) =>
-            val grain = grainRaw.toLowerCase(java.util.Locale.ROOT)
-            require(Set("minute", "hour", "day", "week", "month",
-              "quarter", "year", "dow", "hour-of-day").contains(grain),
-              "table aggregate --by wants " +
-                "minute|hour|day|week|month|quarter|year|dow|hour-of-day")
-            graft.query.Views.register(spark, lake,
-              graft.query.Views.Filters())
-            // dow / hour-of-day are PROFILE buckets (extract keys:
-            // many time buckets merge onto one output key) — scan-free
-            // on a lake aligned at least as fine as the extract's
-            // grain, served through the same bucket hybrid
-            val bucket = grain match {
-              case "day" => "tp_date"
-              case "dow" => "dayofweek(tp_timestamp)"
-              case "hour-of-day" => "hour(tp_timestamp)"
-              case g => s"date_trunc('${g.toUpperCase(
-                java.util.Locale.ROOT)}', tp_timestamp)"
-            }
-            val where = (opts.ts("from"), opts.ts("to")) match {
-              case (None, None) => ""
-              case (f, to0) =>
-                val lo = f.getOrElse(new java.sql.Timestamp(0L))
-                val hi = to0.getOrElse(
-                  Timestamp.valueOf("9999-12-31 00:00:00"))
-                s"WHERE tp_timestamp >= timestamp'$lo' " +
-                  s"AND tp_timestamp <= timestamp'$hi'"
-            }
-            val colAggs = cols.map(c =>
-              s"count($c) AS n_$c, min($c) AS mn_$c, max($c) AS mx_$c")
-            val q = spark.sql(
-              s"SELECT $bucket AS bucket, count(*) AS n_rows, " +
-                colAggs.mkString(", ") +
-                s" FROM $t $where GROUP BY $bucket ORDER BY bucket")
-            val rows = q.collect()
-            val files = graft.query.ScanAudit.filesRead(q)
+        val schema = lake.schemaOf(spark, t)
+        cols.foreach(c => require(schema.fieldNames.contains(c),
+          s"table aggregate: table '$t' has no column '$c'"))
+        val (from, to) = (opts.ts("from"), opts.ts("to"))
+        require(from.zip(to).forall { case (f, u) => !f.after(u) },
+          "table aggregate: --from is after --to")
+        val topk = opts.flag("topk").map { kRaw =>
+          val k = kRaw.toIntOption.getOrElse(0)
+          require(k > 0, s"--topk wants a positive integer, got '$kRaw'")
+          k
+        }
+        val quantiles = opts.flag("quantiles").map { spec =>
+          val given = spec.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+          val ps = given.flatMap(_.toDoubleOption).filter(p => p >= 0 && p <= 1)
+          require(ps.nonEmpty && ps.size == given.size,
+            "--quantiles wants comma-separated probabilities in [0,1], " +
+              s"got '$spec'")
+          ps
+        }
+        // --by minute…year: per-bucket rows. dow / hour-of-day are
+        // PROFILE buckets (extract keys: many time buckets merge onto
+        // one output key)
+        val bucket = opts.flag("by").map { grainRaw =>
+          val grain = grainRaw.toLowerCase(java.util.Locale.ROOT)
+          require(Set("minute", "hour", "day", "week", "month",
+            "quarter", "year", "dow", "hour-of-day").contains(grain),
+            "table aggregate --by wants " +
+              "minute|hour|day|week|month|quarter|year|dow|hour-of-day")
+          expr(grain match {
+            case "day" => graft.lake.TpSchema.Date
+            case "dow" => "dayofweek(tp_timestamp)"
+            case "hour-of-day" => "hour(tp_timestamp)"
+            case g => s"date_trunc('${g.toUpperCase(
+              java.util.Locale.ROOT)}', tp_timestamp)"
+          }).as("bucket")
+        }
+        graft.lake.MetadataAggregateRule.install(spark)
+        val base = Views.filtered(spark, lake, t, Views.Filters(from, to))
+        // one section's rows and the data files its plan read
+        def run(q: DataFrame): (Array[Row], Long) =
+          (q.collect(), graft.query.ScanAudit.filesRead(q))
+        def agg(aggs: Seq[Column]): (Row, Long) = {
+          val (rows, files) = run(base.agg(aggs.head, aggs.tail: _*))
+          (rows.head, files)
+        }
+        def note(files: Long, served: String): String =
+          if (files == 0) s" ($served, no scan)" else " (scanned)"
+        val ranges = count(lit(1)).as("n_rows") +: cols.flatMap(c => Seq(
+          count(col(c)).as(s"n_$c"),
+          min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
+        def range(r: Row, c: String): String =
+          s"count=${r.getAs[Long](s"n_$c")}" +
+            s" min=${Option(r.getAs[Any](s"min_$c")).getOrElse("-")}" +
+            s" max=${Option(r.getAs[Any](s"max_$c")).getOrElse("-")}"
+        val files = bucket match {
+          case Some(b) =>
+            val (rows, n) = run(base.groupBy(b)
+              .agg(ranges.head, ranges.tail: _*).orderBy("bucket"))
             rows.foreach { r =>
-              val per = cols.map(c =>
-                s" $c[count=${r.getAs[Long](s"n_$c")}" +
-                  s" min=${Option(r.getAs[Any](s"mn_$c")).getOrElse("-")}" +
-                  s" max=${Option(r.getAs[Any](s"mx_$c")).getOrElse("-")}]")
-                .mkString
               out.println(
                 s"${Option(r.getAs[Any]("bucket")).getOrElse("null")}: " +
-                  s"rows=${r.getAs[Long]("n_rows")}$per")
+                  s"rows=${r.getAs[Long]("n_rows")}" +
+                  cols.map(c => s" $c[${range(r, c)}]").mkString)
             }
-            out.println(
-              if (files == 0) "served from metadata (no data scan)"
-              else s"metadata + in-plan scan of $files straddler file(s)")
+            n
           case None =>
-        // --from/--to: the TIME-BAND hybrid — contained files answer
-        // from metadata, only band-edge straddlers are scanned
-        // withSums = false: this command prints count/min/max only —
-        // computing sums it never shows would add a coverage gate and
-        // an overflow hazard for nothing (r16 ADVICE-medium)
-        val (res, residual) = (opts.ts("from"), opts.ts("to")) match {
-          case (None, None) =>
-            lake.statsAggregateAudited(spark, t, cols, withSums = false)
-          case (f, to) =>
-            lake.timeBandAggregateAudited(spark, t,
-              f.getOrElse(new java.sql.Timestamp(0L)),
-              to.getOrElse(Timestamp.valueOf("9999-12-31 00:00:00")),
-              cols, withSums = false)
-        }
-        val row = res.head()
-        out.println(s"rows: ${row.getAs[Long]("n_rows")}")
-        cols.foreach { c =>
-          out.println(s"  column $c: count=${row.getAs[Long](s"n_$c")}" +
-            s" min=${Option(row.getAs[Any](s"min_$c")).getOrElse("-")}" +
-            s" max=${Option(row.getAs[Any](s"max_$c")).getOrElse("-")}")
+            val (r, n) = agg(ranges)
+            out.println(s"rows: ${r.getAs[Long]("n_rows")}")
+            cols.foreach(c => out.println(s"  column $c: ${range(r, c)}"))
+            n
         }
         out.println(
-          if (residual.isEmpty) "served from metadata (no data scan)"
-          else s"metadata + residual scan of ${residual.size} file(s)")
-        // --ndv: approximate distinct counts — sidecar sketch union
-        // when every live file carries a blob (scan-free), one NdvAgg
-        // scan otherwise (same estimator, same lgK — see NdvFns)
-        if (opts.flag("ndv").contains("true")) {
-          import org.apache.spark.sql.functions.{col, lit}
-          val whole = opts.ts("from").isEmpty && opts.ts("to").isEmpty
-          val unioned =
-            if (whole) lake.metaParts(spark, t,
-              graft.lake.Lake.Needs(ndv = cols.toSet))
-              .filter(_.toScan.isEmpty).map(_.whole.ndvs)
-            else None
-          val est: Map[String, Long] = unioned.getOrElse {
-            val base = lake.read(spark, t)
-            val banded = (opts.ts("from"), opts.ts("to")) match {
-              case (None, None) => base
-              case (f, to) => base.where(
-                col(graft.lake.TpSchema.Timestamp) >=
-                  lit(f.getOrElse(new java.sql.Timestamp(0L))) &&
-                  col(graft.lake.TpSchema.Timestamp) <=
-                    lit(to.getOrElse(
-                      Timestamp.valueOf("9999-12-31 00:00:00"))))
-            }
-            val aggs = cols.map(c =>
-              graft.functions.NdvFns.ndv(spark, col(c)).as(s"__ndv_$c"))
-            val r = banded.agg(aggs.head, aggs.tail: _*).head()
-            cols.map(c => c -> r.getAs[Long](s"__ndv_$c")).toMap
+          if (files == 0) "served from metadata (no data scan)"
+          else s"metadata + in-plan scan of $files straddler file(s)")
+        // --ndv: approximate distinct counts. The sidecar's per-file
+        // HLL sketches union only for int/long/string columns, so each
+        // column is its own aggregate and reports its own audit
+        if (opts.flag("ndv").contains("true"))
+          cols.foreach { c =>
+            val (r, n) = agg(Seq(graft.functions.NdvFns.ndv(spark, col(c))))
+            out.println(s"  ndv $c: ~${r.getLong(0)}" +
+              note(n, "sketch union"))
           }
-          cols.foreach(c =>
-            out.println(s"  ndv $c: ~${est.getOrElse(c, 0L)}" +
-              (if (unioned.isDefined) " (sketch union, no scan)"
-               else " (scanned)")))
-        }
-        // --active-days: count(DISTINCT tp_date) — manifest-served
-        // when every (in-band) file is day-contained and, with
-        // --from/--to, provably inside or outside the band; one
-        // distinct scan otherwise (same answer either way)
+        // --active-days: count(DISTINCT tp_date), from the manifest when
+        // every file in the window is day-contained
         if (opts.flag("active-days").contains("true")) {
-          import org.apache.spark.sql.functions.{col, countDistinct, lit}
-          val band: Option[(Long, Long)] =
-            (opts.ts("from"), opts.ts("to")) match {
-              case (None, None) => None
-              case (f, to0) => Some((
-                f.map(_.getTime * 1000L).getOrElse(Long.MinValue),
-                to0.map(_.getTime * 1000L).getOrElse(Long.MaxValue)))
-            }
-          val served: Option[Long] =
-            lake.distinctDayCounts(spark, t, band.map(Seq(_)))
-              .map(_.values.headOption.getOrElse(0L))
-          val n = served.getOrElse {
-            val base = lake.read(spark, t)
-            val banded = band match {
-              case None => base
-              case Some((lo, hi)) => base.where(
-                col(graft.lake.TpSchema.Timestamp) >=
-                  lit(new java.sql.Timestamp(lo / 1000L)) &&
-                  col(graft.lake.TpSchema.Timestamp) <=
-                    lit(new java.sql.Timestamp(hi / 1000L)))
-            }
-            banded.agg(countDistinct(
-              col(graft.lake.TpSchema.Date)).as("d")).head().getLong(0)
-          }
-          out.println(s"  active days: $n" +
-            (if (served.isDefined) " (manifest, no scan)"
-             else " (scanned)"))
+          val (r, n) = agg(Seq(countDistinct(col(graft.lake.TpSchema.Date))))
+          out.println(s"  active days: ${r.getLong(0)}" + note(n, "manifest"))
         }
-        // --topk K: the K most frequent values per STRING requested
-        // column — per-file frequent-items sidecar blobs merged
-        // scan-free when covered AND provably exact, one sketch scan
-        // otherwise (same aggregate either way — see TopKFns)
-        opts.flag("topk").foreach { kRaw =>
-          import org.apache.spark.sql.functions.col
-          val k = kRaw.toInt
-          require(k > 0, "--topk wants a positive integer")
-          val schema = lake.schemaOf(spark, t)
+        // --topk K: the K most frequent values per STRING column (the
+        // per-file frequent-items sketches merge when provably exact)
+        topk.foreach { k =>
           val strCols = cols.filter(c =>
-            schema(c).dataType ==
-              org.apache.spark.sql.types.StringType)
-          val merged =
-            if (opts.ts("from").isEmpty && opts.ts("to").isEmpty)
-              lake.metaParts(spark, t,
-                graft.lake.Lake.Needs(mg = strCols.toSet))
-                .filter(_.toScan.isEmpty).map(_.whole.mgBlobs)
-                .filter(_.values.forall(b =>
-                  graft.functions.TopKFns.isExact(
-                    graft.functions.TopKFns.fromBlob(b))))
-            else None
-          val rows: Map[String, Seq[(String, Long)]] = merged match {
-            case Some(blobs) => strCols.map(c => c ->
-              blobs.get(c).map(b => graft.functions.TopKFns.topK(
-                graft.functions.TopKFns.fromBlob(b), k))
-                .getOrElse(Nil)).toMap
-            case None =>
-              graft.functions.TopKFns.register(spark)
-              val base = lake.read(spark, t)
-              strCols.map { c =>
-                val arr = base.agg(graft.functions.TopKFns
-                  .topk(spark, col(c), k).as("t")).head()
-                  .getSeq[org.apache.spark.sql.Row](0)
-                c -> arr.map(r =>
-                  (r.getString(0), r.getLong(1))).toSeq
-              }.toMap
-          }
-          strCols.foreach { c =>
-            val line = rows.getOrElse(c, Nil)
-              .map { case (item, cnt) => s"$item=$cnt" }.mkString(" ")
-            out.println(s"  topk $c: $line" +
-              (if (merged.isDefined) " (sketch merge, no scan)"
-               else " (scanned)"))
+            schema(c).dataType == org.apache.spark.sql.types.StringType)
+          if (strCols.nonEmpty) {
+            val (r, n) = agg(strCols.map(c =>
+              graft.functions.TopKFns.topk(spark, col(c), k).as(s"topk_$c")))
+            strCols.foreach { c =>
+              val line = Option(r.getAs[Seq[Row]](s"topk_$c")).getOrElse(Nil)
+                .map(e => s"${e.getString(0)}=${e.getLong(1)}").mkString(" ")
+              out.println(s"  topk $c: $line" + note(n, "sketch merge"))
+            }
           }
         }
-        // --quantiles p1,p2,...: approximate quantiles for the NUMERIC
-        // requested columns — per-file KLL sidecar blobs merged
-        // scan-free when covered, one QuantileAgg scan otherwise
-        // (identical estimator either way — see QuantileFns)
-        opts.flag("quantiles").foreach { spec =>
-          import org.apache.spark.sql.functions.col
-          val ps = spec.split(",").map(_.trim).filter(_.nonEmpty)
-            .map(_.toDouble).toSeq
-          require(ps.nonEmpty && ps.forall(p => p >= 0 && p <= 1),
-            "--quantiles wants comma-separated probabilities in [0,1]")
-          val schema = lake.schemaOf(spark, t)
-          val numCols = cols.filter(c =>
-            schema(c).dataType.isInstanceOf[
-              org.apache.spark.sql.types.NumericType])
-          val whole = opts.ts("from").isEmpty && opts.ts("to").isEmpty
-          val merged =
-            if (whole) lake.metaParts(spark, t,
-              graft.lake.Lake.Needs(kll = numCols.toSet))
-              .filter(_.toScan.isEmpty).map(_.whole.kllBlobs)
-            else None
-          val rows: Map[String, Seq[Option[Double]]] = merged match {
-            case Some(blobs) => numCols.map(c => c -> ps.map(p =>
-              blobs.get(c).flatMap(
-                graft.functions.QuantileFns.blobQuantile(_, p)))).toMap
-            case None =>
-              val base = lake.read(spark, t)
-              val aggs = for { c <- numCols; p <- ps } yield
-                graft.functions.QuantileFns.quantile(spark, col(c), p)
-                  .as(s"__q_${c}_$p")
-              if (aggs.isEmpty) Map.empty
-              else {
-                val r = base.agg(aggs.head, aggs.tail: _*).head()
-                numCols.map(c => c -> ps.map { p =>
-                  val v = r.getAs[Any](s"__q_${c}_$p")
-                  Option(v).map(_.asInstanceOf[Double])
-                }).toMap
-              }
-          }
-          numCols.foreach { c =>
-            val line = ps.zip(rows.getOrElse(c, Nil)).map {
-              case (p, v) => s"p${(p * 100).round}=" +
-                v.map(d => f"$d%.4f").getOrElse("-")
-            }.mkString(" ")
-            out.println(s"  quantiles $c: $line" +
-              (if (merged.isDefined) " (KLL merge, no scan)"
-               else " (scanned)"))
+        // --quantiles p1,p2,...: approximate quantiles of the NUMERIC
+        // columns (the per-file KLL sketches merge)
+        quantiles.foreach { ps =>
+          val numCols = cols.filter(c => schema(c).dataType.isInstanceOf[
+            org.apache.spark.sql.types.NumericType])
+          if (numCols.nonEmpty) {
+            val (r, n) = agg(for { c <- numCols; p <- ps } yield
+              graft.functions.QuantileFns.quantile(spark, col(c), p)
+                .as(s"q_${c}_$p"))
+            numCols.foreach { c =>
+              val line = ps.map { p =>
+                s"p${(p * 100).round}=" + Option(r.getAs[Any](s"q_${c}_$p"))
+                  .map(v => f"${v.asInstanceOf[Double]}%.4f").getOrElse("-")
+              }.mkString(" ")
+              out.println(s"  quantiles $c: $line" + note(n, "KLL merge"))
+            }
           }
         }
-        } // end --by match
       case other => throw new IllegalArgumentException(
         s"table: expected list|show|diff|snapshot|analyze|aggregate, " +
           s"got ${other.getOrElse("nothing")}")

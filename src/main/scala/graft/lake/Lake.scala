@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -1205,47 +1205,12 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
       .groupBy(_.file).valuesIterator.map(_.maxBy(_.seq))
       .filter(_.rows < 0L).map(_.file).toSet
 
-  /** Data-skipping read: consult the stats manifest and scan only the
-    * files whose `[min_ts, max_ts]` intersects the requested time
-    * range — the DuckLake/Delta data-skipping move, over OUR one-row-
-    * per-file manifest. Directory pruning (tp_year/tp_month predicates)
-    * eliminates whole months before listing; this skips the files a
-    * month still holds whose range misses the window (long-lived
-    * partitions accumulate many time-disjoint files between
-    * compactions). At 100 TB the manifest read is a metadata-sized
-    * aggregate and the driver holds only the surviving path list —
-    * the same driver-side footprint Delta's log replay accepts.
-    *
-    * Conservative by construction: files absent from the manifest (or
-    * with null stats) are always included, so a lagging manifest can
-    * only over-read, never drop rows. No time bound → plain [[read]].
-    *
-    * The result is a plain read of the surviving files, for callers
-    * that want the pruned file set itself. A `--from/--to` view does
-    * not come through here: it is the whole-table [[read]] plus the
-    * window predicate, whose `tp_timestamp` conjuncts the manifest
-    * time zones of [[ZoneMapFileIndex]] prune to the same files, and
-    * which the metadata-aggregate rule can still answer from.
-    */
-  def readPruned(
-      spark: SparkSession, table: String,
-      from: Option[Timestamp], to: Option[Timestamp]): DataFrame = {
-    if (from.isEmpty && to.isEmpty) return read(spark, table)
-    // the manifest ranges come from the cached metadata snapshot; a
-    // null bound, or a file the manifest has not recorded, is kept
-    val manifest = metaSnapshot(spark, table).manifest
-    def keep(m: Lake.ManifestStat): Boolean =
-      to.forall(t => m.minTs.forall(_.compareTo(t) <= 0)) &&
-        from.forall(t => m.maxTs.forall(_.compareTo(t) >= 0))
-    readFiles(spark, table, listDataFiles(spark, table)
-      .filter(f => manifest.get(f.path).forall(keep)))
-  }
-
   /** ZONE-MAP pruned read over ANY numeric column with colstats
-    * enabled — the generalization of [[readPruned]]'s tp_timestamp
-    * skipping, fed by the same per-file `_graft_colstats` rows the
-    * CBO merge uses (their min_d/max_d are per-file zone maps, the
-    * DuckLake/Delta file-skipping move for non-partition columns).
+    * enabled — the generalization of the manifest's tp_timestamp
+    * skipping ([[ZoneMapFileIndex]]), fed by the same per-file
+    * `_graft_colstats` rows the CBO merge uses (their min_d/max_d are
+    * per-file zone maps, the DuckLake/Delta file-skipping move for
+    * non-partition columns).
     * Skip a file only when its live range for `column` PROVABLY
     * misses `[lo, hi]`. Conservative by construction: no sidecar at
     * all, no live row for the file, or a null range (all-null file —
@@ -1253,8 +1218,8 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
     * compose with IS NULL, so include it) → the file is read. The
     * caller still applies the row-level filter — this prunes I/O,
     * not rows, so a lagging sidecar can only over-read, never drop.
-    * Like [[readPruned]], the sidecar read is metadata-sized and the
-    * driver holds only the surviving path list.
+    * The sidecar read is metadata-sized and the driver holds only the
+    * surviving path list.
     */
   def readPrunedByColumn(
       spark: SparkSession, table: String, column: String,
@@ -1404,203 +1369,15 @@ final case class Lake(root: String, manifestCompactThreshold: Int = 64)
   /** Exactness threshold for integer bounds stored as doubles: at and
     * above 2^53 a double no longer represents every long, so a stored
     * zone bound may have rounded across the true extreme — files whose
-    * long-typed bounds reach this magnitude fall back to the residual
-    * scan instead of answering from metadata.
+    * long-typed bounds reach this magnitude are left to scan instead
+    * of answering from metadata.
     */
   private val ExactLongBound: Double = 9007199254740992.0 // 2^53
 
-  /** Answer `count(*)`, `count(c)`, `min(c)`, `max(c)` from metadata
-    * the lake already maintains — the manifest (per-file row counts +
-    * `tp_timestamp` ranges) and the `_graft_colstats` sidecar (per-file
-    * null counts and min/max zones) — WITHOUT scanning data files.
-    * Spark's `OptimizeMetadataOnlyQuery` only serves partition-column
-    * aggregates from listings; Delta/DuckLake answer these from their
-    * file statistics, and at 100 TB the difference is a full corpus
-    * scan vs a metadata read (the reference inherits the same move from
-    * DuckDB over ducklake_file_column_stats, compaction_types.go:64-120).
-    *
-    * HYBRID by construction, exact always: files the metadata cannot
-    * answer exactly — missing a sidecar row for a requested column, a
-    * live data file the manifest hasn't recorded (crashed append before
-    * vacuum's re-sync), a long column whose stored double bounds reach
-    * 2^53, an unsupported min/max type — are scanned in ONE residual
-    * aggregate job and combined with the metadata partial. A fully
-    * covered table costs zero data I/O; a fully uncovered one costs
-    * exactly the scan a plain query would. `tp_timestamp`'s min/max
-    * comes from the manifest, but this API always returns its
-    * `n_tp_timestamp` too, and that count needs the sidecar's null
-    * counts (the manifest has none) — so without `tp_timestamp`
-    * colstats every file lands in the residual scan. The optimizer
-    * rule, which knows when no count is wanted, serves a range-only
-    * `tp_timestamp` from the manifest alone ([[Lake.Needs]]' `counts`).
-    *
-    * Returns one row: `n_rows` plus `n_<c>`, `min_<c>`, `max_<c>` per
-    * requested column, typed as the column itself. SQL semantics:
-    * `count` ignores nulls, `min`/`max` over an all-null column are
-    * null. Supported min/max types: integral, float/double, string,
-    * and `tp_timestamp`; other types force the residual scan for every
-    * file (exact, just not metadata-served).
-    */
-  def statsAggregate(
-      spark: SparkSession, table: String,
-      columns: Seq[String]): DataFrame =
-    statsAggregateAudited(spark, table, columns)._1
-
   import Lake.{MetaParts, Needs, StatsAggParts}
 
-  /** [[statsAggregate]] plus the audit trail: the residual files the
-    * metadata could not answer for (empty = the aggregate was served
-    * entirely scan-free). The qi31 oracle and LakeSpec pin on it.
-    */
-  def statsAggregateAudited(
-      spark: SparkSession, table: String,
-      columns: Seq[String]): (DataFrame, Seq[String]) =
-    statsAggregateAudited(spark, table, columns, withSums = true)
-
-  /** @param withSums false skips the `sum_<c>` outputs entirely — a
-    *   caller that only wants count/min/max (the CLI's `table
-    *   aggregate`) must not pay the sum coverage gate nor risk the
-    *   no-exact-BIGINT null on a column total past Long.MaxValue
-    *   (r16 ADVICE-medium: the unconditional sum turned a count
-    *   request over ~5M epoch-millis rows into an ArithmeticException).
-    */
-  def statsAggregateAudited(
-      spark: SparkSession, table: String,
-      columns: Seq[String],
-      withSums: Boolean): (DataFrame, Seq[String]) =
-    auditedAggregate(spark, table, columns, withSums, band = None)
-
-  /** TIME-BAND hybrid aggregate — the reference's dominant query shape
-    * (`--from/--to`) answered mostly from metadata: files whose
-    * manifest `[min_ts, max_ts]` lies FULLY inside `[from, to]`
-    * contribute their counts/sums/ranges from the manifest + sidecar
-    * (every row of a contained file passes the band predicate, so the
-    * whole-file statistics apply verbatim); only files STRADDLING a
-    * band edge are scanned, with the row-level band filter applied.
-    * For a month-wide band over a year of files, that is two boundary
-    * days of I/O instead of a month.
-    *
-    * Soundness: a contained file's manifest row count equals its
-    * in-band row count ONLY if the file holds no null-`tp_timestamp`
-    * rows (null fails the band but still counts in `rows`), so
-    * containment additionally requires the sidecar to prove
-    * `tp_timestamp` null-free for that file — enable stats on
-    * `tp_timestamp` to arm the fast path; without it every overlapping
-    * file scans (correct, just not accelerated). Files the zones
-    * prove fully OUTSIDE the band are excluded exactly as
-    * [[readPruned]] would skip them. Returns the same one-row shape as
-    * [[statsAggregateAudited]] plus the audit: the files actually
-    * scanned.
-    */
-  def timeBandAggregateAudited(
-      spark: SparkSession, table: String,
-      from: Timestamp, to: Timestamp,
-      columns: Seq[String]): (DataFrame, Seq[String]) =
-    timeBandAggregateAudited(spark, table, from, to, columns,
-      withSums = true)
-
-  /** See [[statsAggregateAudited]]'s `withSums` — same contract. */
-  def timeBandAggregateAudited(
-      spark: SparkSession, table: String,
-      from: Timestamp, to: Timestamp,
-      columns: Seq[String],
-      withSums: Boolean): (DataFrame, Seq[String]) =
-    auditedAggregate(spark, table, columns, withSums, Some((from, to)))
-
-  /** Shared body of the audited aggregates: the metadata partial from
-    * [[metaParts]], then ONE residual aggregate job over exactly the
-    * files it left to scan (row-filtered to the band, when there is
-    * one), merged into the one-row result.
-    */
-  private def auditedAggregate(
-      spark: SparkSession, table: String,
-      columns: Seq[String], withSums: Boolean,
-      band: Option[(Timestamp, Timestamp)]): (DataFrame, Seq[String]) = {
-    val what = if (band.isEmpty) "statsAggregate" else "timeBandAggregate"
-    require(columns.nonEmpty, s"$what: no columns given")
-    require(hasData(spark, table),
-      s"$what: table '$table' has no data files")
-    band.foreach { case (from, to) =>
-      require(!from.after(to), s"$what: from > to")
-    }
-    val schema = schemaOf(spark, table)
-    columns.foreach(c => require(schema.fieldNames.contains(c),
-      s"$what: table '$table' has no column '$c'"))
-    def dtOf(c: String): DataType = schema(c).dataType
-    val sumCols =
-      if (!withSums) Nil
-      else columns.filter(c => dtOf(c) match {
-        case ByteType | ShortType | IntegerType | LongType => true
-        case _ => false
-      })
-    def us(t: Timestamp): Long =
-      org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaTimestamp(t)
-    // the requires above are metaParts' own preconditions
-    val planned = metaParts(spark, table,
-      Needs(ranges = columns.toSet, counts = columns.toSet,
-        sums = sumCols.toSet),
-      bands = band.map { case (from, to) => Seq((us(from), us(to))) }).get
-    val parts = planned.whole
-    var nRows: Long = parts.nRows
-    val cnt = scala.collection.mutable.Map[String, Long]()
-      .withDefaultValue(0L)
-    parts.counts.foreach { case (c, n) => cnt(c) = n }
-    val mn = scala.collection.mutable.Map[String, Any]() ++ parts.mins
-    val mx = scala.collection.mutable.Map[String, Any]() ++ parts.maxs
-    val sm = scala.collection.mutable.Map[String, BigInt]() ++ parts.sums
-    def merge(c: String, dt: DataType, lo: Any, hi: Any): Unit = {
-      if (lo != null &&
-        (!mn.contains(c) || Lake.statsLt(dt, lo, mn(c)))) mn(c) = lo
-      if (hi != null &&
-        (!mx.contains(c) || Lake.statsLt(dt, mx(c), hi))) mx(c) = hi
-    }
-
-    // ---- residual scan: ONE aggregate job over exactly the gap ----
-    if (planned.toScan.nonEmpty) {
-      val files = readFiles(spark, table, planned.toScan)
-      val df = band.fold(files) { case (from, to) =>
-        files.where(col(TpSchema.Timestamp) >= lit(from) &&
-          col(TpSchema.Timestamp) <= lit(to))
-      }
-      val aggs = count(lit(1)).as("__n") +: columns.flatMap(c => Seq(
-        count(col(c)).as(s"__c_$c"),
-        min(col(c)).as(s"__mn_$c"), max(col(c)).as(s"__mx_$c"),
-        (if (sumCols.contains(c)) sum(col(c).cast("decimal(38,0)"))
-         else max(lit(null).cast("decimal(38,0)"))).as(s"__sv_$c")))
-      val r = df.agg(aggs.head, aggs.tail: _*).head()
-      nRows += r.getAs[Long]("__n")
-      columns.foreach { c =>
-        cnt(c) += r.getAs[Long](s"__c_$c")
-        merge(c, dtOf(c), r.getAs[Any](s"__mn_$c"), r.getAs[Any](s"__mx_$c"))
-        val sv = r.getAs[java.math.BigDecimal](s"__sv_$c")
-        if (sv != null)
-          sm(c) = sm.getOrElse(c, BigInt(0)) + BigInt(sv.toBigInteger)
-      }
-    }
-
-    val fields = StructField("n_rows", LongType, nullable = false) +:
-      (columns.flatMap { c =>
-        Seq(StructField(s"n_$c", LongType, nullable = false),
-          StructField(s"min_$c", dtOf(c)),
-          StructField(s"max_$c", dtOf(c)))
-      } ++ sumCols.map(c => StructField(s"sum_$c", LongType)))
-    val values: Seq[Any] = (nRows +: columns.flatMap(c =>
-      Seq(cnt(c), mn.get(c).orNull, mx.get(c).orNull))) ++
-      // a table sum past Long.MaxValue has no exact BIGINT value:
-      // emit null (unknown-exactly), never wrap and never throw — the
-      // SQL rule declines the same way via isValidLong (r16
-      // ADVICE-medium: longValueExact crashed count/min/max requests
-      // that never asked for the sum)
-      sumCols.map(c => sm.get(c).filter(_.isValidLong)
-        .map(v => Long.box(v.toLong)).orNull)
-    val out = spark.createDataFrame(
-      java.util.Arrays.asList(Row.fromSeq(values)),
-      StructType(fields))
-    (out, planned.toScan.map(_.path))
-  }
-
-  /** The metadata parts planner behind every scan-free answer — the
-    * SQL rule, the audited aggregates and the CLI's sketch merges.
+  /** The metadata parts planner behind every scan-free answer of
+    * [[MetadataAggregateRule]].
     * In-process metadata only (the table's [[metaSnapshot]] and the
     * listing): no Spark job, never a data file, safe to call from an
     * optimizer rule.

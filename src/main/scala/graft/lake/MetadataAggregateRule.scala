@@ -10,10 +10,11 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 
-/** Answer aggregate SQL from lake metadata — the query-path face of
-  * [[Lake.statsAggregate]], so a user typing `SELECT count(*),
-  * max(value) FROM t` against a registered view gets the
-  * manifest+sidecar answer with ZERO data-file reads. Spark's own
+/** Answer aggregate SQL from lake metadata, so a user typing
+  * `SELECT count(*), max(value) FROM t` against a registered view, or
+  * `graft table aggregate t` (the same aggregates as DataFrames over
+  * the table's relation), gets the manifest+sidecar answer with ZERO
+  * data-file reads. Spark's own
   * `OptimizeMetadataOnlyQuery` serves only partition-column aggregates
   * from listings; Delta rewrites count/min/max from its transaction
   * log the same way this rule does from the `_graft_colstats` sidecar.

@@ -1024,34 +1024,30 @@ object IngestQueries {
     }),
 
     // Metadata-only aggregate: count(*)/count(c)/min(c)/max(c) answered
-    // from the manifest + colstats sidecar with ZERO data-file reads
-    // (the in-query require pins residual == empty — statsAggregate's
-    // audit trail of files it had to scan). The DuckDB oracle
-    // recomputes every aggregate from the raw rows, so a stale sidecar
-    // row, a double-rounded long bound, a missed null count, or a
-    // dropped file breaks the hash — metadata EXACTNESS is the gated
-    // property. Nulls are injected into `value` so count(value) !=
-    // count(*) exercises the null-count arithmetic, and tp_timestamp's
-    // min/max rides the manifest (no sidecar ranges exist for
-    // timestamps) while its count rides the sidecar.
+    // from the manifest + colstats sidecar with ZERO data-file reads —
+    // the DataFrame aggregate `graft table aggregate` builds, rewritten
+    // by MetadataAggregateRule (the in-query require pins the files
+    // read at 0). The DuckDB oracle recomputes every aggregate from the
+    // raw rows, so a stale sidecar row, a double-rounded long bound, a
+    // missed null count, or a dropped file breaks the hash — metadata
+    // EXACTNESS is the gated property. Nulls are injected into `value`
+    // so count(value) != count(*) exercises the null-count arithmetic,
+    // and tp_timestamp's min/max rides the manifest (no sidecar ranges
+    // exist for timestamps) while its count rides the sidecar.
     "qi31_metadata_only_aggregate" -> ((s, dir) => {
       val lake = metaAggFixture(s, dir)
-      val (meta, residual) = lake.statsAggregateAudited(s, "events_meta31",
-        Seq("value", "user_id", "event_type", "tp_timestamp"))
-      require(residual.isEmpty,
-        s"metadata aggregate fell back to scanning: $residual")
-      meta.select(
-        col("n_rows"), col("n_value"),
-        col("min_value"), col("max_value"),
-        col("n_user_id").as("n_user"),
-        col("min_user_id").as("min_user"),
-        col("max_user_id").as("max_user"),
-        col("n_event_type").as("n_etype"),
-        col("min_event_type").as("min_etype"),
-        col("max_event_type").as("max_etype"),
-        col("n_tp_timestamp").as("n_ts"),
-        col("min_tp_timestamp").as("min_ts"),
-        col("max_tp_timestamp").as("max_ts"))
+      graft.lake.MetadataAggregateRule.install(s)
+      val aggs = count(lit(1)).as("n_rows") +: Seq("value" -> "value",
+        "user_id" -> "user", "event_type" -> "etype",
+        "tp_timestamp" -> "ts").flatMap { case (c, as) =>
+          Seq(count(col(c)).as(s"n_$as"), min(col(c)).as(s"min_$as"),
+            max(col(c)).as(s"max_$as"))
+        }
+      val q = lake.read(s, "events_meta31").agg(aggs.head, aggs.tail: _*)
+      val files = graft.query.ScanAudit.filesReadAfterRun(q)
+      require(files == 0L,
+        s"metadata aggregate fell back to scanning $files files")
+      q
     }),
 
     // The SQL-path face of qi31: a user typing plain `SELECT count(*),
@@ -1188,30 +1184,37 @@ object IngestQueries {
 
     // TIME-BAND hybrid aggregate — the reference's dominant query
     // shape (--from/--to) answered mostly from metadata: files fully
-    // inside the band (manifest range contained AND sidecar-proven
+    // inside the band (manifest range contained AND proven
     // null-ts-free) contribute counts/sums/ranges without being read;
-    // only edge-straddling files scan, with the row filter applied.
-    // The require pins that the scan set is a strict subset; the
-    // DuckDB oracle recomputes the banded aggregate from raw rows, so
-    // a file wrongly counted as contained (off-by-boundary, a null ts
-    // missed, a stale manifest range) breaks the hash.
+    // only edge-straddling files scan, with the row filter applied —
+    // MetadataAggregateRule's hybrid over the DataFrame aggregate
+    // `graft table aggregate --from/--to` builds. The require pins
+    // that the scan set is a strict subset; the DuckDB oracle
+    // recomputes the banded aggregate from raw rows, so a file wrongly
+    // counted as contained (off-by-boundary, a null ts missed, a stale
+    // manifest range) breaks the hash.
     "qi37_time_band_hybrid_aggregate" -> ((s, dir) => {
       val lake = bandFixture(s, dir) // shared with qi38
+      graft.lake.MetadataAggregateRule.install(s)
       val total = lake.dataFiles(s, "events_band37").size
       // band = mid-slice-1 .. mid-slice-4: slices 2,3 contained,
       // 1 and 4 straddle, 0 and 5 outside
-      val from = java.sql.Timestamp.valueOf("2024-01-08 12:00:00")
-      val to = java.sql.Timestamp.valueOf("2024-01-23 11:59:59")
-      val (res, scanned) = lake.timeBandAggregateAudited(
-        s, "events_band37", from, to, Seq("value", "user_id"))
-      require(scanned.nonEmpty && scanned.size * 2 < total,
-        s"time-band hybrid should scan only straddlers: " +
-          s"${scanned.size} of $total")
-      res.select(col("n_rows"), col("n_value"),
-        col("min_value"), col("max_value"),
-        col("min_user_id").as("min_user"),
-        col("max_user_id").as("max_user"),
-        col("sum_user_id").as("sum_user"))
+      val from = Timestamp.valueOf("2024-01-08 12:00:00")
+      val to = Timestamp.valueOf("2024-01-23 11:59:59")
+      val q = lake.read(s, "events_band37")
+        .where(col("tp_timestamp") >= lit(from) &&
+          col("tp_timestamp") <= lit(to))
+        .agg(count(lit(1)).as("n_rows"),
+          count(col("value")).as("n_value"),
+          min(col("value")).as("min_value"),
+          max(col("value")).as("max_value"),
+          min(col("user_id")).as("min_user"),
+          max(col("user_id")).as("max_user"),
+          sum(col("user_id")).as("sum_user"))
+      val scanned = graft.query.ScanAudit.filesReadAfterRun(q)
+      require(scanned > 0 && scanned * 2 < total,
+        s"time-band hybrid should scan only straddlers: $scanned of $total")
+      q
     }),
 
     // The SQL-path face of qi37: a plain `WHERE tp_timestamp BETWEEN`

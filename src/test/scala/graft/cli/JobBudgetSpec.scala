@@ -56,17 +56,19 @@ class JobBudgetSpec extends AnyFunSuite with SparkTest {
   private def plain = spark.read.option("basePath", lake.tableDir("web"))
     .parquet(lake.tableDir("web"))
 
-  /** (rc, stdout, jobs launched) of one in-process CLI call. */
-  private def query(args: String*): (Int, String, Int) = {
+  /** (rc, stdout, jobs launched) of one in-process CLI call over `on`. */
+  private def cliOn(on: Lake, args: Seq[String]): (Int, String, Int) = {
     val config = Files.createTempDirectory("graft_jobs_cfg").toString
     val bos = new ByteArrayOutputStream()
     val (rc, jobs) = JobCounter.count(spark.sparkContext) {
-      Main.run(spark, Seq("query") ++ args ++ Seq(
-        "--output", "csv", "--lake-dir", lake.root, "--config-dir", config),
-        new PrintStream(bos, true, "UTF-8"))
+      Main.run(spark, args ++ Seq("--lake-dir", on.root,
+        "--config-dir", config), new PrintStream(bos, true, "UTF-8"))
     }
     (rc, new String(bos.toByteArray, "UTF-8").trim, jobs)
   }
+
+  private def query(args: String*): (Int, String, Int) =
+    cliOn(lake, Seq("query") ++ args ++ Seq("--output", "csv"))
 
   test("a whole-table count/min/max(tp_timestamp) runs no Spark job") {
     val want = Render.csv(plain.agg(count(lit(1)).as("n"),
@@ -157,6 +159,68 @@ class JobBudgetSpec extends AnyFunSuite with SparkTest {
     val (rc2, out2, jobs2) = query(lookup, "--from", From, "--to", To)
     assert(rc2 === 0, out2)
     assert(jobs2 === 1, s"windowed lookup launched $jobs2 job(s)")
+  }
+
+  /** 3 day-contained appends with colstats on a long, a string and
+    * `tp_timestamp`: every `table aggregate` section can answer from
+    * metadata.
+    */
+  private lazy val daily: Lake = {
+    val lake = Lake(Files.createTempDirectory("graft_jobs_agg").toString)
+    val spec = PartitionSpec("daily", "p0", tpIndexColumn = Some("idx"))
+    for (d <- 1 to 3) {
+      val raw = spark.range(0, 100).select(
+        (col("id") + d * 1000).as("req_id"),
+        expr(s"timestamp '2024-03-0$d 00:00:00' + " +
+          "make_interval(0,0,0,0,0,0, id * 600)").as("tp_timestamp"),
+        lit("a").as("idx"),
+        when(col("id") < 50, "u0").when(col("id") < 80, "u1")
+          .otherwise("u2").as("user"))
+      lake.append(spark, "daily", TpSchema.enrich(raw, spec))
+    }
+    lake.enableColumnStats(spark, "daily",
+      Seq("req_id", "user", "tp_timestamp"))
+    lake
+  }
+
+  private def aggregate(args: String*): (Int, String, Int) =
+    cliOn(daily, Seq("table", "aggregate", "daily") ++ args)
+
+  test("table aggregate on a table the metadata covers runs no Spark " +
+      "job, with --ndv --quantiles --active-days and with --topk") {
+    // ndv is served for int/long/string columns only, so the report
+    // names two of the three stats columns
+    val (rc, out, jobs) = aggregate("--columns", "req_id,user",
+      "--ndv", "--quantiles", "0.5", "--active-days")
+    assert(rc === 0, out)
+    assert(out.contains("rows: 300"), out)
+    assert(out.contains("served from metadata (no data scan)"), out)
+    assert(out.contains("ndv user: ~3 (sketch union, no scan)"), out)
+    assert(out.contains("active days: 3 (manifest, no scan)"), out)
+    assert(out.contains("quantiles req_id: "), out)
+    assert(!out.contains("(scanned)"), out)
+    assert(jobs === 0, s"served table aggregate launched $jobs job(s)")
+    val (rc2, out2, jobs2) = aggregate("--columns", "user", "--topk", "2")
+    assert(rc2 === 0, out2)
+    assert(out2.contains("topk user: u0=150 u1=90 (sketch merge, no scan)"),
+      out2)
+    assert(jobs2 === 0, s"served --topk launched $jobs2 job(s)")
+  }
+
+  test("table aggregate over a --from/--to window with band-edge " +
+      "straddlers runs 2 jobs") {
+    val lo = java.sql.Timestamp.valueOf("2024-03-01 08:00:00")
+    val hi = java.sql.Timestamp.valueOf("2024-03-03 08:00:00")
+    val want = spark.read.option("basePath", daily.tableDir("daily"))
+      .parquet(daily.tableDir("daily"))
+      .where(col(TpSchema.Timestamp).between(lo, hi)).count()
+    val (rc, out, jobs) = aggregate("--from", "2024-03-01T08:00:00",
+      "--to", "2024-03-03T08:00:00")
+    assert(rc === 0, out)
+    assert(out.contains(s"rows: $want"), out)
+    assert(out.contains("metadata + in-plan scan of 2 straddler file(s)"),
+      out)
+    assert(jobs === 2, s"windowed table aggregate launched $jobs job(s)")
   }
 
   // ---- write path ------------------------------------------------------

@@ -484,7 +484,8 @@ class MainSpec extends AnyFunSuite with SparkTest {
       "--from", "2024-05-01 10:31:00", "--to", "2024-05-02")
     assert(rc5 == 0, band2)
     assert(band2.contains("rows: 2"), band2)
-    assert(band2.contains("metadata + residual scan of 1 file(s)"), band2)
+    assert(band2.contains("metadata + in-plan scan of 1 straddler file(s)"),
+      band2)
     // --ndv: distinct-count estimates from the sidecar sketch union,
     // scan-free when every live file carries a blob (3 rows, 2
     // distinct status codes — small sets estimate exactly)
@@ -564,6 +565,82 @@ class MainSpec extends AnyFunSuite with SparkTest {
       "--by", "fortnight")
     assert(rc10 == 1 &&
       bad.contains("minute|hour|day|week|month|quarter|year"), bad)
+  }
+
+  /** A config dir whose `metrics` table collects `rows` (timestamp,
+    * status_code, svc, latency) with `stats` as its stats columns.
+    */
+  private def metricsDir(rows: Seq[String], stats: Seq[String]): File = {
+    val dir = Files.createTempDirectory("graft_cli_agg").toFile
+    new File(dir, "config").mkdirs()
+    new File(dir, "logs").mkdirs()
+    write(new File(dir, "logs/m.csv"),
+      rows.mkString("timestamp,status_code,svc,latency\n", "\n", "\n"))
+    write(new File(dir, "config/m.tpc"),
+      s"""format "delimited" "m" { delimiter = "," }
+         |table "metrics" {
+         |  format = format.delimited.m
+         |  stats_columns = [${stats.map("\"" + _ + "\"").mkString(", ")}]
+         |  column "tp_timestamp" { source = "timestamp" }
+         |  column "status_code" { type = "integer" }
+         |  column "svc" { type = "varchar" }
+         |  column "latency" { type = "double" }
+         |}
+         |partition "metrics" "local" {
+         |  source "file" {
+         |    format = format.delimited.m
+         |    paths = ["${dir.getPath}/logs/"]
+         |    file_layout = "m.csv"
+         |  }
+         |}
+         |""".stripMargin)
+    val (rc, out) = cli(dir, "collect", "metrics.local")
+    assert(rc == 0 && out.contains(s"Collected metrics.local: ${rows.size}"),
+      out)
+    dir
+  }
+
+  test("table aggregate --topk and --quantiles answer for the " +
+      "--from/--to window") {
+    val dir = metricsDir(Seq(
+      "2024-05-01T10:30:00Z,200,api,1.5",
+      "2024-05-01T10:30:30Z,200,api,2.5",
+      "2024-05-01T10:31:00Z,404,web,3.5",
+      "2024-05-01T10:32:00Z,404,web,4.5",
+      "2024-05-01T10:33:00Z,500,web,5.5"),
+      Seq("status_code", "svc", "tp_timestamp"))
+    // the whole table: api=2 web=3, lowest status 200
+    val (rc, whole) = cli(dir, "table", "aggregate", "metrics",
+      "--columns", "status_code,svc", "--topk", "2", "--quantiles", "0")
+    assert(rc == 0, whole)
+    assert(whole.contains("topk svc: web=3 api=2"), whole)
+    assert(whole.contains("quantiles status_code: p0=200.0000"), whole)
+    // the window drops both api rows (and the 200s): the file
+    // straddles its edge, so both sections scan the window's rows
+    val (rc2, win) = cli(dir, "table", "aggregate", "metrics",
+      "--columns", "status_code,svc", "--topk", "2", "--quantiles", "0",
+      "--from", "2024-05-01 10:31:00")
+    assert(rc2 == 0, win)
+    assert(win.contains("rows: 3"), win)
+    assert(win.contains("topk svc: web=3 (scanned)"), win)
+    assert(win.contains("quantiles status_code: p0=404.0000 (scanned)"), win)
+  }
+
+  test("table aggregate --ndv agrees with SELECT ndv(c) on a DOUBLE " +
+      "stats column") {
+    // enough distinct doubles that a sketch hashing them otherwise
+    // than the scan's ndv would estimate a different count
+    val dir = metricsDir((0 until 20000).map(i =>
+      f"2024-05-01T${10 + i / 3600}%02d:${i / 60 % 60}%02d:" +
+        f"${i % 60}%02dZ,200,api,${i * 0.37 + 0.001}"),
+      Seq("latency", "tp_timestamp"))
+    val (rc, sql) = cli(dir, "query",
+      "select ndv(latency) as n from metrics", "--output", "csv")
+    assert(rc == 0, sql)
+    val want = sql.split("\n").last.trim
+    val (rc2, agg) = cli(dir, "table", "aggregate", "metrics", "--ndv")
+    assert(rc2 == 0, agg)
+    assert(agg.contains(s"ndv latency: ~$want ("), s"want ~$want: $agg")
   }
 
   test("grok end-to-end: config-driven collect of a dated log file") {

@@ -381,21 +381,23 @@ class LakeSpec extends AnyFunSuite with SparkTest {
     val allFiles = lake.read(spark, "t").inputFiles.length
     val from = Some(Timestamp.valueOf("2024-01-04 00:00:00"))
     val to = Some(Timestamp.valueOf("2024-01-05 00:00:00"))
-    val pruned = lake.readPruned(spark, "t", from, to)
-    assert(pruned.inputFiles.length < allFiles,
-      s"expected fewer than $allFiles files in the pruned scan")
-    // pruning is a pure scan reduction: filtered results are identical
+    // the window's tp_timestamp bounds prune through the manifest
+    // time zones of the view's file index
     val f = Views.Filters(from = from, to = to)
-    val viaView = Views.filtered(spark, lake, "t", f)
-      .select("event_id").as[Long].collect().sorted
+    val view = Views.filtered(spark, lake, "t", f).select("event_id")
+    val read = graft.query.ScanAudit.filesReadAfterRun(view)
+    assert(read < allFiles,
+      s"expected fewer than $allFiles files in the pruned scan, read $read")
+    // pruning is a pure scan reduction: filtered results are identical
+    val viaView = view.as[Long].collect().sorted
     val full = lake.read(spark, "t")
       .where(col("tp_timestamp") >= lit(from.get) &&
         col("tp_timestamp") <= lit(to.get))
       .select("event_id").as[Long].collect().sorted
     assert(viaView.sameElements(full) && full.nonEmpty)
     // empty window → empty result, schema preserved
-    val none = lake.readPruned(spark, "t",
-      Some(Timestamp.valueOf("2030-01-01 00:00:00")), None)
+    val none = Views.filtered(spark, lake, "t", Views.Filters(
+      from = Some(Timestamp.valueOf("2030-01-01 00:00:00"))))
     assert(none.count() == 0 &&
       none.columns.contains(TpSchema.Partition))
   }

@@ -2133,4 +2133,32 @@ class MetadataAggregateRuleSpec extends AnyFunSuite with SparkTest {
     val wrong = check(utcRows) ++ nonUtc ++ windowed
     assert(wrong.isEmpty, wrong.mkString("\n"))
   }
+
+  test("a sum past Long.MaxValue declines to the plain scan") {
+    // the same answer or the same error, never a wrapped metadata sum
+    val lake = Lake(Files.createTempDirectory("graft_metaagg_of").toString)
+    val spec = PartitionSpec("of", "p0", tpIndexColumn = Some("idx"))
+    // three rows of 5e18: total 1.5e19 > Long.MaxValue, while every
+    // per-file sidecar sum is recorded exactly
+    val raw = spark.range(0, 3).select(
+      col("id").as("event_id"),
+      expr("timestamp '2024-03-05 00:00:00'").as("tp_timestamp"),
+      lit("0").as("idx"),
+      (col("id") + lit(5000000000000000000L)).as("huge"))
+    lake.append(spark, "of", TpSchema.enrich(raw, spec))
+    lake.enableColumnStats(spark, "of", Seq("huge"))
+    def summed(df: org.apache.spark.sql.DataFrame) =
+      scala.util.Try(df.agg(sum(col("huge"))).collect().toSeq)
+    val viaRule = summed(lake.read(spark, "of"))
+    val plain = summed(spark.read.option("basePath", lake.tableDir("of"))
+      .parquet(lake.tableDir("of")))
+    assert(viaRule.toOption === plain.toOption)
+    assert(viaRule.failed.toOption.map(_.getClass) ===
+      plain.failed.toOption.map(_.getClass))
+    // count/min/max over the same column still answer (from the scan:
+    // its bounds are past 2^53)
+    val r = lake.read(spark, "of").agg(count(col("huge")),
+      min(col("huge")), max(col("huge"))).head()
+    assert(r === Row(3L, 5000000000000000000L, 5000000000000000002L))
+  }
 }

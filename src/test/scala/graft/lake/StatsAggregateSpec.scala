@@ -1,33 +1,36 @@
 package graft.lake
 
 import java.nio.file.Files
+import java.sql.Timestamp
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTest
 import graft.config.PartitionSpec
+import graft.query.ScanAudit
 
-/** [[Lake.statsAggregate]]: count/min/max answered from the manifest +
-  * colstats sidecar, scan-free when covered, HYBRID (one residual scan
-  * over exactly the gap) when not. The property battery:
+/** The count/min/max report of `graft table aggregate`: one
+  * DataFrame aggregate over the table's relation (under a time window
+  * when one is given), answered by [[MetadataAggregateRule]] from the
+  * manifest + colstats sidecar. The property battery:
   *
-  *  - exactness vs a direct scan on a multi-append fixture with nulls
-  *    and an all-null file, residual empty
+  *  - exactness vs a plain parquet scan on a multi-append fixture with
+  *    nulls and an all-null file, zero files read
   *  - provably scan-free: data files physically corrupted after the
   *    metadata exists, the metadata answer is still exact (a scan
   *    would crash on the garbage bytes)
-  *  - hybrid: one file's sidecar rows removed → residual is exactly
-  *    that file, the combined answer unchanged
-  *  - an unrecorded live file (manifest never saw it) is residual and
-  *    its rows are counted — the manifest is not trusted for rows it
-  *    never recorded
-  *  - long columns whose zone bounds reach 2^53 are residual (double
-  *    bounds can round across the true extreme) and still exact
+  *  - a file missing sidecar rows, or a live file the manifest never
+  *    recorded, is the only file a window's hybrid scans; the
+  *    whole-table aggregate then runs the plain scan — both exact, the
+  *    unrecorded file's rows counted
+  *  - long columns whose zone bounds reach 2^53 scan (double bounds
+  *    can round across the true extreme) and stay exact
+  *  - the CLI's input checks name the problem
   *
-  * The qi31 oracle gates the same exactness against DuckDB at sf0.01.
+  * The qi31 and qi37 oracles gate the same exactness against DuckDB.
   */
 class StatsAggregateSpec extends AnyFunSuite with SparkTest {
 
@@ -69,36 +72,60 @@ class StatsAggregateSpec extends AnyFunSuite with SparkTest {
 
   private val cols = Seq("v", "src", "event_id", "tp_timestamp")
 
-  /** The same aggregate computed by actually scanning the table
-    * (sum for the one integral column, matching statsAggregate's
-    * output shape).
+  /** A window holding every row of [[fixture]]: each file is contained,
+    * so only a file the metadata cannot answer is scanned.
     */
-  private def scanned(lake: Lake, t: String): Row = {
-    val df = lake.read(spark, t)
-    val aggs = (count(lit(1)).as("n_rows") +: cols.flatMap(c => Seq(
+  private val everything = (Timestamp.valueOf("2024-03-01 00:00:00"),
+    Timestamp.valueOf("2024-03-31 00:00:00"))
+
+  private def aggs(cs: Seq[String]): Seq[Column] =
+    count(lit(1)).as("n_rows") +: cs.flatMap(c => Seq(
       count(col(c)).as(s"n_$c"),
-      min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))) :+
-      sum(col("event_id")).as("sum_event_id")
-    df.agg(aggs.head, aggs.tail: _*).head()
+      min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
+
+  private def banded(df: DataFrame,
+      window: Option[(Timestamp, Timestamp)]): DataFrame =
+    window.fold(df) { case (from, to) =>
+      df.where(col("tp_timestamp") >= lit(from) &&
+        col("tp_timestamp") <= lit(to))
+    }
+
+  /** The `table aggregate` report: the aggregate over the table's
+    * relation with the rule installed, and the data files it read.
+    */
+  private def report(lake: Lake, t: String, cs: Seq[String],
+      window: Option[(Timestamp, Timestamp)] = None): (Row, Long) = {
+    MetadataAggregateRule.install(spark)
+    val as = aggs(cs)
+    val q = banded(lake.read(spark, t), window).agg(as.head, as.tail: _*)
+    val files = ScanAudit.filesReadAfterRun(q)
+    (q.head(), files)
   }
 
-  private def assertMatches(meta: DataFrame, truth: Row): Unit = {
-    val m = meta.head()
-    val names = meta.schema.fieldNames
-    names.zipWithIndex.foreach { case (f, i) =>
-      assert(m.get(i) === truth.getAs[Any](f), s"field $f")
-    }
+  /** The same aggregate over the plain parquet reader, which the rule
+    * cannot rewrite (it lists the directory: stray files included).
+    */
+  private def scanned(lake: Lake, t: String,
+      window: Option[(Timestamp, Timestamp)] = None): Row = {
+    val df = spark.read.option("basePath", lake.tableDir(t))
+      .parquet(lake.tableDir(t))
+    val as = aggs(cols)
+    banded(df, window).agg(as.head, as.tail: _*).head()
   }
+
+  private def assertMatches(meta: Row, truth: Row): Unit =
+    meta.schema.fieldNames.foreach { f =>
+      assert(meta.getAs[Any](f) === truth.getAs[Any](f), s"field $f")
+    }
 
   test("fully covered table answers exactly with zero residual files") {
     val (lake, t) = fixture()
     val truth = scanned(lake, t)
-    val (meta, residual) = lake.statsAggregateAudited(spark, t, cols)
-    assert(residual.isEmpty, s"expected scan-free, residual=$residual")
-    assertMatches(meta, truth)
+    val (r, files) = report(lake, t, cols)
+    assert(files === 0, s"expected scan-free, read $files files")
+    assertMatches(r, truth)
     // spot-check SQL semantics made it through: count ignores nulls,
     // the all-null file contributes rows to n_rows only
-    val r = meta.head()
     assert(r.getAs[Long]("n_rows") === 350L)
     assert(r.getAs[Long]("n_v") === 270L) // 300 minus 30 null-ids, minus 0
     assert(r.getAs[Long]("n_src") === 300L)
@@ -136,18 +163,18 @@ class StatsAggregateSpec extends AnyFunSuite with SparkTest {
       val file = new java.io.File(p)
       new java.io.File(file.getParent, s".${file.getName}.crc").delete()
     }
-    // the corruption is real: an actual scan now fails
+    // the corruption is real: an actual scan now fails (a double sum
+    // is never metadata-served)
     intercept[Throwable] {
       lake.read(spark, t).agg(sum(col("v"))).head()
     }
-    val (meta, residual) = lake.statsAggregateAudited(spark, t, cols)
-    assert(residual.isEmpty)
-    assertMatches(meta, truth)
+    val (r, files) = report(lake, t, cols)
+    assert(files === 0)
+    assertMatches(r, truth)
   }
 
   test("hybrid: a file missing sidecar rows is the exact residual set") {
     val (lake, t) = fixture()
-    val truth = scanned(lake, t)
     // strip one file's sidecar rows (rewrite the sidecar without them)
     val victim = lake.fileStats(spark, t).orderBy("file")
       .head().getString(0)
@@ -159,9 +186,15 @@ class StatsAggregateSpec extends AnyFunSuite with SparkTest {
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 1), schema)
       .write.mode("overwrite").parquet(sidecarDir)
-    val (meta, residual) = lake.statsAggregateAudited(spark, t, cols)
-    assert(residual === Seq(victim))
-    assertMatches(meta, truth)
+    // under a window the other files answer from metadata and the
+    // victim alone is scanned
+    val (inWindow, files) = report(lake, t, cols, Some(everything))
+    assert(files === 1, s"expected only the victim scanned, read $files")
+    assertMatches(inWindow, scanned(lake, t, Some(everything)))
+    // the whole-table aggregate runs the plain scan: same answer
+    val (whole, all) = report(lake, t, cols)
+    assert(all === lake.dataFiles(spark, t).size)
+    assertMatches(whole, scanned(lake, t))
   }
 
   test("an unrecorded live file is residual and its rows are counted") {
@@ -173,16 +206,20 @@ class StatsAggregateSpec extends AnyFunSuite with SparkTest {
     val stray = new Path(src.getParent, "part-stray-duplicate.parquet")
     org.apache.hadoop.fs.FileUtil.copy(f, src, f, stray, false,
       spark.sparkContext.hadoopConfiguration)
-    val truth = scanned(lake, t) // read() lists the dir: stray included
-    val (meta, residual) = lake.statsAggregateAudited(spark, t, cols)
-    assert(residual === Seq(stray.toUri.getPath))
-    assertMatches(meta, truth)
+    // the stray file has no manifest range, so no window contains it:
+    // the window's hybrid scans it alone
+    val (inWindow, files) = report(lake, t, cols, Some(everything))
+    assert(files === 1, s"expected only the stray file scanned, read $files")
+    assertMatches(inWindow, scanned(lake, t, Some(everything)))
+    val (whole, _) = report(lake, t, cols)
+    assertMatches(whole, scanned(lake, t))
+    assert(whole.getAs[Long]("n_rows") > 350L, "stray rows not counted")
   }
 
   test("NaN per-file extremes merge in Spark's total order (NaN wins max)") {
     val lake = Lake(Files.createTempDirectory("graft_statsagg_nan").toString)
     val spec = PartitionSpec("nn", "p0", tpIndexColumn = Some("idx"))
-    def batch(lo: Int, vCol: org.apache.spark.sql.Column) = {
+    def batch(lo: Int, vCol: Column) = {
       val raw = spark.range(lo, lo + 10).select(
         col("id").as("event_id"),
         expr("timestamp '2024-03-05 00:00:00'").as("tp_timestamp"),
@@ -192,50 +229,22 @@ class StatsAggregateSpec extends AnyFunSuite with SparkTest {
     // file 1: a NaN row (its sidecar max_d is NaN — Spark's max orders
     // NaN greatest); file 2: finite values, appended LATER so the
     // merge sees the NaN extreme FIRST and the finite one second —
-    // plain < would let 99.0 beat NaN (r16 ADVICE-medium)
+    // plain < would let 99.0 beat NaN
     lake.append(spark, "nn", batch(0,
       when(col("id") === 5, lit(Double.NaN))
         .otherwise(col("id").cast("double"))))
     lake.append(spark, "nn", batch(100,
       (col("id") - lit(1.0)).cast("double")))
     lake.enableColumnStats(spark, "nn", Seq("v"))
-    val (meta, residual) = lake.statsAggregateAudited(spark, "nn", Seq("v"))
-    assert(residual.isEmpty, "NaN bounds are still exact doubles — " +
+    val (r, files) = report(lake, "nn", Seq("v"))
+    assert(files === 0, "NaN bounds are still exact doubles — " +
       "metadata must serve them")
-    val r = meta.head()
     // the scan answer: Spark's max over a NaN-bearing column is NaN
     assert(r.getAs[Double]("max_v").isNaN, "metadata max must be NaN")
     assert(r.getAs[Double]("min_v") === 0.0)
-    val scanMax = lake.read(spark, "nn").agg(max(col("v"))).head().getDouble(0)
+    val scanMax = spark.read.option("basePath", lake.tableDir("nn"))
+      .parquet(lake.tableDir("nn")).agg(max(col("v"))).head().getDouble(0)
     assert(scanMax.isNaN)
-  }
-
-  test("a sum past Long.MaxValue emits null, never throws or wraps") {
-    val lake = Lake(Files.createTempDirectory("graft_statsagg_of").toString)
-    val spec = PartitionSpec("of", "p0", tpIndexColumn = Some("idx"))
-    // three rows of 5e18: total 1.5e19 > Long.MaxValue (9.22e18); the
-    // 2^53-scale bounds also force the residual-scan path, so this
-    // exercises the scan-side sum fold too (r16 ADVICE-medium: the CLI
-    // crashed with ArithmeticException on epoch-millis sums)
-    val raw = spark.range(0, 3).select(
-      col("id").as("event_id"),
-      expr("timestamp '2024-03-05 00:00:00'").as("tp_timestamp"),
-      lit("0").as("idx"),
-      (col("id") + lit(5000000000000000000L)).as("huge"))
-    lake.append(spark, "of", TpSchema.enrich(raw, spec))
-    lake.enableColumnStats(spark, "of", Seq("huge"))
-    val (meta, _) = lake.statsAggregateAudited(spark, "of", Seq("huge"))
-    val r = meta.head()
-    assert(r.getAs[Long]("n_huge") === 3L)
-    assert(r.getAs[Long]("min_huge") === 5000000000000000000L)
-    assert(r.getAs[Any]("sum_huge") === null,
-      "no exact BIGINT sum exists — must be null, not a wrap or throw")
-    // withSums = false: the sum columns are absent entirely (the CLI
-    // shape — count/min/max must not pay the sum machinery)
-    val (lean, _) = lake.statsAggregateAudited(spark, "of", Seq("huge"),
-      withSums = false)
-    assert(!lean.schema.fieldNames.contains("sum_huge"))
-    assert(lean.head().getAs[Long]("max_huge") === 5000000000000000002L)
   }
 
   test("long bounds at 2^53 force the residual scan and stay exact") {
@@ -249,11 +258,9 @@ class StatsAggregateSpec extends AnyFunSuite with SparkTest {
       (col("id") + lit(big)).as("huge"))
     lake.append(spark, "big", TpSchema.enrich(raw, spec))
     lake.enableColumnStats(spark, "big", Seq("huge"))
-    val (meta, residual) =
-      lake.statsAggregateAudited(spark, "big", Seq("huge"))
-    assert(residual.nonEmpty, "2^53-scale long bounds must not be " +
+    val (r, files) = report(lake, "big", Seq("huge"))
+    assert(files > 0, "2^53-scale long bounds must not be " +
       "served from double zones")
-    val r = meta.head()
     assert(r.getAs[Long]("min_huge") === big)
     assert(r.getAs[Long]("max_huge") === big + 9L)
     assert(r.getAs[Long]("n_huge") === 10L)
@@ -262,17 +269,15 @@ class StatsAggregateSpec extends AnyFunSuite with SparkTest {
   test("tp_timestamp min/max is manifest-served; small longs are " +
       "zone-served") {
     val (lake, t) = fixture()
-    val (meta, residual) = lake.statsAggregateAudited(spark, t,
-      Seq("event_id", "tp_timestamp"))
-    assert(residual.isEmpty)
-    val r = meta.head()
+    val (r, files) = report(lake, t, Seq("event_id", "tp_timestamp"))
+    assert(files === 0)
     assert(r.getAs[Long]("min_event_id") === 0L)
     assert(r.getAs[Long]("max_event_id") === 1049L)
-    assert(r.getAs[java.sql.Timestamp]("min_tp_timestamp") ===
-      java.sql.Timestamp.valueOf("2024-03-05 00:00:00"))
+    assert(r.getAs[Timestamp]("min_tp_timestamp") ===
+      Timestamp.valueOf("2024-03-05 00:00:00"))
     // max id is the null batch's 1049 → +1,049,000 s = 12d 3:23:20
-    assert(r.getAs[java.sql.Timestamp]("max_tp_timestamp") ===
-      java.sql.Timestamp.valueOf("2024-03-17 03:23:20"))
+    assert(r.getAs[Timestamp]("max_tp_timestamp") ===
+      Timestamp.valueOf("2024-03-17 03:23:20"))
   }
 
   test("time-band hybrid: contained files from metadata, straddlers " +
@@ -296,29 +301,17 @@ class StatsAggregateSpec extends AnyFunSuite with SparkTest {
     val total = lake.dataFiles(spark, "tb").size
     // band = mid-slice-2 .. mid-slice-5: slices 3,4 contained,
     // 2 and 5 straddle, 0,1,6,7 outside
-    val from = java.sql.Timestamp.valueOf("2024-03-05 02:30:00")
-    val to = java.sql.Timestamp.valueOf("2024-03-05 05:30:00")
-    val cols = Seq("v", "event_id")
-    val (res, scanned) = lake.timeBandAggregateAudited(
-      spark, "tb", from, to, cols)
-    assert(scanned.nonEmpty && scanned.size < total / 2,
-      s"expected only straddlers scanned, got ${scanned.size} of $total")
+    val band = Some((Timestamp.valueOf("2024-03-05 02:30:00"),
+      Timestamp.valueOf("2024-03-05 05:30:00")))
+    val bandCols = Seq("v", "event_id")
+    val (r, files) = report(lake, "tb", bandCols, band)
+    assert(files > 0 && files < total / 2,
+      s"expected only straddlers scanned, got $files of $total")
     // truth through the plain reader with the same band
-    val truth = spark.read.option("basePath", lake.tableDir("tb"))
+    val plain = spark.read.option("basePath", lake.tableDir("tb"))
       .parquet(lake.tableDir("tb"))
-      .where(col("tp_timestamp") >= lit(from) &&
-        col("tp_timestamp") <= lit(to))
-      .agg(count(lit(1)).as("n_rows"),
-        count(col("v")).as("n_v"), min(col("v")).as("min_v"),
-        max(col("v")).as("max_v"),
-        count(col("event_id")).as("n_event_id"),
-        min(col("event_id")).as("min_event_id"),
-        max(col("event_id")).as("max_event_id"),
-        sum(col("event_id")).as("sum_event_id")).head()
-    val m = res.head()
-    res.schema.fieldNames.foreach { f =>
-      assert(m.getAs[Any](f) === truth.getAs[Any](f), s"field $f")
-    }
+    val as = aggs(bandCols)
+    assertMatches(r, banded(plain, band).agg(as.head, as.tail: _*).head())
     // no tp_timestamp stats: the manifest's recorded ts_nulls is the
     // containment proof, so slices 1 and 2 answer from metadata; a
     // manifest written before ts_nulls has no proof → everything
@@ -327,26 +320,40 @@ class StatsAggregateSpec extends AnyFunSuite with SparkTest {
     for (i <- 0 until 4) lake2.append(spark, "tb",
       slice(i)) // reuse generator; table name inside spec is "tb"
     lake2.enableColumnStats(spark, "tb", Seq("v", "event_id"))
-    def scanned2 = lake2.timeBandAggregateAudited(spark, "tb",
-      java.sql.Timestamp.valueOf("2024-03-05 01:00:00"),
-      java.sql.Timestamp.valueOf("2024-03-05 02:59:59"),
-      Seq("v"))._2
-    assert(scanned2.isEmpty,
+    def scanned2 = report(lake2, "tb", Seq("v"),
+      Some((Timestamp.valueOf("2024-03-05 01:00:00"),
+        Timestamp.valueOf("2024-03-05 02:59:59"))))._2
+    assert(scanned2 === 0,
       "the manifest's ts_nulls proves the contained slices null-ts-free")
     OlderManifests.dropTsNulls(spark, lake2, "tb")
-    assert(scanned2.nonEmpty,
+    assert(scanned2 > 0,
       "without ts_nulls or tp_timestamp stats nothing may be " +
         "metadata-contained")
   }
 
   test("unknown column and empty-table guards") {
     val (lake, t) = fixture()
-    intercept[IllegalArgumentException] {
-      lake.statsAggregate(spark, t, Seq("nope"))
+    val config = Files.createTempDirectory("graft_statsagg_cfg").toString
+    def cli(args: String*): (Int, String) = {
+      val bos = new java.io.ByteArrayOutputStream()
+      val rc = graft.cli.Main.run(spark, Seq("table", "aggregate") ++ args ++
+        Seq("--lake-dir", lake.root, "--config-dir", config),
+        new java.io.PrintStream(bos, true, "UTF-8"))
+      (rc, new String(bos.toByteArray, "UTF-8"))
     }
-    intercept[IllegalArgumentException] {
-      lake.statsAggregate(spark, "absent_table", Seq("v"))
+    def fails(args: String*)(problem: String): Unit = {
+      val (rc, out) = cli(args: _*)
+      assert(rc === 1 && out.contains(problem), out)
     }
+    fails(t, "--columns", "nope")(s"table '$t' has no column 'nope'")
+    fails("absent_table", "--columns", "v")("no lake table 'absent_table'")
+    fails(t, "--from", "2024-03-06", "--to", "2024-03-05")(
+      "--from is after --to")
+    fails(t, "--topk", "two")("--topk wants a positive integer")
+    fails(t, "--quantiles", "0.5,1.5")("--quantiles wants comma-separated")
+    // every row deleted: the table's directory stays, its files go
+    lake.dataFiles(spark, t).foreach(p => new java.io.File(p).delete())
+    fails(t, "--columns", "v")(s"table '$t' has no data files")
   }
 
   test("a STRING partition column requested as a sum declines (None), " +

@@ -125,25 +125,29 @@ class ComponentsSpec extends AnyFunSuite with SparkTest {
     }
   }
 
+  /** A call's result and the persistent RDDs it leaves behind,
+    * compared by id: the ContextCleaner may reclaim an earlier test's
+    * RDDs meanwhile, so a count could drop while one leaked.
+    */
+  private def leakedBy[T](call: => T): (T, Set[Int]) = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val out = call
+    (out, spark.sparkContext.getPersistentRDDs.keySet.toSet -- before)
+  }
+
   test("no cached plans leak past the call") {
-    val before = spark.sparkContext.getPersistentRDDs.size
-    components(Seq((1L, 2L), (3L, 4L)))
     // the distributed path persists the pairs, edges and per-round
     // labels, all unpersisted before return; the only survivor is the
     // localCheckpointed result (reclaimed by ContextCleaner when the
     // returned DataFrame is released)
-    val after = spark.sparkContext.getPersistentRDDs.size
-    assert(after <= before + 1, s"persistent RDDs grew $before -> $after")
+    val (_, leaked) = leakedBy(components(Seq((1L, 2L), (3L, 4L))))
+    assert(leaked.size <= 1, s"persistent RDDs left by the call: $leaked")
   }
 
   test("the driver path releases the materialized pairs and keeps no RDD") {
-    // compared by id: the ContextCleaner may reclaim an earlier test's
-    // RDDs meanwhile, so a count could drop while one leaked
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val labeled = Components.connectedComponents(
-      Seq((1L, 2L), (3L, 4L), (2L, 3L)).toDF("id_a", "id_b"))
+    val (labeled, leaked) = leakedBy(Components.connectedComponents(
+      Seq((1L, 2L), (3L, 4L), (2L, 3L)).toDF("id_a", "id_b")))
     assert(onDriver(labeled))
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty, s"persistent RDDs left by the call: $leaked")
     assert(labels(labeled) == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L))
   }
@@ -203,11 +207,10 @@ class ComponentsSpec extends AnyFunSuite with SparkTest {
     // finish, so the large-star/small-star fallback must take over and
     // still produce the exact merge (never a silent partial one)
     val chain = (0L until 7L).map(i => (i, i + 1))
-    val before = spark.sparkContext.getPersistentRDDs.size
-    assert(components(chain, maxIter = 2) == (0L to 7L).map(_ -> 0L).toMap)
+    val (got, leaked) = leakedBy(components(chain, maxIter = 2))
+    assert(got == (0L to 7L).map(_ -> 0L).toMap)
     // the fallback path must not leak working caches either
-    val after = spark.sparkContext.getPersistentRDDs.size
-    assert(after <= before + 1, s"persistent RDDs grew $before -> $after")
+    assert(leaked.size <= 1, s"persistent RDDs left by the call: $leaked")
   }
 
   test("star contraction agrees with union-find on seeded random graphs") {
